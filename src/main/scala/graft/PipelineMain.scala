@@ -6,7 +6,8 @@ import graft.io.TableStore
 import graft.ops.Pipeline
 
 /** CLI entry for the full pipeline run — the `main.py` analog: one
-  * session, stages in dependency order, one exit code.
+  * session, the load stages concurrently and then the report
+  * ([[graft.ops.Pipeline.run]]), one exit code.
   *
   * Usage: PipelineMain <srcDir> <warehouseDir> [reportDtIso] [--archive]
   *                     [--bucket-dims=N]

@@ -139,7 +139,9 @@ object Sources {
 
   /** Driver-side file discovery in chronological order: glob by mask,
     * sort by the DDMMYYYY date embedded in the name (reference
-    * `transaction.py:26-28` sorts on a YYYYMMDD key). */
+    * `transaction.py:26-28` sorts on a YYYYMMDD key). The mask must
+    * match the WHOLE file name, so a half-landed `….txt.tmp`, a `.bak`
+    * copy or a prefixed `x_transactions_…` file is never picked up. */
   def listFilesChronological(dir: String, maskRegex: String): Seq[Path] = {
     import scala.jdk.CollectionConverters._
     val re = maskRegex.r
@@ -148,7 +150,7 @@ object Sources {
     val stream = Files.list(Paths.get(dir))
     try {
       stream.iterator().asScala
-        .filter(p => re.findFirstIn(p.getFileName.toString).isDefined)
+        .filter(p => re.matches(p.getFileName.toString))
         .toSeq
         .sortBy { p =>
           val name = p.getFileName.toString

@@ -38,9 +38,28 @@ final class TableStore(spark: SparkSession, root: String) {
   private def fs: FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def exists(name: String): Boolean = fs.exists(new Path(path(name)))
+  def exists(name: String): Boolean = fs.exists(livePath(name))
 
-  def read(name: String): DataFrame = spark.read.parquet(path(name))
+  def read(name: String): DataFrame = spark.read.parquet(livePath(name).toString)
+
+  /** [[read]] with the table's known schema: no schema-inference job. */
+  def readAs(name: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(livePath(name).toString)
+
+  /** A frame over driver-side rows — for tables small enough to be
+    * computed on the driver and written whole. */
+  def localFrame(rows: Seq[org.apache.spark.sql.Row], schema: StructType): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** The table's live directory, after undoing a snapshot swap that
+    * died between its two renames (see [[restoreRetired]]). */
+  private def livePath(name: String): Path = {
+    val p = new Path(path(name))
+    restoreRetired(p, new Path(path(name + ".__old")))
+    p
+  }
 
   /** Read, or an empty frame with the given schema if the table has
     * never been written (first pipeline run). */
@@ -658,6 +677,7 @@ final class TableStore(spark: SparkSession, root: String) {
     * retire live → `old`, promote `tmp` → live, drop `old`. Renames
     * are atomic per directory on HDFS-like filesystems. */
   private def swapDirs(live: Path, tmp: Path, old: Path): Unit = {
+    restoreRetired(live, old)
     if (fs.exists(old)) fs.delete(old, true)
     if (fs.exists(live) && !fs.rename(live, old))
       throw new java.io.IOException(s"swapDirs: cannot retire $live")
@@ -665,4 +685,16 @@ final class TableStore(spark: SparkSession, root: String) {
       throw new java.io.IOException(s"swapDirs: cannot promote $tmp")
     fs.delete(old, true): Unit
   }
+
+  /** A swap that died after retiring live → `old` but before promoting
+    * the scratch generation leaves no live directory, and `old` is the
+    * only good copy: promote it back. Without this a reader would see
+    * the table as never written, and the next swap would delete `old`.
+    * Single writer per table: a reader must not run concurrently with
+    * that table's own swap (the pipeline's stages write disjoint
+    * tables, and its one shared table is read and swapped under
+    * [[graft.ops.Incremental]]'s lock). */
+  private def restoreRetired(live: Path, old: Path): Unit =
+    if (!fs.exists(live) && fs.exists(old) && !fs.rename(old, live))
+      throw new java.io.IOException(s"restoreRetired: cannot restore $old")
 }

@@ -12,8 +12,10 @@ import graft.io.{Sources, TableStore}
   * reference's `main.py:47-50` stage chain: CSV facts → staging →
   * idempotent warehouse append; full-snapshot dimension files → SCD2
   * merge; then the windowed fraud report appended per run. One
-  * SparkSession drives every stage in dependency order (the reference's
-  * process-per-stage boundary disappears; SURVEY.md §3.1).
+  * SparkSession drives every stage (the reference's process-per-stage
+  * boundary disappears; SURVEY.md §3.1): [[run]] runs the load stages
+  * concurrently, as concurrent jobs on that session, and the report
+  * after all of them — see [[run]] for the failure semantics.
   *
   * Faithfully kept observable semantics:
   *   - per-file watermark gate `file_date > watermark`
@@ -60,17 +62,9 @@ object Pipeline {
     StructField("oper_result", StringType),
     StructField("terminal", StringType)))
 
-  private val metaStruct = StructType(Seq(
-    StructField("schema_name", StringType),
-    StructField("table_name", StringType),
-    StructField("max_update_dt", TimestampType)))
-
   private val blacklistStruct = StructType(Seq(
     StructField("passport_num", StringType),
     StructField("entry_dt", DateType)))
-
-  private def meta(store: TableStore): DataFrame =
-    store.readOr("meta_date", metaStruct)
 
   private def isoToTs(iso: String): Timestamp = Timestamp.valueOf(s"$iso 00:00:00")
 
@@ -85,18 +79,14 @@ object Pipeline {
                            stgTable: String, archive: Boolean)
                           (stage: (String, SparkSession) => org.apache.spark.sql.DataFrame)
                           (body: (org.apache.spark.sql.DataFrame, String) => Option[Timestamp]): Unit = {
-    val wmIso = Incremental
-      .readWatermark(meta(store), "stg", wmKey).toString.take(10)
+    val wmIso = Incremental.readWatermark(store, "stg", wmKey).toString.take(10)
     Sources.listFilesChronological(srcDir, mask).foreach { f =>
       val fileDate = Sources.fileNameDateIso(f.getFileName.toString).get
       if (fileDate > wmIso) { // F12: ISO strings compare chronologically
         store.overwrite(stgTable, stage(f.toString, spark))
         val staged = store.read(stgTable)
         if (staged.limit(1).count() > 0) { // A3 guard (cards.py:71)
-          body(staged, fileDate).foreach { newWm =>
-            store.swapSnapshot("meta_date",
-              Incremental.advance(meta(store), "stg", wmKey, newWm))
-          }
+          body(staged, fileDate).foreach(Incremental.advance(store, "stg", wmKey, _))
         }
         if (archive) Sources.archive(f): Unit
       }
@@ -287,7 +277,7 @@ object Pipeline {
   def runJdbcDim(spark: SparkSession, store: TableStore,
                  d: DimSource, runTs: Timestamp): Unit = {
     val dimKey = d.key._2
-    val wm = Incremental.readWatermark(meta(store), "stg", d.wmKey)
+    val wm = Incremental.readWatermark(store, "stg", d.wmKey)
     def source() = Sources.jdbcReader(spark, d.jdbc).load().select(
       (d.key +: d.tracked).map { case (s, t) => col(s).as(t) } ++ Seq(
         col("create_dt").cast(TimestampType).as("create_dt"),
@@ -313,8 +303,7 @@ object Pipeline {
       val newMax = staged
         .agg(max(coalesce(col("update_dt"), col("create_dt")))).first()
       if (!newMax.isNullAt(0))
-        store.swapSnapshot("meta_date",
-          Incremental.advance(meta(store), "stg", d.wmKey, newMax.getTimestamp(0)))
+        Incremental.advance(store, "stg", d.wmKey, newMax.getTimestamp(0))
     }
   }
 
@@ -449,24 +438,60 @@ object Pipeline {
         lit(reportDt).as("report_dt"))
   }
 
-  /** Full run in dependency order (`main.py:47-50`): file facts +
-    * file dims, then (when a source DB is configured) the three JDBC
-    * dimensions, then the report over everything. */
+  /** Full run (`main.py:47-50`): the load stages — file facts, file
+    * dimensions and, when a source DB is configured, the three JDBC
+    * dimensions — run concurrently, one thread each on the caller's
+    * session; the report then runs over everything once every load
+    * stage has succeeded.
+    *
+    * The load stages write disjoint tables (each its own staging table
+    * and its own fact or dimension); the one table they share, the
+    * `meta_date` watermarks, is serialised by [[Incremental]]. A failed
+    * stage does not stop its siblings, which commit their work (the
+    * reference's cron chain lets the next stage run after a failure);
+    * each stage stays idempotent under its own watermark, so a rerun
+    * after the fault is fixed converges. The report is not appended
+    * after a failure: the first failure in stage order is rethrown
+    * once every stage has finished, the others attached as
+    * suppressed. */
   def run(spark: SparkSession, store: TableStore, srcDir: String,
           reportDt: Timestamp, archive: Boolean = false,
           dimDb: Option[Sources.JdbcSpec] = None,
           dimRunTs: Option[Timestamp] = None,
           bucketDims: Option[Int] = None,
           versionedDims: Boolean = false): Unit = {
-    runTransactions(spark, store, srcDir, archive)
-    runBlacklist(spark, store, srcDir, archive)
-    runTerminals(spark, store, srcDir, archive, bucketDims, versionedDims)
-    dimDb.foreach { db =>
+    val fileStages: Seq[(String, () => Unit)] = Seq(
+      "transactions" -> (() => runTransactions(spark, store, srcDir, archive)),
+      "blacklist" -> (() => runBlacklist(spark, store, srcDir, archive)),
+      "terminals" -> (() =>
+        runTerminals(spark, store, srcDir, archive, bucketDims, versionedDims)))
+    val dimStages = dimDb.toSeq.flatMap { db =>
       val ts = dimRunTs.getOrElse(reportDt)
-      runJdbcDim(spark, store, cardsDim(db), ts)
-      runJdbcDim(spark, store, accountsDim(db), ts)
-      runJdbcDim(spark, store, clientsDim(db), ts)
+      Seq(cardsDim(db), accountsDim(db), clientsDim(db))
+        .map(d => d.wmKey -> (() => runJdbcDim(spark, store, d, ts)))
     }
+    concurrently(fileStages ++ dimStages).foreach(e => throw e)
     runReport(spark, store, reportDt)
+  }
+
+  /** Run each stage on a thread of its own and wait for all of them;
+    * the first failure in stage order, with the later ones suppressed
+    * on it. Threads are created here, not taken from a pool, so that
+    * they inherit the caller's active session and Spark local
+    * properties (job labels, scheduler pool). */
+  private def concurrently(stages: Seq[(String, () => Unit)]): Option[Throwable] = {
+    val failures = new Array[Throwable](stages.size)
+    val threads = stages.zipWithIndex.map { case ((name, stage), i) =>
+      val t = new Thread(() =>
+        try stage() catch { case e: Throwable => failures(i) = e },
+        s"pipeline-$name")
+      t.start()
+      t
+    }
+    threads.foreach(_.join()) // join orders each thread's write before the read
+    failures.filter(_ != null).toSeq match {
+      case first +: rest => rest.foreach(first.addSuppressed); Some(first)
+      case _ => None
+    }
   }
 }

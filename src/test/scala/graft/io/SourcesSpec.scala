@@ -34,6 +34,18 @@ class SourcesSpec extends AnyFunSuite {
     assert(got === Seq("c_14012021.txt", "a_15012021.txt", "b_15012021.txt"))
   }
 
+  test("listFilesChronological matches the whole file name, not a substring") {
+    val dir = Files.createTempDirectory("graft_anchored")
+    // A half-landed upload, a backup copy and a prefixed namesake all
+    // CONTAIN a matching substring; only the exact name may be ingested.
+    Seq("transactions_01032021.txt", "transactions_01032021.txt.tmp",
+        "transactions_02032021.txt.bak", "x_transactions_03032021.txt")
+      .foreach(f => Files.createFile(dir.resolve(f)))
+    val got = Sources.listFilesChronological(dir.toString, "transactions_\\d{8}\\.txt")
+      .map(_.getFileName.toString)
+    assert(got === Seq("transactions_01032021.txt"))
+  }
+
   test("listFilesChronological on a missing dir is empty, not an error") {
     assert(Sources.listFilesChronological("/nonexistent_dir_xyz", ".*") === Seq.empty)
   }

@@ -34,6 +34,31 @@ class TableStoreSpec extends AnyFunSuite {
     assert(!store.exists("dim.__tmp") && !store.exists("dim.__old"))
   }
 
+  test("a snapshot swap that died between its renames is rolled back on read and swap") {
+    import java.nio.file.Paths
+    val store = newStore()
+    def ids(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getInt(0)).sorted.toSeq
+    // The crash window: live retired to `.__old`, the scratch
+    // generation half-written and never promoted.
+    def crash(): Unit = {
+      Files.move(Paths.get(store.path("dim")), Paths.get(store.path("dim.__old")))
+      store.overwrite("dim.__tmp", Seq((9, "partial")).toDF("id", "v"))
+    }
+    store.overwrite("dim", Seq((1, "a"), (2, "b")).toDF("id", "v"))
+    crash()
+    // A reader sees the retired generation, not a never-written table,
+    // and a merge that reads it commits on top of the good copy.
+    val schema = Seq.empty[(Int, String)].toDF("id", "v").schema
+    assert(ids(store.readOr("dim", schema)) === Seq(1, 2))
+    store.swapSnapshot("dim", store.read("dim").union(Seq((3, "c")).toDF("id", "v")))
+    assert(ids(store.read("dim")) === Seq(1, 2, 3))
+    // The next swap meets the crash without a read before it.
+    crash()
+    store.swapSnapshot("dim", Seq((4, "d")).toDF("id", "v"))
+    assert(ids(store.read("dim")) === Seq(4))
+    Seq("dim.__old", "dim.__tmp").foreach(d => assert(!Files.exists(Paths.get(store.path(d)))))
+  }
+
   test("compact rewrites accumulated append files without changing contents") {
     val store = newStore()
     (1 to 6).foreach { i =>

@@ -66,8 +66,7 @@ class JdbcPipelineSpec extends AnyFunSuite {
       ("A", "acc_a", ts("2024-01-01 10:00:00"), inf, "N"),
       ("B", "acc_b", ts("2024-01-01 10:00:00"), inf, "N"),
       ("C", "acc_c", ts("2024-01-01 10:00:00"), inf, "N")))
-    assert(Incremental.readWatermark(
-      store.read("meta_date"), "stg", "cards") === ts("2024-01-01 10:00:00"))
+    assert(Incremental.readWatermark(store, "stg", "cards") === ts("2024-01-01 10:00:00"))
 
     // ── Day 2 in the source: one change, one insert, one delete ──
     withDb { conn =>
@@ -96,15 +95,13 @@ class JdbcPipelineSpec extends AnyFunSuite {
       ("C", "acc_c", ts("2024-01-01 10:00:00"), closedC, "N"),  // closed at runTs − 1 s
       ("C", "acc_c", runTs2, inf, "Y"),                         // delete marker at runTs
       ("D", "acc_d", ts("2024-01-06 08:00:00"), inf, "N")))     // new key at create_dt
-    assert(Incremental.readWatermark(
-      store.read("meta_date"), "stg", "cards") === ts("2024-01-06 08:00:00"))
+    assert(Incremental.readWatermark(store, "stg", "cards") === ts("2024-01-06 08:00:00"))
 
     // ── Run 3: no source changes → guard skips, nothing moves ──
     val before = dimRows(store)
     Pipeline.runCards(spark, store, spec, runTs = ts("2024-01-20 00:00:00"))
     assert(dimRows(store) === before)
-    assert(Incremental.readWatermark(
-      store.read("meta_date"), "stg", "cards") === ts("2024-01-06 08:00:00"))
+    assert(Incremental.readWatermark(store, "stg", "cards") === ts("2024-01-06 08:00:00"))
   }
 
   test("the live JDBC path equals the same merges run on local frames") {

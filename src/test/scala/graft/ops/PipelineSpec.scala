@@ -61,13 +61,15 @@ class PipelineSpec extends AnyFunSuite {
       "T3;POS;Omsk") // new; T2 vanished → delete-detected
   }
 
-  /** Embedded source DB for the three JDBC dimensions. */
-  private val dbUrl = "jdbc:derby:memory:graftpipedims;create=true"
-  private def dimDb = Sources.JdbcSpec(url = dbUrl, table = "", user = "",
-    password = "", driver = "org.apache.derby.jdbc.EmbeddedDriver")
+  /** Embedded source DB for the three JDBC dimensions; each test that
+    * drives them gets a database of its own. */
+  private def dbUrl(db: String) = s"jdbc:derby:memory:$db;create=true"
+  private def dimDb(db: String) = Sources.JdbcSpec(url = dbUrl(db), table = "",
+    user = "", password = "", driver = "org.apache.derby.jdbc.EmbeddedDriver")
+  private val mainDb = "graftpipedims"
 
-  private def sql(statements: String*): Unit = {
-    val conn = DriverManager.getConnection(dbUrl)
+  private def sql(db: String, statements: String*): Unit = {
+    val conn = DriverManager.getConnection(dbUrl(db))
     try {
       val st = conn.createStatement()
       statements.foreach(st.execute)
@@ -75,34 +77,53 @@ class PipelineSpec extends AnyFunSuite {
     } finally conn.close()
   }
 
-  private def seedDims(): Unit = sql(
-    """CREATE TABLE cards(card_num VARCHAR(20), account VARCHAR(20),
+  // C1's client has an EXPIRED passport → rule 1a on every C1 txn.
+  // CL3's passport P3 is blacklisted → rule 1b. ACC2 expires
+  // 2024-01-02 → rule 2 on C2's day-2 txns.
+  private val dimTables: Seq[(String, Seq[String])] = Seq(
+    "cards" -> Seq(
+      """CREATE TABLE cards(card_num VARCHAR(20), account VARCHAR(20),
          create_dt TIMESTAMP, update_dt TIMESTAMP)""",
-    """CREATE TABLE accounts(account VARCHAR(20), valid_to DATE,
+      "INSERT INTO cards VALUES ('C1','ACC1',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
+      "INSERT INTO cards VALUES ('C2','ACC2',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
+      "INSERT INTO cards VALUES ('C3','ACC3',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
+      "INSERT INTO cards VALUES ('C4','ACC4',TIMESTAMP('2023-12-01 00:00:00'),NULL)"),
+    "accounts" -> Seq(
+      """CREATE TABLE accounts(account VARCHAR(20), valid_to DATE,
          client VARCHAR(20), create_dt TIMESTAMP, update_dt TIMESTAMP)""",
-    """CREATE TABLE clients(client_id VARCHAR(20), last_name VARCHAR(40),
+      "INSERT INTO accounts VALUES ('ACC1',DATE('2024-12-31'),'CL1',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
+      "INSERT INTO accounts VALUES ('ACC2',DATE('2024-01-02'),'CL2',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
+      "INSERT INTO accounts VALUES ('ACC3',DATE('2024-12-31'),'CL3',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
+      "INSERT INTO accounts VALUES ('ACC4',DATE('2024-12-31'),'CL4',TIMESTAMP('2023-12-01 00:00:00'),NULL)"),
+    "clients" -> Seq(
+      """CREATE TABLE clients(client_id VARCHAR(20), last_name VARCHAR(40),
          first_name VARCHAR(40), patronymic VARCHAR(40), date_of_birth DATE,
          passport_num VARCHAR(20), passport_valid_to DATE, phone VARCHAR(20),
          create_dt TIMESTAMP, update_dt TIMESTAMP)""",
-    // C1's client has an EXPIRED passport → rule 1a on every C1 txn.
-    // CL3's passport P3 is blacklisted → rule 1b. ACC2 expires
-    // 2024-01-02 → rule 2 on C2's day-2 txns.
-    "INSERT INTO cards VALUES ('C1','ACC1',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
-    "INSERT INTO cards VALUES ('C2','ACC2',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
-    "INSERT INTO cards VALUES ('C3','ACC3',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
-    "INSERT INTO cards VALUES ('C4','ACC4',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
-    "INSERT INTO accounts VALUES ('ACC1',DATE('2024-12-31'),'CL1',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
-    "INSERT INTO accounts VALUES ('ACC2',DATE('2024-01-02'),'CL2',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
-    "INSERT INTO accounts VALUES ('ACC3',DATE('2024-12-31'),'CL3',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
-    "INSERT INTO accounts VALUES ('ACC4',DATE('2024-12-31'),'CL4',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
-    "INSERT INTO clients VALUES ('CL1','Ivanov','Ivan','Ivanovich',DATE('1980-01-01'),'P1',DATE('2023-12-31'),'111',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
-    "INSERT INTO clients VALUES ('CL2','Petrov','Petr','Petrovich',DATE('1981-01-01'),'P2',DATE('2025-12-31'),'222',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
-    "INSERT INTO clients VALUES ('CL3','Sidorov','Sidr','Sidorovich',DATE('1982-01-01'),'P3',DATE('2025-12-31'),'333',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
-    "INSERT INTO clients VALUES ('CL4','Smirnov','Igor','Igorevich',DATE('1983-01-01'),'P4',DATE('2025-12-31'),'444',TIMESTAMP('2023-12-01 00:00:00'),NULL)")
+      "INSERT INTO clients VALUES ('CL1','Ivanov','Ivan','Ivanovich',DATE('1980-01-01'),'P1',DATE('2023-12-31'),'111',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
+      "INSERT INTO clients VALUES ('CL2','Petrov','Petr','Petrovich',DATE('1981-01-01'),'P2',DATE('2025-12-31'),'222',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
+      "INSERT INTO clients VALUES ('CL3','Sidorov','Sidr','Sidorovich',DATE('1982-01-01'),'P3',DATE('2025-12-31'),'333',TIMESTAMP('2023-12-01 00:00:00'),NULL)",
+      "INSERT INTO clients VALUES ('CL4','Smirnov','Igor','Igorevich',DATE('1983-01-01'),'P4',DATE('2025-12-31'),'444',TIMESTAMP('2023-12-01 00:00:00'),NULL)"))
 
-  private def runAll(store: TableStore, src: Path, dimTs: Timestamp): Unit =
+  private def seedDims(db: String = mainDb,
+                       tables: Seq[String] = dimTables.map(_._1)): Unit =
+    dimTables.filter(t => tables.contains(t._1)).foreach(t => sql(db, t._2: _*))
+
+  private def dropDims(db: String = mainDb): Unit =
+    dimTables.foreach { t =>
+      try sql(db, s"DROP TABLE ${t._1}")
+      catch { case _: java.sql.SQLException => } // never created by this test
+    }
+
+  /** Day 2 in the source DB: C1's card is re-accounted to ACC1B. */
+  private val day2Db = Seq(
+    "UPDATE cards SET account = 'ACC1B', update_dt = TIMESTAMP('2024-01-02 09:00:00') WHERE card_num = 'C1'",
+    "INSERT INTO accounts VALUES ('ACC1B',DATE('2024-12-31'),'CL1',TIMESTAMP('2024-01-02 09:00:00'),NULL)")
+
+  private def runAll(store: TableStore, src: Path, dimTs: Timestamp,
+                     db: String = mainDb): Unit =
     Pipeline.run(spark, store, src.toString, reportDt,
-      dimDb = Some(dimDb), dimRunTs = Some(dimTs))
+      dimDb = Some(dimDb(db)), dimRunTs = Some(dimTs))
 
   private def count(store: TableStore, t: String): Long =
     if (store.exists(t)) store.read(t).count() else 0L
@@ -146,9 +167,7 @@ class PipelineSpec extends AnyFunSuite {
       // exists → BOTH versions enrich to client CL1, so C1's txns fan
       // out (the reference joins every history version — q17, E2E).
       day2(src)
-      sql(
-        "UPDATE cards SET account = 'ACC1B', update_dt = TIMESTAMP('2024-01-02 09:00:00') WHERE card_num = 'C1'",
-        "INSERT INTO accounts VALUES ('ACC1B',DATE('2024-12-31'),'CL1',TIMESTAMP('2024-01-02 09:00:00'),NULL)")
+      sql(mainDb, day2Db: _*)
       runAll(store, src, dimTs = ts("2024-01-02 12:00:00"))
       assert(count(store, "fact_transactions") === 9)
 
@@ -195,7 +214,7 @@ class PipelineSpec extends AnyFunSuite {
         .filter(col("transaction_id") === "1")
         .collect().head.getDecimal(2)
       assert(amt.toPlainString === "1234.56")
-    } finally sql("DROP TABLE cards", "DROP TABLE accounts", "DROP TABLE clients")
+    } finally dropDims()
   }
 
   test("bucketed dimension storage: identical SCD2 content to the snapshot path") {
@@ -274,5 +293,92 @@ class PipelineSpec extends AnyFunSuite {
     assert(Files.exists(src.resolve("archive/passport_blacklist_01012024.xlsx.backup")))
     assert(!Files.exists(src.resolve("transactions_01012024.txt")))
     assert(count(store, "fact_transactions") === 7)
+  }
+
+  /** Every table of a warehouse, each as a multiset of rows. */
+  private def tables(store: TableStore): Map[String, Map[org.apache.spark.sql.Row, Int]] =
+    new java.io.File(store.path("")).listFiles().toSeq
+      .filter(f => f.isDirectory && !f.getName.startsWith(".")).map { f =>
+        f.getName -> store.read(f.getName).collect().toSeq
+          .groupBy(identity).map { case (r, rs) => r -> rs.size }
+      }.toMap
+
+  /** The two-day fixture in a fresh source directory, warehouse and
+    * source DB; `day` runs one day (warehouse, files, DB, delete clock). */
+  private def replay(tag: String)
+                    (day: (TableStore, Path, Sources.JdbcSpec, Timestamp) => Unit): TableStore = {
+    val db = s"graftpipe_$tag"
+    val src = Files.createTempDirectory(s"graft_pipe_src_$tag")
+    val store = new TableStore(spark, Files.createTempDirectory(s"graft_pipe_wh_$tag").toString)
+    seedDims(db)
+    try {
+      day1(src)
+      day(store, src, dimDb(db), ts("2024-01-01 12:00:00"))
+      day2(src)
+      sql(db, day2Db: _*)
+      day(store, src, dimDb(db), ts("2024-01-02 12:00:00"))
+    } finally dropDims(db)
+    store
+  }
+
+  test("concurrent load stages leave every table as the stages run one by one") {
+    val sequential = tables(replay("seq") { (store, src, db, dimTs) =>
+      Pipeline.runTransactions(spark, store, src.toString)
+      Pipeline.runBlacklist(spark, store, src.toString)
+      Pipeline.runTerminals(spark, store, src.toString)
+      Seq(Pipeline.cardsDim(db), Pipeline.accountsDim(db), Pipeline.clientsDim(db))
+        .foreach(Pipeline.runJdbcDim(spark, store, _, dimTs))
+      Pipeline.runReport(spark, store, reportDt)
+    })
+    assert(sequential.keySet.contains("meta_date") && sequential.keySet.contains("rep_fraud"))
+    assert(sequential("meta_date").values.sum === 6)
+    // Fresh warehouses, so a lost watermark update or a torn read of
+    // the shared meta table would show up as a differing table.
+    (1 to 5).foreach { i =>
+      val concurrent = tables(replay(s"conc$i") { (store, src, db, dimTs) =>
+        Pipeline.run(spark, store, src.toString, reportDt,
+          dimDb = Some(db), dimRunTs = Some(dimTs))
+      })
+      assert(concurrent.keySet === sequential.keySet, s"run $i")
+      sequential.keys.foreach(t => assert(concurrent(t) === sequential(t), s"run $i, table $t"))
+    }
+  }
+
+  test("a failed load stage: siblings commit, no report, a rerun converges") {
+    val db = "graftpipe_fault"
+    val src = Files.createTempDirectory("graft_pipe_src_fault")
+    val faulted = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh_fault").toString)
+    val clean = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh_clean").toString)
+    val dimTs = ts("2024-01-01 12:00:00")
+    day1(src)
+    seedDims(db, tables = Seq("cards", "accounts")) // the clients extract fails
+    try {
+      val err = intercept[Throwable](runAll(faulted, src, dimTs, db))
+      val chain = Iterator.iterate(err)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(e => String.valueOf(e.getMessage).contains("CLIENTS")), err)
+      assert(!faulted.exists("rep_fraud"))
+      // The siblings committed their tables and watermarks.
+      assert(count(faulted, "fact_transactions") === 7)
+      assert(count(faulted, "fact_blacklist") === 1)
+      assert(count(faulted, "dim_terminals_hist") === 2)
+      assert(count(faulted, "dim_cards_hist") === 4)
+      assert(count(faulted, "dim_accounts_hist") === 4)
+      assert(!faulted.exists("dim_clients_hist"))
+      val d1 = ts("2024-01-01 00:00:00")
+      val dims = ts("2023-12-01 00:00:00")
+      Seq("transactions" -> d1, "blacklist" -> d1, "terminals" -> d1,
+          "cards" -> dims, "accounts" -> dims, "clients" -> Incremental.DefaultWatermark)
+        .foreach { case (t, wm) => assert(Incremental.readWatermark(faulted, "stg", t) === wm, t) }
+
+      // Fix the fault and rerun: the warehouse converges on a clean
+      // run's. Staging is truncate-reload per run (the rerun reloads
+      // the already-loaded dims' empty extracts), so it is left out.
+      seedDims(db, tables = Seq("clients"))
+      runAll(faulted, src, dimTs, db)
+      runAll(clean, src, dimTs, db)
+      def warehouse(store: TableStore) = tables(store).filter(!_._1.startsWith("stg_"))
+      assert(warehouse(faulted) === warehouse(clean))
+      assert(warehouse(clean).keySet.contains("rep_fraud"))
+    } finally dropDims(db)
   }
 }
