@@ -31,7 +31,7 @@ import org.apache.spark.sql.types.StructType
   * existing data (bounded work per batch regardless of table size);
   * a snapshot swap rewrites only the dimension, never the facts.
   */
-final class TableStore(spark: SparkSession, root: String) {
+final class TableStore(spark: SparkSession, val root: String) {
 
   def path(name: String): String = s"$root/$name"
 

@@ -423,125 +423,6 @@ object Dedup {
           .cast("int").as("d2_in_d1"))
   }
 
-  /** The df-ordered containment PREFIX of every document — the exact
-    * candidate-generation index of the AllPairs/PPJoin family
-    * (Bayardo/Ma/Srikant, WWW'07; Xiao et al., WWW'08 — public):
-    * under ANY global total order on shingles, a pair (A,B) with
-    * |A∩B| ≥ ⌈t·min(|A|,|B|)/100⌉ MUST collide between the smaller
-    * side's first |A| − ⌈t·|A|/100⌉ + 1 shingles and the other side's
-    * full set — if B missed all of A's prefix, |A∩B| ≤
-    * |A| − prefixLen = ⌈t·|A|/100⌉ − 1, a contradiction. So joining
-    * prefix rows against full inverted rows finds EVERY qualifying
-    * pair; exactness needs no property of the order itself.
-    *
-    * The order we pick decides only the candidate VOLUME:
-    * document-frequency ascending (ties by hash) puts each doc's
-    * globally RAREST shingles in its prefix, so candidate rows are
-    * Σ_h df_prefix(h)·df(h) with df_prefix concentrated on small-df
-    * keys — the hot boilerplate shingles that dominate the naive
-    * Σ_h df(h)²/2 self join all but vanish from the prefix side.
-    * Measured on the q145 chain at sf10: 528.6 M self-join candidates
-    * → the prefix join's collision volume (see tools/Q145Floor).
-    *
-    * Cost: one linear df aggregate over the inverted index (map-side
-    * combine), one join back by shingle, one per-doc sort of its own
-    * shingle array — all linear in index size, all amortizable by
-    * persisting the result as an index table keyed by threshold. */
-  def containmentPrefixRows(hs: DataFrame, idCol: String,
-                            thresholdPct: Int): DataFrame = {
-    require(thresholdPct > 0 && thresholdPct <= 100,
-      s"containmentPrefixRows: thresholdPct out of range: $thresholdPct")
-    val inv = hs.select(col(idCol), explode(col("__hs")).as("__h"))
-    val freq = inv.groupBy("__h").agg(count(lit(1)).as("__df"))
-    inv.join(freq, "__h")
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(struct(col("__df"), col("__h")))).as("__sh"))
-      .select(col(idCol), explode(expr(
-        s"slice(__sh, 1, size(__sh) - ((size(__sh) * $thresholdPct + 99) div 100) + 1)"
-      )).as("__p"))
-      .select(col(idCol), col("__p.__h").as("__h"))
-  }
-
-  /** [[containmentPairsFromHashes]] with PREFIX-FILTERED candidate
-    * generation — the exact same pair set (the ContainmentSpec
-    * equivalence pin), at a candidate volume of Σ_h df_prefix(h)·df(h)
-    * instead of the full inverted-index self join's
-    * Σ_h df(h)·(df(h)−1)/2.
-    *
-    * MEASURED HONESTY (tools/Q145Floor, sf10): on the harness's
-    * replica-heavy corpus this is NOT the declared path — the df
-    * distribution is uniformly inflated by replication (median 36,
-    * max 100, no Zipf tail), so the prefix cut only 3.75× of the
-    * candidate volume (528.6 M → 140.9 M) while the per-candidate
-    * verify (distinct + two array joins + array_intersect) costs
-    * more per row than the skinny self-join count: 204 s vs 77.5 s
-    * end-to-end. The declared queries use
-    * [[containmentPairsCollapsed]] (set collapse fits the corpus's
-    * actual redundancy shape); THIS operator is the right tool when
-    * the corpus is Zipf-shaped with little exact duplication —
-    * boilerplate-heavy crawls where hot shingles dominate Σ df².
-    *
-    * Stages: (1) candidates = prefix rows ⋈ full inverted rows by
-    * shingle hash (selective salting on detected-hot keys — pure
-    * routing, set-neutral), deduped to unordered (d1,d2);
-    * (2) verify = two joins back to the shingle-set table and an
-    * exact `array_intersect` count per surviving candidate — one row
-    * per pair, never a re-explosion. Candidates below threshold
-    * filter out here, so over-generation costs time, never
-    * correctness; under-generation is impossible by the prefix
-    * guarantee above.
-    *
-    * `prefix` is [[containmentPrefixRows]]' output (idCol, `__h`) —
-    * pass a PERSISTED build (the index discipline) so repeat
-    * consumers skip the df aggregate and per-doc sort. It must have
-    * been built at the SAME thresholdPct: a longer-threshold prefix
-    * (smaller t → longer prefix) stays exact but over-generates; a
-    * shorter one silently drops pairs — hence the explicit parameter
-    * pairing here rather than a stored-table convention. */
-  def containmentPairsFromPrefix(prefix: DataFrame, hs: DataFrame,
-                                 idCol: String, thresholdPct: Int,
-                                 hotShingleCap: Int = DefaultHotShingleCap,
-                                 salts: Int = 32): DataFrame = {
-    require(thresholdPct > 0 && thresholdPct <= 100,
-      s"containmentPairsFromPrefix: thresholdPct out of range: $thresholdPct")
-    val inv = hs.select(col(idCol).as("__idf"), explode(col("__hs")).as("__h"))
-    val pre = prefix.select(col(idCol).as("__idp"), col("__h"))
-    val cands = Skew.saltedJoinHot(inv, pre, "__h", col("__idf"),
-        salts = salts, hotCap = hotShingleCap, detectOneIn = 16)
-      .filter(col("__idf") =!= col("__idp"))
-      .select(least(col("__idf"), col("__idp")).as("d1"),
-        greatest(col("__idf"), col("__idp")).as("d2"))
-      .distinct()
-    val sets = hs.select(col(idCol), col("__hs"))
-    cands
-      .join(sets.select(col(idCol).as("d1"), col("__hs").as("__hs1")), "d1")
-      .join(sets.select(col(idCol).as("d2"), col("__hs").as("__hs2")), "d2")
-      .select(col("d1"), col("d2"),
-        size(array_intersect(col("__hs1"), col("__hs2"))).cast("bigint")
-          .as("inter_cnt"),
-        size(col("__hs1")).cast("bigint").as("n1"),
-        size(col("__hs2")).cast("bigint").as("n2"))
-      .filter(col("inter_cnt") * 100 >= lit(thresholdPct) * col("n1") ||
-        col("inter_cnt") * 100 >= lit(thresholdPct) * col("n2"))
-      .select(col("d1"), col("d2"), col("inter_cnt"), col("n1"), col("n2"),
-        expr("(inter_cnt * 1000000) div n1").as("c1_ppm"),
-        expr("(inter_cnt * 1000000) div n2").as("c2_ppm"),
-        (col("inter_cnt") * 100 >= lit(thresholdPct) * col("n1"))
-          .cast("int").as("d1_in_d2"),
-        (col("inter_cnt") * 100 >= lit(thresholdPct) * col("n2"))
-          .cast("int").as("d2_in_d1"))
-  }
-
-  /** [[containmentPairsFromPrefix]] building its prefix inline — the
-    * stateless spelling (specs, one-shot runs); production persists
-    * [[containmentPrefixRows]] and calls the two-arg form. */
-  def containmentPairsPrefixFromHashes(hs: DataFrame, idCol: String,
-                                       thresholdPct: Int,
-                                       hotShingleCap: Int = DefaultHotShingleCap): DataFrame =
-    containmentPairsFromPrefix(
-      containmentPrefixRows(hs, idCol, thresholdPct),
-      hs, idCol, thresholdPct, hotShingleCap)
-
   /** Exact-duplicate SET collapse for containment: one (`__gid`,
     * idCol, `__n`) membership row per document, where `__gid` is the
     * MINIMUM doc id sharing the document's exact shingle set (sorted
@@ -592,7 +473,12 @@ object Dedup {
     * bounds per-task work, but output volume is irreducible — a
     * production pipeline that only needs canonical assignment should
     * read `members` directly (doc → `__gid` IS the canonical map)
-    * and skip pair expansion. */
+    * and skip pair expansion. An exact AllPairs prefix-filtered
+    * candidate path was also measured at sf10 and removed: the
+    * replica-heavy corpus's flat df distribution let the prefix cut
+    * candidates only 3.75× (528.6 M → 140.9 M) at a costlier
+    * per-candidate verify, 204 s vs 77.5 s end to end
+    * (ROUND12_NOTES.md, dev/Q145FLOOR_sf10_r12.json). */
   def containmentPairsCollapsed(members: DataFrame, reps: DataFrame,
                                 idCol: String, thresholdPct: Int,
                                 hotShingleCap: Int = DefaultHotShingleCap): DataFrame = {

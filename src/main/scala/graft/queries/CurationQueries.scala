@@ -861,7 +861,7 @@ object CurationQueries {
         // within-batch vsrcb, both projections of documents.source),
         // and the universe below is exactly documents.source distinct.
         // Measured: the two validation joins were ~15% of the query's
-        // warm cost (Q139Profile, committed phase timings) on a query
+        // warm cost (ROUND12_NOTES.md, phase timings) on a query
         // whose remaining time is fixed stage-scheduling overhead.
         Graph.pageRank(att, docs.select("source").distinct(), "source",
             PrIters, validateEdges = false)

@@ -1,8 +1,9 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import graft.io.TableStore
-import graft.ops.Dedup
+import graft.ops.{Dedup, Multimodal, Similarity}
 
 /** PERSISTENT registry of MATERIALIZED corpus indexes — the
   * production table-flow behind the near-dup query family.
@@ -10,12 +11,12 @@ import graft.ops.Dedup
   * The md5→shingle→minhash pipeline is the dominant scan of every
   * near-dup operator; at 100 TB it is the job cost. Production runs
   * it ONCE per corpus generation, lands the result as tables
-  * ([[Dedup.buildShingleIndex]] / [[Dedup.buildSignatureIndex]]
-  * through the [[TableStore]] sink layer), and every candidate /
-  * verify / cluster / decontamination query READS those tables.
-  * Executor `cache()` is the wrong tool for that flow: it memoizes
-  * within one job, silently recomputes the corpus scan on eviction,
-  * and shares nothing across queries.
+  * ([[Dedup.shingleFrame]] / [[Dedup.signaturesFromHashes]] through
+  * the [[TableStore]] sink layer), and every candidate / verify /
+  * cluster / decontamination query READS those tables. Executor
+  * `cache()` is the wrong tool for that flow: it memoizes within one
+  * job, silently recomputes the corpus scan on eviction, and shares
+  * nothing across queries.
   *
   * This registry gives the declared query set the same discipline:
   * the first consumer of a corpus builds its indexes (one corpus
@@ -25,8 +26,16 @@ import graft.ops.Dedup
   * REUSES the build instead of re-scanning the corpus, and every
   * query using them produces results BIT-IDENTICAL to the inline
   * pipeline — signatures are deterministic and parquet round-trips
-  * bigint arrays exactly (pinned by q70's oracle and DedupSpec's
-  * round-trip test).
+  * bigint arrays exactly (pinned by q70's oracle, DedupSpec's
+  * round-trip test, and IndexesSpec's cold-rebuild case).
+  *
+  * One entry point: every accessor that lands one frame under one
+  * table name is a call to [[index]], which takes the build lock,
+  * resolves the corpus's namespace ([[store]]) and memoizes the frame
+  * through [[cached]]. Three builds call [[cached]] themselves: the
+  * winnow index (it lands a positional scratch table before its final
+  * one) and the driver-side PQ codebooks and BPE merge table, whose
+  * process-local caches are keyed by the same namespace.
   *
   * Cross-process safety: a build lands in a dot-prefixed scratch
   * namespace and publishes with ONE atomic directory rename, so a
@@ -106,6 +115,9 @@ object Indexes {
       scala.util.hashing.MurmurHash3.orderedHash(entries).toLong & 0xffffffffL)
   }
 
+  /** The corpus's index NAMESPACE as a store; its `root` is also the
+    * key of the process-local driver-side caches, so they turn over
+    * exactly when the persisted tables do. */
   private def store(spark: SparkSession, sfDir: String): TableStore = {
     val corpus = new TableStore(spark, sfDir)
     val base =
@@ -187,16 +199,25 @@ object Indexes {
     st.read(name)
   }
 
+  /** The registry's one entry point for a single-table index: under
+    * the build lock, `build` is landed as table `name` in the corpus's
+    * namespace by [[cached]] — evaluated only when no complete
+    * published table exists. Parameter-dependent indexes carry their
+    * parameters in `name`: a cached build must never be served to a
+    * caller who asked for a different threshold, window or radius. */
+  private def index(spark: SparkSession, sfDir: String, name: String)
+                   (build: => DataFrame): DataFrame = lock.synchronized {
+    cached(spark, store(spark, sfDir), name)(_.overwrite(name, build))
+  }
+
   /** The corpus shingle index: one (doc_id, source, `__hs`) row per
     * document of `sfDir`'s `documents` table (docs under 3 tokens
     * drop — no shingles, no signal). */
-  def shingles(spark: SparkSession, sfDir: String): DataFrame = lock.synchronized {
-    cached(spark, store(spark, sfDir), "doc_shingles") { bst =>
-      Dedup.buildShingleIndex(bst,
-        corpusDocs(spark, sfDir),
-        "doc_id", "text", extraCols = Seq("source")): Unit
+  def shingles(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, "doc_shingles") {
+      Dedup.shingleFrame(corpusDocs(spark, sfDir), "doc_id", "text",
+        extraCols = Seq("source"))
     }
-  }
 
   /** The per-SOURCE shingle TYPE table: distinct (g = source, w =
     * 3-token shingle STRING) pairs — the key universe of the KMV
@@ -210,39 +231,17 @@ object Indexes {
     * (per-DOC hash arrays): this is string-keyed and source-keyed,
     * what cross-engine 52-bit re-hashing and exact truth both need. */
   def sourceShingles(spark: SparkSession, sfDir: String): DataFrame =
-    lock.synchronized {
-      cached(spark, store(spark, sfDir), "source_shingles") { bst =>
-        import org.apache.spark.sql.functions.{col, explode}
-        bst.overwrite("source_shingles",
-          graft.io.Sources.table(spark, sfDir, "documents")
-            .select(col("source").as("g"),
-              explode(Dedup.shingles(Dedup.tokens(col("text")))).as("w"))
-            .distinct())
-      }
+    index(spark, sfDir, "source_shingles") {
+      graft.io.Sources.table(spark, sfDir, "documents")
+        .select(col("source").as("g"),
+          explode(Dedup.shingles(Dedup.tokens(col("text")))).as("w"))
+        .distinct()
     }
-
-  /** The df-ordered containment-prefix index at threshold `t`%: one
-    * (doc_id, `__h`) row per PREFIX shingle per document — each doc's
-    * n − ⌈t·n/100⌉ + 1 globally-rarest shingles, the exact candidate
-    * index of [[graft.ops.Dedup.containmentPrefixRows]] (AllPairs
-    * prefix filtering). Name is threshold-keyed: a cached build is
-    * never served to a caller who asked for a different threshold,
-    * because a SHORTER prefix silently drops pairs. Derived FROM the
-    * persisted [[shingles]] index — the df aggregate and the per-doc
-    * sort are paid once per corpus generation, not per consumer. */
-  def containmentPrefix(spark: SparkSession, sfDir: String,
-                        thresholdPct: Int = 80): DataFrame = lock.synchronized {
-    val name = s"containment_prefix_t$thresholdPct"
-    cached(spark, store(spark, sfDir), name) { bst =>
-      bst.overwrite(name, Dedup.containmentPrefixRows(
-        shingles(spark, sfDir).drop("source"), "doc_id", thresholdPct))
-    }
-  }
 
   /** The normalized WORD-ARRAY index: one (doc_id, source, lang,
     * `__ws`) row per document — [[graft.ops.Bpe.wordArray]]'s
     * normalize+split+filter materialized once per corpus generation.
-    * Measured motivation (tools/BpeApplyProfile, sf10): the regex
+    * Measured motivation (sf10, ROUND12_NOTES.md): the regex
     * normalization alone is ~20 s of every ~24 s tokenizer pass —
     * the trained-merge apply machinery is ~0 s on top — and the BPE
     * family re-paid it per query (twice in q129). At 100 TB,
@@ -250,14 +249,10 @@ object Indexes {
     * the registry next to [[shingles]], not in every consumer's
     * plan. */
   def bpeWords(spark: SparkSession, sfDir: String): DataFrame =
-    lock.synchronized {
-      cached(spark, store(spark, sfDir), "bpe_words") { bst =>
-        import org.apache.spark.sql.functions.col
-        bst.overwrite("bpe_words",
-          corpusDocs(spark, sfDir)
-            .select(col("doc_id"), col("source"), col("lang"),
-              graft.ops.Bpe.wordArray(col("text")).as("__ws")))
-      }
+    index(spark, sfDir, "bpe_words") {
+      corpusDocs(spark, sfDir)
+        .select(col("doc_id"), col("source"), col("lang"),
+          graft.ops.Bpe.wordArray(col("text")).as("__ws"))
     }
 
   /** The trained vocabulary under the n-rule merge table: (sym, tid)
@@ -266,25 +261,21 @@ object Indexes {
     * Bounded (|V| ≤ alphabet + n); derived FROM [[bpeWords]] so the
     * derivation never re-normalizes the corpus. */
   def bpeVocab(spark: SparkSession, sfDir: String, n: Int): DataFrame =
-    lock.synchronized {
-      val name = s"bpe_vocab_n$n"
-      cached(spark, store(spark, sfDir), name) { bst =>
-        import org.apache.spark.sql.functions._
-        val merges = bpeMerges(spark, sfDir, n)
-        // Bounded collect (|V| ≤ alphabet + n): sorted id assignment
-        // happens driver-side — a partition-less row_number window
-        // would be a single-partition WindowExec for no reason.
-        val syms = graft.ops.Bpe.withMergedReps(
-            bpeWords(spark, sfDir)
-              .select(explode(col("__ws")).as("w")).distinct()
-              .select(array(col("w")).as("__ws")),
-            "__ws", merges, "__reps")
-          .select(explode(graft.ops.Bpe.symbols(col("__reps")(0))).as("sym"))
-          .distinct().orderBy("sym").collect().map(_.getString(0))
-        import spark.implicits._
-        bst.overwrite(name, syms.zipWithIndex.toSeq
-          .map { case (s, i) => (s, i.toLong) }.toDF("sym", "tid"))
-      }
+    index(spark, sfDir, s"bpe_vocab_n$n") {
+      val merges = bpeMerges(spark, sfDir, n)
+      // Bounded collect (|V| ≤ alphabet + n): sorted id assignment
+      // happens driver-side — a partition-less row_number window
+      // would be a single-partition WindowExec for no reason.
+      val syms = graft.ops.Bpe.withMergedReps(
+          bpeWords(spark, sfDir)
+            .select(explode(col("__ws")).as("w")).distinct()
+            .select(array(col("w")).as("__ws")),
+          "__ws", merges, "__reps")
+        .select(explode(graft.ops.Bpe.symbols(col("__reps")(0))).as("sym"))
+        .distinct().orderBy("sym").collect().map(_.getString(0))
+      import spark.implicits._
+      syms.zipWithIndex.toSeq
+        .map { case (s, i) => (s, i.toLong) }.toDF("sym", "tid")
     }
 
   /** The exact-duplicate set-collapse membership index: one (`__gid`,
@@ -297,11 +288,8 @@ object Indexes {
     * persisted [[shingles]] index — the set groupBy is paid once per
     * corpus generation. */
   def containmentGroups(spark: SparkSession, sfDir: String): DataFrame =
-    lock.synchronized {
-      cached(spark, store(spark, sfDir), "containment_groups") { bst =>
-        bst.overwrite("containment_groups", Dedup.shingleSetMembers(
-          shingles(spark, sfDir).drop("source"), "doc_id"))
-      }
+    index(spark, sfDir, "containment_groups") {
+      Dedup.shingleSetMembers(shingles(spark, sfDir).drop("source"), "doc_id")
     }
 
   /** The distinct-set REPRESENTATIVE shingle rows (doc_id = the
@@ -310,15 +298,11 @@ object Indexes {
     * containment stage scans one row per distinct set (sf10: 129,792
     * instead of 500k) and repeat consumers never pay the semi join. */
   def containmentReps(spark: SparkSession, sfDir: String): DataFrame =
-    lock.synchronized {
-      cached(spark, store(spark, sfDir), "containment_reps") { bst =>
-        import org.apache.spark.sql.functions.col
-        val m = containmentGroups(spark, sfDir)
-        bst.overwrite("containment_reps",
-          shingles(spark, sfDir).drop("source").join(
-            m.filter(col("__gid") === col("doc_id")).select("doc_id"),
-            Seq("doc_id"), "left_semi"))
-      }
+    index(spark, sfDir, "containment_reps") {
+      val m = containmentGroups(spark, sfDir)
+      shingles(spark, sfDir).drop("source").join(
+        m.filter(col("__gid") === col("doc_id")).select("doc_id"),
+        Seq("doc_id"), "left_semi")
     }
 
   /** The collapsed containment PAIR table at threshold `t`% —
@@ -337,14 +321,11 @@ object Indexes {
     * joins, exact integer set measures (IndexesSpec pins the landed
     * rows against the inline two-frame call on the fixture). */
   def containmentPairs(spark: SparkSession, sfDir: String,
-                       thresholdPct: Int = 80): DataFrame = lock.synchronized {
-    val name = s"containment_pairs_t$thresholdPct"
-    cached(spark, store(spark, sfDir), name) { bst =>
-      bst.overwrite(name, Dedup.containmentPairsCollapsed(
-        containmentGroups(spark, sfDir),
-        containmentReps(spark, sfDir), "doc_id", thresholdPct))
+                       thresholdPct: Int = 80): DataFrame =
+    index(spark, sfDir, s"containment_pairs_t$thresholdPct") {
+      Dedup.containmentPairsCollapsed(containmentGroups(spark, sfDir),
+        containmentReps(spark, sfDir), "doc_id", thresholdPct)
     }
-  }
 
   /** The winnowed-fingerprint index: one (doc_id, `__fp`) row per
     * selected print per document, at window `w` (name is
@@ -368,12 +349,10 @@ object Indexes {
   /** The MinHash signature index (doc_id, `__hs`, mh0..mh{n-1}) —
     * derived FROM the persisted shingle index, so the md5 pass never
     * runs twice even at build time. */
-  def signatures(spark: SparkSession, sfDir: String): DataFrame = lock.synchronized {
-    cached(spark, store(spark, sfDir), "minhash_sigs") { bst =>
-      bst.overwrite("minhash_sigs",
-        Dedup.signaturesFromHashes(shingles(spark, sfDir).drop("source")))
+  def signatures(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, "minhash_sigs") {
+      Dedup.signaturesFromHashes(shingles(spark, sfDir).drop("source"))
     }
-  }
 
   /** Per-doc SimHash fingerprints (doc_id, simhash) at `bits` width —
     * derived FROM the persisted shingle index (the vote aggregate is
@@ -382,16 +361,13 @@ object Indexes {
     * reference is a parquet read of one row per doc, and an executor
     * eviction can never silently re-run the vote aggregate. */
   def simhashFingerprints(spark: SparkSession, sfDir: String,
-                          bits: Int): DataFrame = lock.synchronized {
+                          bits: Int): DataFrame = {
     require(bits == 32 || bits == 60, s"unsupported simhash width: $bits")
-    val name = s"simhash${bits}_fp"
-    cached(spark, store(spark, sfDir), name) { bst =>
-      import org.apache.spark.sql.functions.{col, explode}
+    index(spark, sfDir, s"simhash${bits}_fp") {
       val th = shingles(spark, sfDir)
         .select(col("doc_id"), explode(col("__hs")).as("h"))
-      bst.overwrite(name,
-        if (bits == 32) Dedup.simhash32(th, "doc_id", "h")
-        else Dedup.simhashWide(th, "doc_id", "h", bits = bits))
+      if (bits == 32) Dedup.simhash32(th, "doc_id", "h")
+      else Dedup.simhashWide(th, "doc_id", "h", bits = bits)
     }
   }
 
@@ -412,31 +388,24 @@ object Indexes {
     * capped candidate join, exact integer intersection/union counts
     * (the hs1/hs2 shingle arrays are NOT landed — no consumer reads
     * them, and per-pair set copies would dominate the table). */
-  def minhashPairScores(spark: SparkSession, sfDir: String): DataFrame = lock.synchronized {
-    import org.apache.spark.sql.functions.col
-    cached(spark, store(spark, sfDir), "minhash_pair_scores") { bst =>
-      bst.overwrite("minhash_pair_scores",
-        Dedup.scoredCandidatePairs(signatures(spark, sfDir), "doc_id",
-            Dedup.DefaultMaxBandFreq)
-          .select(col("d1"), col("d2"), col("__inter"), col("__union")))
+  def minhashPairScores(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, "minhash_pair_scores") {
+      Dedup.scoredCandidatePairs(signatures(spark, sfDir), "doc_id",
+          Dedup.DefaultMaxBandFreq)
+        .select(col("d1"), col("d2"), col("__inter"), col("__union"))
     }
-  }
 
   /** Verified near-dup edges (d1, d2): [[minhashPairScores]] filtered
     * at `threshold` jaccard — the cluster family's edge set, landed
     * as a table keyed by its threshold (two callers with different
     * thresholds get independent builds, never each other's cache). */
   def neardupEdges(spark: SparkSession, sfDir: String,
-                   threshold: Double): DataFrame = lock.synchronized {
-    import org.apache.spark.sql.functions.col
-    val name = s"neardup_edges_t${permille(threshold)}"
-    cached(spark, store(spark, sfDir), name) { bst =>
-      bst.overwrite(name,
-        minhashPairScores(spark, sfDir)
-          .filter(col("__inter").cast("double") / col("__union") >= threshold)
-          .select("d1", "d2"))
+                   threshold: Double): DataFrame =
+    index(spark, sfDir, s"neardup_edges_t${permille(threshold)}") {
+      minhashPairScores(spark, sfDir)
+        .filter(col("__inter").cast("double") / col("__union") >= threshold)
+        .select("d1", "d2")
     }
-  }
 
   /** Resolved cluster labels (id, component) — connected components
     * over [[neardupEdges]], landed as a table. THE production dedup
@@ -445,13 +414,10 @@ object Indexes {
     * (q57's oracle pins the persisted labels against the from-scratch
     * recursive closure). */
   def neardupLabels(spark: SparkSession, sfDir: String,
-                    threshold: Double): DataFrame = lock.synchronized {
-    val name = s"neardup_labels_t${permille(threshold)}"
-    cached(spark, store(spark, sfDir), name) { bst =>
-      bst.overwrite(name,
-        Dedup.connectedComponents(neardupEdges(spark, sfDir, threshold)))
+                    threshold: Double): DataFrame =
+    index(spark, sfDir, s"neardup_labels_t${permille(threshold)}") {
+      Dedup.connectedComponents(neardupEdges(spark, sfDir, threshold))
     }
-  }
 
   /** Yesterday's labels: components over only the edges whose BOTH
     * endpoints predate `cutoff` — the state an incremental maintenance
@@ -461,15 +427,11 @@ object Indexes {
     * [[Dedup.mergeComponents]], so its timed path is the incremental
     * step, not a re-run of history. */
   def neardupLabelsBase(spark: SparkSession, sfDir: String,
-                        threshold: Double, cutoff: Long): DataFrame = lock.synchronized {
-    import org.apache.spark.sql.functions.col
-    val name = s"neardup_labels_base_t${permille(threshold)}_c$cutoff"
-    cached(spark, store(spark, sfDir), name) { bst =>
-      bst.overwrite(name,
-        Dedup.connectedComponents(neardupEdges(spark, sfDir, threshold)
-          .filter(col("d1") < cutoff && col("d2") < cutoff)))
+                        threshold: Double, cutoff: Long): DataFrame =
+    index(spark, sfDir, s"neardup_labels_base_t${permille(threshold)}_c$cutoff") {
+      Dedup.connectedComponents(neardupEdges(spark, sfDir, threshold)
+        .filter(col("d1") < cutoff && col("d2") < cutoff))
     }
-  }
 
   /** Per-shingle first-occurrence origins of the ESTABLISHED corpus
     * (doc_id < `cutoff`): (h, odoc, vsrc) — the citation-attribution
@@ -477,56 +439,46 @@ object Indexes {
     * Derived FROM the persisted [[shingles]] index (parquet read, no
     * re-shingling); cutoff is part of the table identity. */
   def shingleOrigins(spark: SparkSession, sfDir: String,
-                     cutoff: Long): DataFrame = lock.synchronized {
-    import org.apache.spark.sql.functions.{col, explode, min}
-    val name = s"shingle_origins_c$cutoff"
-    cached(spark, store(spark, sfDir), name) { bst =>
+                     cutoff: Long): DataFrame =
+    index(spark, sfDir, s"shingle_origins_c$cutoff") {
       val ex = shingles(spark, sfDir)
         .filter(col("doc_id") < cutoff)
         .select(col("doc_id"), explode(col("__hs")).as("h"))
-      val osrc = ex.groupBy("h").agg(min(col("doc_id")).as("odoc"))
+      ex.groupBy("h").agg(min(col("doc_id")).as("odoc"))
         .join(corpusDocs(spark, sfDir)
           .select(col("doc_id").as("odoc"), col("source").as("vsrc")),
           Seq("odoc"))
-      bst.overwrite(name, osrc.select("h", "odoc", "vsrc"))
+        .select("h", "odoc", "vsrc")
     }
-  }
 
   /** The ESTABLISHED corpus's source→source citation edges (u, v, w)
     * at `cutoff` — carriers below the cutoff attributed against
     * [[shingleOrigins]], pre-aggregated: the standing edge table an
     * incremental re-rank unions its per-batch deltas into. */
   def domainEdges(spark: SparkSession, sfDir: String,
-                  cutoff: Long): DataFrame = lock.synchronized {
-    import org.apache.spark.sql.functions.{col, count, explode, lit}
-    val name = s"domain_edges_c$cutoff"
-    cached(spark, store(spark, sfDir), name) { bst =>
+                  cutoff: Long): DataFrame =
+    index(spark, sfDir, s"domain_edges_c$cutoff") {
       val ex = shingles(spark, sfDir)
         .filter(col("doc_id") < cutoff)
         .select(col("doc_id"), col("source"), explode(col("__hs")).as("h"))
-      val att = graft.ops.Skew.saltedJoinHot(ex,
+      graft.ops.Skew.saltedJoinHot(ex,
           shingleOrigins(spark, sfDir, cutoff).select("h", "vsrc"), "h",
           saltBy = col("doc_id"), salts = 16,
           hotCap = Dedup.DefaultHotShingleCap)
         .filter(col("source") =!= col("vsrc"))
         .select(col("source").as("u"), col("vsrc").as("v"))
         .groupBy("u", "v").agg(count(lit(1)).as("w"))
-      bst.overwrite(name, att)
     }
-  }
 
   /** Per-doc term frequencies (doc_id, w, tf) — ONE tokenize pass over
     * the corpus, landed as a table; document frequency and TF-IDF
     * scoring derive from it without re-running the explode. */
-  def termFrequencies(spark: SparkSession, sfDir: String): DataFrame = lock.synchronized {
-    import org.apache.spark.sql.functions.{col, count, explode, lit}
-    cached(spark, store(spark, sfDir), "doc_tf") { bst =>
-      bst.overwrite("doc_tf",
-        corpusDocs(spark, sfDir)
-          .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("w"))
-          .groupBy("doc_id", "w").agg(count(lit(1)).as("tf")))
+  def termFrequencies(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, "doc_tf") {
+      corpusDocs(spark, sfDir)
+        .select(col("doc_id"), explode(Dedup.tokens(col("text"))).as("w"))
+        .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
     }
-  }
 
   /** Per-doc bigram frequencies (doc_id, bg, tf — `bg` = the two
     * whitespace tokens joined by one space) — the order-2 sibling of
@@ -535,20 +487,17 @@ object Indexes {
     * expression, no extra explode), landed as a table. Corpus bigram
     * counts (the n-gram LM every bigram consumer scores against)
     * derive from it with one `sum`, never a re-scan (q111). */
-  def bigramFrequencies(spark: SparkSession, sfDir: String): DataFrame = lock.synchronized {
-    import org.apache.spark.sql.functions._
-    cached(spark, store(spark, sfDir), "doc_bigrams") { bst =>
+  def bigramFrequencies(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, "doc_bigrams") {
       val ws = Dedup.tokens(col("text"))
       val pairs = zip_with(
         slice(ws, lit(1), size(ws) - 1),
         slice(ws, lit(2), size(ws) - 1),
         (a, b) => concat_ws(" ", a, b))
-      bst.overwrite("doc_bigrams",
-        corpusDocs(spark, sfDir)
-          .select(col("doc_id"), explode(pairs).as("bg"))
-          .groupBy("doc_id", "bg").agg(count(lit(1)).as("tf")))
+      corpusDocs(spark, sfDir)
+        .select(col("doc_id"), explode(pairs).as("bg"))
+        .groupBy("doc_id", "bg").agg(count(lit(1)).as("tf"))
     }
-  }
 
   /** Per-document bigram-LM score aggregate (doc_id, n_bigrams,
     * lm_score) over the corpus bigram model: n_bigrams = sum(tf),
@@ -560,22 +509,19 @@ object Indexes {
     * q133/q145 (r16 measured 6.1/14.1/16.8 s sf10) — so it lands as
     * a 3-column/doc table and they read parquet. Values are exact
     * integer sums, bit-identical to the inline aggregate. */
-  def docLmScores(spark: SparkSession, sfDir: String): DataFrame = lock.synchronized {
-    import org.apache.spark.sql.functions._
-    cached(spark, store(spark, sfDir), "doc_lm_scores") { bst =>
+  def docLmScores(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, "doc_lm_scores") {
       val bf = bigramFrequencies(spark, sfDir)
       val cnt = bf.groupBy("bg").agg(sum(col("tf")).as("c"))
       // Blanket salt kept (hot-key variant measured slower on the
       // bigram dim — LmScore.bigramNll's note).
-      bst.overwrite("doc_lm_scores",
-        graft.ops.Skew.saltedJoin(bf, cnt, "bg",
-            saltBy = col("doc_id"), salts = 16)
-          .groupBy("doc_id")
-          .agg(sum(col("tf")).as("n_bigrams"),
-            sum(length(bin(col("c"))).cast("long") * col("tf"))
-              .as("lm_score")))
+      graft.ops.Skew.saltedJoin(bf, cnt, "bg",
+          saltBy = col("doc_id"), salts = 16)
+        .groupBy("doc_id")
+        .agg(sum(col("tf")).as("n_bigrams"),
+          sum(length(bin(col("c"))).cast("long") * col("tf"))
+            .as("lm_score"))
     }
-  }
 
   /** Hashed bigram feature buckets (doc_id, b, tf) — the bigram index
     * with each bigram's portable 64-bit hash folded into 4096 feature
@@ -586,16 +532,13 @@ object Indexes {
     * collapsed per (doc, bucket) — every downstream use is a
     * collapse-invariant sum, and the collapse would be a corpus-sized
     * shuffle in the build buying nothing. */
-  def bigramBuckets(spark: SparkSession, sfDir: String): DataFrame = lock.synchronized {
-    import org.apache.spark.sql.functions._
-    cached(spark, store(spark, sfDir), "bigram_buckets") { bst =>
-      bst.overwrite("bigram_buckets",
-        bigramFrequencies(spark, sfDir).select(col("doc_id"),
-          pmod(graft.functions.Functions.portableHash64(col("bg")),
-            lit(4096L)).as("b"),
-          col("tf")))
+  def bigramBuckets(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, "bigram_buckets") {
+      bigramFrequencies(spark, sfDir).select(col("doc_id"),
+        pmod(graft.functions.Functions.portableHash64(col("bg")),
+          lit(4096L)).as("b"),
+        col("tf"))
     }
-  }
 
   /** Per-document token counts (doc_id, source, n_tok — plain
     * whitespace split, the q36/q164 definition) as a persisted index:
@@ -606,14 +549,11 @@ object Indexes {
     * single space, no normalization), so oracles recomputing
     * `len(string_split(text, ' '))` from the raw table match
     * bit-for-bit. */
-  def docTokens(spark: SparkSession, sfDir: String): DataFrame = lock.synchronized {
-    import org.apache.spark.sql.functions._
-    cached(spark, store(spark, sfDir), "doc_tokens") { bst =>
-      bst.overwrite("doc_tokens",
-        corpusDocs(spark, sfDir).select(col("doc_id"), col("source"),
-          size(Dedup.tokens(col("text"))).cast("bigint").as("n_tok")))
+  def docTokens(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, "doc_tokens") {
+      corpusDocs(spark, sfDir).select(col("doc_id"), col("source"),
+        size(Dedup.tokens(col("text"))).cast("bigint").as("n_tok"))
     }
-  }
 
   /** Trained k-means cell assignments (vec_id, cid, dist) over the
     * `embeddings` table (k=8, 2 Lloyd iterations — the declared
@@ -621,12 +561,11 @@ object Indexes {
     * so the persisted assignment is bit-identical to an inline fit
     * (q68's oracle pins it); SemDeDup blocking joins this table
     * instead of retraining per query. */
-  def kmeansCells(spark: SparkSession, sfDir: String): DataFrame = lock.synchronized {
-    cached(spark, store(spark, sfDir), "kmeans_cells") { bst =>
-      bst.overwrite("kmeans_cells", graft.ops.Similarity.kmeansFit(
-        graft.io.Sources.table(spark, sfDir, "embeddings"), k = 8, iters = 2))
+  def kmeansCells(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, "kmeans_cells") {
+      Similarity.kmeansFit(
+        graft.io.Sources.table(spark, sfDir, "embeddings"), k = 8, iters = 2)
     }
-  }
 
   /** The SCALED blocking codebook (k=64, same trainer/space/iters as
     * [[kmeansCells]]) — the SemDeDup production dial made concrete:
@@ -637,12 +576,11 @@ object Indexes {
     * — measured at sf10 the k dial alone takes the within-cell stage
     * ~8× down. Same persisted-registry discipline: trained once per
     * corpus generation. */
-  def kmeansCells64(spark: SparkSession, sfDir: String): DataFrame = lock.synchronized {
-    cached(spark, store(spark, sfDir), "kmeans_cells_k64") { bst =>
-      bst.overwrite("kmeans_cells_k64", graft.ops.Similarity.kmeansFit(
-        graft.io.Sources.table(spark, sfDir, "embeddings"), k = 64, iters = 2))
+  def kmeansCells64(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, "kmeans_cells_k64") {
+      Similarity.kmeansFit(
+        graft.io.Sources.table(spark, sfDir, "embeddings"), k = 64, iters = 2)
     }
-  }
 
   /** The AUTO-SIZED blocking codebook — the semantic-dedup default.
     * Cell count targets constant ~64-vector occupancy at any corpus
@@ -658,15 +596,12 @@ object Indexes {
     * oracle (k1 derived from count(*) in SQL); the fixed k=8 flat
     * config survives as q68's trainer gate and the [[kmeansCells]]
     * IVF codebook. */
-  def kmeansCellsAuto(spark: SparkSession, sfDir: String): DataFrame = lock.synchronized {
-    cached(spark, store(spark, sfDir), "kmeans_cells_auto") { bst =>
-      import graft.ops.Similarity
+  def kmeansCellsAuto(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, "kmeans_cells_auto") {
       val emb = graft.io.Sources.table(spark, sfDir, "embeddings")
       val k1 = Similarity.sqrtCeil(Similarity.autoCodebookK(emb.count()))
-      bst.overwrite("kmeans_cells_auto",
-        Similarity.kmeansFitResidual(emb, k1, k1, iters = 2))
+      Similarity.kmeansFitResidual(emb, k1, k1, iters = 2)
     }
-  }
 
   /** The trained unigram-LM vocabulary (p, c): [[graft.ops.Unigram]]'s
     * EM-pruned piece table with its final exact integer counts —
@@ -675,34 +610,23 @@ object Indexes {
     * table FROM [[bpeWords]] (no second corpus normalization pass —
     * the shared-scan discipline). */
   def unigramVocab(spark: SparkSession, sfDir: String): DataFrame =
-    lock.synchronized {
-      cached(spark, store(spark, sfDir), "unigram_vocab") { bst =>
-        import org.apache.spark.sql.functions.{col, count, explode, lit}
-        val types = bpeWords(spark, sfDir)
-          .select(explode(col("__ws")).as("w"))
-          .groupBy("w").agg(count(lit(1)).as("n"))
-        // Auto dispatch (in-memory when the type table fits the
-        // collect bound — identical vocabulary, UnigramSpec pin): the
-        // distributed trainer's seed + EM rounds were 3 extra Spark
-        // jobs of fixed overhead in this cold build.
-        val vocab = graft.ops.Unigram.trainVocabAuto(types)
-        import spark.implicits._
-        bst.overwrite("unigram_vocab", vocab.toDF("p", "c"))
-      }
+    index(spark, sfDir, "unigram_vocab") {
+      val types = bpeWords(spark, sfDir)
+        .select(explode(col("__ws")).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("n"))
+      // Auto dispatch (in-memory when the type table fits the
+      // collect bound — identical vocabulary, UnigramSpec pin): the
+      // distributed trainer's seed + EM rounds were 3 extra Spark
+      // jobs of fixed overhead in this cold build.
+      import spark.implicits._
+      graft.ops.Unigram.trainVocabAuto(types).toDF("p", "c")
     }
 
-  /** Per-doc span occurrences (doc_id, span, occ) — every 8-token
-    * sliding span of the NORMALIZED token stream, pre-collapsed to
-    * one row per (doc, span). ONE normalize+explode pass over the
-    * corpus, landed as a table; the span-dedup family (q79's
-    * duplicated-span aggregate, q91's span-duplication gate) derives
-    * from it without re-running the regex scan per consumer — the
-    * same discipline as [[shingles]]/[[termFrequencies]]. */
   /** The normalized POSITIONAL token-array index: one (doc_id, `t`)
     * row per document, t = `split(TextAnalysis.normalize(text), ' ')`
     * — the span-dedup family's token universe with positions
     * preserved, landed once per corpus generation. Measured
-    * motivation (tools/Q208Profile, sf10): the normalize regex pass
+    * motivation (sf10, OPTIMIZATION_r16.md): the normalize regex pass
     * is ~15.7 s and the positional machinery on top of it ~0 s — and
     * q208/q209 each evaluated the normalize subtree TWICE per query
     * (span stream + the doc-keyed token-array join back), q91 a
@@ -712,47 +636,49 @@ object Indexes {
     * [""] row — bpeWords' word filter would shift q209's declared
     * n_tokens). */
   def normTokens(spark: SparkSession, sfDir: String): DataFrame =
-    lock.synchronized {
-      cached(spark, store(spark, sfDir), "norm_tokens") { bst =>
-        import org.apache.spark.sql.functions.{col, split}
-        bst.overwrite("norm_tokens",
-          corpusDocs(spark, sfDir).select(col("doc_id"),
-            split(graft.ops.TextAnalysis.normalize(col("text")), " ").as("t")))
-      }
+    index(spark, sfDir, "norm_tokens") {
+      corpusDocs(spark, sfDir).select(col("doc_id"),
+        split(graft.ops.TextAnalysis.normalize(col("text")), " ").as("t"))
     }
 
-  def spanOccurrences(spark: SparkSession, sfDir: String): DataFrame = lock.synchronized {
-    import org.apache.spark.sql.functions.{col, count, explode, lit}
-    cached(spark, store(spark, sfDir), "doc_spans") { bst =>
-      // Derived FROM [[normTokens]] — the one normalize pass this
-      // family pays per corpus generation lands there; this build is
-      // explode + count over the stored arrays.
-      bst.overwrite("doc_spans",
-        normTokens(spark, sfDir)
-          .select(col("doc_id"),
-            explode(graft.ops.TextAnalysis.spanGrams(col("t"), 8)).as("span"))
-          .groupBy("doc_id", "span").agg(count(lit(1)).as("occ")))
+  /** Per-doc span occurrences (doc_id, span, occ) — every 8-token
+    * sliding span of the NORMALIZED token stream, pre-collapsed to
+    * one row per (doc, span). ONE normalize+explode pass over the
+    * corpus, landed as a table; the span-dedup family (q79's
+    * duplicated-span aggregate, q91's span-duplication gate) derives
+    * from it without re-running the regex scan per consumer — the
+    * same discipline as [[shingles]]/[[termFrequencies]]. Derived
+    * FROM [[normTokens]]: the one normalize pass this family pays per
+    * corpus generation lands there; this build is explode + count
+    * over the stored arrays. */
+  def spanOccurrences(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, "doc_spans") {
+      normTokens(spark, sfDir)
+        .select(col("doc_id"),
+          explode(graft.ops.TextAnalysis.spanGrams(col("t"), 8)).as("span"))
+        .groupBy("doc_id", "span").agg(count(lit(1)).as("occ"))
     }
-  }
 
   /** Trained PQ codebooks (4 subspaces × 4 entries over the 64-dim
     * `embeddings`, 2 Lloyd iterations each — the declared q82 config).
     * Driver-side by nature (a codebook IS bounded metadata, the
     * [[graft.ops.Similarity.MaxCentroids]] discipline); memoized per
-    * corpus so the four training passes run once per process. In
-    * production the codebooks serialize next to the codes table as
-    * part of the index generation. */
+    * index namespace so the four training passes run once per process
+    * and a regenerated raw corpus retrains. In production the
+    * codebooks serialize next to the codes table as part of the index
+    * generation. */
   private val pqCodebookCache =
-    scala.collection.mutable.Map.empty[(String, Long), Seq[Seq[Array[Long]]]]
+    scala.collection.mutable.Map.empty[String, Seq[Seq[Array[Long]]]]
   def pqCodebooks(spark: SparkSession, sfDir: String): Seq[Seq[Array[Long]]] =
     lock.synchronized {
-      pqCodebookCache.getOrElseUpdate((sfDir, corpusEpoch(spark, sfDir)), {
+      val st = store(spark, sfDir)
+      pqCodebookCache.getOrElseUpdate(st.root, {
         // Bounded metadata, but the TRAINING is corpus aggregates —
         // persist through the registry so a second process reads the
         // table instead of re-running four Lloyd chains.
-        val df = cached(spark, store(spark, sfDir), "pq_codebooks") { bst =>
+        val df = cached(spark, st, "pq_codebooks") { bst =>
           import spark.implicits._
-          val rows = graft.ops.Similarity.pqTrainCodebooks(
+          val rows = Similarity.pqTrainCodebooks(
             graft.io.Sources.table(spark, sfDir, "embeddings"),
             dim = 64, m = 4, kPerSub = 4, iters = 2)
             .zipWithIndex.flatMap { case (subs, m) =>
@@ -774,53 +700,52 @@ object Indexes {
     * Deterministic integer math end-to-end, so the persisted codes
     * are bit-identical to an inline encode (q82's oracle pins the
     * whole chain). */
-  def pqCodes(spark: SparkSession, sfDir: String): DataFrame = lock.synchronized {
-    cached(spark, store(spark, sfDir), "pq_codes") { bst =>
-      bst.overwrite("pq_codes", graft.ops.Similarity.pqEncode(
+  def pqCodes(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, "pq_codes") {
+      Similarity.pqEncode(
         graft.io.Sources.tableRebalanced(spark, sfDir, "embeddings"),
-        pqCodebooks(spark, sfDir)))
+        pqCodebooks(spark, sfDir))
     }
-  }
 
   /** Trained BPE merge table over a corpus's `documents.text`
     * (driver-side bounded metadata, the [[pqCodebooks]] discipline:
     * `nMerges` rules of a few bytes each). Training runs once per
-    * (corpus, nMerges) per process; application is a pure map
-    * expression reading this table. In production the merge table
+    * (index namespace, nMerges) per process; application is a pure
+    * map expression reading this table. In production the merge table
     * serializes next to the tokenized output as part of the corpus
     * generation. */
   private val bpeMergeCache =
-    scala.collection.mutable.Map.empty[(String, Long, Int), Seq[(String, String)]]
+    scala.collection.mutable.Map.empty[(String, Int), Seq[(String, String)]]
   def bpeMerges(spark: SparkSession, sfDir: String,
                 nMerges: Int): Seq[(String, String)] = lock.synchronized {
-    val epoch = corpusEpoch(spark, sfDir)
-    bpeMergeCache.getOrElseUpdate((sfDir, epoch, nMerges), {
+    val st = store(spark, sfDir)
+    bpeMergeCache.getOrElseUpdate((st.root, nMerges), {
       // Greedy training is prefix-stable (rule k depends only on rules
       // < k — BpeSpec pins it), so a longer already-trained table
       // serves any shorter cap as its prefix: no second training, no
       // second persisted table.
       bpeMergeCache.collectFirst {
-        case ((d2, e2, n2), rules) if d2 == sfDir && e2 == epoch && n2 >= nMerges =>
+        case ((ns, n2), rules) if ns == st.root && n2 >= nMerges =>
           rules.take(nMerges)
       }.getOrElse {
-      // Persist the rule table (ordered) so a second process reads it
-      // instead of re-training. Training dispatches through
-      // [[graft.ops.Bpe.trainMergesAuto]]: ONE distributed corpus
-      // pass builds the word-type table, then the greedy loop runs
-      // in-memory when the types fit the collect bound (every
-      // natural-language vocabulary — 32k rules in ~86 s on an
-      // 86k-type corpus) and as distributed batched aggregates past
-      // it. All paths produce the identical merge table (BpeSpec pins
-      // equality at 512 rules on the harness corpus), so the oracles
-      // stay hash-exact whatever the dispatch.
-      val name = s"bpe_merges_n$nMerges"
-      val df = cached(spark, store(spark, sfDir), name) { bst =>
-        import spark.implicits._
-        val rules = graft.ops.Bpe.trainMergesAuto(
-          corpusDocs(spark, sfDir), "text", nMerges)
-          .zipWithIndex.map { case ((a, b), i) => (i, a, b) }
-        bst.overwrite(name, rules.toDF("i", "a", "b"))
-      }
+        // Persist the rule table (ordered) so a second process reads it
+        // instead of re-training. Training dispatches through
+        // [[graft.ops.Bpe.trainMergesAuto]]: ONE distributed corpus
+        // pass builds the word-type table, then the greedy loop runs
+        // in-memory when the types fit the collect bound (every
+        // natural-language vocabulary — 32k rules in ~86 s on an
+        // 86k-type corpus) and as distributed batched aggregates past
+        // it. All paths produce the identical merge table (BpeSpec pins
+        // equality at 512 rules on the harness corpus), so the oracles
+        // stay hash-exact whatever the dispatch.
+        val name = s"bpe_merges_n$nMerges"
+        val df = cached(spark, st, name) { bst =>
+          import spark.implicits._
+          val rules = graft.ops.Bpe.trainMergesAuto(
+            corpusDocs(spark, sfDir), "text", nMerges)
+            .zipWithIndex.map { case ((a, b), i) => (i, a, b) }
+          bst.overwrite(name, rules.toDF("i", "a", "b"))
+        }
         df.collect().sortBy(_.getInt(0))
           .map(r => (r.getString(1), r.getString(2))).toSeq
       }
@@ -838,8 +763,7 @@ object Indexes {
     * Hamming candidate join reads it on both sides. */
   def imagePhash(spark: SparkSession, sfDir: String): DataFrame =
     imagePhashVia(spark, sfDir, "image_phash",
-      graft.ops.Multimodal.encodeBmp24Gray,
-      () => new graft.ops.Multimodal.BmpCodec)
+      Multimodal.encodeBmp24Gray, () => new Multimodal.BmpCodec)
 
   /** The SAME phash index built through a COMPRESSED container: text
     * bytes → grayscale PNG blobs ([[graft.ops.Multimodal
@@ -850,8 +774,7 @@ object Indexes {
     * not just by the `mkCodec` signature. */
   def imagePhashPng(spark: SparkSession, sfDir: String): DataFrame =
     imagePhashVia(spark, sfDir, "image_phash_png",
-      graft.ops.Multimodal.encodePngGray,
-      () => new graft.ops.Multimodal.PngCodec)
+      Multimodal.encodePngGray, () => new Multimodal.PngCodec)
 
   /** And through the LZW path: gray pixels in real GIF89a containers
     * decoded by the production [[graft.ops.Multimodal.GifCodec]]
@@ -859,8 +782,7 @@ object Indexes {
     * (q107 pins it). */
   def imagePhashGif(spark: SparkSession, sfDir: String): DataFrame =
     imagePhashVia(spark, sfDir, "image_phash_gif",
-      graft.ops.Multimodal.encodeGifGray,
-      () => new graft.ops.Multimodal.GifCodec)
+      Multimodal.encodeGifGray, () => new Multimodal.GifCodec)
 
   /** And through the LOSSY container: the same gray pixels as
     * max-quality JPEGs ([[graft.ops.Multimodal.encodeJpegGray]])
@@ -872,32 +794,29 @@ object Indexes {
     * discipline), not hash equality. */
   def imagePhashJpeg(spark: SparkSession, sfDir: String): DataFrame =
     imagePhashVia(spark, sfDir, "image_phash_jpeg",
-      graft.ops.Multimodal.encodeJpegGray,
-      () => new graft.ops.Multimodal.JpegCodec)
+      Multimodal.encodeJpegGray, () => new Multimodal.JpegCodec)
+
+  /** The 18×16 gray fixture of a document: pixel i = byte i of the
+    * UTF-8 text (ASCII corpus), space-padded to 18·16 — row-major,
+    * the layout the q97 oracle recomputes with ascii(substring(...)). */
+  private def grayFixture(text: String): Array[Byte] = {
+    val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val gray = Array.fill[Byte](18 * 16)(32)
+    System.arraycopy(bytes, 0, gray, 0, math.min(bytes.length, gray.length))
+    gray
+  }
 
   private def imagePhashVia(spark: SparkSession, sfDir: String, name: String,
                             encode: (Array[Byte], Int, Int) => Array[Byte],
-                            mkCodec: () => graft.ops.Multimodal.MediaCodec): DataFrame =
-    lock.synchronized {
-      cached(spark, store(spark, sfDir), name) { bst =>
-        import spark.implicits._
-        import org.apache.spark.sql.functions.col
-        val docs = corpusDocs(spark, sfDir)
-          .select(col("doc_id"), col("text")).as[(Long, String)]
-        val media = docs.mapPartitions { it =>
-          it.map { case (id, text) =>
-            // Pixel i = byte i of the UTF-8 text (ASCII corpus), space-
-            // padded to 18·16 — row-major, the layout the q97 oracle
-            // recomputes with ascii(substring(...)).
-            val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            val gray = Array.fill[Byte](18 * 16)(32)
-            System.arraycopy(bytes, 0, gray, 0, math.min(bytes.length, gray.length))
-            (id, encode(gray, 18, 16))
-          }
-        }.toDF("doc_id", "content")
-        bst.overwrite(name,
-          graft.ops.Multimodal.imageDhash(media, 18, 16, mkCodec))
-      }
+                            mkCodec: () => Multimodal.MediaCodec): DataFrame =
+    index(spark, sfDir, name) {
+      import spark.implicits._
+      val media = corpusDocs(spark, sfDir)
+        .select(col("doc_id"), col("text")).as[(Long, String)]
+        .mapPartitions(_.map { case (id, text) =>
+          (id, encode(grayFixture(text), 18, 16))
+        }).toDF("doc_id", "content")
+      Multimodal.imageDhash(media, 18, 16, mkCodec)
     }
 
   /** Per-clip audio fingerprints (doc_id, afp) — the AUDIO member of
@@ -910,34 +829,8 @@ object Indexes {
     * map pass runs ONCE per corpus and lands as a table; the banded
     * Hamming candidate join reads it on both sides (q110). */
   def audioFingerprint(spark: SparkSession, sfDir: String): DataFrame =
-    lock.synchronized {
-      cached(spark, store(spark, sfDir), "audio_fingerprint") { bst =>
-        import spark.implicits._
-        import org.apache.spark.sql.functions.col
-        val docs = corpusDocs(spark, sfDir)
-          .select(col("doc_id"), col("text")).as[(Long, String)]
-        val media = docs.mapPartitions { it =>
-          it.map { case (id, text) =>
-            val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            // The fingerprint reads only the 130-sample clip prefix
-            // (missing samples count as silence — pinned by
-            // MultimodalSpec), so encode exactly that: a full-text
-            // WAV would put ~98 % of the index build's encode/decode
-            // byte traffic past the clip, all dead work.
-            val n = math.min(bytes.length, 130)
-            val samples = new Array[Short](n)
-            var i = 0
-            while (i < n) {
-              samples(i) = (((bytes(i) & 0xff) - 128) * 256).toShort
-              i += 1
-            }
-            (id, graft.ops.Multimodal.encodeWavPcm16(samples))
-          }
-        }.toDF("doc_id", "content")
-        bst.overwrite("audio_fingerprint",
-          graft.ops.Multimodal.audioFingerprints(media))
-      }
-    }
+    audioFingerprintVia(spark, sfDir, "audio_fingerprint",
+      Multimodal.encodeWavPcm16(_), () => new Multimodal.WavPcmCodec)
 
   /** The LOSSY audio twin of [[audioFingerprint]]: the same clips
     * through IMA ADPCM compression (encodeAdpcmImaWav →
@@ -945,29 +838,38 @@ object Indexes {
     * the corpus-population half of the q147 tolerance gate. Same
     * build shape: one decode+hash map pass, landed as a table. */
   def audioFingerprintAdpcm(spark: SparkSession, sfDir: String): DataFrame =
-    lock.synchronized {
-      cached(spark, store(spark, sfDir), "audio_fingerprint_adpcm") { bst =>
-        import spark.implicits._
-        import org.apache.spark.sql.functions.col
-        val docs = corpusDocs(spark, sfDir)
-          .select(col("doc_id"), col("text")).as[(Long, String)]
-        val media = docs.mapPartitions { it =>
-          it.map { case (id, text) =>
-            val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            val n = math.min(bytes.length, 130)
-            val samples = new Array[Short](n)
-            var i = 0
-            while (i < n) {
-              samples(i) = (((bytes(i) & 0xff) - 128) * 256).toShort
-              i += 1
-            }
-            (id, graft.ops.Multimodal.encodeAdpcmImaWav(samples))
+    audioFingerprintVia(spark, sfDir, "audio_fingerprint_adpcm",
+      Multimodal.encodeAdpcmImaWav(_), () => new Multimodal.AdpcmImaCodec)
+
+  /** The MDCT-transform twin of [[audioFingerprint]]: the same clips
+    * through the lossy MDCT subband codec (encodeMdctWav →
+    * [[graft.ops.Multimodal.MdctCodec]]) before fingerprinting — the
+    * corpus-population half of the q160 tolerance gate. Same build
+    * shape: one decode+hash map pass, landed as a table. */
+  def audioFingerprintMdct(spark: SparkSession, sfDir: String): DataFrame =
+    audioFingerprintVia(spark, sfDir, "audio_fingerprint_mdct",
+      Multimodal.encodeMdctWav(_), () => new Multimodal.MdctCodec)
+
+  private def audioFingerprintVia(spark: SparkSession, sfDir: String, name: String,
+                                  encode: Array[Short] => Array[Byte],
+                                  mkCodec: () => Multimodal.MediaCodec): DataFrame =
+    index(spark, sfDir, name) {
+      import spark.implicits._
+      val media = corpusDocs(spark, sfDir)
+        .select(col("doc_id"), col("text")).as[(Long, String)]
+        .mapPartitions(_.map { case (id, text) =>
+          val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+          // The fingerprint reads only the 130-sample clip prefix
+          // (missing samples count as silence — pinned by
+          // MultimodalSpec), so encode exactly that: a full-text
+          // clip would put ~98 % of the index build's encode/decode
+          // byte traffic past the clip, all dead work.
+          val samples = Array.tabulate[Short](math.min(bytes.length, 130)) { i =>
+            (((bytes(i) & 0xff) - 128) * 256).toShort
           }
-        }.toDF("doc_id", "content")
-        bst.overwrite("audio_fingerprint_adpcm",
-          graft.ops.Multimodal.audioFingerprints(media,
-            () => new graft.ops.Multimodal.AdpcmImaCodec))
-      }
+          (id, encode(samples))
+        }).toDF("doc_id", "content")
+      Multimodal.audioFingerprints(media, mkCodec)
     }
 
   /** Per-VIDEO perceptual hashes (doc_id, phash) — the video member
@@ -979,20 +881,15 @@ object Indexes {
     * [[graft.ops.Multimodal.AviMjpegCodec]] (RIFF walk + per-frame
     * in-engine JPEG decode), and dHashed on FRAME 0 — the
     * representative-frame fingerprinting a video dedup pipeline runs.
-    * One encode+decode+hash map pass per corpus, landed as a table. */
+    * Derived FROM [[videoSeqPhashMjpeg]]: the representative phash IS
+    * the sequence index's frame-0 hash (both builds encoded and
+    * decoded the identical 3-frame AVIs and dHashed the same frame-0
+    * slice — r16 shared-scan batching: the second 135 s sf10
+    * encode+decode pass was pure duplication). */
   def videoPhashMjpeg(spark: SparkSession, sfDir: String): DataFrame =
-    lock.synchronized {
-      cached(spark, store(spark, sfDir), "video_phash_mjpeg") { bst =>
-        import org.apache.spark.sql.functions.col
-        // Derived FROM [[videoSeqPhashMjpeg]]: the representative
-        // phash IS the sequence index's frame-0 hash (both builds
-        // encoded and decoded the identical 3-frame AVIs and dHashed
-        // the same frame-0 slice — r16 shared-scan batching: the
-        // second 135 s sf10 encode+decode pass was pure duplication).
-        bst.overwrite("video_phash_mjpeg",
-          videoSeqPhashMjpeg(spark, sfDir)
-            .select(col("doc_id"), col("h0").as("phash")))
-      }
+    index(spark, sfDir, "video_phash_mjpeg") {
+      videoSeqPhashMjpeg(spark, sfDir)
+        .select(col("doc_id"), col("h0").as("phash"))
     }
 
   /** Per-frame hash SEQUENCES (doc_id, h0, h1, h2) over the same
@@ -1000,68 +897,30 @@ object Indexes {
     * fingerprint a video near-dup pipeline verifies with: frame 0 is
     * the representative hash (candidate generation), the full sequence
     * is the cheap cross-frame confirmation that two videos agree over
-    * TIME, not just on one keyframe. Same build shape (one
-    * encode+decode+hash map pass landed as a table); each frame is
-    * sliced from the single decoded buffer, so multi-frame decode is
-    * exercised per corpus row, not just in specs. */
+    * TIME, not just on one keyframe. One encode+decode+hash map pass
+    * landed as a table; each frame is sliced from the single decoded
+    * buffer, so multi-frame decode is exercised per corpus row, not
+    * just in specs. */
   def videoSeqPhashMjpeg(spark: SparkSession, sfDir: String): DataFrame =
-    lock.synchronized {
-      cached(spark, store(spark, sfDir), "video_seq_phash_mjpeg") { bst =>
-        import spark.implicits._
-        import org.apache.spark.sql.functions.col
-        val docs = corpusDocs(spark, sfDir)
-          .select(col("doc_id"), col("text")).as[(Long, String)]
-        val hashed = docs.mapPartitions { it =>
-          val codec = new graft.ops.Multimodal.AviMjpegCodec().init()
+    index(spark, sfDir, "video_seq_phash_mjpeg") {
+      import spark.implicits._
+      corpusDocs(spark, sfDir)
+        .select(col("doc_id"), col("text")).as[(Long, String)]
+        .mapPartitions { it =>
+          val codec = new Multimodal.AviMjpegCodec().init()
           it.map { case (id, text) =>
-            val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            val gray = Array.fill[Byte](18 * 16)(32)
-            System.arraycopy(bytes, 0, gray, 0, math.min(bytes.length, gray.length))
+            val gray = grayFixture(text)
             val brighter = gray.map(b => math.min(255, (b & 0xff) + 40).toByte)
             val mirrored = Array.tabulate[Byte](18 * 16) { i =>
               val (y, x) = (i / 18, i % 18); gray(y * 18 + (17 - x))
             }
-            val avi = graft.ops.Multimodal.encodeAviMjpeg(
-              Seq(gray, brighter, mirrored), 18, 16)
-            val frames = codec.decode(avi)
-            def h(f: Int): Long = graft.ops.Multimodal.dhash64(
-              graft.ops.Multimodal.videoFrameSlice(frames, 18, 16, f), 18, 16)
+            val frames = codec.decode(Multimodal.encodeAviMjpeg(
+              Seq(gray, brighter, mirrored), 18, 16))
+            def h(f: Int): Long = Multimodal.dhash64(
+              Multimodal.videoFrameSlice(frames, 18, 16, f), 18, 16)
             (id, h(0), h(1), h(2))
           }
         }.toDF("doc_id", "h0", "h1", "h2")
-        bst.overwrite("video_seq_phash_mjpeg", hashed)
-      }
-    }
-
-  /** The MDCT-transform twin of [[audioFingerprint]]: the same clips
-    * through the lossy MDCT subband codec (encodeMdctWav →
-    * [[graft.ops.Multimodal.MdctCodec]]) before fingerprinting — the
-    * corpus-population half of the q160 tolerance gate. Same build
-    * shape: one decode+hash map pass, landed as a table. */
-  def audioFingerprintMdct(spark: SparkSession, sfDir: String): DataFrame =
-    lock.synchronized {
-      cached(spark, store(spark, sfDir), "audio_fingerprint_mdct") { bst =>
-        import spark.implicits._
-        import org.apache.spark.sql.functions.col
-        val docs = corpusDocs(spark, sfDir)
-          .select(col("doc_id"), col("text")).as[(Long, String)]
-        val media = docs.mapPartitions { it =>
-          it.map { case (id, text) =>
-            val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            val n = math.min(bytes.length, 130)
-            val samples = new Array[Short](n)
-            var i = 0
-            while (i < n) {
-              samples(i) = (((bytes(i) & 0xff) - 128) * 256).toShort
-              i += 1
-            }
-            (id, graft.ops.Multimodal.encodeMdctWav(samples))
-          }
-        }.toDF("doc_id", "content")
-        bst.overwrite("audio_fingerprint_mdct",
-          graft.ops.Multimodal.audioFingerprints(media,
-            () => new graft.ops.Multimodal.MdctCodec))
-      }
     }
 
   /** The domain authority ranks (source, rank_scaled) — the
@@ -1072,29 +931,17 @@ object Indexes {
     * power iterations per consumer was the curation family's
     * dominant cost). Iteration count is part of the table identity. */
   def domainRanks(spark: SparkSession, sfDir: String): DataFrame =
-    lock.synchronized {
-      val name = s"domain_rank_i${CurationQueries.PrIters}"
-      cached(spark, store(spark, sfDir), name) { bst =>
-        bst.overwrite(name, CurationQueries.domainRankCompute(spark, sfDir))
-      }
+    index(spark, sfDir, s"domain_rank_i${CurationQueries.PrIters}") {
+      CurationQueries.domainRankCompute(spark, sfDir)
     }
 
   /** The seed-teleport trust ranks (source, trust_scaled) — the
     * TrustRank twin of [[domainRanks]], same registry discipline. */
   def trustedRanks(spark: SparkSession, sfDir: String): DataFrame =
-    lock.synchronized {
-      val name = s"trusted_rank_i${CurationQueries.PrIters}_s2"
-      cached(spark, store(spark, sfDir), name) { bst =>
-        bst.overwrite(name, CurationQueries.trustedRankCompute(spark, sfDir))
-      }
+    index(spark, sfDir, s"trusted_rank_i${CurationQueries.PrIters}_s2") {
+      CurationQueries.trustedRankCompute(spark, sfDir)
     }
 
-  /** Resolved image near-dup cluster labels (id, component) —
-    * connected components over the banded-Hamming phash pairs at
-    * `maxHamming`, landed as a table: the media-dedup twin of
-    * [[neardupLabels]] (q57 reads persisted text labels; q100 reads
-    * these — CC runs once per corpus, and the radius is part of the
-    * table identity). */
   /** Verified image near-dup PAIRS (d1, d2, fp1, fp2, hamming) at
     * `maxHamming` — the [[neardupEdges]] discipline for the image
     * modality: the banded-Hamming self join over [[imagePhash]] runs
@@ -1105,35 +952,33 @@ object Indexes {
     * pair joins were 24.5 s of q127's 32.6 s sf10). Radius is part of
     * the table identity. */
   def imagePhashPairs(spark: SparkSession, sfDir: String,
-                      maxHamming: Int = 3): DataFrame = lock.synchronized {
-    val name = s"image_phash_pairs_h$maxHamming"
-    cached(spark, store(spark, sfDir), name) { bst =>
-      bst.overwrite(name,
-        Dedup.simhashPairs(imagePhash(spark, sfDir),
-          "doc_id", "phash", maxHamming = maxHamming, fpBits = 64))
+                      maxHamming: Int = 3): DataFrame =
+    index(spark, sfDir, s"image_phash_pairs_h$maxHamming") {
+      Dedup.simhashPairs(imagePhash(spark, sfDir),
+        "doc_id", "phash", maxHamming = maxHamming, fpBits = 64)
     }
-  }
 
   /** Verified audio near-dup PAIRS at `maxHamming` — the audio twin
     * of [[imagePhashPairs]] (consumers: q110, q127). */
   def audioFpPairs(spark: SparkSession, sfDir: String,
-                   maxHamming: Int = 3): DataFrame = lock.synchronized {
-    val name = s"audio_fp_pairs_h$maxHamming"
-    cached(spark, store(spark, sfDir), name) { bst =>
-      bst.overwrite(name,
-        Dedup.simhashPairs(audioFingerprint(spark, sfDir),
-          "doc_id", "afp", maxHamming = maxHamming, fpBits = 64))
+                   maxHamming: Int = 3): DataFrame =
+    index(spark, sfDir, s"audio_fp_pairs_h$maxHamming") {
+      Dedup.simhashPairs(audioFingerprint(spark, sfDir),
+        "doc_id", "afp", maxHamming = maxHamming, fpBits = 64)
     }
-  }
 
+  /** Resolved image near-dup cluster labels (id, component) —
+    * connected components over the banded-Hamming phash pairs at
+    * `maxHamming`, landed as a table: the media-dedup twin of
+    * [[neardupLabels]] (q57 reads persisted text labels; q100 reads
+    * these — CC runs once per corpus, and the radius is part of the
+    * table identity). */
   def imagePhashLabels(spark: SparkSession, sfDir: String,
-                       maxHamming: Int): DataFrame = lock.synchronized {
-    val name = s"image_phash_labels_h$maxHamming"
-    cached(spark, store(spark, sfDir), name) { bst =>
-      bst.overwrite(name, Dedup.connectedComponents(
-        imagePhashPairs(spark, sfDir, maxHamming).select("d1", "d2")))
+                       maxHamming: Int): DataFrame =
+    index(spark, sfDir, s"image_phash_labels_h$maxHamming") {
+      Dedup.connectedComponents(
+        imagePhashPairs(spark, sfDir, maxHamming).select("d1", "d2"))
     }
-  }
 
   /** Random-hyperplane band signatures (vec_id, b0, b1) over the
     * `embeddings` table — the cosine-space analogue of [[signatures]]:
@@ -1144,18 +989,16 @@ object Indexes {
     * occupancy-2 bucket space, the fix for the r9 probe's 137×
     * super-linear row); the count is a parquet-metadata pass, and a
     * regenerated corpus re-derives np with its new fingerprint. */
-  def rpSignatures(spark: SparkSession, sfDir: String): DataFrame = lock.synchronized {
+  def rpSignatures(spark: SparkSession, sfDir: String): DataFrame = {
     val e = graft.io.Sources.tableRebalanced(spark, sfDir, "embeddings")
-    val np = graft.ops.Similarity.autoPlanes(e.count())
+    val np = Similarity.autoPlanes(e.count())
     // The plane count is part of the table IDENTITY: a registry built
     // by other config (an older fixed-8 build, or the same corpus
     // read at a different cardinality) must never be served as this
     // one — signatures at the wrong np would disagree wholesale with
     // the oracle's count-derived banding.
-    val name = s"rp_sigs_np$np"
-    cached(spark, store(spark, sfDir), name) { bst =>
-      bst.overwrite(name, graft.ops.Similarity.rpSignatures(
-        e, "vec_id", "embedding", dim = 64, nPlanes = np))
+    index(spark, sfDir, s"rp_sigs_np$np") {
+      Similarity.rpSignatures(e, "vec_id", "embedding", dim = 64, nPlanes = np)
     }
   }
 }

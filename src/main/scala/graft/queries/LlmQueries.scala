@@ -72,7 +72,7 @@ object LlmQueries {
   /** Spark mirror of [[spanPosCtes]]: (norm = (doc_id, t),
     * spans = (doc_id, pos, span)). Both sides read the persisted
     * [[Indexes.normTokens]] arrays — r16: the normalize regex pass
-    * was ~15.7 s of every sf10 evaluation (tools/Q208Profile) and
+    * was ~15.7 s of every sf10 evaluation (OPTIMIZATION_r16.md) and
     * each caller evaluates `norm` in TWO plan branches (no subtree
     * CSE), so the one normalize pass per corpus generation lands in
     * the registry and every reference here is a parquet scan. The
@@ -133,7 +133,7 @@ object LlmQueries {
   /** The pair-family jaccard verify threshold — interpolated into
     * every oracle SQL string and referenced by every Spark filter, so
     * the two sides and the five queries cannot drift. */
-  private val JaccardThreshold = 0.4
+  private[queries] val JaccardThreshold = 0.4
 
   /** Shared oracle CTE block for the cluster family (q57/q66/q67):
     * verified near-dup pairs (jaccard ≥ [[JaccardThreshold]])
@@ -1905,7 +1905,7 @@ object LlmQueries {
             sum(when(col("dfreq") <= 2, col("tf")).otherwise(0L)).as("n_rare"))
         // Per-doc span count from the persisted token-array index —
         // the normalize pass this line used to pay (~15.7 s sf10,
-        // tools/Q208Profile) lands in [[Indexes.normTokens]] once per
+        // OPTIMIZATION_r16.md) lands in [[Indexes.normTokens]] once per
         // corpus generation.
         val nsp = Indexes.normTokens(s, d)
           .select(col("doc_id"),

@@ -52,25 +52,6 @@ class ContainmentSpec extends AnyFunSuite {
     assert(run(80, 1) === naive(80)) // every shared shingle bucket splits
   }
 
-  private def runPrefix(thresholdPct: Int, cap: Int): Set[(Long, Long, Long, Long, Long)] =
-    Dedup.containmentPairsPrefixFromHashes(hashFrame, "doc_id", thresholdPct, cap)
-      .select("d1", "d2", "inter_cnt", "n1", "n2")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toSet
-
-  test("prefix-filtered pair set equals naive all-pairs containment") {
-    assert(runPrefix(80, 1000) === naive(80))
-    assert(runPrefix(50, 1000) === naive(50))
-    // t=100 degenerates the prefix to ONE shingle per doc (full
-    // containment must share the globally rarest) — the duplicate
-    // pair (1,5) and the strict sub-document (1,2) must survive.
-    assert(runPrefix(100, 1000) === naive(100))
-    assert(naive(100).exists(p => p._1 == 1L && p._2 == 5L))
-    // The hot-key salt cap is pure routing — set-neutral at cap 1.
-    assert(runPrefix(80, 1) === naive(80))
-  }
-
   private def runCollapsed(thresholdPct: Int, cap: Int): Set[(Long, Long, Long, Long, Long)] =
     Dedup.containmentPairsCollapsedFromHashes(hashFrame, "doc_id", thresholdPct, cap)
       .select("d1", "d2", "inter_cnt", "n1", "n2")
@@ -96,12 +77,12 @@ class ContainmentSpec extends AnyFunSuite {
     assert(coll === full)
   }
 
-  test("prefix path equals the self-join path on a seeded random corpus") {
+  test("collapsed path equals the self-join path on a seeded random corpus") {
     // Adversarial shapes in one corpus: boilerplate prefix shared by
-    // EVERY doc (a hot shingle that must stay out of df-ordered
-    // prefixes), exact duplicates, strict sub-documents, disjoint
-    // docs, and length spread — under the harness vocabulary so
-    // shingle df varies.
+    // EVERY doc (a hot shingle every candidate join must survive),
+    // exact duplicates, strict sub-documents, disjoint docs, and
+    // length spread — under the harness vocabulary so shingle df
+    // varies.
     val rnd = new scala.util.Random(42)
     val vocab = ('a' to 'z').map(_.toString)
     val texts = (1L to 60L).map { i =>
@@ -118,11 +99,8 @@ class ContainmentSpec extends AnyFunSuite {
     for (t <- Seq(50, 80, 100)) {
       val self = Dedup.containmentPairsFromHashes(hf, "doc_id", t)
         .collect().map(_.toSeq).toSet
-      val pref = Dedup.containmentPairsPrefixFromHashes(hf, "doc_id", t)
-        .collect().map(_.toSeq).toSet
       val coll = Dedup.containmentPairsCollapsedFromHashes(hf, "doc_id", t)
         .collect().map(_.toSeq).toSet
-      assert(pref === self, s"prefix/self divergence at t=$t")
       assert(coll === self, s"collapsed/self divergence at t=$t")
       assert(self.nonEmpty, s"degenerate fixture at t=$t — nothing gated")
     }

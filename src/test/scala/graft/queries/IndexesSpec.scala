@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -18,6 +19,20 @@ class IndexesSpec extends AnyFunSuite {
   private val thr = 0.4
 
   private def docs = graft.io.Sources.table(spark, sf, "documents")
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Runs `body` with the raw-corpus registry root pointed at `root`. */
+  private def withIndexRoot[T](root: String)(body: => T): T = {
+    val prev = sys.props.get("graft.index.root")
+    sys.props("graft.index.root") = root
+    try body
+    finally prev match {
+      case Some(v) => sys.props("graft.index.root") = v
+      case None => sys.props -= "graft.index.root": Unit
+    }
+  }
 
   test("neardup edges and labels match the inline signature pipeline") {
     val inlineEdges = Dedup.scoredCandidatePairs(
@@ -154,15 +169,13 @@ class IndexesSpec extends AnyFunSuite {
 
   test("registry persists across independent consumers without a rebuild") {
     import spark.implicits._
-    val reg = java.nio.file.Files.createTempDirectory("graft_reg").toString
-    val corpus = java.nio.file.Files.createTempDirectory("graft_raw_corpus").toString
+    val reg = tempDir("graft_reg")
+    val corpus = tempDir("graft_raw_corpus")
     Seq((1L, "alpha beta gamma delta", "s0"), (2L, "alpha beta gamma epsilon", "s0"),
         (3L, "alpha beta gamma delta", "s1"))
       .toDF("doc_id", "text", "source")
       .coalesce(1).write.parquet(s"$corpus/documents.parquet")
-    val prev = sys.props.get("graft.index.root")
-    try {
-      sys.props("graft.index.root") = reg
+    withIndexRoot(reg) {
       def listing: Seq[(String, Long)] = {
         def rec(f: java.io.File): Seq[java.io.File] =
           if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(rec)
@@ -183,9 +196,6 @@ class IndexesSpec extends AnyFunSuite {
       assert(listing === published,
         "second consumer rebuilt instead of reusing the published table")
       assert(again === first)
-    } finally prev match {
-      case Some(v) => sys.props("graft.index.root") = v
-      case None => sys.props -= "graft.index.root": Unit
     }
   }
 
@@ -197,14 +207,12 @@ class IndexesSpec extends AnyFunSuite {
     // doubling rows under recursive listing), and junk part files
     // must not survive into the published table.
     import spark.implicits._
-    val reg = java.nio.file.Files.createTempDirectory("graft_reg_race").toString
-    val corpus = java.nio.file.Files.createTempDirectory("graft_raw_race").toString
+    val reg = tempDir("graft_reg_race")
+    val corpus = tempDir("graft_raw_race")
     Seq((1L, "alpha beta gamma delta", "s0"), (2L, "alpha beta gamma epsilon", "s0"))
       .toDF("doc_id", "text", "source")
       .coalesce(1).write.parquet(s"$corpus/documents.parquet")
-    val prev = sys.props.get("graft.index.root")
-    try {
-      sys.props("graft.index.root") = reg
+    withIndexRoot(reg) {
       val first = Indexes.signatures(spark, corpus)
         .collect().map(_.toString).sorted.toSeq
       def rec(f: java.io.File): Seq[java.io.File] =
@@ -225,9 +233,95 @@ class IndexesSpec extends AnyFunSuite {
         "crashed partial's junk part file survived the repair")
       assert(!new java.io.File(dst, "minhash_sigs").exists,
         "repair nested the new table inside the partial")
-    } finally prev match {
-      case Some(v) => sys.props("graft.index.root") = v
-      case None => sys.props -= "graft.index.root": Unit
+    }
+  }
+
+  test("a raw corpus regenerated in place retrains the driver-side PQ and BPE tables") {
+    // The PQ codebooks and BPE merges are memoized per process; a raw
+    // corpus rewritten at the same path must retrain them, exactly as
+    // a fresh process (here: the same bytes at another path) would.
+    val emb = graft.io.Sources.table(spark, sf, "embeddings")
+    def write(dir: String, d: DataFrame, e: DataFrame): Unit = {
+      d.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      e.coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    }
+    def state(dir: String) = (
+      Indexes.pqCodebooks(spark, dir).map(_.map(_.toSeq)),
+      Indexes.pqCodes(spark, dir).collect().map(_.toString).sorted.toSeq,
+      Indexes.bpeMerges(spark, dir, BpeQueries.MonitorMerges),
+      Indexes.bpeVocab(spark, dir, BpeQueries.MonitorMerges)
+        .collect().map(_.toString).sorted.toSeq)
+    val corpus = tempDir("graft_raw_regen")
+    val copy = tempDir("graft_raw_regen_copy")
+    // The regenerated content: every text reversed character-wise (a
+    // different word vocabulary) and every vector's dimensions
+    // reversed (different subspace codebooks).
+    val docs2 = docs.withColumn("text", reverse(col("text")))
+    val emb2 = emb.withColumn("embedding", reverse(col("embedding")))
+    withIndexRoot(tempDir("graft_reg_regen")) {
+      write(corpus, docs, emb)
+      val before = state(corpus)
+      write(corpus, docs2, emb2)
+      write(copy, docs2, emb2)
+      val after = state(corpus)
+      assert(after === state(copy),
+        "a regenerated raw corpus was served stale driver-side tables")
+      assert(after._1 != before._1 && after._3 != before._3,
+        "fixture: the regenerated corpus must train different tables")
+    }
+  }
+
+  test("a cold rebuild reproduces every registry table") {
+    // Every public accessor, with the parameters the declared queries
+    // pass, built into two fresh registry roots: each landed table
+    // must be identical as a multiset. This is the cross-process reuse
+    // contract — a table built by one process is what any other
+    // process would have built.
+    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
+    val thr = LlmQueries.JaccardThreshold
+    def buildAll(): Unit = {
+      import Indexes._
+      val s = spark
+      shingles(s, sf); sourceShingles(s, sf); bpeWords(s, sf)
+      bpeVocab(s, sf, BpeQueries.MonitorMerges); bpeMerges(s, sf, BpeQueries.NMerges)
+      containmentGroups(s, sf); containmentReps(s, sf)
+      containmentPairs(s, sf, thresholdPct = 80); winnowedPrints(s, sf, window = 8)
+      signatures(s, sf); minhashPairScores(s, sf)
+      simhashFingerprints(s, sf, bits = 32); simhashFingerprints(s, sf, bits = 60)
+      neardupEdges(s, sf, thr); neardupLabels(s, sf, thr)
+      neardupLabelsBase(s, sf, thr, maxId * 4 / 5) // q73's cutoff
+      shingleOrigins(s, sf, maxId * 9 / 10); domainEdges(s, sf, maxId * 9 / 10) // q139's
+      termFrequencies(s, sf); bigramFrequencies(s, sf); docLmScores(s, sf)
+      bigramBuckets(s, sf); docTokens(s, sf); normTokens(s, sf); spanOccurrences(s, sf)
+      kmeansCells(s, sf); kmeansCells64(s, sf); kmeansCellsAuto(s, sf)
+      unigramVocab(s, sf); pqCodebooks(s, sf); pqCodes(s, sf); rpSignatures(s, sf)
+      imagePhash(s, sf); imagePhashPng(s, sf); imagePhashGif(s, sf); imagePhashJpeg(s, sf)
+      audioFingerprint(s, sf); audioFingerprintAdpcm(s, sf); audioFingerprintMdct(s, sf)
+      videoPhashMjpeg(s, sf); videoSeqPhashMjpeg(s, sf)
+      domainRanks(s, sf); trustedRanks(s, sf)
+      imagePhashPairs(s, sf); audioFpPairs(s, sf); imagePhashLabels(s, sf, maxHamming = 3)
+    }
+    /** Published tables (directories holding `_SUCCESS`), keyed by
+      * their path below the registry root. */
+    def landed(root: String): Map[String, String] = {
+      def rec(f: java.io.File): Seq[java.io.File] =
+        if (new java.io.File(f, "_SUCCESS").exists) Seq(f)
+        else Option(f.listFiles).toSeq.flatten.filter(_.isDirectory).flatMap(rec)
+      val base = new java.io.File(root).toPath
+      rec(new java.io.File(root))
+        .map(f => base.relativize(f.toPath).toString -> f.getPath).toMap
+    }
+    val (a, b) = (tempDir("graft_reg_cold_a"), tempDir("graft_reg_cold_b"))
+    withIndexRoot(a)(buildAll())
+    withIndexRoot(b)(buildAll())
+    val (ta, tb) = (landed(a), landed(b))
+    assert(ta.keySet === tb.keySet)
+    assert(ta.size === 47, ta.keys.toSeq.sorted.mkString(", "))
+    for (t <- ta.keys.toSeq.sorted) {
+      val (x, y) = (spark.read.parquet(ta(t)), spark.read.parquet(tb(t)))
+      assert(x.schema === y.schema, t)
+      assert(x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty,
+        s"$t differs between two cold builds")
     }
   }
 
