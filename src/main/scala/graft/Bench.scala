@@ -16,18 +16,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Every main pins UTC: Sources.table's NTZ normalization (replica
-      // events tables) casts through the session zone, and a local-TZ
-      // session would silently shift event times on such inputs.
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = SparkEntry.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // SPARK_GRAFT_ONLY=q10_star_enrich,q12_fraud_rules → time just

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up data generator for bench-envelope runs:
@@ -32,14 +32,7 @@ object DataScale {
     val (src, out) = (args(0), args(1))
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = SparkEntry.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Through Sources.table, not a raw parquet read: the harness

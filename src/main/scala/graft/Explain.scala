@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection for any declared query:
   * `runMain graft.Explain <queryName> [sfDir]` — prints the formatted
   * physical plan (the .explain("formatted") loop the scale checklist
@@ -12,14 +10,7 @@ object Explain {
     require(args.nonEmpty, s"usage: Explain <query> [sfDir]; queries: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = SparkEntry.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fn = SparkEntry.queries.getOrElse(args(0),
       sys.error(s"unknown query ${args(0)}; have: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))

@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import graft.io.TableStore
 import graft.ops.Pipeline
 
@@ -10,37 +9,34 @@ import graft.ops.Pipeline
   * ([[graft.ops.Pipeline.run]]), one exit code.
   *
   * Usage: PipelineMain <srcDir> <warehouseDir> [reportDtIso] [--archive]
-  *                     [--bucket-dims=N]
   *
-  * `--bucket-dims=N` stores the terminals dimension Hive-partitioned
-  * by key-hash bucket and merges through the partition-scoped SCD2
-  * path (`Scd2.mergePartitioned`) — the production layout where a
-  * daily batch rewrites only the buckets its keys touch.
+  * `--archive` moves each processed source file to
+  * `<srcDir>/archive/<name>.backup`. Any other `--` flag, or a fourth
+  * positional argument, fails with the usage line before a session
+  * starts. `SPARK_GRAFT_MASTER` overrides the `local[SPARK_GRAFT_CPUS]`
+  * master.
   */
 object PipelineMain {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: PipelineMain <srcDir> <warehouseDir> [reportDtIso] [--archive] [--bucket-dims=N]")
-    val srcDir = args(0)
-    val whDir = args(1)
-    val reportDt = args.lift(2).filterNot(_.startsWith("--"))
-      .map(s => Timestamp.valueOf(s + " 00:00:00"))
+  private val Usage = "usage: PipelineMain <srcDir> <warehouseDir> [reportDtIso] [--archive]"
+
+  /** (srcDir, warehouseDir, reportDt, archive); reportDt defaults to now. */
+  def parseArgs(args: Array[String]): (String, String, Timestamp, Boolean) = {
+    val (flags, positional) = args.partition(_.startsWith("--"))
+    require(positional.length >= 2 && positional.length <= 3 &&
+      flags.forall(_ == "--archive"), Usage)
+    val reportDt = positional.lift(2).map(s => Timestamp.valueOf(s + " 00:00:00"))
       .getOrElse(new Timestamp(System.currentTimeMillis()))
-    val archive = args.contains("--archive")
-    val bucketDims = args.collectFirst {
-      case a if a.startsWith("--bucket-dims=") => a.stripPrefix("--bucket-dims=").toInt
-    }
+    (positional(0), positional(1), reportDt, flags.nonEmpty)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (srcDir, whDir, reportDt, archive) = parseArgs(args)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = SparkEntry.builder(cpus)
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try Pipeline.run(spark, new TableStore(spark, whDir), srcDir, reportDt,
-      archive, bucketDims = bucketDims)
+    try Pipeline.run(spark, new TableStore(spark, whDir), srcDir, reportDt, archive)
     finally spark.stop()
   }
 }

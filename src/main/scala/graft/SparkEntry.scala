@@ -12,6 +12,24 @@ import graft.queries.{ParityQueries, Q}
   */
 object SparkEntry {
 
+  /** The configured local-session builder every main and the test
+    * session start from: the engine's SQL extensions, `cpus` local
+    * cores and shuffle partitions, UTC session time (`Sources.table`'s
+    * NTZ normalization casts through the session zone), µs parquet
+    * timestamps (INT96, the default, overflows int64 nanos for the
+    * SCD2 sentinel 9999-12-31 on ns-based readers such as pyarrow),
+    * the harness `events` NANOS timestamps read as long, and no UI.
+    * Callers add their extras and call `getOrCreate`. */
+  def builder(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+
   private def registry: Seq[Q] =
     ParityQueries.all ++ graft.queries.ExtensionQueries.all ++
       graft.queries.LlmQueries.all ++ graft.queries.SimilarityQueries.all ++

@@ -165,11 +165,22 @@ object Sources {
     } finally stream.close()
   }
 
+  private val fileNameDate = java.time.format.DateTimeFormatter.ofPattern("ddMMuuuu")
+    .withResolverStyle(java.time.format.ResolverStyle.STRICT)
+
   /** Filename `DDMMYYYY` → ISO `YYYY-MM-DD` (reference
-    * `transaction.py:49-50`). */
+    * `transaction.py:49-50`); None when the name embeds no 8 digits.
+    * The date is parsed strictly: an impossible one (`31022024`, month
+    * 13) throws naming the file, where a lenient parse would roll it
+    * into a later day and advance a watermark past real files. */
   def fileNameDateIso(fileName: String): Option[String] =
-    "(\\d{2})(\\d{2})(\\d{4})".r.findFirstMatchIn(fileName)
-      .map(m => s"${m.group(3)}-${m.group(2)}-${m.group(1)}")
+    "\\d{8}".r.findFirstIn(fileName).map { digits =>
+      try java.time.LocalDate.parse(digits, fileNameDate).toString
+      catch { case e: java.time.format.DateTimeParseException =>
+        throw new IllegalArgumentException(
+          s"$fileName: embedded date $digits is not a valid DDMMYYYY date", e)
+      }
+    }
 
   /** Archive a processed source file (reference `transaction.py:88`:
     * `os.rename(f, 'archive/<f>.backup')`). */
@@ -189,9 +200,8 @@ object Sources {
 
   // ── JDBC source (reference `connect.py:5-15` + `cards.py:50-56`) ──
   //
-  // The sandbox has no database and no JDBC driver jar, so `.load()`
-  // is not exercisable here — the option-building below pins the
-  // design and is unit-tested; the reader is one `.load()` away.
+  // `Pipeline.runJdbcDim` loads through [[jdbcReader]]; JdbcPipelineSpec
+  // and PipelineSpec drive it end to end against embedded Derby.
 
   /** JDBC connection + parallelism parameters. `partitionColumn`
     * (with bounds) splits the extract into `numPartitions` range
@@ -231,15 +241,6 @@ object Sources {
     base ++ part
   }
 
-  /** Reference-parity incremental source SQL (`cards.py:50-56`): the
-    * watermark predicate inlined into the pushed-down query text, for
-    * engines/drivers where `coalesce` does not push through `dbtable`.
-    * Use via `option("query", incrementalQuery(...))`. */
-  def incrementalQuery(table: String, columns: Seq[String], updateCol: String,
-                       createCol: String, watermarkIso: String): String =
-    s"SELECT ${columns.mkString(", ")} FROM $table " +
-      s"WHERE coalesce($updateCol, $createCol) > TIMESTAMP '$watermarkIso'"
-
   /** Fully-configured JDBC reader; `.load()` connects. */
   def jdbcReader(spark: SparkSession, spec: JdbcSpec): org.apache.spark.sql.DataFrameReader =
     jdbcOptions(spec).foldLeft(spark.read.format("jdbc")) {
@@ -248,50 +249,29 @@ object Sources {
 
   // ── Excel source (reference `terminals.py:54`, `black_list.py:57`) ──
 
-  /** Excel scan. Three paths, in preference order:
-    *   1. an excel connector (`spark-excel`) on the classpath — used
-    *      with the given sheet;
-    *   2. a REAL `.xlsx` file — read with the built-in zero-dependency
-    *      parser ([[XlsxLite]]): header row skipped, cells applied to
-    *      `schema` positionally and cast per field (same contract as
-    *      the connector and as [[csv]] staging);
-    *   3. a pre-converted sibling `<name>.<sheet>.csv` (legacy offline
-    *      path, kept for environments that convert upstream).
-    * Never `inferSchema` (staging parity, like [[csv]]). */
+  /** Excel scan of a real `.xlsx` workbook through the built-in
+    * zero-dependency parser ([[XlsxLite]]): header row skipped, cells
+    * applied to `schema` positionally and cast per field (the same
+    * contract as [[csv]] staging; never `inferSchema`). A path that is
+    * not a workbook fails naming it. */
   def excel(spark: SparkSession, path: String, sheet: String,
-            schema: StructType, sep: String = ";"): DataFrame = {
-    val connector = "com.crealytics.spark.excel.DefaultSource"
-    val hasConnector =
-      try { Class.forName(connector); true } catch { case _: Throwable => false }
-    if (hasConnector)
-      spark.read.format("com.crealytics.spark.excel")
-        .option("dataAddress", s"'$sheet'!A1")
-        .option("header", "true")
-        .schema(schema)
-        .load(path)
-    else if (isZip(path)) {
-      val raw = XlsxLite.read(path, sheet)
-      require(raw.nonEmpty, s"excel: sheet '$sheet' of $path is empty (no header row)")
-      val rows: java.util.List[org.apache.spark.sql.Row] = new java.util.ArrayList
-      raw.drop(1).foreach { cells => // drop the header row, pad/truncate to schema
-        rows.add(org.apache.spark.sql.Row.fromSeq(
-          schema.indices.map(i => if (i < cells.length) cells(i) else null)))
-      }
-      val asStrings = StructType(schema.map(f =>
-        StructField(f.name, org.apache.spark.sql.types.StringType, nullable = true)))
-      spark.createDataFrame(rows, asStrings)
-        .select(schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-    } else {
-      val converted = path.replaceAll("\\.xlsx$", s".$sheet.csv")
-      if (!Files.exists(Paths.get(converted)))
-        throw new java.io.FileNotFoundException(
-          s"no excel connector, $path is not a workbook, and no pre-converted $converted")
-      csv(spark, converted, schema, sep)
+            schema: StructType): DataFrame = {
+    require(isZip(path), s"excel: $path is not an .xlsx workbook (missing, or not a ZIP archive)")
+    val raw = XlsxLite.read(path, sheet)
+    require(raw.nonEmpty, s"excel: sheet '$sheet' of $path is empty (no header row)")
+    val rows: java.util.List[org.apache.spark.sql.Row] = new java.util.ArrayList
+    raw.drop(1).foreach { cells => // drop the header row, pad/truncate to schema
+      rows.add(org.apache.spark.sql.Row.fromSeq(
+        schema.indices.map(i => if (i < cells.length) cells(i) else null)))
     }
+    val asStrings = StructType(schema.map(f =>
+      StructField(f.name, org.apache.spark.sql.types.StringType, nullable = true)))
+    spark.createDataFrame(rows, asStrings)
+      .select(schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
   }
 
   /** ZIP magic probe ("PK\3\4") — distinguishes a real workbook from a
-    * missing/placeholder path so the fallback order stays cheap. */
+    * missing or placeholder path. */
   private def isZip(path: String): Boolean = {
     val p = Paths.get(path)
     Files.isRegularFile(p) && {

@@ -310,26 +310,6 @@ final class TableStore(spark: SparkSession, val root: String) {
     gen
   }
 
-  /** Read resolving the table's commit protocol from its on-disk
-    * layout: a `_manifest/` directory marks a versioned table (resolve
-    * the live generation); anything else reads as a plain directory.
-    * This is what lets the WRITER pick the protocol — snapshot-swap on
-    * HDFS, manifest-commit on object stores — without threading a flag
-    * through every downstream reader ([[graft.ops.Pipeline.runReport]]
-    * reads its dimensions through this). */
-  def readResolved(name: String): DataFrame =
-    if (liveGeneration(name).isDefined) readVersioned(name) else read(name)
-
-  /** [[readResolved]], or an empty frame when the table has never been
-    * written — the versioned sibling of [[readOr]] (a materialized but
-    * never-committed generation also reads as empty: an unpublished
-    * write must stay invisible). */
-  def readResolvedOr(name: String, schema: StructType): DataFrame =
-    if (liveGeneration(name).isDefined) readVersioned(name)
-    else if (exists(name) && genDirs(name).isEmpty) read(name)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
   /** Read the live committed generation. An uncommitted (crashed)
     * write is invisible here by construction. */
   def readVersioned(name: String): DataFrame = {

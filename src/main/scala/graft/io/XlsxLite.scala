@@ -123,8 +123,8 @@ object XlsxLite {
     * this way hold Excel DATE SERIALS ("44197"), which this parser
     * does not convert — returning the raw serial would silently
     * diverge from the reference pipeline's pandas-based read, so such
-    * cells FAIL LOUDLY instead ([[cellValue]]); date-formatted
-    * workbooks go through the pre-converted CSV path. */
+    * cells FAIL LOUDLY instead ([[cellValue]]); a workbook must carry
+    * its dates as text cells. */
   private def dateStyles(zip: ZipFile): Set[Int] =
     entry(zip, "xl/styles.xml").map(parseDoc).fold(Set.empty[Int]) { doc =>
       val builtin = ((14 to 22) ++ (45 to 47)).toSet

@@ -73,15 +73,18 @@ object Pipeline {
     * and hand (stagedFrame, fileDateIso) to the stage body, which
     * returns the watermark value to advance to (None = file had no
     * usable rows → watermark untouched). The A3 skip-if-no-rows guard
-    * and archiving live here once. */
+    * and archiving live here once. Every listed file's name date is
+    * parsed before the first file is staged, so a file with an
+    * impossible date fails the stage with nothing staged. */
   private def processFiles(spark: SparkSession, store: TableStore,
                            srcDir: String, mask: String, wmKey: String,
                            stgTable: String, archive: Boolean)
                           (stage: (String, SparkSession) => org.apache.spark.sql.DataFrame)
                           (body: (org.apache.spark.sql.DataFrame, String) => Option[Timestamp]): Unit = {
     val wmIso = Incremental.readWatermark(store, "stg", wmKey).toString.take(10)
-    Sources.listFilesChronological(srcDir, mask).foreach { f =>
-      val fileDate = Sources.fileNameDateIso(f.getFileName.toString).get
+    val files = Sources.listFilesChronological(srcDir, mask)
+      .map(f => f -> Sources.fileNameDateIso(f.getFileName.toString).get)
+    files.foreach { case (f, fileDate) =>
       if (fileDate > wmIso) { // F12: ISO strings compare chronologically
         store.overwrite(stgTable, stage(f.toString, spark))
         val staged = store.read(stgTable)
@@ -119,8 +122,8 @@ object Pipeline {
            else isoToTs(newMax.getDate(0).toString))
     }
 
-  /** Passport-blacklist stage (`black_list.py` analog): Excel
-    * snapshots through the [[graft.io.Sources.excel]] shim
+  /** Passport-blacklist stage (`black_list.py` analog): `.xlsx`
+    * workbooks read by [[graft.io.Sources.excel]]
     * (`passport_blacklist_*.xlsx`, sheet `blacklist`), promotion
     * renames `date`/`passport` → `entry_dt`/`passport_num`
     * (`black_list.py:16-17,73`), anti-join append, and the A2
@@ -141,88 +144,26 @@ object Pipeline {
       Some(isoToTs(fileDate)) // A2: file date as a folded constant
     }
 
-  /** Streaming variant of the fact stage: the file-source checkpoint
-    * replaces the hand-kept watermark (new files only, restart-safe);
-    * each `Trigger.AvailableNow` micro-batch is promoted directly via
-    * `foreachBatch` with the batch path's typed anti-join append.
-    * Late/duplicate files remain harmless — the checkpoint skips
-    * re-delivered paths and the anti-join drops re-delivered rows. */
-  def runTransactionsStreaming(spark: SparkSession, store: TableStore,
-                               srcDir: String): Unit = {
-    val src = graft.streaming.Streaming.fileSource(spark,
-      s"$srcDir/transactions_*.txt", graft.io.Sources.stringSchema(TxSchema: _*))
-    // foreachBatch promotion: each micro-batch is typed and anti-join
-    // appended directly — per-run work scales with the NEW files only
-    // (no cumulative staging to re-read), and an empty source simply
-    // yields no batches.
-    val q = src.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        val typed = batch.select(
-          col("transaction_id"),
-          col("transaction_date").cast(TimestampType).as("transaction_date"),
-          parseEuroDecimal(col("amount")).as("amount"),
-          col("card_num"), col("oper_type"), col("oper_result"), col("terminal"))
-        val fact = store.readOr("fact_transactions", factStruct)
-        store.append("fact_transactions",
-          AntiInsert.newRows(typed, fact, Seq("transaction_id")))
-      }
-      .option("checkpointLocation", store.path("_ckpt_transactions"))
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
   /** Dimension stage (`terminals.py` analog): each full-snapshot file
     * newer than the watermark is staged and SCD2-merged; the file date
-    * is both the version-open timestamp and the delete clock.
-    *
-    * `bucketDims = Some(n)` stores the dimension Hive-partitioned by
-    * [[Scd2.bucketCol]] and merges through [[Scd2.mergePartitioned]]:
-    * only buckets holding changed/new/deleted keys are rewritten —
-    * the production shape for a large dimension (a daily batch
-    * touching 1% of keys rewrites ~1% of the table instead of all of
-    * it). Semantics are identical (PipelineSpec pins content parity
-    * with the snapshot path); downstream readers drop the bucket
-    * column ([[runReport]] does).
-    *
-    * `versionedDims = true` commits the dimension through the
-    * manifest protocol ([[Scd2.mergeVersioned]]) instead of the
-    * directory-rename swap — the object-store-safe deployment.
-    * Downstream reads auto-detect the layout
-    * (`TableStore.readResolved`), so the report stage needs no flag. */
+    * is both the version-open timestamp and the delete clock. The
+    * merged snapshot replaces the dimension through
+    * `TableStore.swapSnapshot`. */
   def runTerminals(spark: SparkSession, store: TableStore, srcDir: String,
-                  archive: Boolean = false,
-                  bucketDims: Option[Int] = None,
-                  versionedDims: Boolean = false): Unit = {
-    require(!(bucketDims.isDefined && versionedDims),
-      "runTerminals: bucketDims and versionedDims are mutually exclusive")
+                  archive: Boolean = false): Unit =
     processFiles(spark, store, srcDir, "terminals_\\d{8}\\.txt",
         "terminals", "stg_terminals", archive) {
       (path, s) => Sources.csv(s, path, Sources.stringSchema(TermSchema: _*))
     } { (batch, fileDate) =>
       val ts = lit(isoToTs(fileDate))
-      bucketDims match {
-        case Some(n) =>
-          Scd2.mergePartitioned(store, "dim_terminals_hist", batch,
-            Seq("terminal_id"), TermSchema.tail, batchTs = ts, nBuckets = n,
-            deleteKeys = Some(batch.select("terminal_id")),
-            deleteTs = Some(ts)): Unit
-        case None if versionedDims =>
-          Scd2.mergeVersioned(store, "dim_terminals_hist", batch,
-            Seq("terminal_id"), TermSchema.tail, batchTs = ts,
-            deleteKeys = Some(batch.select("terminal_id")),
-            deleteTs = Some(ts)): Unit
-        case None =>
-          val dim = store.readOr("dim_terminals_hist", dimStruct)
-          store.swapSnapshot("dim_terminals_hist",
-            Scd2.merge(dim, batch, Seq("terminal_id"), TermSchema.tail,
-              batchTs = ts,
-              deleteKeys = Some(batch.select("terminal_id")),
-              deleteTs = Some(ts)))
-      }
+      val dim = store.readOr("dim_terminals_hist", dimStruct)
+      store.swapSnapshot("dim_terminals_hist",
+        Scd2.merge(dim, batch, Seq("terminal_id"), TermSchema.tail,
+          batchTs = ts,
+          deleteKeys = Some(batch.select("terminal_id")),
+          deleteTs = Some(ts)))
       Some(isoToTs(fileDate))
     }
-  }
 
   /** One JDBC-sourced SCD2 dimension: where it comes from, what it's
     * called, and which source columns map to which dimension columns
@@ -307,11 +248,6 @@ object Pipeline {
     }
   }
 
-  /** The cards stage (`cards.py`), as one [[runJdbcDim]] instance. */
-  def runCards(spark: SparkSession, store: TableStore,
-               jdbc: Sources.JdbcSpec, runTs: Timestamp): Unit =
-    runJdbcDim(spark, store, cardsDim(jdbc), runTs)
-
   /** Report stage — the FULL `report.py:12-113` chain:
     *
     *   - `cl` CTE: facts as-of joined to the live terminal version at
@@ -344,14 +280,10 @@ object Pipeline {
     val noDb = Sources.JdbcSpec("", "", "", "")
     store.append("rep_fraud", reportFrame(
       facts = store.readOr("fact_transactions", factStruct),
-      // readResolvedOr auto-detects manifest-committed dimensions, so
-      // the report stage works unchanged against every dim layout;
-      // drop is a no-op on the snapshot layout and strips the kb
-      // partition column on the bucketed one.
-      ter = store.readResolvedOr("dim_terminals_hist", dimStruct).drop(Scd2.BucketColName),
-      cards = store.readResolvedOr("dim_cards_hist", emptyDim(cardsDim(noDb))),
-      accounts = store.readResolvedOr("dim_accounts_hist", emptyDim(accountsDim(noDb))),
-      clients = store.readResolvedOr("dim_clients_hist", emptyDim(clientsDim(noDb))),
+      ter = store.readOr("dim_terminals_hist", dimStruct),
+      cards = store.readOr("dim_cards_hist", emptyDim(cardsDim(noDb))),
+      accounts = store.readOr("dim_accounts_hist", emptyDim(accountsDim(noDb))),
+      clients = store.readOr("dim_clients_hist", emptyDim(clientsDim(noDb))),
       bl = store.readOr("fact_blacklist", blacklistStruct),
       reportDt = reportDt))
   }
@@ -442,7 +374,9 @@ object Pipeline {
     * dimensions and, when a source DB is configured, the three JDBC
     * dimensions — run concurrently, one thread each on the caller's
     * session; the report then runs over everything once every load
-    * stage has succeeded.
+    * stage has succeeded. Each stage has one code path: facts by
+    * anti-join append, every dimension by a snapshot SCD2 merge
+    * published with `TableStore.swapSnapshot`.
     *
     * The load stages write disjoint tables (each its own staging table
     * and its own fact or dimension); the one table they share, the
@@ -457,14 +391,11 @@ object Pipeline {
   def run(spark: SparkSession, store: TableStore, srcDir: String,
           reportDt: Timestamp, archive: Boolean = false,
           dimDb: Option[Sources.JdbcSpec] = None,
-          dimRunTs: Option[Timestamp] = None,
-          bucketDims: Option[Int] = None,
-          versionedDims: Boolean = false): Unit = {
+          dimRunTs: Option[Timestamp] = None): Unit = {
     val fileStages: Seq[(String, () => Unit)] = Seq(
       "transactions" -> (() => runTransactions(spark, store, srcDir, archive)),
       "blacklist" -> (() => runBlacklist(spark, store, srcDir, archive)),
-      "terminals" -> (() =>
-        runTerminals(spark, store, srcDir, archive, bucketDims, versionedDims)))
+      "terminals" -> (() => runTerminals(spark, store, srcDir, archive)))
     val dimStages = dimDb.toSeq.flatMap { db =>
       val ts = dimRunTs.getOrElse(reportDt)
       Seq(cardsDim(db), accountsDim(db), clientsDim(db))

@@ -291,44 +291,6 @@ object Scd2 {
     affected
   }
 
-  /** K4/T5 on an OBJECT STORE: the same single-pass [[merge]], but the
-    * dimension lives as a manifest-committed versioned table
-    * (`TableStore.commitVersioned` / `readVersioned`) instead of a
-    * rename-swapped directory. Directory rename is atomic on HDFS-like
-    * filesystems but copy+delete on S3-class stores — readers there
-    * can observe a half-renamed snapshot. Here nothing is ever
-    * renamed: the merged snapshot materializes into a fresh immutable
-    * generation directory, then ONE pointer file publishes it
-    * atomically. A writer that dies mid-merge leaves an unreferenced
-    * directory; readers stay on the previous committed generation and
-    * the next merge reads it, re-applies the batch, and supersedes the
-    * orphan (Scd2Spec pins both properties).
-    *
-    * First call bootstraps the dimension from the batch's shape, like
-    * [[mergePartitioned]]. Pair with `vacuumVersioned` on a schedule
-    * to reclaim superseded generations.
-    *
-    * @return the committed generation number */
-  def mergeVersioned(store: graft.io.TableStore, table: String,
-                     batch: DataFrame, keys: Seq[String], tracked: Seq[String],
-                     batchTs: Column,
-                     deleteKeys: Option[DataFrame] = None,
-                     deleteTs: Option[Column] = None,
-                     passthrough: Seq[String] = Nil,
-                     newTs: Option[Column] = None): Long = {
-    val dim = store.liveGeneration(table) match {
-      case Some(_) => store.readVersioned(table)
-      case None =>
-        batch.select((keys ++ tracked).map(col): _*).limit(0)
-          .withColumn("effective_from", lit(null).cast("timestamp"))
-          .withColumn("effective_to", lit(null).cast("timestamp"))
-          .withColumn("deleted_flg", lit(null).cast("string"))
-    }
-    store.commitVersioned(table,
-      merge(dim, batch, keys, tracked, batchTs, deleteKeys, deleteTs,
-        passthrough, newTs))
-  }
-
   /** Build a full SCD2 history from a change log (CDC ingestion — the
     * inverse of [[merge]], and the batch consumer of
     * [[graft.streaming.Streaming.changeEvents]]): per key, consecutive

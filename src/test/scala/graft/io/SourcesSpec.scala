@@ -13,6 +13,13 @@ class SourcesSpec extends AnyFunSuite {
     assert(Sources.fileNameDateIso("transactions_03032021.txt") === Some("2021-03-03"))
     assert(Sources.fileNameDateIso("terminals_31122020.xlsx") === Some("2020-12-31"))
     assert(Sources.fileNameDateIso("no_date_here.txt") === None)
+    // Parsed strictly: an impossible date throws naming the file.
+    assert(Sources.fileNameDateIso("terminals_29022024.txt") === Some("2024-02-29"))
+    Seq("terminals_31022024.txt", "terminals_01132024.txt", "terminals_29022023.txt")
+      .foreach { f =>
+        val ex = intercept[IllegalArgumentException](Sources.fileNameDateIso(f))
+        assert(ex.getMessage.contains(f))
+      }
   }
 
   test("listFilesChronological sorts by embedded date, not name (transaction.py:26-28)") {
@@ -121,64 +128,29 @@ class SourcesSpec extends AnyFunSuite {
     assert(par("partitionColumn") === "card_num" && par("numPartitions") === "16")
   }
 
-  test("incrementalQuery inlines the coalesce watermark predicate (cards.py:50-56)") {
-    val q = Sources.incrementalQuery("info.cards",
-      Seq("card_num", "account_num"), "update_dt", "create_dt", "2021-03-03 00:00:00")
-    assert(q === "SELECT card_num, account_num FROM info.cards " +
-      "WHERE coalesce(update_dt, create_dt) > TIMESTAMP '2021-03-03 00:00:00'")
-  }
-
-  /** A REAL (minimal, spec-conformant) xlsx workbook written with
-    * java.util.zip — an independent writer path, so the read is tested
-    * against the OOXML format, not against the parser's own code.
-    * Two sheets (addressing must go through workbook.xml + rels, not
-    * zip order), shared strings incl. a rich-text run, inline strings,
-    * a formula-string cell, a numeric cell, and a missing cell. */
-  private def writeXlsx(path: java.nio.file.Path): Unit = {
-    val entries = Seq(
+  /** A real workbook ([[XlsxFixture]]) with two sheets (addressing
+    * must go through workbook.xml + rels, not zip order), shared
+    * strings incl. a rich-text run, inline strings, a formula-string
+    * cell, a numeric cell, and a missing cell. */
+  private def writeXlsx(path: java.nio.file.Path): Unit =
+    XlsxFixture.writeParts(path, Seq(
       "[Content_Types].xml" ->
         """<?xml version="1.0"?><Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types"/>""",
-      "xl/workbook.xml" ->
-        """<?xml version="1.0"?>
-          |<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
-          |          xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-          |<sheets>
-          |<sheet name="info" sheetId="1" r:id="rId1"/>
-          |<sheet name="terminals" sheetId="2" r:id="rId2"/>
-          |</sheets></workbook>""".stripMargin,
-      "xl/_rels/workbook.xml.rels" ->
-        """<?xml version="1.0"?>
-          |<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
-          |<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet1.xml"/>
-          |<Relationship Id="rId2" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet2.xml"/>
-          |</Relationships>""".stripMargin,
       "xl/sharedStrings.xml" ->
         """<?xml version="1.0"?>
           |<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" count="3" uniqueCount="3">
           |<si><t>terminal_id</t></si>
           |<si><t>terminal_city</t></si>
           |<si><r><t>Mos</t></r><r><t>cow</t></r></si>
-          |</sst>""".stripMargin,
-      "xl/worksheets/sheet1.xml" ->
-        """<?xml version="1.0"?>
-          |<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
-          |<sheetData><row r="1"><c r="A1" t="inlineStr"><is><t>WRONG SHEET</t></is></c></row></sheetData>
-          |</worksheet>""".stripMargin,
-      "xl/worksheets/sheet2.xml" ->
-        """<?xml version="1.0"?>
-          |<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
-          |<sheetData>
-          |<row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c><c r="C1" t="inlineStr"><is><t>terminal_address</t></is></c></row>
-          |<row r="2"><c r="A2" t="inlineStr"><is><t>T1</t></is></c><c r="B2" t="s"><v>2</v></c><c r="C2" t="str"><v>Addr 1</v></c></row>
-          |<row r="3"><c r="A3" t="inlineStr"><is><t>T2</t></is></c><c r="C3"><v>42</v></c></row>
-          |</sheetData></worksheet>""".stripMargin)
-    val zip = new java.util.zip.ZipOutputStream(Files.newOutputStream(path))
-    try entries.foreach { case (name, content) =>
-      zip.putNextEntry(new java.util.zip.ZipEntry(name))
-      zip.write(content.getBytes("UTF-8"))
-      zip.closeEntry()
-    } finally zip.close()
-  }
+          |</sst>""".stripMargin) ++
+      XlsxFixture.workbookParts(Seq(
+        "info" -> """<row r="1"><c r="A1" t="inlineStr"><is><t>WRONG SHEET</t></is></c></row>""",
+        "terminals" ->
+          """
+            |<row r="1"><c r="A1" t="s"><v>0</v></c><c r="B1" t="s"><v>1</v></c><c r="C1" t="inlineStr"><is><t>terminal_address</t></is></c></row>
+            |<row r="2"><c r="A2" t="inlineStr"><is><t>T1</t></is></c><c r="B2" t="s"><v>2</v></c><c r="C2" t="str"><v>Addr 1</v></c></row>
+            |<row r="3"><c r="A3" t="inlineStr"><is><t>T2</t></is></c><c r="C3"><v>42</v></c></row>
+            |""".stripMargin)))
 
   test("excel reads a REAL .xlsx workbook through the built-in parser") {
     val dir = Files.createTempDirectory("graft_xlsx_real")
@@ -204,39 +176,21 @@ class SourcesSpec extends AnyFunSuite {
     // styles.xml maps style index 1 → builtin date numFmtId 14; cell
     // A2 carries s="1" with the raw serial 44197 (= 2021-01-01).
     // Returning "44197" would silently diverge from the reference's
-    // pandas read — the parser must reject instead (the CSV fallback
-    // path is the documented route for such workbooks).
-    val entries = Seq(
-      "xl/workbook.xml" ->
-        """<?xml version="1.0"?>
-          |<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
-          |          xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-          |<sheets><sheet name="s" sheetId="1" r:id="rId1"/></sheets></workbook>""".stripMargin,
-      "xl/_rels/workbook.xml.rels" ->
-        """<?xml version="1.0"?>
-          |<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
-          |<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet1.xml"/>
-          |</Relationships>""".stripMargin,
+    // pandas read — the parser must reject instead (such workbooks
+    // must carry their dates as text cells).
+    val entries = XlsxFixture.workbookParts(Seq("s" ->
+        """
+          |<row r="1"><c r="A1" t="inlineStr"><is><t>d</t></is></c></row>
+          |<row r="2"><c r="A2" s="1"><v>44197</v></c></row>
+          |""".stripMargin)) :+
       "xl/styles.xml" ->
         """<?xml version="1.0"?>
           |<styleSheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
           |<cellXfs count="2"><xf numFmtId="0"/><xf numFmtId="14" applyNumberFormat="1"/></cellXfs>
-          |</styleSheet>""".stripMargin,
-      "xl/worksheets/sheet1.xml" ->
-        """<?xml version="1.0"?>
-          |<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
-          |<sheetData>
-          |<row r="1"><c r="A1" t="inlineStr"><is><t>d</t></is></c></row>
-          |<row r="2"><c r="A2" s="1"><v>44197</v></c></row>
-          |</sheetData></worksheet>""".stripMargin)
+          |</styleSheet>""".stripMargin
     val dir = Files.createTempDirectory("graft_xlsx_date")
     val path = dir.resolve("dates_01012021.xlsx")
-    val zip = new java.util.zip.ZipOutputStream(Files.newOutputStream(path))
-    try entries.foreach { case (name, content) =>
-      zip.putNextEntry(new java.util.zip.ZipEntry(name))
-      zip.write(content.getBytes("UTF-8"))
-      zip.closeEntry()
-    } finally zip.close()
+    XlsxFixture.writeParts(path, entries)
     val ex = intercept[IllegalArgumentException] {
       XlsxLite.read(path.toString, "s")
     }
@@ -244,31 +198,21 @@ class SourcesSpec extends AnyFunSuite {
     // An UNSTYLED numeric cell still reads as its stored text — only
     // date styles reject.
     val plain = dir.resolve("plain_01012021.xlsx")
-    val zip2 = new java.util.zip.ZipOutputStream(Files.newOutputStream(plain))
-    try entries.filterNot(_._1 == "xl/styles.xml").foreach { case (name, content) =>
-      zip2.putNextEntry(new java.util.zip.ZipEntry(name))
-      zip2.write(content.replace(""" s="1"""", "").getBytes("UTF-8"))
-      zip2.closeEntry()
-    } finally zip2.close()
+    XlsxFixture.writeParts(plain, entries.filterNot(_._1 == "xl/styles.xml")
+      .map { case (name, content) => name -> content.replace(""" s="1"""", "") })
     assert(XlsxLite.read(plain.toString, "s")(1).toSeq === Seq("44197"))
   }
 
-  test("excel shim falls back to the pre-converted <name>.<sheet>.csv") {
-    val dir = Files.createTempDirectory("graft_xlsx")
-    Files.writeString(dir.resolve("terminals_01012021.terminals.csv"),
-      "terminal_id;terminal_city\nT1;Moscow\n")
-    val df = Sources.excel(spark, dir.resolve("terminals_01012021.xlsx").toString,
-      "terminals", Sources.stringSchema("terminal_id", "terminal_city"))
-    assert(df.collect().map(r => (r.getString(0), r.getString(1))).toSeq ===
-      Seq(("T1", "Moscow")))
-  }
-
-  test("excel shim fails clearly when neither connector nor conversion exists") {
-    val ex = intercept[java.io.FileNotFoundException] {
-      Sources.excel(spark, "/nope/black_list_01012021.xlsx", "blacklist",
-        Sources.stringSchema("passport"))
+  test("excel fails clearly on a path that is not a workbook") {
+    val dir = Files.createTempDirectory("graft_xlsx_none")
+    val placeholder = Files.createFile(dir.resolve("passport_blacklist_01012021.xlsx"))
+    // Missing, and present but not a ZIP archive: both name the path.
+    Seq(dir.resolve("black_list_01012021.xlsx"), placeholder).foreach { p =>
+      val ex = intercept[IllegalArgumentException] {
+        Sources.excel(spark, p.toString, "blacklist", Sources.stringSchema("passport"))
+      }
+      assert(ex.getMessage.contains(p.toString) && ex.getMessage.contains("not an .xlsx workbook"))
     }
-    assert(ex.getMessage.contains("pre-converted"))
   }
 
   test("incremental pushes the coalesce watermark predicate (cards.py:50-56)") {

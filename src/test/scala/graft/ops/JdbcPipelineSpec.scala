@@ -60,7 +60,7 @@ class JdbcPipelineSpec extends AnyFunSuite {
     }
 
     // ── Run 1: first extract sees everything past the 1900 default ──
-    Pipeline.runCards(spark, store, spec, runTs = ts("2024-01-02 00:00:00"))
+    Pipeline.runJdbcDim(spark, store, Pipeline.cardsDim(spec), runTs = ts("2024-01-02 00:00:00"))
     val inf = ts("9999-12-31 00:00:00")
     assert(dimRows(store) === Set(
       ("A", "acc_a", ts("2024-01-01 10:00:00"), inf, "N"),
@@ -80,7 +80,7 @@ class JdbcPipelineSpec extends AnyFunSuite {
 
     // ── Run 2: the watermark bounds the extract to the delta ──
     val runTs2 = ts("2024-01-10 00:00:00")
-    Pipeline.runCards(spark, store, spec, runTs = runTs2)
+    Pipeline.runJdbcDim(spark, store, Pipeline.cardsDim(spec), runTs = runTs2)
 
     // Only B (updated) and D (created) beat the watermark.
     assert(store.read("stg_cards").select("card_num").collect()
@@ -99,7 +99,7 @@ class JdbcPipelineSpec extends AnyFunSuite {
 
     // ── Run 3: no source changes → guard skips, nothing moves ──
     val before = dimRows(store)
-    Pipeline.runCards(spark, store, spec, runTs = ts("2024-01-20 00:00:00"))
+    Pipeline.runJdbcDim(spark, store, Pipeline.cardsDim(spec), runTs = ts("2024-01-20 00:00:00"))
     assert(dimRows(store) === before)
     assert(Incremental.readWatermark(store, "stg", "cards") === ts("2024-01-06 08:00:00"))
   }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 import java.sql.{DriverManager, Timestamp}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.io.{Sources, TableStore}
+import graft.io.{Sources, TableStore, XlsxFixture}
 
 /** End-to-end pipeline test: two consecutive runs must leave the
   * warehouse state identical (watermark gate + anti-join idempotence)
@@ -41,12 +41,9 @@ class PipelineSpec extends AnyFunSuite {
       "terminal_id;terminal_type;terminal_city",
       "T1;ATM;Moscow",
       "T2;POS;Perm")
-    // Excel blacklist: dummy .xlsx (no connector offline) + the
-    // pre-converted sheet sibling the shim reads. P3 is CL3's passport.
-    Files.createFile(src.resolve("passport_blacklist_01012024.xlsx"))
-    write(src, "passport_blacklist_01012024.blacklist.csv",
-      "date;passport",
-      "2024-01-01;P3")
+    // Excel blacklist, a real workbook (date as text). P3 is CL3's passport.
+    XlsxFixture.writeSheet(src.resolve("passport_blacklist_01012024.xlsx"), "blacklist",
+      Seq(Seq("date", "passport"), Seq("2024-01-01", "P3")))
   }
 
   private def day2(src: Path): Unit = {
@@ -217,70 +214,39 @@ class PipelineSpec extends AnyFunSuite {
     } finally dropDims()
   }
 
-  test("bucketed dimension storage: identical SCD2 content to the snapshot path") {
-    val src = Files.createTempDirectory("graft_pipe_src_bk")
-    val plain = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh_p").toString)
-    val bucketed = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh_b").toString)
-    day1(src)
-    Pipeline.runTerminals(spark, plain, src.toString)
-    Pipeline.runTerminals(spark, bucketed, src.toString, bucketDims = Some(4))
-    day2(src)
-    Pipeline.runTerminals(spark, plain, src.toString)
-    Pipeline.runTerminals(spark, bucketed, src.toString, bucketDims = Some(4))
-    val cols = Pipeline.TermSchema ++ Seq("effective_from", "effective_to", "deleted_flg")
-    def snap(s: TableStore) = s.read("dim_terminals_hist")
-      .select(cols.map(org.apache.spark.sql.functions.col): _*).collect().toSet
-    // Same merge history through the partition-scoped path, bucket
-    // column stripped; physical scoped-rewrite behavior is pinned by
-    // Scd2PartitionedSpec — this is the E2E semantic parity check.
-    assert(snap(bucketed) === snap(plain))
-    // The bucketed layout is laid out in kb= leaves on disk.
-    assert(new java.io.File(bucketed.path("dim_terminals_hist")).listFiles()
-      .exists(_.getName.startsWith(Scd2.BucketColName + "=")))
+  test("an impossible file-name date fails the stage naming the file; later files still load") {
+    val src = Files.createTempDirectory("graft_pipe_baddate")
+    val store = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh_bd").toString)
+    // 31 February sorts between 29 Feb and 1 Mar; read leniently it
+    // would become 2 March and gate out the real 1 and 2 March files.
+    write(src, "terminals_31022024.txt",
+      "terminal_id;terminal_type;terminal_city", "T1;ATM;Moscow")
+    write(src, "terminals_01032024.txt",
+      "terminal_id;terminal_type;terminal_city", "T1;ATM;Kazan")
+    val ex = intercept[IllegalArgumentException](
+      Pipeline.runTerminals(spark, store, src.toString))
+    assert(ex.getMessage.contains("terminals_31022024.txt"))
+    assert(!store.exists("stg_terminals") && !store.exists("dim_terminals_hist"))
+    assert(Incremental.readWatermark(store, "stg", "terminals") === Incremental.DefaultWatermark)
+
+    Files.delete(src.resolve("terminals_31022024.txt"))
+    Pipeline.runTerminals(spark, store, src.toString)
+    val mar1 = ts("2024-03-01 00:00:00")
+    assert(store.read("dim_terminals_hist").collect()
+      .map(r => (r.getString(0), r.getString(2), r.getTimestamp(3), r.getTimestamp(4))).toSet ===
+      Set(("T1", "Kazan", mar1, INF)))
+    assert(Incremental.readWatermark(store, "stg", "terminals") === mar1)
   }
 
-  test("versioned dimension storage: identical SCD2 content, no directory rename") {
-    val src = Files.createTempDirectory("graft_pipe_src_vr")
-    val plain = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh_p2").toString)
-    val versioned = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh_v").toString)
-    day1(src)
-    Pipeline.runTerminals(spark, plain, src.toString)
-    Pipeline.runTerminals(spark, versioned, src.toString, versionedDims = true)
-    day2(src)
-    Pipeline.runTerminals(spark, plain, src.toString)
-    Pipeline.runTerminals(spark, versioned, src.toString, versionedDims = true)
-    val cols = Pipeline.TermSchema ++ Seq("effective_from", "effective_to", "deleted_flg")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select(cols.map(org.apache.spark.sql.functions.col): _*).collect().toSet
-    // Same merge history through the manifest-commit path — and the
-    // report stage's readResolvedOr picks the versioned layout up with
-    // no flag.
-    assert(rows(versioned.readVersioned("dim_terminals_hist")) ===
-      rows(plain.read("dim_terminals_hist")))
-    assert(rows(versioned.readResolvedOr("dim_terminals_hist",
-      plain.read("dim_terminals_hist").schema)) ===
-      rows(plain.read("dim_terminals_hist")))
-    // Two merges → two immutable generations behind the manifest; the
-    // live pointer resolves to the second.
-    assert(versioned.liveGeneration("dim_terminals_hist").contains(2L))
-    val leaves = new java.io.File(versioned.path("dim_terminals_hist"))
-      .listFiles().map(_.getName).toSet
-    assert(leaves.contains("g1") && leaves.contains("g2") && leaves.contains("_manifest"))
-  }
-
-  test("streaming fact stage: checkpointed ingest + anti-join promotion") {
-    val src = Files.createTempDirectory("graft_pipe_stream")
-    val store = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh3").toString)
-    day1(src)
-    Pipeline.runTransactionsStreaming(spark, store, src.toString)
-    assert(count(store, "fact_transactions") === 7)
-    // Second invocation: checkpoint skips the already-ingested file; a
-    // day-2 delivery with a replayed duplicate row adds only new facts.
-    Pipeline.runTransactionsStreaming(spark, store, src.toString)
-    assert(count(store, "fact_transactions") === 7)
-    day2(src)
-    Pipeline.runTransactionsStreaming(spark, store, src.toString)
-    assert(count(store, "fact_transactions") === 9)
+  test("PipelineMain rejects an unknown flag with its usage line") {
+    Seq(Array("src", "wh", "--bucket-dims=4"), Array("src", "wh", "--archve"),
+        Array("src", "wh", "2024-01-01", "extra"), Array("src")).foreach { args =>
+      val ex = intercept[IllegalArgumentException](graft.PipelineMain.parseArgs(args))
+      assert(ex.getMessage.contains("usage: PipelineMain"), args.mkString(" "))
+    }
+    val (srcDir, whDir, reportDt, archive) =
+      graft.PipelineMain.parseArgs(Array("src", "wh", "2024-01-01", "--archive"))
+    assert((srcDir, whDir, reportDt, archive) === ("src", "wh", ts("2024-01-01 00:00:00"), true))
   }
 
   test("archive=true moves processed files so reruns see an empty source") {

@@ -125,37 +125,4 @@ class Scd2Spec extends AnyFunSuite {
       ("gone", "v", t0, ts("2024-02-29 23:59:59"), "N"),
       ("gone", "v", t2, INF, "Y")))
   }
-
-  test("mergeVersioned: crashed merge stays invisible; retry supersedes the orphan") {
-    import graft.io.TableStore
-    val store = new TableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_scd2_ver").toString)
-    // Bootstrap (g1), then a normal merge (g2).
-    assert(Scd2.mergeVersioned(store, "d", batch(("a", "v1")),
-      Seq("k"), Seq("a"), lit(t0)) === 1L)
-    assert(Scd2.mergeVersioned(store, "d", batch(("a", "v2")),
-      Seq("k"), Seq("a"), lit(t1)) === 2L)
-    val committed = snapshot(store.readVersioned("d"))
-    assert(committed === Set(
-      ("a", "v1", t0, t1Close, "N"),
-      ("a", "v2", t1, INF, "N")))
-    // Simulate a writer that died AFTER materializing its generation
-    // but BEFORE publishing the manifest record: a fully-written g3
-    // with no pointer. Readers must stay on g2.
-    val t2 = ts("2024-03-01 00:00:00")
-    Scd2.merge(store.readVersioned("d"), batch(("a", "v3")),
-        Seq("k"), Seq("a"), lit(t2))
-      .write.parquet(store.path("d") + "/g3")
-    assert(store.liveGeneration("d").contains(2L))
-    assert(snapshot(store.readVersioned("d")) === committed)
-    // The retry re-reads g2, re-applies the batch, and commits PAST
-    // the orphan (g4) — no manual cleanup needed for correctness.
-    val gen = Scd2.mergeVersioned(store, "d", batch(("a", "v3")),
-      Seq("k"), Seq("a"), lit(t2))
-    assert(gen === 4L)
-    assert(snapshot(store.readVersioned("d")) === Set(
-      ("a", "v1", t0, t1Close, "N"),
-      ("a", "v2", t1, ts("2024-02-29 23:59:59"), "N"),
-      ("a", "v3", t2, INF, "N")))
-  }
 }
