@@ -40,11 +40,49 @@ final class TableStore(spark: SparkSession, val root: String) {
 
   def exists(name: String): Boolean = fs.exists(livePath(name))
 
-  def read(name: String): DataFrame = spark.read.parquet(livePath(name).toString)
+  /** The table's rows. The schema comes from one data file's footer,
+    * read on the driver: the Spark row schema stored there
+    * (`org.apache.spark.sql.parquet.row.metadata`, which Spark's own
+    * non-merging inference reads), handed to `spark.read.schema`. So a
+    * read launches no Spark job, where `spark.read.parquet` runs one to
+    * infer the schema; partition columns are still discovered from the
+    * `k=v` directories, with the same types. A table whose directory
+    * holds no data file fails naming the table. */
+  def read(name: String): DataFrame = {
+    val live = livePath(name)
+    spark.read.schema(footerSchema(name, live)).parquet(live.toString)
+  }
 
-  /** [[read]] with the table's known schema: no schema-inference job. */
-  def readAs(name: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).parquet(livePath(name).toString)
+  /** The Spark schema of [[firstDataFile]] under `dir`, as
+    * `ParquetFileFormat.readSchemaFromFooter` derives it. */
+  private def footerSchema(name: String, dir: Path): StructType = {
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val file = firstDataFile(dir).getOrElse(throw new IllegalStateException(
+      s"TableStore.read: table '$name' has no data file under $dir"))
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    try ParquetFileFormat.readSchemaFromFooter(new Footer(file, reader.getFooter),
+      new ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get))
+    finally reader.close()
+  }
+
+  /** The first data file under `dir`, depth first in name order. Like
+    * Spark's file listing, it skips `.`- and `_`-prefixed names, except
+    * `_k=v` partition directories. */
+  private def firstDataFile(dir: Path): Option[Path] =
+    if (!fs.exists(dir)) None
+    else {
+      val (dirs, files) = fs.listStatus(dir).toSeq
+        .filter { st =>
+          val n = st.getPath.getName
+          !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))
+        }
+        .sortBy(_.getPath.getName).partition(_.isDirectory)
+      files.headOption.map(_.getPath)
+        .orElse(dirs.iterator.flatMap(d => firstDataFile(d.getPath)).nextOption())
+    }
 
   /** A frame over driver-side rows — for tables small enough to be
     * computed on the driver and written whole. */

@@ -17,8 +17,8 @@ import graft.io.TableStore
   * list the directory while a commit's snapshot swap is renaming it.
   *
   * The table is tiny (one row per target), so the lock is held only for
-  * driver-side work plus one small write: the rows are scanned with
-  * their known schema (no inference job) and collected, the watermark
+  * driver-side work plus one small write: the rows are scanned (the
+  * schema from the footer, no inference job) and collected, the watermark
   * (`J9`: the scalar subquery) and the upsert are computed on the
   * driver, and the upserted rows are written back as one local frame
   * through the snapshot swap.
@@ -41,7 +41,7 @@ object Incremental {
 
   private def rows(store: TableStore): Seq[Row] =
     if (!store.exists(MetaTable)) Seq.empty
-    else store.readAs(MetaTable, metaSchema).collect().toSeq
+    else store.read(MetaTable).collect().toSeq
 
   private def matches(r: Row, schemaName: String, tableName: String): Boolean =
     r.getString(0) == schemaName && r.getString(1) == tableName

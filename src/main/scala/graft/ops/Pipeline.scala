@@ -1,7 +1,7 @@
 package graft.ops
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -70,43 +70,63 @@ object Pipeline {
 
   /** Shared stage skeleton: discover mask-matching files newer than
     * the `wmKey` watermark in chronological order; per file, stage it
-    * and hand (stagedFrame, fileDateIso) to the stage body, which
-    * returns the watermark value to advance to (None = file had no
-    * usable rows → watermark untouched). The A3 skip-if-no-rows guard
-    * and archiving live here once. Every listed file's name date is
-    * parsed before the first file is staged, so a file with an
-    * impossible date fails the stage with nothing staged. */
+    * and hand (stagedFrame, fileDateIso) to the stage body, then
+    * advance the watermark. The A3 skip-if-no-rows guard, the watermark
+    * and archiving live here once. The guard's row count and the
+    * watermark's `max(maxDate)` (a DATE over the staged columns) are
+    * observed on the staging write itself ([[stageObserved]]): a file
+    * with no rows leaves the watermark untouched; otherwise it advances
+    * to that max, or to the file date when `maxDate` is not given or
+    * is null on every row. Every listed file's name date is parsed
+    * before the first file is staged, so a file with an impossible
+    * date fails the stage with nothing staged. */
   private def processFiles(spark: SparkSession, store: TableStore,
                            srcDir: String, mask: String, wmKey: String,
-                           stgTable: String, archive: Boolean)
-                          (stage: (String, SparkSession) => org.apache.spark.sql.DataFrame)
-                          (body: (org.apache.spark.sql.DataFrame, String) => Option[Timestamp]): Unit = {
+                           stgTable: String, archive: Boolean,
+                           maxDate: Option[Column] = None)
+                          (stage: (String, SparkSession) => DataFrame)
+                          (body: (DataFrame, String) => Unit): Unit = {
     val wmIso = Incremental.readWatermark(store, "stg", wmKey).toString.take(10)
     val files = Sources.listFilesChronological(srcDir, mask)
       .map(f => f -> Sources.fileNameDateIso(f.getFileName.toString).get)
     files.foreach { case (f, fileDate) =>
       if (fileDate > wmIso) { // F12: ISO strings compare chronologically
-        store.overwrite(stgTable, stage(f.toString, spark))
-        val staged = store.read(stgTable)
-        if (staged.limit(1).count() > 0) { // A3 guard (cards.py:71)
-          body(staged, fileDate).foreach(Incremental.advance(store, "stg", wmKey, _))
+        val (rows, fileMax) = stageObserved(store, stgTable, stage(f.toString, spark), maxDate)
+        if (rows > 0) { // A3 guard (cards.py:71)
+          body(store.read(stgTable), fileDate)
+          Incremental.advance(store, "stg", wmKey,
+            isoToTs(fileMax.fold(fileDate)(_.toString)))
         }
         if (archive) Sources.archive(f): Unit
       }
     }
   }
 
+  /** K1 truncate-and-reload of staging table `stg` with `df`, observing
+    * on that write's own job its row count and `max(of)` (None when `of`
+    * is not given or its max is null): the guard and the watermark
+    * need no job of their own, and are exact. */
+  private def stageObserved(store: TableStore, stg: String, df: DataFrame,
+                            of: Option[Column]): (Long, Option[Any]) = {
+    val seen = Observation()
+    val metrics = count(lit(1)).as("rows") +: of.map(max(_).as("max")).toSeq
+    store.overwrite(stg, df.observe(seen, metrics.head, metrics.tail: _*))
+    val m = seen.get
+    (m("rows").asInstanceOf[Long], m.get("max").flatMap(Option(_)))
+  }
+
   /** Fact stage (`transaction.py` analog): per file, promote typed
     * rows via anti-join append; watermark = max(transaction_date) over
     * THIS file's staging (the reference's truncate-per-file loop makes
-    * it the last file's max), falling back to the file date when no
-    * row carries a parseable date. */
+    * it the last file's max), observed on the staging write, falling
+    * back to the file date when every row's date is null. */
   def runTransactions(spark: SparkSession, store: TableStore, srcDir: String,
                       archive: Boolean = false): Unit =
     processFiles(spark, store, srcDir, "transactions_\\d{8}\\.txt",
-        "transactions", "stg_transactions", archive) {
+        "transactions", "stg_transactions", archive,
+        maxDate = Some(to_date(col("transaction_date").cast(TimestampType)))) {
       (path, s) => Sources.csv(s, path, Sources.stringSchema(TxSchema: _*))
-    } { (staged, fileDate) =>
+    } { (staged, _) =>
       val typed = staged.select(
         col("transaction_id"),
         col("transaction_date").cast(TimestampType).as("transaction_date"),
@@ -115,11 +135,6 @@ object Pipeline {
       val fact = store.readOr("fact_transactions", factStruct)
       store.append("fact_transactions",
         AntiInsert.newRows(typed, fact, Seq("transaction_id")))
-      val newMax = typed.agg(max(to_date(col("transaction_date")))).first()
-      // All-malformed dates → null max; advance to the file's nominal
-      // date rather than NPE-ing the run.
-      Some(if (newMax.isNullAt(0)) isoToTs(fileDate)
-           else isoToTs(newMax.getDate(0).toString))
     }
 
   /** Passport-blacklist stage (`black_list.py` analog): `.xlsx`
@@ -135,13 +150,12 @@ object Pipeline {
         "blacklist", "stg_blacklist", archive) {
       (path, s) => Sources.excel(s, path, "blacklist",
         Sources.stringSchema(BlacklistSchema: _*))
-    } { (staged, fileDate) =>
+    } { (staged, _) => // A2: the watermark is the file date
       val typed = staged.select(col("passport").as("passport_num"),
         col("date").cast(DateType).as("entry_dt"))
       val fact = store.readOr("fact_blacklist", blacklistStruct)
       store.append("fact_blacklist",
         AntiInsert.newRows(typed, fact, Seq("passport_num")))
-      Some(isoToTs(fileDate)) // A2: file date as a folded constant
     }
 
   /** Dimension stage (`terminals.py` analog): each full-snapshot file
@@ -162,7 +176,6 @@ object Pipeline {
           batchTs = ts,
           deleteKeys = Some(batch.select("terminal_id")),
           deleteTs = Some(ts)))
-      Some(isoToTs(fileDate))
     }
 
   /** One JDBC-sourced SCD2 dimension: where it comes from, what it's
@@ -197,8 +210,10 @@ object Pipeline {
     *      `cards.py:37-47`);
     *   2. incremental extract over JDBC: rows with
     *      `coalesce(update_dt, create_dt) > watermark`
-    *      (`cards.py:52-58`), truncate-reloaded into staging (K1);
-    *   3. skip-if-no-rows guard (`cards.py:71`);
+    *      (`cards.py:52-58`), truncate-reloaded into staging (K1), with
+    *      its row count and `max(coalesce(update_dt, create_dt))`
+    *      observed on that staging write's own job;
+    *   3. skip-if-no-rows guard (`cards.py:71`) on the observed count;
     *   4. full key snapshot into the delete-staging (`cards.py:73-82`);
     *   5. SCD2 merge with the reference's PER-ROW version clocks: new
     *      keys open at their `create_dt` (`cards.py:98`), changed keys
@@ -206,8 +221,9 @@ object Pipeline {
     *      `update_dt − 1 s` (`cards.py:117,126`), deletes are marked
     *      at `runTs` — the pinned stand-in for the reference's `now()`
     *      (`cards.py:154`);
-    *   6. watermark advanced to `max(coalesce(update_dt, create_dt))`
-    *      over THIS extract's staging (`cards.py:192-196`).
+    *   6. watermark advanced to the observed
+    *      `max(coalesce(update_dt, create_dt))` over THIS extract's
+    *      staging (`cards.py:192-196`).
     *
     * Scale notes: the watermark predicate bounds every extract to the
     * changed rows, so per-run JDBC volume scales with the delta, not
@@ -223,10 +239,11 @@ object Pipeline {
       (d.key +: d.tracked).map { case (s, t) => col(s).as(t) } ++ Seq(
         col("create_dt").cast(TimestampType).as("create_dt"),
         col("update_dt").cast(TimestampType).as("update_dt")): _*)
-    store.overwrite(s"stg_${d.wmKey}",
-      Sources.incremental(source(), "update_dt", "create_dt", wm))
-    val staged = store.read(s"stg_${d.wmKey}")
-    if (staged.limit(1).count() > 0) { // A3 guard (cards.py:71)
+    val changed = coalesce(col("update_dt"), col("create_dt"))
+    val (rows, newMax) = stageObserved(store, s"stg_${d.wmKey}",
+      Sources.incremental(source(), "update_dt", "create_dt", wm), Some(changed))
+    if (rows > 0) { // A3 guard (cards.py:71)
+      val staged = store.read(s"stg_${d.wmKey}")
       store.overwrite(s"stg_${d.wmKey}_del", source().select(dimKey))
       val dimSchema = StructType(
         staged.schema.filterNot(f => Seq("create_dt", "update_dt").contains(f.name)) ++ Seq(
@@ -236,15 +253,12 @@ object Pipeline {
       val dim = store.readOr(d.dimTable, dimSchema)
       store.swapSnapshot(d.dimTable, Scd2.merge(
         dim, staged, keys = Seq(dimKey), tracked = d.tracked.map(_._2),
-        batchTs = coalesce(col("update_dt"), col("create_dt")),
+        batchTs = changed,
         deleteKeys = Some(store.read(s"stg_${d.wmKey}_del")),
         deleteTs = Some(lit(runTs)),
         passthrough = Seq("create_dt", "update_dt"),
         newTs = Some(col("create_dt"))))
-      val newMax = staged
-        .agg(max(coalesce(col("update_dt"), col("create_dt")))).first()
-      if (!newMax.isNullAt(0))
-        Incremental.advance(store, "stg", d.wmKey, newMax.getTimestamp(0))
+      newMax.foreach(t => Incremental.advance(store, "stg", d.wmKey, t.asInstanceOf[Timestamp]))
     }
   }
 

@@ -25,6 +25,64 @@ class TableStoreSpec extends AnyFunSuite {
     assert(df.count() === 0 && df.columns.toSeq === Seq("id", "v"))
   }
 
+  /** `read` takes the schema from a footer: it must give the schema and
+    * rows Spark's own inference gives, and launch no Spark job. */
+  private def assertReadsLikeSpark(store: TableStore, name: String): Unit = {
+    val (df, jobs) = graft.JobCount(spark)(store.read(name))
+    assert(jobs === 0, name)
+    val inferred = spark.read.parquet(store.path(name))
+    assert(df.schema === inferred.schema, name)
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
+    assert(rows(df) === rows(inferred), name)
+  }
+
+  test("read takes the schema from a footer: Spark's schema and rows, no job") {
+    import java.nio.file.Paths
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val store = newStore()
+    store.overwrite("flat", Seq((1, "a"), (2, "b")).toDF("id", "v"))
+    store.append("flat", Seq((3, "c")).toDF("id", "v"))
+    assertReadsLikeSpark(store, "flat")
+
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    graft.ops.Scd2.mergePartitioned(store, "kb_dim",
+      Seq(("k1", "a"), ("k2", "b"), ("k3", "c")).toDF("k", "a"), Seq("k"), Seq("a"),
+      lit(t0), nBuckets = 4)
+    assert(Files.list(Paths.get(store.path("kb_dim"))).anyMatch(
+      _.getFileName.toString.startsWith(graft.ops.Scd2.BucketColName + "=")))
+    assertReadsLikeSpark(store, "kb_dim")
+
+    store.overwrite("empty", Seq.empty[(Int, String)].toDF("id", "v"))
+    assertReadsLikeSpark(store, "empty")
+
+    val typed = StructType(Seq(StructField("d", DateType), StructField("ts", TimestampType),
+      StructField("amt", DecimalType(15, 2)), StructField("s", StringType, nullable = false)))
+    store.overwrite("typed", store.localFrame(Seq(
+      Row(java.sql.Date.valueOf("2024-02-29"), t0, new java.math.BigDecimal("1234.56"), "x"),
+      Row(null, null, null, "y")), typed))
+    assertReadsLikeSpark(store, "typed")
+    assert(store.read("typed").schema.map(_.dataType) ===
+      Seq(DateType, TimestampType, DecimalType(15, 2), StringType))
+
+    // A snapshot swap that died between its renames: read restores it.
+    store.overwrite("swapped", Seq((7, "g")).toDF("id", "v"))
+    Files.move(Paths.get(store.path("swapped")), Paths.get(store.path("swapped.__old")))
+    assertReadsLikeSpark(store, "swapped")
+    assert(store.read("swapped").collect().map(_.getInt(0)).toSeq === Seq(7))
+  }
+
+  test("read of a table directory with no data file fails naming the table") {
+    import java.nio.file.Paths
+    val store = newStore()
+    val dir = Files.createDirectories(Paths.get(store.path("hollow")))
+    Files.createFile(dir.resolve("_SUCCESS"))
+    // Data under a hidden name (a swap's scratch generation) is not the table's.
+    store.overwrite("hollow/.__tmp", Seq(1).toDF("id"))
+    val ex = intercept[IllegalStateException](store.read("hollow"))
+    assert(ex.getMessage.contains("'hollow'"))
+  }
+
   test("swapSnapshot replaces a table that the new snapshot reads") {
     val store = newStore()
     store.overwrite("dim", Seq((1, "a"), (2, "b")).toDF("id", "v"))

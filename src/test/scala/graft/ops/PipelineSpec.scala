@@ -238,6 +238,51 @@ class PipelineSpec extends AnyFunSuite {
     assert(Incremental.readWatermark(store, "stg", "terminals") === mar1)
   }
 
+  test("a header-only file leaves its table and watermark; all-null dates advance to the file date") {
+    val src = Files.createTempDirectory("graft_pipe_empty")
+    val store = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh_empty").toString)
+    val txHeader = "transaction_id;transaction_date;amount;card_num;oper_type;oper_result;terminal"
+    val termHeader = "terminal_id;terminal_type;terminal_city"
+    def load(): Unit = {
+      Pipeline.runTransactions(spark, store, src.toString)
+      Pipeline.runTerminals(spark, store, src.toString)
+    }
+    def watermarks = Seq("transactions", "terminals")
+      .map(Incremental.readWatermark(store, "stg", _))
+    def rows(t: String) = store.read(t).collect().toSet
+    write(src, "transactions_01012024.txt", txHeader,
+      "1;2024-01-01 10:00:00;1,00;C1;PAYMENT;SUCCESS;T1")
+    write(src, "terminals_01012024.txt", termHeader, "T1;ATM;Moscow")
+    load()
+    val d1 = ts("2024-01-01 00:00:00")
+    assert(watermarks === Seq(d1, d1))
+    val (facts1, dim1) = (rows("fact_transactions"), rows("dim_terminals_hist"))
+
+    // Header only: nothing staged, so no row is promoted, the snapshot
+    // deletes no terminal, and neither watermark moves.
+    write(src, "transactions_02012024.txt", txHeader)
+    write(src, "terminals_02012024.txt", termHeader)
+    load()
+    assert(rows("fact_transactions") === facts1)
+    assert(rows("dim_terminals_hist") === dim1)
+    assert(watermarks === Seq(d1, d1))
+
+    // Later files still load. Every transaction_date is blank, so the
+    // max is null and the watermark falls back to the file date.
+    write(src, "transactions_03012024.txt", txHeader,
+      "2;;2,00;C2;PAYMENT;SUCCESS;T1", "3;;3,00;C3;PAYMENT;SUCCESS;T1")
+    write(src, "terminals_03012024.txt", termHeader, "T1;ATM;Kazan")
+    load()
+    val d3 = ts("2024-01-03 00:00:00")
+    assert(watermarks === Seq(d3, d3))
+    assert(store.read("fact_transactions").collect()
+      .map(r => (r.getString(0), Option(r.getTimestamp(1)))).toSet ===
+      Set(("1", Some(ts("2024-01-01 10:00:00"))), ("2", None), ("3", None)))
+    assert(store.read("dim_terminals_hist").collect()
+      .map(r => (r.getString(2), r.getTimestamp(3), r.getTimestamp(4))).toSet ===
+      Set(("Moscow", d1, ts("2024-01-02 23:59:59")), ("Kazan", d3, INF)))
+  }
+
   test("PipelineMain rejects an unknown flag with its usage line") {
     Seq(Array("src", "wh", "--bucket-dims=4"), Array("src", "wh", "--archve"),
         Array("src", "wh", "2024-01-01", "extra"), Array("src")).foreach { args =>
@@ -308,6 +353,43 @@ class PipelineSpec extends AnyFunSuite {
       assert(concurrent.keySet === sequential.keySet, s"run $i")
       sequential.keys.foreach(t => assert(concurrent(t) === sequential(t), s"run $i, table $t"))
     }
+  }
+
+  test("a fixture day's stages run no more Spark jobs than pinned") {
+    val db = "graftpipe_jobs"
+    val src = Files.createTempDirectory("graft_pipe_src_jobs")
+    val store = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh_jobs").toString)
+    seedDims(db)
+    try {
+      day1(src)
+      runAll(store, src, ts("2024-01-01 12:00:00"), db)
+      // Day 2 changes every source, so each stage stages, merges or
+      // appends, and commits its watermark.
+      day2(src)
+      XlsxFixture.writeSheet(src.resolve("passport_blacklist_02012024.xlsx"), "blacklist",
+        Seq(Seq("date", "passport"), Seq("2024-01-02", "P2")))
+      sql(db, day2Db :+ "UPDATE clients SET phone = '999', " +
+        "update_dt = TIMESTAMP('2024-01-02 09:00:00') WHERE client_id = 'CL4'": _*)
+      val dimTs = ts("2024-01-02 12:00:00")
+      val stages: Seq[(String, () => Unit)] = Seq(
+        "transactions" -> (() => Pipeline.runTransactions(spark, store, src.toString)),
+        "blacklist" -> (() => Pipeline.runBlacklist(spark, store, src.toString)),
+        "terminals" -> (() => Pipeline.runTerminals(spark, store, src.toString))) ++
+        Seq(Pipeline.cardsDim(dimDb(db)), Pipeline.accountsDim(dimDb(db)),
+            Pipeline.clientsDim(dimDb(db)))
+          .map(d => d.wmKey -> (() => Pipeline.runJdbcDim(spark, store, d, dimTs))) :+
+        ("report" -> (() => Pipeline.runReport(spark, store, reportDt)))
+      val jobs = stages.map { case (name, stage) => name -> graft.JobCount(spark)(stage())._2 }
+      info(jobs.map { case (n, j) => s"$n $j" }.mkString(", "))
+      // Before table schemas came from footers and the guard and the
+      // watermark were observed on the staging write, this day ran 12,
+      // 10, 13, 17, 17, 17 and 13 jobs.
+      val pinned = Map("transactions" -> 6, "blacklist" -> 6, "terminals" -> 9,
+        "cards" -> 10, "accounts" -> 10, "clients" -> 10, "report" -> 7)
+      jobs.foreach { case (name, j) => assert(j <= pinned(name), name) }
+      Seq("transactions", "blacklist", "terminals", "cards", "accounts", "clients")
+        .foreach(t => assert(Incremental.readWatermark(store, "stg", t).toString.startsWith("2024-01-02"), t))
+    } finally dropDims(db)
   }
 
   test("a failed load stage: siblings commit, no report, a rerun converges") {
