@@ -21,7 +21,6 @@ object Functions {
   /** SCD2 "open version" sentinel (reference `main.ddl:88-89`,
     * `to_date('9999-12-31','YYYY-MM-DD')`). */
   val InfinityTs: Column = to_timestamp(lit("9999-12-31 00:00:00"))
-  val InfinityDate: Column = to_date(lit("9999-12-31"))
 
   /** Parse a European-format decimal string "1.234,56" → 1234.56
     * (reference `transaction.py:77`:
@@ -159,13 +158,11 @@ object Functions {
     * column, most-significant bit first, into one non-negative BIGINT.
     * Rows sorted by this key cluster on EVERY input dimension at once —
     * a range of z-values maps to a hyper-rectangle neighborhood — which
-    * is what makes multi-column min/max file skipping work
-    * ([[graft.io.TableStore.commitVersionedClustered]]): a linear sort
-    * clusters only its leading column; z-order gives every listed
+    * is what makes multi-column min/max file skipping work: a linear
+    * sort clusters only its leading column; z-order gives every listed
     * column tight per-file bounds.
     *
-    * Inputs must already be non-negative and < 2^bits (scale first —
-    * the clustered commit rank-normalizes for exactly this reason).
+    * Inputs must already be non-negative and < 2^bits (scale first).
     * The expression is a static tree of `bits × n` shift/and/or terms —
     * pure Catalyst built-ins, whole-stage-codegen'd, no UDF. Total
     * output width `bits × n` must fit a signed long (≤ 62 bits).

@@ -10,18 +10,13 @@ import org.apache.spark.sql.types._
   * The reference ingests three source kinds (CSV `.txt`, Excel `.xlsx`,
   * JDBC Postgres — `transaction.py:57`, `terminals.py:54`,
   * `cards.py:50-56`). Spark-first mapping: `spark.read` with explicit
-  * schemas (staging parity = never infer), filename-date extraction as a
-  * Catalyst expression over `input_file_name()`, and incremental JDBC
+  * schemas (staging parity = never infer), strict filename-date parsing
+  * ([[fileNameDateIso]]), and incremental JDBC
   * extraction expressed as a pushed-down predicate. The test harness
   * serves all tables as parquet; the CSV/JDBC readers are exercised by
   * unit specs on generated fixtures.
   */
 object Sources {
-
-  /** Harness tables (TESTDATA.md). */
-  val tableNames: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings")
 
   /** Read one harness table from an sf dir.
     *
@@ -106,36 +101,6 @@ object Sources {
   /** All-string schema helper for staging-parity CSV reads. */
   def stringSchema(cols: String*): StructType =
     StructType(cols.map(c => StructField(c, StringType, nullable = true)))
-
-  /** Newline-delimited JSON (JSONL) with an EXPLICIT schema — the
-    * interchange format most training corpora actually ship as.
-    * Never `inferSchema`-equivalent (a schemaless `spark.read.json`
-    * runs a whole extra corpus pass just to guess types, and guesses
-    * differently when a batch happens to lack a field — at 100 TB
-    * that is both a doubled scan and a schema that drifts per
-    * ingest). Splittability note for scale: plain `.jsonl` and
-    * `.jsonl.zst`/`.bz2` split by line across tasks; a single giant
-    * `.gz` member does not — shard compressed corpora at write time.
-    * `mode=FAILFAST` surfaces corrupt lines as ingest errors instead
-    * of silent nulls; callers wanting quarantine semantics pass
-    * PERMISSIVE and a `columnNameOfCorruptRecord` column. */
-  def jsonl(spark: SparkSession, path: String, schema: StructType,
-            mode: String = "FAILFAST"): DataFrame =
-    spark.read
-      .option("mode", mode)
-      .schema(schema)
-      .json(path)
-
-  /** Extract the `DDMMYYYY` date embedded in a source filename and
-    * stamp every row with it (reference `transaction.py:49-50` +
-    * `terminals.py:55`) — done as a Catalyst expression so it runs
-    * distributed, not driver-side. */
-  def withFileDate(df: DataFrame, colName: String = "file_date"): DataFrame =
-    // Extract from the basename, not the full path — a parent directory
-    // containing 8+ digits would otherwise match first.
-    df.withColumn(colName,
-      to_date(regexp_extract(
-        substring_index(input_file_name(), "/", -1), "(\\d{8})", 1), "ddMMyyyy"))
 
   /** Driver-side file discovery in chronological order: glob by mask,
     * sort by the DDMMYYYY date embedded in the name (reference

@@ -128,87 +128,6 @@ final class TableStore(spark: SparkSession, val root: String) {
                            partitionCols: Seq[String]): Unit =
     df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path(name))
 
-  /** Partition-pruned append: adds files only under the incoming
-    * rows' partition directories. */
-  def appendPartitioned(name: String, df: DataFrame,
-                        partitionCols: Seq[String]): Unit =
-    df.write.mode("append").partitionBy(partitionCols: _*).parquet(path(name))
-
-  /** Bucketed catalog table: rows hash-distributed into `buckets`
-    * files by the bucket columns and sorted within each. Two tables
-    * bucketed the same way join WITHOUT a shuffle — at 100 TB,
-    * pre-bucketing the fact and its dimensions on the join key turns
-    * every pipeline join into a local merge. Requires the session
-    * catalog (bucket metadata lives in the metastore, not parquet),
-    * so these are `saveAsTable` tables addressed by name, not path. */
-  def saveBucketed(table: String, df: DataFrame, bucketCols: Seq[String],
-                   buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Compact an append-only table's accumulated small files: every
-    * batch append adds files, and file count — not data size — is what
-    * degrades scan planning and shuffle fan-out over time. Run
-    * periodically, not per batch: the rewrite costs one pass over the
-    * table.
-    *
-    * Unpartitioned tables rewrite whole into `targetFiles` files via
-    * the snapshot swap. Hive-partitioned tables rewrite PER LEAF
-    * PARTITION into `targetFiles` files each — a plain rewrite would
-    * flatten the layout (and re-infer partition-column types), and at
-    * 100 TB rewriting the whole table to fix one hot day's file count
-    * is the wrong cost model anyway: each leaf rewrite reads and
-    * swaps only that directory, so compaction work is bounded by the
-    * partition, not the table. Leaf data files carry no partition
-    * columns (they live in the directory names), so a per-leaf
-    * read→repartition→swap preserves schema, layout, and partition
-    * pruning exactly. The driver iterates partition directory NAMES
-    * (metadata, never data); scratch/retired dirs are dot-prefixed so
-    * Hadoop path filters hide them from concurrent readers mid-swap. */
-  def compact(name: String, targetFiles: Int): Unit = {
-    val leaves = leafPartitionDirs(new Path(path(name)))
-    if (leaves.isEmpty) swapSnapshot(name, read(name).repartition(targetFiles))
-    else leaves.foreach { leaf =>
-      val tmp = new Path(leaf.getParent, s".__tmp_${leaf.getName}")
-      val old = new Path(leaf.getParent, s".__old_${leaf.getName}")
-      spark.read.parquet(leaf.toString).repartition(targetFiles)
-        .write.mode("overwrite").parquet(tmp.toString)
-      swapDirs(leaf, tmp, old)
-    }
-  }
-
-  /** Leaf `k=v` partition directories under `root` (depth-first;
-    * multi-level layouts return the deepest level). Empty for an
-    * unpartitioned table. Hidden (`.`/`_`) entries are skipped — they
-    * are scratch, committer, or metadata dirs, never partitions. */
-  private def leafPartitionDirs(root: Path): Seq[Path] = {
-    def visible(p: Path): Boolean =
-      !p.getName.startsWith(".") && !p.getName.startsWith("_")
-    def walk(dir: Path): Seq[Path] = {
-      val parts = fs.listStatus(dir).toSeq
-        .filter(st => st.isDirectory && visible(st.getPath) &&
-          st.getPath.getName.contains("="))
-      parts.flatMap { st =>
-        val deeper = walk(st.getPath)
-        if (deeper.isEmpty) Seq(st.getPath) else deeper
-      }
-    }
-    walk(root)
-  }
-
-  /** Data files currently backing a table (maintenance telemetry). */
-  def fileCount(name: String): Int = {
-    val it = fs.listFiles(new Path(path(name)), true)
-    var n = 0
-    while (it.hasNext) {
-      if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-    }
-    n
-  }
-
   /** Partition-scoped snapshot swap: replace ONLY the `partitionCol=v`
     * leaves that `df` actually contains, leaving every other leaf's
     * files untouched on disk — not rewritten, not re-committed,
@@ -320,20 +239,9 @@ final class TableStore(spark: SparkSession, val root: String) {
     * `df` may read the table's live generation (it is fully
     * materialized into its own directory before the pointer moves).
     * @return the committed generation number */
-  def commitVersioned(name: String, df: DataFrame): Long =
-    commitGen(name, df, _ => ())
-
-  /** [[commitVersioned]] plus a pre-publish hook: the hook runs after
-    * the generation directory is fully materialized but BEFORE the
-    * manifest record exists — anything it writes (file statistics, a
-    * secondary index) is guaranteed present whenever the commit is
-    * visible, and a crash inside the hook leaves an invisible orphan,
-    * never a half-described committed generation. */
-  private def commitGen(name: String, df: DataFrame,
-                        beforePublish: Long => Unit): Long = {
+  def commitVersioned(name: String, df: DataFrame): Long = {
     val gen = (committedGens(name) ++ genDirs(name)).foldLeft(0L)(math.max) + 1
     df.write.parquet(new Path(path(name), s"g$gen").toString)
-    beforePublish(gen)
     val md = manifestDir(name)
     fs.mkdirs(md)
     val rec = new Path(md, f"$gen%020d")
@@ -356,10 +264,6 @@ final class TableStore(spark: SparkSession, val root: String) {
     spark.read.parquet(new Path(path(name), s"g$gen").toString)
   }
 
-  /** All committed generation numbers, ascending — the queryable
-    * commit history (what Delta calls the transaction log listing). */
-  def generations(name: String): Seq[Long] = committedGens(name)
-
   /** TIME TRAVEL: read a specific committed generation — the audit /
     * reproduce-yesterday's-training-set read. Committed only: an
     * orphaned (crashed-writer) directory is not a generation, and a
@@ -370,13 +274,6 @@ final class TableStore(spark: SparkSession, val root: String) {
         s"(have: ${committedGens(name).mkString(", ")})")
     spark.read.parquet(new Path(path(name), s"g$gen").toString)
   }
-
-  /** [[compact]] for a versioned table: the live generation rewritten
-    * into `targetFiles` files as a NEW commit — readers never observe
-    * a half-compacted state, and time travel to pre-compaction
-    * generations still works until vacuum. */
-  def compactVersioned(name: String, targetFiles: Int): Long =
-    commitVersioned(name, readVersioned(name).repartition(targetFiles))
 
   /** Drop generation directories (and their manifest records) older
     * than the newest `keepGenerations` committed ones, plus orphaned
@@ -391,269 +288,9 @@ final class TableStore(spark: SparkSession, val root: String) {
     val live = committed.lastOption.getOrElse(Long.MinValue)
     genDirs(name)
       .filter(g => !keep.contains(g) && g < live)
-      .foreach { g =>
-        fs.delete(new Path(path(name), s"g$g"), true)
-        fs.delete(statsDir(name, g), true): Unit
-      }
+      .foreach(g => fs.delete(new Path(path(name), s"g$g"), true))
     committed.dropRight(keepGenerations)
       .foreach(g => fs.delete(new Path(manifestDir(name), f"$g%020d"), true))
-  }
-
-  // ------------------------------------------------------------------
-  // Data-skipping file statistics — the second half of the Delta-shaped
-  // commit. [[commitVersionedWithStats]] records per-FILE min/max/null
-  // counts for chosen columns alongside each generation, harvested from
-  // the parquet FOOTERS the write already produced (metadata-only — no
-  // second pass over the data). [[readVersionedPruned]] then plans a
-  // range scan from the stats: files whose [min,max] cannot intersect
-  // the predicate are never listed into the scan at all. Parquet's own
-  // row-group skipping still applies WITHIN the files that survive;
-  // this layer removes whole files from the query before any footer is
-  // opened at read time — at 100 TB the difference between scheduling
-  // 100k tasks and scheduling the 40 whose files can match.
-  //
-  // File-level min/max only helps if values are CLUSTERED into files.
-  // [[commitVersionedClustered]] provides the layout half: rows sorted
-  // by a Z-order key over the cluster columns
-  // ([[graft.functions.Functions.zorderKey]]) and range-partitioned
-  // into files, so EVERY cluster column gets tight per-file bounds — a
-  // linear sort gives them only to its leading column.
-  // ------------------------------------------------------------------
-
-  private def statsDir(name: String, gen: Long) =
-    new Path(new Path(path(name), "_stats"), s"g$gen")
-
-  /** Parquet stats and Spark's string comparisons order strings by
-    * UTF-8 bytes (unsigned — equivalently by code point); the JVM's
-    * `String` ordering is UTF-16 code-unit order, which DISAGREES for
-    * supplementary-plane characters (≥ U+10000, surrogate pairs
-    * starting 0xD800) vs characters in [U+E000, U+FFFF]. Every stats
-    * bound and pruning comparison uses THIS order so a file can never
-    * be skipped while containing rows the BETWEEN residual would
-    * keep. */
-  private val utf8Order: Ordering[String] = new Ordering[String] {
-    def compare(a: String, b: String): Int =
-      java.util.Arrays.compareUnsigned(
-        a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  private val statsSchema = StructType(Seq(
-    org.apache.spark.sql.types.StructField("file", org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("col", org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("ptype", org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("nulls", org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("rows", org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("min_long", org.apache.spark.sql.types.LongType, nullable = true),
-    org.apache.spark.sql.types.StructField("max_long", org.apache.spark.sql.types.LongType, nullable = true),
-    org.apache.spark.sql.types.StructField("min_double", org.apache.spark.sql.types.DoubleType, nullable = true),
-    org.apache.spark.sql.types.StructField("max_double", org.apache.spark.sql.types.DoubleType, nullable = true),
-    org.apache.spark.sql.types.StructField("min_str", org.apache.spark.sql.types.StringType, nullable = true),
-    org.apache.spark.sql.types.StructField("max_str", org.apache.spark.sql.types.StringType, nullable = true)))
-
-  /** [[commitVersioned]] recording per-file min/max/null-count
-    * statistics for `statsCols` (from the written generation's parquet
-    * footers; see the section comment). The stats table is itself
-    * parquet, under `_stats/g<N>` (underscore-prefixed: invisible to
-    * data scans), written before the manifest record publishes.
-    *
-    * Footers are read driver-side here (one ~KB read per file — the
-    * same work `spark.read` does at planning time); a deployment
-    * committing hundreds of thousands of files per generation would
-    * lift the identical loop into `spark.parallelize(files)`. */
-  def commitVersionedWithStats(name: String, df: DataFrame,
-                               statsCols: Seq[String]): Long =
-    commitGen(name, df, gen => writeFooterStats(name, gen, statsCols))
-
-  private def writeFooterStats(name: String, gen: Long,
-                               statsCols: Seq[String]): Unit = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val genDir = new Path(path(name), s"g$gen")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = fs.listStatus(genDir).toSeq.map(_.getPath)
-      .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("."))
-    val rows = files.flatMap { p =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
-      try {
-        val blocks = reader.getFooter.getBlocks
-        import scala.jdk.CollectionConverters._
-        // A file with no row groups holds no rows: it needs no stats
-        // row, and pruning it out of every scan is exactly right.
-        if (blocks.isEmpty) Seq.empty
-        else statsCols.map { c =>
-          val chunks = blocks.asScala.toSeq.map { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == c).getOrElse(
-              throw new IllegalArgumentException(
-                s"commitVersionedWithStats: column '$c' absent from ${p.getName}"))
-          }
-          val ptn = chunks.head.getPrimitiveType.getPrimitiveTypeName
-          val nulls = chunks.map(_.getStatistics.getNumNulls).sum
-          val fileRows = blocks.asScala.map(_.getRowCount).sum
-          val nonEmpty = chunks.filter(_.getStatistics.hasNonNullValue)
-          def mins = nonEmpty.map(_.getStatistics.genericGetMin)
-          def maxs = nonEmpty.map(_.getStatistics.genericGetMax)
-          val (ptype, mnL, mxL, mnD, mxD, mnS, mxS): (String, Any, Any, Any, Any, Any, Any) = ptn match {
-            case INT32 if nonEmpty.nonEmpty =>
-              ("long", mins.map(_.asInstanceOf[Number].longValue).min,
-                maxs.map(_.asInstanceOf[Number].longValue).max, null, null, null, null)
-            case INT64 if nonEmpty.nonEmpty =>
-              ("long", mins.map(_.asInstanceOf[Number].longValue).min,
-                maxs.map(_.asInstanceOf[Number].longValue).max, null, null, null, null)
-            case FLOAT | DOUBLE if nonEmpty.nonEmpty =>
-              ("double", null, null, mins.map(_.asInstanceOf[Number].doubleValue).min,
-                maxs.map(_.asInstanceOf[Number].doubleValue).max, null, null)
-            case BINARY if nonEmpty.nonEmpty =>
-              ("string",
-                null, null, null, null,
-                mins.map(_.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8).min(utf8Order),
-                maxs.map(_.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8).max(utf8Order))
-            case INT32 | INT64 | FLOAT | DOUBLE | BINARY =>
-              // all-null column in this file: typed but boundless
-              (ptn match {
-                case FLOAT | DOUBLE => "double"
-                case BINARY => "string"
-                case _ => "long"
-              }, null, null, null, null, null, null)
-            case other => throw new IllegalArgumentException(
-              s"commitVersionedWithStats: unsupported parquet type $other for '$c'")
-          }
-          org.apache.spark.sql.Row(p.getName, c, ptype, nulls, fileRows,
-            mnL, mxL, mnD, mxD, mnS, mxS)
-        }
-      } finally reader.close()
-    }
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), statsSchema)
-      .coalesce(1).write.parquet(statsDir(name, gen).toString)
-  }
-
-  /** The live generation's recorded file statistics for `column`:
-    * one row per data file with exact footer bounds, null count, and
-    * row count. `None` when the generation carries no stats or none
-    * for this column. Cost-model consumers (e.g.
-    * [[graft.ops.Temporal.autoBucketWidth]]) read THIS instead of
-    * scanning data — the same few-KB read the pruned scan plans
-    * from. */
-  def columnStats(name: String, column: String): Option[DataFrame] = {
-    val gen = liveGeneration(name).getOrElse(return None)
-    val sd = statsDir(name, gen)
-    if (!fs.exists(sd)) return None
-    val st = spark.read.parquet(sd.toString)
-      .filter(org.apache.spark.sql.functions.col("col") === column)
-    if (st.isEmpty) None else Some(st)
-  }
-
-  /** Range scan over the live generation planned through its file
-    * statistics: only files whose recorded [min,max] for `column` can
-    * intersect [lo, hi] are listed into the scan; the row-level
-    * `BETWEEN` filter is applied on top, so the result is exactly
-    * `readVersioned(name).filter(column between (lo, hi))` — the stats
-    * change which files are READ, never which rows qualify. A
-    * generation committed without stats (plain [[commitVersioned]])
-    * falls back to the unpruned scan. */
-  def readVersionedPruned(name: String, column: String, lo: Any, hi: Any): DataFrame = {
-    val gen = liveGeneration(name).getOrElse(throw new java.util.NoSuchElementException(
-      s"readVersionedPruned: no committed generation for '$name'"))
-    val full = spark.read.parquet(new Path(path(name), s"g$gen").toString)
-    val bounded = full.filter(
-      org.apache.spark.sql.functions.col(column)
-        .between(org.apache.spark.sql.functions.lit(lo),
-          org.apache.spark.sql.functions.lit(hi)))
-    val sd = statsDir(name, gen)
-    if (!fs.exists(sd)) return bounded
-    val st = spark.read.parquet(sd.toString)
-      .filter(org.apache.spark.sql.functions.col("col") === column).collect()
-    // A column absent from the stats table is the same logical
-    // situation as a generation with no stats dir at all (stats were
-    // recorded, just not for THIS column): fall back to the bounded
-    // full scan rather than failing one case and not the other.
-    if (st.isEmpty) return bounded
-    def num(v: Any): Double = v match {
-      case n: Number => n.doubleValue
-      case other => throw new IllegalArgumentException(
-        s"readVersionedPruned: non-numeric bound $other for numeric column '$column'")
-    }
-    val keep = st.filter { r =>
-      r.getString(r.fieldIndex("ptype")) match {
-        // an all-null file has NULL bounds: BETWEEN can never match it
-        case "long" if r.isNullAt(r.fieldIndex("min_long")) => false
-        case "double" if r.isNullAt(r.fieldIndex("min_double")) => false
-        case "string" if r.isNullAt(r.fieldIndex("min_str")) => false
-        case "long" =>
-          num(lo) <= r.getLong(r.fieldIndex("max_long")) &&
-            num(hi) >= r.getLong(r.fieldIndex("min_long"))
-        case "double" =>
-          num(lo) <= r.getDouble(r.fieldIndex("max_double")) &&
-            num(hi) >= r.getDouble(r.fieldIndex("min_double"))
-        case "string" =>
-          utf8Order.lteq(lo.toString, r.getString(r.fieldIndex("max_str"))) &&
-            utf8Order.gteq(hi.toString, r.getString(r.fieldIndex("min_str")))
-      }
-    }.map(r => new Path(new Path(path(name), s"g$gen"), r.getString(r.fieldIndex("file"))).toString)
-    if (keep.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full.schema)
-    else
-      spark.read.schema(full.schema).parquet(keep.toIndexedSeq: _*)
-        .filter(org.apache.spark.sql.functions.col(column)
-          .between(org.apache.spark.sql.functions.lit(lo),
-            org.apache.spark.sql.functions.lit(hi)))
-  }
-
-  /** [[commitVersionedWithStats]] with the LAYOUT that makes the stats
-    * bite on every cluster column at once: rows are Z-order-sorted
-    * over `clusterCols` (each min/max-normalized to `bits` bits in one
-    * aggregate pass) and range-partitioned into `files` files, so each
-    * file covers a compact hyper-rectangle of the cluster-column space
-    * and [[readVersionedPruned]] skips files for predicates on ANY of
-    * them. Cluster columns must be numeric; normalization is
-    * double-precision (layout-only — row VALUES are untouched, and
-    * stats are exact footer bounds). The z key is dropped before the
-    * write: it orders the writer, it is not data. */
-  def commitVersionedClustered(name: String, df: DataFrame,
-                               clusterCols: Seq[String], files: Int,
-                               bits: Int = 12,
-                               statsCols: Seq[String] = Seq.empty): Long = {
-    import org.apache.spark.sql.functions._
-    require(clusterCols.nonEmpty, "commitVersionedClustered: no cluster columns")
-    val side = 1L << bits
-    val aggCols = clusterCols.zipWithIndex.flatMap { case (c, i) =>
-      Seq(min(col(c)).cast("double").as(s"mn$i"),
-        max(col(c)).cast("double").as(s"mx$i"))
-    }
-    val bounds = df.agg(aggCols.head, aggCols.tail: _*).head()
-    val nullCols = clusterCols.zipWithIndex.collect {
-      case (c, i) if bounds.isNullAt(bounds.fieldIndex(s"mn$i")) => c
-    }
-    if (nullCols.nonEmpty) {
-      // min/max aggregate to NULL for an empty frame (every cluster
-      // column) or an all-null cluster column. An empty frame has no
-      // layout to choose — commit it plainly (readers prune/fall back
-      // through the normal stats path); an all-null cluster column on
-      // a NON-empty frame is a caller bug and fails by name.
-      if (df.isEmpty)
-        return commitGen(name, df, gen => writeFooterStats(name, gen,
-          if (statsCols.nonEmpty) statsCols else clusterCols))
-      throw new IllegalArgumentException(
-        "commitVersionedClustered: cluster column(s) " +
-          nullCols.mkString("'", "', '", "'") + " are entirely null")
-    }
-    val scaled = clusterCols.zipWithIndex.map { case (c, i) =>
-      val (mn, mx) = (bounds.getDouble(bounds.fieldIndex(s"mn$i")),
-        bounds.getDouble(bounds.fieldIndex(s"mx$i")))
-      if (mx <= mn) lit(0L)
-      else least(lit(side - 1),
-        floor((col(c).cast("double") - lit(mn)) / lit(mx - mn) * lit(side.toDouble - 1)))
-    }
-    val zc = graft.functions.Functions.zorderKey(bits, scaled: _*)
-    commitGen(name,
-      df.withColumn("__z", zc)
-        .repartitionByRange(files, col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z"),
-      gen => writeFooterStats(name, gen,
-        if (statsCols.nonEmpty) statsCols else clusterCols))
   }
 
   /** Generation-diff CDC feed: the key-level changes that turn

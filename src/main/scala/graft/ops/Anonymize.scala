@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Privacy screens for training-data release: k-anonymity and
@@ -15,11 +14,9 @@ import org.apache.spark.sql.functions._
   * these bound what the remaining quasi-identifiers give away).
   *
   * Scale shape: [[profile]] is ONE hash aggregation over the QI key —
-  * partial aggregation applies, distinct-sensitive counting is
-  * Spark's standard two-phase expand — and [[suppress]] is one window
-  * count over the same key (one exchange, reused by both the count
-  * and the filter; no join back against the data). Nothing here is
-  * per-row state: 100 TB suppresses in one shuffle.
+  * partial aggregation applies, and distinct-sensitive counting is
+  * Spark's standard two-phase expand. Nothing here is per-row state:
+  * 100 TB profiles in one shuffle.
   */
 object Anonymize {
 
@@ -51,16 +48,4 @@ object Anonymize {
   def pseudonym(key: Column, salt: String): Column =
     graft.functions.Functions.portableHash64(
       concat_ws(":", lit(salt), key.cast("string")))
-
-  /** k-anonymity suppression: drop every record whose QI group has
-    * fewer than `k` members. One window count over the QI partition —
-    * the group size rides along each row, so no aggregate-then-join
-    * and no second scan. */
-  def suppress(df: DataFrame, qi: Seq[Column], k: Long): DataFrame = {
-    require(k >= 1, s"suppress: k must be >= 1, got $k")
-    val w = Window.partitionBy(qi: _*)
-    df.withColumn("__qi_n", count(lit(1)).over(w))
-      .filter(col("__qi_n") >= k)
-      .drop("__qi_n")
-  }
 }

@@ -54,30 +54,17 @@ object Bpe {
   /** The symbol array of a wrapped representation. */
   def symbols(rep: Column): Column = split(trim(rep, "<>"), "><")
 
-  /** Apply a trained merge table (in training order — see the
-    * rank-order equivalence note above) as a chain of `replace`
-    * EXPRESSIONS. SMALL TABLES ONLY (specs, toy vocabularies): the
-    * chain nests one expression node per rule, and at a real
-    * vocabulary (512+) that tree is codegen-hostile and its
-    * evaluation recurses once per rule per row — measured
-    * StackOverflowError on executor threads at sf10. Corpus flows
-    * use [[withMergedReps]]. */
-  def applyMerges(rep: Column, merges: Seq[(String, String)]): Column =
-    merges.foldLeft(rep) { case (r, (a, b)) =>
-      replace(r, lit(s"<$a><$b>"), lit(s"<$a$b>"))
-    }
-
-  /** The same application as the CANONICAL rank-order BPE encode
-    * over one wrapped representation: repeatedly merge the
+  /** Apply a trained merge table as the CANONICAL rank-order BPE
+    * encode over one wrapped representation: repeatedly merge the
     * lowest-rank (earliest-trained) pair present, leftmost
     * non-overlapping, until no trained pair remains. Equal to the
     * training-order replace chain by the equivalence argued in the
     * class doc (a merge only creates adjacencies involving its new
     * symbol, which only later rules reference, and fusing never
     * re-creates an earlier pair — new symbols are strictly longer),
-    * and pinned against the expression chain by BpeSpec. Cost per
-    * word is O(applied merges × symbols) hash probes — independent
-    * of the rule-table size, which is what makes a 512+-rule (and a
+    * and pinned against a training-order `replace` expression chain by
+    * BpeSpec. Cost per word is O(applied merges × symbols) hash probes
+    * — independent of the rule-table size, which is what makes a 512+-rule (and a
     * 32k-rule) vocabulary affordable per word type. */
   def applyMergesFn(merges: Seq[(String, String)]): String => String = {
     val rank = new java.util.HashMap[String, Integer](merges.size * 2)
@@ -147,9 +134,12 @@ object Bpe {
     * partition (the training rework's trade, applied to encode).
     * This is the sanctioned per-partition-imperative case: a trained
     * merge table is bounded metadata, and applying 512+ rules as an
-    * expression tree is exactly what Catalyst is bad at (see
-    * [[applyMerges]]); normalization upstream and all token
-    * arithmetic downstream stay in expression space. Row-preserving,
+    * expression tree is exactly what Catalyst is bad at (one nested
+    * `replace` node per rule is codegen-hostile, and its evaluation
+    * recursed once per rule per row into a measured
+    * StackOverflowError on executor threads at sf10); normalization
+    * upstream and all token arithmetic downstream stay in expression
+    * space. Row-preserving,
     * schema = input + `repsCol` array<string>. */
   def withMergedReps(df: DataFrame, wsCol: String,
                      merges: Seq[(String, String)],

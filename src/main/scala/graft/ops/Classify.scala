@@ -93,16 +93,6 @@ object Classify {
       when(dist(cents(1)) <= dist(cents(0)), 1).otherwise(0))
   }
 
-  /** TRUNCATED integer division (toward zero) — the one division
-    * both engines replay identically on NEGATIVE numerators: Scala
-    * `Long./` truncates, while DuckDB `//` floors, so every oracle
-    * mirror spells this as
-    * `CASE WHEN a >= 0 THEN a // b ELSE -((-a) // b) END`.
-    * (The centroid/k-means ops never needed this — their sums are
-    * non-negative; balanced accuracy over a signed projection
-    * does.) */
-  def tdiv(a: Long, b: Long): Long = a / b
-
   /** The projection of a feature row onto integer direction `w`. */
   private def proj(w: Array[Long]): Column =
     (0 until NumBuckets).map(b => col(s"f$b") * lit(w(b))).reduce(_ + _)
@@ -117,7 +107,7 @@ object Classify {
     *      one fixed-width aggregate, bounded metadata);
     *   2. project every doc (`p = Σ w_b·f_b`, a map expression);
     *   3. choose the threshold τ maximizing BALANCED accuracy
-    *      `tdiv(tp·Scale, n₊) + tdiv(tn·Scale, n₋)` over ALL
+    *      `tp·Scale / n₊ + tn·Scale / n₋` (integer division) over ALL
     *      candidate cuts (every distinct projection value) — exact,
     *      not a grid; balanced because curation labels are heavily
     *      imbalanced and raw accuracy would crown the

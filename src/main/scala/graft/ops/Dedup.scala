@@ -107,14 +107,6 @@ object Dedup {
       .otherwise(when(size(hs) > 0, array(array_min(hs)))
         .otherwise(array().cast("array<bigint>")))
 
-  /** [[winnowSelect]] fused with the hash pipeline, for SMALL inputs
-    * only (specs, oracles): the inlining hazard documented on
-    * [[winnowSelect]] makes this O(L²) in md5 evaluations per doc.
-    * Corpus-scale consumers go through [[buildWinnowIndex]]. */
-  def winnowedFingerprints(ws: Column, window: Int,
-                           shingleN: Int = 3): Column =
-    winnowSelect(positionalShingleHashes(ws, shingleN), window)
-
   /** Materialize the winnowed-fingerprint index through a
     * [[graft.io.TableStore]]: one (idCol, `__fp`) row per selected
     * print per document. TWO-PHASE by design — phase 1 lands the
@@ -168,7 +160,7 @@ object Dedup {
     * OUTPUT OF THE DOMINANT CORPUS SCAN — every near-dup family
     * (MinHash bands, SimHash votes, inverted-index Jaccard,
     * decontamination) derives from these exact arrays, which is why
-    * [[buildShingleIndex]] materializes it as a table instead of
+    * the registry persists it (`Indexes.shingles`) instead of
     * recomputing the md5 pipeline per consumer. */
   def shingleFrame(docs: DataFrame, idCol: String, textCol: String,
                    extraCols: Seq[String] = Nil, shingleN: Int = 3): DataFrame =
@@ -186,37 +178,6 @@ object Dedup {
     (0 until NumHashes).foldLeft(hs) { (df, i) =>
       df.withColumn(s"mh$i", minhashSig(col("__hs"), i))
     }
-
-  /** Materialize the corpus shingle index through a
-    * [[graft.io.TableStore]]: the production discipline every
-    * signature consumer's scaladoc points at — the md5→shingle
-    * pipeline is the dominant corpus scan, so it runs ONCE and lands
-    * as a table; candidate/verify/cluster queries READ it. Executor
-    * `cache()` only memoizes within one job and silently recomputes
-    * the scan on eviction — at 100 TB that recompute IS the job cost.
-    * Returns the persisted frame. */
-  def buildShingleIndex(store: graft.io.TableStore, docs: DataFrame,
-                        idCol: String, textCol: String,
-                        extraCols: Seq[String] = Nil,
-                        table: String = "doc_shingles",
-                        shingleN: Int = 3): DataFrame = {
-    store.overwrite(table, shingleFrame(docs, idCol, textCol, extraCols, shingleN))
-    store.read(table)
-  }
-
-  /** Materialize the MinHash signature index (id, `__hs`, mh0..mh{n-1})
-    * through a [[graft.io.TableStore]] — see [[buildShingleIndex]] for
-    * why persistence, not `cache()`, is the at-scale shape. Incremental
-    * flows ([[lshCandidatesAgainst]], streaming ingest) probe this
-    * table per batch instead of re-signing the corpus. */
-  def buildSignatureIndex(store: graft.io.TableStore, docs: DataFrame,
-                          idCol: String, textCol: String,
-                          table: String = "minhash_sigs",
-                          shingleN: Int = 3): DataFrame = {
-    store.overwrite(table,
-      signaturesFromHashes(shingleFrame(docs, idCol, textCol, Nil, shingleN)))
-    store.read(table)
-  }
 
   /** One (band_id, band_signature) row per doc per band — the shared
     * exploded shape both candidate generators join on. Field names must
@@ -292,8 +253,8 @@ object Dedup {
 
   /** LSH candidate pairs with their exact Jaccard counts: ONE banded
     * candidate self join over a signature frame (id, `__hs`,
-    * mh0..mh{n-1} — [[minhashSignatures]] output or a persisted
-    * [[buildSignatureIndex]] table), then the shingle sets joined back
+    * mh0..mh{n-1} — [[minhashSignatures]] output or the persisted
+    * registry index), then the shingle sets joined back
     * for `__inter`/`__union` alongside `d1`/`d2` (plus `hs1`/`hs2`).
     * The signature frame is referenced three times (candidates + both
     * set lookups) — hand it the PERSISTED index so those are parquet
@@ -310,8 +271,8 @@ object Dedup {
   }
 
   /** Default per-task row cap for the inverted-index pair join in
-    * [[ngramJaccardPairs]]: a shingle shared by b docs in one bucket
-    * is b·(b−1)/2 pair rows on one task uncapped; the fragment-
+    * [[ngramJaccardPairsFromHashes]]: a shingle shared by b docs in one
+    * bucket is b·(b−1)/2 pair rows on one task uncapped; the fragment-
     * replicate split bounds that at ~cap² while leaving the pair SET
     * exactly unchanged (so the cap needs no oracle mirror). 1000 is
     * far above any organic shared-shingle frequency in the harness
@@ -320,13 +281,16 @@ object Dedup {
   val DefaultHotShingleCap = 1000
 
   /** Exact n-gram Jaccard pairs WITHIN same-`bucketCol` groups via an
-    * inverted index: explode docs to (bucket, shingle-hash) rows and
-    * self-join on that key, so a pair materializes once per SHARED
-    * shingle (linear in total overlap — never the within-bucket
-    * all-pairs intersect, which is quadratic in bucket size);
-    * |intersection| is then a count per pair and |union| =
-    * n1 + n2 − |intersection|. Pairs at `threshold` Jaccard or above
-    * survive, as (d1, d2, inter_cnt, union_cnt) with d1 < d2.
+    * inverted index over a shingle frame (idCol, bucketCol, `__hs` —
+    * the persisted registry shingle index, so the index join and the
+    * size lookup are parquet reads, not corpus-wide md5 scans): explode
+    * docs to (bucket, shingle-hash) rows and self-join on that key, so
+    * a pair materializes once per SHARED shingle (linear in total
+    * overlap — never the within-bucket all-pairs intersect, which is
+    * quadratic in bucket size); |intersection| is then a count per
+    * pair and |union| = n1 + n2 − |intersection|. Pairs at `threshold`
+    * Jaccard or above survive, as (d1, d2, inter_cnt, union_cnt) with
+    * d1 < d2.
     *
     * The index join itself has a skew hazard the banded-LSH cap
     * can't see: a shingle shared by b docs within one bucket is a hot
@@ -336,22 +300,6 @@ object Dedup {
     * (fragment-replicate), which splits buckets over `hotShingleCap`
     * rows into bounded task cells while provably preserving the pair
     * set — results are bit-identical to the plain join at ANY cap. */
-  def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                        bucketCol: String, threshold: Double,
-                        shingleN: Int = 3,
-                        hotShingleCap: Int = DefaultHotShingleCap): DataFrame =
-    // Cached: the size lookup and the inverted index both read the
-    // shingle frame — uncached, the md5 pipeline runs twice over the
-    // corpus. Production hands the persisted [[buildShingleIndex]]
-    // table to [[ngramJaccardPairsFromHashes]] instead.
-    ngramJaccardPairsFromHashes(
-      shingleFrame(docs, idCol, textCol, Seq(bucketCol), shingleN).cache(),
-      idCol, bucketCol, threshold, hotShingleCap)
-
-  /** [[ngramJaccardPairs]] over an already-computed shingle frame
-    * (idCol, bucketCol, `__hs` — a persisted [[buildShingleIndex]]
-    * table): the index join and the size lookup become parquet reads
-    * instead of two corpus-wide md5 scans. */
   def ngramJaccardPairsFromHashes(hs: DataFrame, idCol: String,
                                   bucketCol: String, threshold: Double,
                                   hotShingleCap: Int = DefaultHotShingleCap): DataFrame = {
@@ -517,19 +465,6 @@ object Dedup {
     within.unionByName(cross)
   }
 
-  /** [[containmentPairsCollapsed]] building its membership and
-    * representative tables inline — the stateless spelling;
-    * production persists both and calls the two-frame form. */
-  def containmentPairsCollapsedFromHashes(hs: DataFrame, idCol: String,
-                                          thresholdPct: Int,
-                                          hotShingleCap: Int = DefaultHotShingleCap): DataFrame = {
-    val members = shingleSetMembers(hs, idCol)
-    val reps = hs.join(
-      members.filter(col("__gid") === col(idCol)).select(idCol),
-      Seq(idCol), "left_semi")
-    containmentPairsCollapsed(members, reps, idCol, thresholdPct, hotShingleCap)
-  }
-
   /** Benchmark-contamination stats: for every corpus document, how
     * many of its distinct word n-gram shingles also appear anywhere
     * in `evalDocs` (the held-out benchmark/eval suite), plus a
@@ -538,33 +473,21 @@ object Dedup {
     * overlapping an eval document n-gram-wise leaks the benchmark
     * into training.
     *
-    * Scale shape: the eval suite is tiny by construction (benchmarks
-    * are thousands of documents, the corpus is the 100 TB side), so
-    * its distinct shingle-hash set BROADCASTS and each corpus shingle
-    * row probes it map-side; the corpus shuffles once, by doc id, for
-    * the two counts (partial aggs apply). Documents shorter than
-    * `shingleN` tokens have no shingles and drop out (no signal to
-    * overlap on). */
-  def contaminationStats(corpus: DataFrame, evalDocs: DataFrame,
-                         idCol: String, textCol: String,
-                         shingleN: Int = 3, thresholdPercent: Int = 10): DataFrame =
-    contaminationStatsFromHashes(
-      corpus.select(col(idCol),
-        explode(shingleHashes(shingles(tokens(col(textCol)), shingleN))).as("__h")),
-      evalDocs, idCol, textCol, shingleN, thresholdPercent)
-
-  /** [[contaminationStats]] with the CORPUS side already shingled —
-    * one (idCol, `__h`) row per corpus shingle, e.g. the persisted
-    * [[buildShingleIndex]] table exploded — so the 100 TB side is a
-    * parquet read, not an md5 scan. The (tiny) eval side still
-    * shingles from text. */
+    * The CORPUS side arrives already shingled — one (idCol, `__h`) row
+    * per corpus shingle, e.g. the persisted registry shingle index
+    * exploded — so the 100 TB side is a parquet read, not an md5 scan.
+    * The eval suite is tiny by construction (benchmarks are thousands
+    * of documents), so it shingles from text and its distinct
+    * shingle-hash set BROADCASTS: each corpus shingle row probes it
+    * map-side, and the corpus shuffles once, by doc id, for the two
+    * counts (partial aggs apply). */
   def contaminationStatsFromHashes(corpusShingleRows: DataFrame,
                                    evalDocs: DataFrame,
                                    idCol: String, textCol: String,
                                    shingleN: Int = 3,
                                    thresholdPercent: Int = 10): DataFrame = {
     require(thresholdPercent >= 0 && thresholdPercent <= 100,
-      s"contaminationStats: thresholdPercent out of range: $thresholdPercent")
+      s"contaminationStatsFromHashes: thresholdPercent out of range: $thresholdPercent")
     val evalHashes = evalDocs
       .select(explode(shingleHashes(shingles(tokens(col(textCol)), shingleN))).as("__h"))
       .distinct()
@@ -582,49 +505,6 @@ object Dedup {
         when(col("n_shared") * 100 >= col("n_shingles") * thresholdPercent, lit(1))
           .otherwise(lit(0)))
   }
-
-  /** Stateless spelling of [[contaminationStats]] for a BOUNDED eval
-    * suite: the distinct eval shingle-hash set ships as a plan
-    * literal, and every stat is a pure per-row array expression —
-    * `n_shared = |doc_shingles ∩ eval_set|` via `array_intersect`, no
-    * explode, no join, no aggregation. This makes decontamination
-    * STREAMING-SAFE (zero state — each micro-batch row carries its
-    * own verdict) and turns the batch variant's one shuffle into
-    * none. The trade: `array_intersect` rebuilds its lookup set from
-    * the literal PER ROW (Spark does not hoist constant arguments),
-    * so per-document cost is O(|eval set|) — this spelling suits
-    * COMPACT decontamination lists (a benchmark's distinct n-grams
-    * after pruning, typically thousands; `MaxEvalHashes` enforces
-    * the regime). Larger eval sets belong in [[contaminationStats]]'s
-    * broadcast-join formulation, which builds one lookup per task
-    * instead of one per row. */
-  def contaminationFlags(docs: DataFrame, evalHashes: Array[Long],
-                         idCol: String, textCol: String,
-                         shingleN: Int = 3, thresholdPercent: Int = 10): DataFrame = {
-    // Bound what the plan actually carries: the DEDUPLICATED set.
-    val distinctHashes = evalHashes.distinct.sorted
-    require(distinctHashes.length <= MaxEvalHashes,
-      s"contaminationFlags: ${distinctHashes.length} distinct eval hashes exceed " +
-        s"$MaxEvalHashes — use contaminationStats (broadcast-join formulation) " +
-        "for large eval sets")
-    require(thresholdPercent >= 0 && thresholdPercent <= 100,
-      s"contaminationFlags: thresholdPercent out of range: $thresholdPercent")
-    val evalArr = typedlit(distinctHashes.toSeq)
-    docs
-      .withColumn("__hs", shingleHashes(shingles(tokens(col(textCol)), shingleN)))
-      .filter(size(col("__hs")) > 0)
-      .select(col(idCol),
-        size(col("__hs")).cast("bigint").as("n_shingles"),
-        size(array_intersect(col("__hs"), evalArr)).cast("bigint").as("n_shared"))
-      .withColumn("contaminated",
-        when(col("n_shared") * 100 >= col("n_shingles") * thresholdPercent, lit(1))
-          .otherwise(lit(0)))
-  }
-
-  /** Eval-set bound for the literal-array contamination path — sized
-    * to where the PER-ROW set rebuild stays cheap (O(10^4) inserts),
-    * not to what a plan literal could physically hold. */
-  val MaxEvalHashes = 10000
 
   /** Resolve near-dup PAIRS into clusters: connected components by
     * iterative min-label propagation. Input: undirected edges
@@ -851,30 +731,12 @@ object Dedup {
                            maxBandFreq: Option[Int] = DefaultMaxBandFreq): DataFrame =
     lshCandidateHits(batchSigs, corpusSigs, idCol, maxBandFreq).distinct()
 
-  /** Batch × corpus VERIFIED near-dup edges: [[lshCandidatesAgainst]]
-    * candidates passing the exact-jaccard verify at `threshold` —
-    * the incremental edge feed for [[mergeComponents]] and the
-    * streaming cluster-maintenance sink
-    * ([[graft.streaming.Streaming.maintainClusters]]). Both signature
-    * frames must carry `__hs` (a [[minhashSignatures]] /
-    * persisted-index shape). */
-  def verifiedEdgesAgainst(batchSigs: DataFrame, corpusSigs: DataFrame,
-                           idCol: String, threshold: Double,
-                           maxBandFreq: Option[Int] = DefaultMaxBandFreq): DataFrame = {
-    val withSets = lshCandidatesAgainst(batchSigs, corpusSigs, idCol, maxBandFreq)
-      .join(batchSigs.select(col(idCol).as("d1"), col("__hs").as("hs1")), "d1")
-      .join(corpusSigs.select(col(idCol).as("d2"), col("__hs").as("hs2")), "d2")
-    val (inter, uni) = jaccardParts(col("hs1"), col("hs2"))
-    withSets.filter(inter.cast("double") / uni >= threshold).select("d1", "d2")
-  }
-
   /** The raw batch × corpus band join underneath
     * [[lshCandidatesAgainst]], WITHOUT the final `distinct`: a pair
     * appears once per band it collides in. Streaming-safe — `distinct`
-    * is stateful in a stream (unbounded dedup state), so the streaming
-    * ingest path ([[graft.streaming.Streaming.neardupCandidates]])
-    * consumes these multi-hit rows and dedups per micro-batch in its
-    * sink/verify stage, where the batch is bounded. */
+    * is stateful in a stream (unbounded dedup state), so a streaming
+    * consumer takes these multi-hit rows and dedups per micro-batch in
+    * its sink/verify stage, where the batch is bounded. */
   def lshCandidateHits(batchSigs: DataFrame, corpusSigs: DataFrame,
                        idCol: String,
                        maxBandFreq: Option[Int] = DefaultMaxBandFreq): DataFrame =
@@ -1108,23 +970,11 @@ object Dedup {
     * — meet in a narrow join on doc id. Hot shingles partial-agg
     * map-side in both; nothing ever shuffles on a skewed key.
     *
-    * This convenience form computes hashes inline (once per
-    * aggregate); pipelines with a persisted shingle index use
-    * [[shingleNoveltyFromHashes]] so the tokenize+md5 pass never
-    * re-runs. */
-  def shingleNovelty(docs: DataFrame, idCol: String,
-                     textCol: String): DataFrame =
-    shingleNoveltyFromHashes(docs.select(col(idCol)),
-      docs.select(col(idCol),
-        shingleHashes(shingles(tokens(col(textCol)))).as("__hs")),
-      idCol)
-
-  /** [[shingleNovelty]] over a prepared shingle-HASH frame — the form
-    * the declared q118 runs, riding the PERSISTED shingle index
-    * ([[buildShingleIndex]]) instead of re-running the tokenize+md5
-    * pipeline per consumer (and per aggregate: the exploded stream
-    * feeds two aggregates whose exchanges differ, so an
-    * unmaterialized lineage would compute the md5 pass twice).
+    * Runs over a prepared shingle-HASH frame — the declared q118 hands
+    * it the PERSISTED registry shingle index instead of re-running the
+    * tokenize+md5 pipeline per consumer (and per aggregate: the
+    * exploded stream feeds two aggregates whose exchanges differ, so
+    * an unmaterialized lineage would compute the md5 pass twice).
     * `universe` supplies the full id set (the hash frame may drop
     * sub-shingle-length docs); they come back with zero counts. */
   def shingleNoveltyFromHashes(universe: DataFrame, hashed: DataFrame,

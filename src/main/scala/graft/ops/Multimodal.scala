@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * library exists in this environment); swap in a real binding
   * through the same interface. Everything around the
   * codec is the part that matters at 100 TB:
-  *   - [[extractFeatures]] uses `mapPartitions` so the codec is
+  *   - [[extractPooledInts]] uses `mapPartitions` so the codec is
   *     initialized ONCE per partition and amortized across its rows —
   *     the same execution shape as a Python `mapInPandas` batch UDF,
   *     and the only justified `mapPartitions` use in this engine
@@ -31,8 +31,7 @@ import org.apache.spark.sql.functions._
   *   - [[sampleFrames]] is pure Catalyst (`sequence` + `explode` +
   *     binary `substring`) — frame index generation never leaves
   *     codegen, and the exploded rows carry byte slices, not copies of
-  *     the whole blob;
-  *   - [[resizeMeta]] shows metadata-aware transforms staying columnar.
+  *     the whole blob.
   *
   * Media frame contract: `doc_id` (long), `media_type` (string),
   * `content` (binary), `duration_ms` (long).
@@ -41,15 +40,13 @@ object Multimodal {
 
   final case class MediaRow(doc_id: Long, media_type: String,
                             content: Array[Byte], duration_ms: Long)
-  final case class FeatureRow(doc_id: Long, embedding: Array[Float],
-                              n_bytes: Long, codec: String)
 
   /** The pluggable byte→signal boundary. `decode` returns the RAW
     * decoded signal — audio samples in [-1, 1], pixel intensities in
-    * [0, 1] — and the engine owns featurization ([[poolModulo]]):
+    * [0, 1] — and the engine owns featurization ([[extractPooledInts]]):
     * codecs stay format-only, features stay codec-agnostic. `init()`
     * models resource acquisition (real codecs are expensive to
-    * construct; [[extractFeatures]] calls it once per partition).
+    * construct; every decode pass calls it once per partition).
     * Malformed input fails loudly — a corrupt blob should surface,
     * not silently embed as garbage. */
   trait MediaCodec extends Serializable {
@@ -1339,7 +1336,7 @@ object Multimodal {
   }
 
   /** Per-image perceptual hash over REAL decoded pixels: the same
-    * partition-batched decode shape as [[extractFeatures]] (codec
+    * partition-batched decode shape as [[extractPooledInts]] (codec
     * constructed once per partition), emitting `(doc_id, phash)` for
     * [[graft.ops.Dedup.simhashPairs]]'s banded Hamming join. At
     * 100 TB this is the map pass of the media-dedup job: decode cost
@@ -1421,44 +1418,18 @@ object Multimodal {
       .toDF("doc_id", "afp")
   }
 
-  /** Modulo-bucket mean pooling: raw signal of ANY length → a fixed
-    * `dim`-sized feature vector (bucket j = mean of samples at
-    * positions ≡ j mod dim). The engine's codec-agnostic featurizer —
-    * deterministic, length-independent, empty input → zeros. */
-  def poolModulo(raw: Array[Float], dim: Int): Array[Float] = {
-    val acc = new Array[Float](dim)
-    val cnt = new Array[Int](dim)
-    var i = 0
-    while (i < raw.length) { acc(i % dim) += raw(i); cnt(i % dim) += 1; i += 1 }
-    var j = 0
-    while (j < dim) { if (cnt(j) > 0) acc(j) /= cnt(j); j += 1 }
-    acc
-  }
-
-  /** Partition-batched feature extraction: one codec instance per
-    * partition, reused across all of its rows (real codecs are
-    * expensive to construct — per-row init is the anti-pattern this
-    * shape exists to avoid). The codec ships as a FACTORY so each
-    * partition builds its own instance executor-side; decode output is
-    * pooled to `dim` with [[poolModulo]]. */
-  def extractFeatures(media: Dataset[MediaRow], dim: Int,
-                      mkCodec: () => MediaCodec = () => new FakeCodec): Dataset[FeatureRow] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      val codec = mkCodec().init()
-      rows.map(m => FeatureRow(m.doc_id, poolModulo(codec.decode(m.content), dim),
-        m.content.length.toLong, codec.name))
-    }
-  }
-
   final case class PooledIntRow(doc_id: Long, bucket: Int, psum: Long,
                                 pcnt: Long, n_bytes: Long, codec: String)
 
-  /** Integer-space modulo pooling: the same partition-batched decode
-    * as [[extractFeatures]], but the [0, 1] signal is re-quantized to
-    * exact 8-bit ints (`round(f·255)` — lossless for codecs whose
-    * source was 8-bit) and each modulo bucket emits its SUM and COUNT
-    * instead of a float mean. Sums and counts are exact integers in
+  /** Partition-batched integer-space modulo pooling: one codec
+    * instance per partition, reused across all of its rows (real codecs
+    * are expensive to construct — per-row init is the anti-pattern this
+    * shape exists to avoid; the codec ships as a FACTORY so each
+    * partition builds its own instance executor-side). The [0, 1]
+    * signal of ANY length is re-quantized to exact 8-bit ints
+    * (`round(f·255)` — lossless for codecs whose source was 8-bit) and
+    * each modulo bucket (bucket j = samples at positions ≡ j mod `dim`)
+    * emits its SUM and COUNT instead of a float mean. Sums and counts are exact integers in
     * ANY engine, so the whole decode→pool chain carries a bit-exact
     * ANSI-SQL oracle (q51) — the float mean is a trailing division the
     * consumer applies when it actually wants one. Buckets with no
@@ -1502,18 +1473,4 @@ object Multimodal {
       .withColumn("frame",
         expr(s"substring(content, CAST(frame_ms % greatest(octet_length(content), 1) AS INT) + 1, $frameBytes)"))
       .select(col("doc_id"), col("media_type"), col("frame_ms"), col("frame"))
-
-  /** Metadata-aware "resize": scales the declared dimensions and stamps
-    * the transform; the pixel work is the codec's job (stubbed), the
-    * metadata contract is the engine's. */
-  def resizeMeta(media: DataFrame, maxW: Int, maxH: Int): DataFrame = {
-    val scale = least(
-      lit(1.0),
-      lit(maxW.toDouble) / col("width"),
-      lit(maxH.toDouble) / col("height"))
-    media
-      .withColumn("out_width", floor(col("width") * scale).cast("int"))
-      .withColumn("out_height", floor(col("height") * scale).cast("int"))
-      .withColumn("resize_applied", (scale < 1.0).cast("boolean"))
-  }
 }

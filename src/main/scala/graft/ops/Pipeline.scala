@@ -1,6 +1,7 @@
 package graft.ops
 
 import java.sql.Timestamp
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -79,7 +80,10 @@ object Pipeline {
     * to that max, or to the file date when `maxDate` is not given or
     * is null on every row. Every listed file's name date is parsed
     * before the first file is staged, so a file with an impossible
-    * date fails the stage with nothing staged. */
+    * date fails the stage with nothing staged. A file that fails to
+    * load is rethrown naming the stage (`wmKey`) and the file, with the
+    * failure as its cause; the watermark stays at the last loaded
+    * file, so a rerun after the file is fixed loads it. */
   private def processFiles(spark: SparkSession, store: TableStore,
                            srcDir: String, mask: String, wmKey: String,
                            stgTable: String, archive: Boolean,
@@ -91,11 +95,16 @@ object Pipeline {
       .map(f => f -> Sources.fileNameDateIso(f.getFileName.toString).get)
     files.foreach { case (f, fileDate) =>
       if (fileDate > wmIso) { // F12: ISO strings compare chronologically
-        val (rows, fileMax) = stageObserved(store, stgTable, stage(f.toString, spark), maxDate)
-        if (rows > 0) { // A3 guard (cards.py:71)
-          body(store.read(stgTable), fileDate)
-          Incremental.advance(store, "stg", wmKey,
-            isoToTs(fileMax.fold(fileDate)(_.toString)))
+        try {
+          val (rows, fileMax) = stageObserved(store, stgTable, stage(f.toString, spark), maxDate)
+          if (rows > 0) { // A3 guard (cards.py:71)
+            body(store.read(stgTable), fileDate)
+            Incremental.advance(store, "stg", wmKey,
+              isoToTs(fileMax.fold(fileDate)(_.toString)))
+          }
+        } catch { case NonFatal(e) =>
+          throw new IllegalStateException(
+            s"$wmKey stage: file ${f.getFileName} failed to load: ${e.getMessage}", e)
         }
         if (archive) Sources.archive(f): Unit
       }
@@ -119,7 +128,13 @@ object Pipeline {
     * rows via anti-join append; watermark = max(transaction_date) over
     * THIS file's staging (the reference's truncate-per-file loop makes
     * it the last file's max), observed on the staging write, falling
-    * back to the file date when every row's date is null. */
+    * back to the file date when every row's date is blank (read as
+    * null). A non-blank `transaction_date` that is not a timestamp
+    * (e.g. `garbage`) fails the file under Spark's ANSI cast, as an
+    * insert into the reference's Postgres timestamp column aborts: a
+    * guessed date would feed the fraud rules a wrong time. The stage
+    * then stops naming the file, with the fact table and watermark as
+    * the previous file left them (see [[processFiles]]). */
   def runTransactions(spark: SparkSession, store: TableStore, srcDir: String,
                       archive: Boolean = false): Unit =
     processFiles(spark, store, srcDir, "transactions_\\d{8}\\.txt",

@@ -292,8 +292,7 @@ object Scd2 {
   }
 
   /** Build a full SCD2 history from a change log (CDC ingestion — the
-    * inverse of [[merge]], and the batch consumer of
-    * [[graft.streaming.Streaming.changeEvents]]): per key, consecutive
+    * inverse of [[merge]]): per key, consecutive
     * rows with identical tracked values collapse into one version;
     * each version runs from its first observation to one second before
     * the next change (open = 9999-12-31). Two stacked windows over ONE

@@ -294,9 +294,8 @@ object Similarity {
     (1 to dim).map(j =>
       (((1103515245L * (plane.toLong * dim + j) + 12345L) % 1000003L) - 501001L).toFloat)
 
-  /** Hyperplanes per band auto-sized from corpus cardinality — the
-    * RP-LSH analogue of [[graft.ops.Temporal.autoBucketWidth]]'s
-    * stats-derived sizing. A FIXED plane count is a fixed 2^np bucket
+  /** Hyperplanes per band auto-sized from corpus cardinality instead
+    * of a hand-tuned knob. A FIXED plane count is a fixed 2^np bucket
     * space, so candidate pairs grow ∝ n²/2^np — the r9 sf10 probe
     * measured the 8-plane default at 137× for 100× data. Sizing
     * np = ceil(log2(n/2)) pins expected band-bucket occupancy at ~2
@@ -360,13 +359,6 @@ object Similarity {
         col("__bsig_a") === col("__bsig_b") && col("v1") < col("v2"))
       .select("v1", "v2").distinct()
   }
-
-  /** [[rpSignatures]] + [[rpCandidatesFromSigs]] in one call, for
-    * callers that don't reuse the signatures. */
-  def rpCandidates(vectors: DataFrame, idCol: String, vecCol: String,
-                   dim: Int, nPlanes: Int = 8, nBands: Int = 2): DataFrame =
-    rpCandidatesFromSigs(
-      rpSignatures(vectors, idCol, vecCol, dim, nPlanes, nBands), idCol, nBands)
 
   // ── K-means codebook training ─────────────────────────────────────
 

@@ -19,52 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Temporal {
 
-  /** Derive the bucket width for [[rangeJoin]]/[[intervalOverlapJoin]]
-    * from a VERSIONED interval table's footer statistics instead of a
-    * hand-tuned knob: `width = extent / rowCount` (at least 1), where
-    * the extent spans [min(startCol), max(endCol)] over the recorded
-    * per-file bounds and rowCount comes from the recorded file row
-    * counts — a few-KB stats read
-    * ([[graft.io.TableStore.columnStats]]), never a data scan.
-    *
-    * Why this width bounds replication: an interval of span `s`
-    * explodes into at most `s/width + 2` bucket rows, so the AVERAGE
-    * replication over the n_v VALID (non-inverted) intervals is
-    * ≤ Σspan/(width·n_v) + 2 ≤ (Σspan/extent)·(n/n_v) + 2 — the
-    * interval set's OVERLAP FACTOR (how many times it covers its own
-    * domain) scaled by the invalid-row dilution (footer stats count
-    * every row, so inverted/empty intervals enlarge the width but
-    * never explode; n = n_v in any sane table) plus a constant. The
-    * width uses CEILING division — a floored width < extent/n would
-    * leak past the bound (found by RangeJoinPropertySpec's shrinker:
-    * a 12-row set with 5 inverted intervals and extent 80 floored to
-    * width 6 and averaged 3.29 > the documented 3.11). For validity
-    * windows / sessions / campaign schedules the overlap factor is a
-    * small constant, so replication is too, at any scale
-    * (RangeJoinPropertySpec pins the bound; correctness needs no
-    * tuning at all — ANY width produces the identical pair set, also
-    * property-pinned). A width far above a typical span costs
-    * residual comparisons instead of replication; the stats-derived
-    * choice keeps expected buckets ≈ rows, the balanced middle. */
-  def autoBucketWidth(store: graft.io.TableStore, name: String,
-                      startCol: String, endCol: String): Long = {
-    import org.apache.spark.sql.functions.{max => fmax, min => fmin, sum => fsum}
-    def stats(c: String) = store.columnStats(name, c).getOrElse(
-      throw new IllegalArgumentException(
-        s"autoBucketWidth: no recorded stats for '$c' of '$name' — " +
-          "commit the interval table with commitVersionedWithStats"))
-    val s = stats(startCol).agg(
-      fmin(col("min_long")), fsum(col("rows"))).head()
-    val e = stats(endCol).agg(fmax(col("max_long"))).head()
-    require(!s.isNullAt(0) && !e.isNullAt(0),
-      s"autoBucketWidth: '$startCol'/'$endCol' of '$name' are all-null")
-    val extent = e.getLong(0) - s.getLong(0)
-    val n = math.max(s.getLong(1), 1L)
-    // Ceiling division: width ≥ extent/n is what the replication
-    // bound's algebra needs (see above); flooring undercuts it.
-    math.max(1L, (extent + n - 1) / n)
-  }
-
   /** Pure range (point-in-interval) join with NO equi key — the shape
     * Spark's planner can only execute as a broadcast-nested-loop or
     * cartesian product, both of which are O(points × intervals) and

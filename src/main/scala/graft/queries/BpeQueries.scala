@@ -352,7 +352,7 @@ object BpeQueries {
     // fertility floors at 1000 for every cohort — measured, useless
     // as a monitor). Integer throughout: drift is a scaled ratio
     // minus 10⁶, so no signed division (DuckDB floors, Spark
-    // truncates — the Classify.tdiv hazard, avoided instead of
+    // truncates negative numerators — a hazard avoided instead of
     // mirrored). Scale bill: one tokenize map pass + a 2-row
     // aggregate.
     Q("q155_tokenizer_drift", {

@@ -13,10 +13,9 @@ object ExtensionQueries {
   val all: Seq[Q] = Seq(
 
     // Z-order (Morton) clustering key: the multi-dimensional sort key
-    // behind clustered table layout (TableStore.commitVersionedClustered
-    // — files sorted by z cluster on EVERY listed column, so min/max
-    // file skipping prunes on any of them, not just a leading sort
-    // column). Here the key itself is the query: 8 bits of part key ×
+    // behind clustered table layout (files sorted by z cluster on EVERY
+    // listed column, so min/max file skipping prunes on any of them, not
+    // just a leading sort column). Here the key itself is the query: 8 bits of part key ×
     // 8 bits of supplier key interleaved MSB-first. The oracle SQL is
     // GENERATED from the same bit enumeration as the Spark expression
     // (Functions.zorderKeySql), so the two engines compute identical
@@ -267,7 +266,7 @@ object ExtensionQueries {
     // so the windowed sum is order-insensitive; both engines bucket
     // from the same 1970-01-01 origin. NOTE: memory+complete is the
     // ORACLE-REPLAY harness shape, not the production sink — jobs use
-    // foreachBatch (Streaming.ingest/reportSink) in update mode,
+    // foreachBatch (Streaming.writeBatchIdempotent) in update mode,
     // where each trigger carries only changed windows (StreamingSpec
     // pins the delta-fold equivalence).
     Q("q95_stream_windows",

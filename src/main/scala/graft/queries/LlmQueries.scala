@@ -792,7 +792,7 @@ object LlmQueries {
     // n-gram Jaccard with bucket pruning: exact shingle Jaccard, but
     // only within same-`source` buckets (a bounded candidate space —
     // the exact-verify complement to q31's probabilistic candidates).
-    // Spark plan: Dedup.ngramJaccardPairs — an inverted index (a pair
+    // Spark plan: Dedup.ngramJaccardPairsFromHashes — an inverted index (a pair
     // materializes once per SHARED shingle; linear in total overlap,
     // never the quadratic within-bucket all-pairs intersect) whose
     // (source, shingle) self join runs fragment-replicate so a
@@ -2073,7 +2073,7 @@ object LlmQueries {
 
     // The materialized signature index itself, oracle-verified: the
     // PERSISTED MinHash table every pair/cluster/incremental query
-    // reads (Dedup.buildSignatureIndex through the TableStore sink)
+    // reads (Indexes.signatures through the TableStore sink)
     // hash-matches the inline md5→shingle→minhash pipeline computed
     // from scratch by DuckDB — pinning that persistence is
     // value-identity (bigint signatures round-trip parquet exactly),

@@ -440,8 +440,8 @@ object ParityQueries {
 
     // K6 corrected — the EXACTLY-ONCE report sink, oracle-green: the
     // same flagship report written through the batch-id-keyed
-    // idempotent sink (Streaming.writeBatchIdempotent — the
-    // foreachBatch body of Streaming.reportSink) in two batches, with
+    // idempotent sink (Streaming.writeBatchIdempotent, a streaming
+    // foreachBatch body) in two batches, with
     // batch 0 WRITTEN TWICE to simulate the sink-succeeded /
     // checkpoint-commit-lost crash replay. The folded read (drop
     // `__batch_id`) must still hash-match q12's oracle exactly — the

@@ -1,84 +1,35 @@
 package graft.streaming
 
-import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured Streaming counterparts of the reference's hand-rolled
   * incremental machinery (SURVEY.md §2.10): what `main.cron` + the
-  * watermark table + chronological file processing do by hand, the
-  * file-source stream does with checkpointed offsets.
+  * watermark table + chronological file processing do by hand, a
+  * checkpointed stream does with committed offsets.
   *
-  *   - [[fileSource]] + [[ingest]]: `readStream` over the landing
-  *     directory with `Trigger.AvailableNow` — each invocation drains
-  *     exactly the files not yet committed to the checkpoint (the
-  *     `vean_meta_date` watermark + `file_date > meta` gate,
-  *     `transaction.py:31-51`, for free), then stops: cron-compatible,
-  *     restart-safe, exactly-once into the parquet sink.
-  *     `cleanSource=archive` replaces `os.rename` archiving
-  *     (`transaction.py:88`).
-  *   - [[dedupStream]]: the J1 anti-join's streaming analog — keyed
-  *     duplicate suppression with watermark-bounded state (without the
-  *     watermark, dedup state grows forever; the event-time bound is
-  *     what makes it run at 100 TB/day).
-  *   - [[windowedCounts]]: event-time tumbling/sliding aggregation with
-  *     late-data eviction — the capability the reference's daily-batch
-  *     design approximates with cron.
-  *   - [[changeEvents]]: `flatMapGroupsWithState` per-key
-  *     current-version tracking — the streaming face of the SCD2 merge:
-  *     each state transition emits a change event (old → new at ts),
-  *     which is exactly the row the batch merge would close/open.
+  *   - [[windowedCounts]] / [[sessionCounts]]: event-time tumbling,
+  *     sliding and session aggregation with late-data eviction — the
+  *     capability the reference's daily-batch design approximates with
+  *     cron.
+  *   - [[enrich]]: stream-static dimension enrichment.
+  *   - [[writeBatchIdempotent]]: the exactly-once `foreachBatch` sink
+  *     write (a retried batch id overwrites its own partition).
+  *   - [[maintainClusters]]: per-trigger near-dup cluster maintenance
+  *     against a static corpus signature index, committed through the
+  *     versioned table protocol.
   *
   * Scale notes: state stores shard by key across executors; every
-  * stateful op here bounds its state (watermark eviction, or one small
-  * record per live key for the version tracker). The file source lists
-  * incrementally (`maxFilesPerTrigger`) rather than globbing the world.
+  * stateful op here bounds its state with watermark eviction.
   */
 object Streaming {
 
-  /** Streaming CSV file source over a landing directory (the
-    * `transactions_*.txt` drop box). */
-  def fileSource(spark: SparkSession, dir: String, schema: StructType,
-                 sep: String = ";", maxFilesPerTrigger: Int = 100,
-                 archiveDir: Option[String] = None): DataFrame = {
-    val base = spark.readStream
-      .option("sep", sep)
-      .option("header", "true")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .schema(schema)
-    val withArchive = archiveDir.fold(base) { ad =>
-      base.option("cleanSource", "archive").option("sourceArchiveDir", ad)
-    }
-    withArchive.csv(dir)
-  }
-
-  /** Drain all currently-available input into a parquet sink and stop
-    * (`Trigger.AvailableNow`): the cron-batch execution model with
-    * checkpointed exactly-once instead of a hand-kept watermark. */
-  def ingest(df: DataFrame, path: String, checkpoint: String): StreamingQuery =
-    df.writeStream
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Keyed streaming dedup with watermark-bounded state (T3: late and
-    * duplicate handling). Duplicates of a key arriving within
-    * `delay` of the watermark are dropped; state for older keys is
-    * evicted. */
-  def dedupStream(df: DataFrame, tsCol: String, keys: Seq[String],
-                  delay: String): DataFrame =
-    df.withWatermark(tsCol, delay).dropDuplicatesWithinWatermark(keys)
-
-  /** Event-time windowed counts/sums with late-data eviction. */
   /** Watermarked tumbling/sliding window aggregate. Sink guidance:
-    * production jobs pair this with `foreachBatch` sinks ([[ingest]] /
-    * [[reportSink]]) in `update` mode — each trigger then carries only
-    * the CHANGED windows and the watermark bounds both state and
-    * output (StreamingSpec pins the delta-fold equivalence). The
+    * production jobs pair this with a `foreachBatch` sink
+    * ([[writeBatchIdempotent]]) in `update` mode — each trigger then
+    * carries only the CHANGED windows and the watermark bounds both
+    * state and output (StreamingSpec pins the delta-fold equivalence). The
     * `memory` + `complete` combination in the declared oracle replays
     * (q95/q96) is the REPLAY HARNESS only: driver-collected, emitting
     * every window each trigger — bounded there by the replay's window
@@ -118,52 +69,6 @@ object Streaming {
         col("session_window.end").as("sess_end"),
         col(keyCol), col("n"), col("sum_value"))
 
-  /** STREAM-STREAM interval join: correlate two live event streams on
-    * a key where the right event lands within `[0, maxDelaySec]` AFTER
-    * the left (click → purchase attribution, request → response
-    * pairing). Both sides carry watermarks and the join condition
-    * carries explicit event-time bounds — that pair is what lets Spark
-    * BOUND the join state: each side buffers only rows younger than
-    * watermark + the interval, and evicts the rest. An unbounded
-    * stream-stream join (no time bound) buffers both streams forever —
-    * the OOM-by-design anti-pattern this operator exists to replace.
-    *
-    * Column names must be disjoint across the two sides apart from
-    * nothing at all (the key columns are named per side) — the caller
-    * renames; this keeps the time-bound expression unambiguous. */
-  def intervalJoin(left: DataFrame, leftKey: String, leftTs: String,
-                   right: DataFrame, rightKey: String, rightTs: String,
-                   maxDelaySec: Long, delay: String): DataFrame =
-    left.withWatermark(leftTs, delay)
-      .join(right.withWatermark(rightTs, delay),
-        expr(s"""$leftKey = $rightKey
-                 AND $rightTs >= $leftTs
-                 AND $rightTs <= $leftTs + interval $maxDelaySec seconds"""))
-
-  /** Streaming near-dup ingest: documents arriving as a STREAM are
-    * signature-computed (pure array expressions — fully streaming-
-    * compatible, no state) and probed against the STATIC materialized
-    * corpus signature index via the banded equi join — the
-    * stream-static join Spark executes by re-broadcasting/joining the
-    * static side per micro-batch. This is q43's incremental
-    * batch-vs-corpus flow running continuously: per-trigger cost
-    * scales with the trigger's documents, never the corpus.
-    *
-    * Emits one (d1 = stream doc, d2 = corpus doc) row PER COLLIDING
-    * BAND — a cross-batch `distinct` would be unbounded streaming
-    * state ([[graft.ops.Dedup.lshCandidateHits]]); dedup the bounded
-    * per-batch output in the sink (`foreachBatch` + `dropDuplicates`)
-    * where exact-Jaccard verification joins the texts anyway.
-    * `maxBandFreq` prunes degenerate corpus buckets exactly as in the
-    * batch path. */
-  def neardupCandidates(docs: DataFrame, corpusSigs: DataFrame,
-                        idCol: String, textCol: String,
-                        maxBandFreq: Option[Int] =
-                          graft.ops.Dedup.DefaultMaxBandFreq): DataFrame =
-    graft.ops.Dedup.lshCandidateHits(
-      graft.ops.Dedup.minhashSignatures(docs, idCol, textCol),
-      corpusSigs, idCol, maxBandFreq)
-
   /** Idempotent micro-batch write: the batch lands in a Hive partition
     * keyed by its batch id, written with DYNAMIC partition overwrite —
     * so a RETRIED batch id (sink succeeded, checkpoint commit lost to
@@ -183,19 +88,6 @@ object Streaming {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("__batch_id")
       .parquet(path)
-
-  /** Streaming report stage with the exactly-once sink: `foreachBatch`
-    * + [[writeBatchIdempotent]] under `Trigger.AvailableNow` — the
-    * same cron-compatible drain-and-stop execution as [[ingest]], but
-    * safe to retry (StreamingSpec kills the commit marker and replays
-    * the batch to prove it). */
-  def reportSink(df: DataFrame, path: String, checkpoint: String): StreamingQuery =
-    df.writeStream
-      .foreachBatch((batch: DataFrame, batchId: Long) =>
-        writeBatchIdempotent(batch, batchId, path))
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
 
   /** STREAMING CLUSTER MAINTENANCE: each micro-batch of documents is
     * signed, near-dup edges are found against the static corpus index
@@ -316,41 +208,5 @@ object Streaming {
         }
     })
     query
-  }
-
-  final case class KeyUpdate(k: String, v: String, ts: Timestamp)
-  final case class VersionState(v: String, since: Timestamp)
-  final case class ChangeEvent(k: String, prev_v: String, curr_v: String, ts: Timestamp)
-
-  /** Per-key current-version tracker: emits one [[ChangeEvent]] per
-    * observed value transition, holding one [[VersionState]] per live
-    * key. The streaming analog of the SCD2 close/open pair — a
-    * downstream batch job can fold the change stream into `*_hist`.
-    *
-    * Memory bound: the `batch.toSeq.sortBy` materializes ONE KEY's
-    * updates from ONE micro-batch (needed for in-event-time emission
-    * order); the durable state is a single [[VersionState]] per key.
-    * A dimension key updates a handful of times per batch, so the
-    * transient buffer is a few rows — if a source could deliver
-    * millions of same-key updates per batch, pre-aggregate to
-    * last-per-(key, ts) upstream before this operator. */
-  def changeEvents(updates: Dataset[KeyUpdate]): Dataset[ChangeEvent] = {
-    import updates.sparkSession.implicits._
-    updates
-      .groupByKey(_.k)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[KeyUpdate], state: GroupState[VersionState]) =>
-          val ordered = batch.toSeq.sortBy(_.ts.getTime)
-          var cur = state.getOption
-          val out = Seq.newBuilder[ChangeEvent]
-          ordered.foreach { u =>
-            if (!cur.exists(_.v == u.v)) {
-              out += ChangeEvent(key, cur.map(_.v).orNull, u.v, u.ts)
-              cur = Some(VersionState(u.v, u.ts))
-            }
-          }
-          cur.foreach(state.update)
-          out.result().iterator
-      }
   }
 }

@@ -69,45 +69,6 @@ class SourcesSpec extends AnyFunSuite {
     assert(row.getString(0) === "1" && row.getString(2) === "1.234,56")
   }
 
-  test("jsonl reads newline-delimited JSON with explicit schema; FAILFAST on corrupt lines") {
-    import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_jsonl")
-    val f = dir.resolve("docs.jsonl")
-    Files.write(f,
-      ("""{"doc_id": 1, "text": "hello world", "lang": "en"}""" + "\n" +
-       """{"doc_id": 2, "text": "käse", "lang": "de"}""" + "\n" +
-       """{"doc_id": 3, "text": "no lang field"}""" + "\n").getBytes("UTF-8"))
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType)))
-    val got = Sources.jsonl(spark, f.toString, schema)
-      .orderBy("doc_id").collect()
-    assert(got.length === 3)
-    assert(got(0).getLong(0) === 1L && got(0).getString(1) === "hello world")
-    assert(got(1).getString(1) === "käse") // UTF-8 round-trips
-    assert(got(2).isNullAt(2)) // missing field -> null, NOT a corrupt row
-    // A genuinely corrupt line fails the read loudly under FAILFAST...
-    Files.write(dir.resolve("bad.jsonl"),
-      """{"doc_id": broken""".getBytes("UTF-8"))
-    intercept[org.apache.spark.SparkException] {
-      Sources.jsonl(spark, dir.resolve("bad.jsonl").toString, schema).collect()
-    }
-    // ...and surfaces as a quarantine column under PERMISSIVE.
-    val qSchema = schema.add("_corrupt_record", StringType)
-    val quarantined = Sources.jsonl(spark, dir.resolve("bad.jsonl").toString,
-      qSchema, mode = "PERMISSIVE").collect()
-    assert(quarantined.length === 1 && !quarantined(0).isNullAt(3))
-  }
-
-  test("withFileDate stamps the filename-embedded date distributed (terminals.py:55)") {
-    val dir = Files.createTempDirectory("graft_fd")
-    val f = dir.resolve("transactions_03032021.txt")
-    Files.writeString(f, "id\n1\n")
-    val df = Sources.withFileDate(
-      Sources.csv(spark, f.toString, Sources.stringSchema("id")))
-    assert(df.collect().head.getDate(1).toString === "2021-03-03")
-  }
-
   test("archive moves a processed file to archive/<name>.backup (transaction.py:88)") {
     val dir = Files.createTempDirectory("graft_arch")
     val f = Files.createFile(dir.resolve("tx_01012021.txt"))

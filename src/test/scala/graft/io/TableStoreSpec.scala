@@ -117,71 +117,6 @@ class TableStoreSpec extends AnyFunSuite {
     Seq("dim.__old", "dim.__tmp").foreach(d => assert(!Files.exists(Paths.get(store.path(d)))))
   }
 
-  test("compact rewrites accumulated append files without changing contents") {
-    val store = newStore()
-    (1 to 6).foreach { i =>
-      store.append("facts", Seq((i, s"v$i")).toDF("id", "v").repartition(2))
-    }
-    assert(store.fileCount("facts") >= 6)
-    val before = store.read("facts").collect().toSet
-    store.compact("facts", targetFiles = 1)
-    assert(store.fileCount("facts") === 1)
-    assert(store.read("facts").collect().toSet === before)
-  }
-
-  test("co-bucketed tables join without a shuffle exchange") {
-    val store = newStore()
-    val facts = (1 to 1000).map(i => (i.toLong % 50, s"f$i")).toDF("k", "fv")
-    val dim = (0L until 50L).map(k => (k, s"d$k")).toDF("k", "dv")
-    store.saveBucketed("b_facts", facts, Seq("k"), buckets = 4)
-    store.saveBucketed("b_dim", dim, Seq("k"), buckets = 4)
-    // Disable broadcast so the join must pick a shuffle-or-bucket plan.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("b_facts").join(spark.table("b_dim"), "k")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed join still shuffles:\n${plan.take(1500)}")
-      assert(joined.count() === 1000)
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
-
-  test("compact rewrites a Hive-partitioned table per leaf, preserving pruning") {
-    val store = newStore()
-    // 5 appends × 2 files × 2 partitions → many small files per leaf.
-    (1 to 5).foreach { i =>
-      store.appendPartitioned("facts",
-        Seq(("2024-01-01", i, "a"), ("2024-01-02", i, "b"))
-          .toDF("load_date", "n", "v").repartition(2),
-        Seq("load_date"))
-    }
-    assert(store.fileCount("facts") >= 10)
-    val before = store.read("facts").collect().toSet
-    store.compact("facts", targetFiles = 1)
-    // One file per leaf partition, identical contents, no scratch dirs.
-    assert(store.fileCount("facts") === 2, s"got ${store.fileCount("facts")} files")
-    assert(store.read("facts").collect().toSet === before)
-    val q = store.read("facts").filter(col("load_date") === "2024-01-01")
-    assert(q.count() === 5)
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(load_date"),
-      s"pruning lost after compact:\n${plan.take(1200)}")
-  }
-
-  test("compact handles multi-level partition layouts at the deepest leaf") {
-    val store = newStore()
-    (1 to 3).foreach { i =>
-      store.appendPartitioned("facts",
-        Seq(("src1", "2024-01-01", i), ("src1", "2024-01-02", i))
-          .toDF("source", "load_date", "n").repartition(2),
-        Seq("source", "load_date"))
-    }
-    val before = store.read("facts").collect().toSet
-    store.compact("facts", targetFiles = 1)
-    assert(store.fileCount("facts") === 2) // one per (source, load_date) leaf
-    assert(store.read("facts").collect().toSet === before)
-  }
-
   test("swapPartitions replaces only the leaves present in the new frame") {
     val store = newStore()
     store.overwritePartitioned("dim",
@@ -220,9 +155,6 @@ class TableStoreSpec extends AnyFunSuite {
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(load_date"),
       s"no partition pruning in:\n${plan.take(1200)}")
-    store.appendPartitioned("facts",
-      Seq(("2024-01-03", 4)).toDF("load_date", "n"), Seq("load_date"))
-    assert(store.read("facts").count() === 4)
   }
 
   test("commitVersioned / readVersioned: manifest-committed generations") {
@@ -258,7 +190,7 @@ class TableStoreSpec extends AnyFunSuite {
       store.readVersioned("dim").drop("v"))
     assert(store.readVersioned("dim").columns.toSeq === Seq("id", "score"))
     assert(store.readVersionedAt("dim", g2).columns.toSeq === Seq("id", "v", "score"))
-    assert(store.generations("dim") === Seq(g1, g2, g3))
+    assert(Seq(g1, g2, g3) === Seq(1L, 2L, 3L) && store.liveGeneration("dim") === Some(g3))
   }
 
   test("a writer killed mid-swap leaves readers on the old committed generation") {
@@ -280,11 +212,11 @@ class TableStoreSpec extends AnyFunSuite {
     assert(store.readVersioned("dim").collect().map(_.getString(1)).toSeq === Seq("next"))
   }
 
-  test("readVersionedAt time-travels committed generations only; compactVersioned commits") {
+  test("readVersionedAt time-travels committed generations only; a rewrite commits") {
     val store = newStore()
     store.commitVersioned("dim", Seq((1, "day1")).toDF("id", "v"))
     store.commitVersioned("dim", Seq((1, "day2"), (2, "day2")).toDF("id", "v"))
-    assert(store.generations("dim") === Seq(1L, 2L))
+    assert(store.liveGeneration("dim") === Some(2L))
     // Reproduce yesterday's read while the live pointer is on day 2.
     assert(store.readVersionedAt("dim", 1L).collect().map(_.getString(1)).toSeq
       === Seq("day1"))
@@ -292,116 +224,13 @@ class TableStoreSpec extends AnyFunSuite {
     // An orphaned directory is NOT a time-travel target.
     Seq((9, "orphan")).toDF("id", "v").write.parquet(store.path("dim") + "/g3")
     intercept[IllegalArgumentException] { store.readVersionedAt("dim", 3L) }
-    // Compaction is itself a commit: contents unchanged, file count
-    // bounded, and the pre-compaction generation still readable.
-    val g = store.compactVersioned("dim", targetFiles = 1)
+    // A rewrite of the live generation is itself a commit: contents
+    // unchanged, the orphan skipped, the previous generation readable.
+    val g = store.commitVersioned("dim", store.readVersioned("dim").repartition(1))
     assert(g === 4L)
     assert(store.readVersioned("dim").collect().map(r => (r.getInt(0), r.getString(1)))
       .sortBy(_._1).toSeq === Seq((1, "day2"), (2, "day2")))
     assert(store.readVersionedAt("dim", 2L).count() === 2)
-  }
-
-  test("commitVersionedWithStats: footer stats prune files on long/double/string ranges") {
-    val store = newStore()
-    // 4 contiguous files on k (range partitioning), with a parallel
-    // string spelling, a double, and an always-null column.
-    val df = (0 until 1000).map(i => (i.toLong, f"s$i%04d", i / 4.0))
-      .toDF("k", "s", "x")
-      .withColumn("n", lit(null).cast("string"))
-      .repartitionByRange(4, col("k")).sortWithinPartitions("k")
-    store.commitVersionedWithStats("t", df, Seq("k", "s", "x", "n"))
-    val full = store.readVersioned("t")
-    assert(full.inputFiles.length === 4)
-    // A narrow k range touches 1 contiguous file (2 if a sampled range
-    // boundary lands inside it) — never all 4.
-    val pk = store.readVersionedPruned("t", "k", 100L, 150L)
-    assert(pk.inputFiles.length <= 2, s"kept ${pk.inputFiles.length} of 4")
-    assert(pk.collect().map(_.getLong(0)).sorted.toSeq === (100L to 150L))
-    // Same skipping through the string and double stats.
-    val ps = store.readVersionedPruned("t", "s", "s0100", "s0150")
-    assert(ps.inputFiles.length <= 2 && ps.count() === 51)
-    val px = store.readVersionedPruned("t", "x", 0.0, 10.0)
-    assert(px.inputFiles.length <= 2 && px.count() === 41)
-    // Out-of-range predicate: zero files listed, schema preserved.
-    val none = store.readVersionedPruned("t", "k", 5000L, 6000L)
-    assert(none.inputFiles.isEmpty && none.count() === 0)
-    assert(none.columns.toSeq === full.columns.toSeq)
-    // An all-null column can never satisfy BETWEEN: everything skips.
-    assert(store.readVersionedPruned("t", "n", "a", "z").inputFiles.isEmpty)
-    // A generation committed WITHOUT stats falls back to the unpruned
-    // (still correct) scan.
-    store.commitVersioned("t", df)
-    val fb = store.readVersionedPruned("t", "k", 100L, 150L)
-    assert(fb.inputFiles.length === 4 && fb.count() === 51)
-  }
-
-  test("commitVersionedClustered: z-order layout skips files on EVERY cluster column") {
-    val store = newStore()
-    // A deterministic 128×128 grid (values 0, 8, …, 1016 in each dim):
-    // uniform 2D mass, no RNG.
-    val grid = for (i <- 0 until 128; j <- 0 until 128)
-      yield ((i * 128 + j).toLong, i.toLong * 8, j.toLong * 8)
-    val df = grid.toDF("id", "x", "y")
-    store.commitVersionedClustered("zt", df, Seq("x", "y"), files = 16, bits = 10)
-    assert(store.readVersioned("zt").inputFiles.length === 16)
-    // A 1/16 strip in x touches only the files whose z-block intersects
-    // it — and the SAME holds for y, which a linear sort cannot give.
-    val px = store.readVersionedPruned("zt", "x", 0L, 63L)
-    val py = store.readVersionedPruned("zt", "y", 0L, 63L)
-    assert(px.inputFiles.length <= 8, s"x strip kept ${px.inputFiles.length}/16")
-    assert(py.inputFiles.length <= 8, s"y strip kept ${py.inputFiles.length}/16")
-    assert(px.count() === grid.count(_._2 <= 63).toLong)
-    assert(py.count() === grid.count(_._3 <= 63).toLong)
-    // Control: the linear-sort layout gives y no locality — the same
-    // y-strip predicate must read every file.
-    store.commitVersionedWithStats("lin",
-      df.repartitionByRange(16, col("x")).sortWithinPartitions("x"),
-      Seq("x", "y"))
-    val ly = store.readVersionedPruned("lin", "y", 0L, 63L)
-    assert(ly.inputFiles.length === 16,
-      s"linear layout unexpectedly pruned: ${ly.inputFiles.length}/16")
-    assert(ly.count() === grid.count(_._3 <= 63).toLong)
-  }
-
-  test("string pruning orders by UTF-8 bytes, not JVM UTF-16 code units") {
-    val store = newStore()
-    // U+E000 (0xE000 as one UTF-16 unit) sorts ABOVE the emoji
-    // U+1F600 (surrogate pair starting 0xD83D) in JVM String order,
-    // but BELOW it in UTF-8/code-point order — the order parquet
-    // stats and the BETWEEN residual use. With JVM-ordered bounds the
-    // file's recorded max would be U+E000 and a query range above
-    // it would skip the file even though it holds the matching emoji
-    // row.
-    val emoji = "😀" // U+1F600
-    val df = Seq((1L, "\uE000"), (2L, emoji)).toDF("k", "s").coalesce(1)
-    store.commitVersionedWithStats("u", df, Seq("s"))
-    val got = store.readVersionedPruned("u", "s", "\uF000", emoji)
-    assert(got.collect().map(_.getLong(0)).toSeq === Seq(2L),
-      "file containing the emoji row was pruned away")
-  }
-
-  test("readVersionedPruned falls back when stats cover other columns only") {
-    val store = newStore()
-    val df = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
-    store.commitVersionedWithStats("p", df, Seq("k"))
-    // Stats exist for k but not s: same logical situation as no stats
-    // dir — a bounded full scan, never an error.
-    val got = store.readVersionedPruned("p", "s", "a", "a")
-    assert(got.collect().map(_.getLong(0)).toSeq === Seq(1L))
-  }
-
-  test("commitVersionedClustered: empty frame commits; all-null column fails by name") {
-    val store = newStore()
-    val empty = Seq.empty[(Long, Double)].toDF("id", "x")
-    val gen = store.commitVersionedClustered("e", empty, Seq("x"), files = 4)
-    assert(gen === 1L && store.readVersioned("e").count() === 0)
-    assert(store.readVersionedPruned("e", "x", 0.0, 1.0).count() === 0)
-    val allNull = Seq(1L, 2L).toDF("id")
-      .withColumn("x", lit(null).cast("double"))
-    val ex = intercept[IllegalArgumentException] {
-      store.commitVersionedClustered("an", allNull, Seq("x"), files = 4)
-    }
-    assert(ex.getMessage.contains("'x'"))
   }
 
   test("tableChanges classifies inserts, deletes, and null-safe updates") {

@@ -27,32 +27,4 @@ class AnonymizeSpec extends AnyFunSuite {
     assert(got(("N", 2)) === ((2L, 1L, 1, 0))) // k-anonymous, NOT l-diverse
     assert(got(("S", 1)) === ((1L, 1L, 0, 0))) // singleton: both fail
   }
-
-  test("suppress drops exactly the under-k groups, rows otherwise intact") {
-    val kept = Anonymize.suppress(rows,
-        qi = Seq(col("region"), col("age_band")), k = 2)
-      .collect().map(_.getLong(0)).toSet
-    assert(kept === Set(1L, 2L, 3L, 4L, 5L)) // the (S,1) singleton is gone
-    // k=4: only the 3-member group also falls away → nothing survives
-    // but the schema (and untouched columns) remain.
-    val strict = Anonymize.suppress(rows,
-      qi = Seq(col("region"), col("age_band")), k = 4)
-    assert(strict.columns.toSeq === rows.columns.toSeq)
-    assert(strict.count() === 0)
-  }
-
-  test("profile and suppress agree: suppressed rows are exactly the k_ok=0 groups") {
-    val bad = Anonymize.profile(rows,
-        qi = Seq(col("region"), col("age_band")),
-        sensitive = col("diagnosis"), k = 2, l = 2)
-      .filter(col("k_ok") === 0)
-      .select("region", "age_band")
-    val dropped = rows.join(bad, Seq("region", "age_band"), "left_semi")
-      .select("id").collect().map(_.getLong(0)).toSet
-    val kept = Anonymize.suppress(rows,
-        qi = Seq(col("region"), col("age_band")), k = 2)
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(dropped.intersect(kept).isEmpty)
-    assert(dropped ++ kept === (1L to 6L).toSet)
-  }
 }

@@ -1,12 +1,22 @@
 package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 
 class BpeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** The expression oracle: a trained merge table applied in training
+    * order as a chain of `replace` expressions, one per rule. Small
+    * tables only — at a real vocabulary (512+) the nested chain is
+    * codegen-hostile and recurses once per rule per row. */
+  private def applyMerges(rep: Column, merges: Seq[(String, String)]): Column =
+    merges.foldLeft(rep) { case (r, (a, b)) =>
+      replace(r, lit(s"<$a><$b>"), lit(s"<$a$b>"))
+    }
 
   test("trainMerges learns the hand-computed greedy merges in order") {
     // Corpus: "low low lower lowest". Pair counts round 1:
@@ -28,7 +38,7 @@ class BpeSpec extends AnyFunSuite {
     assert(merges === Seq(("a", "a"), ("aa", "a")))
     val got = docs
       .select(transform(Bpe.wordArray(col("text")),
-        w => Bpe.applyMerges(Bpe.charWrap(w), merges)).as("reps"))
+        w => applyMerges(Bpe.charWrap(w), merges)).as("reps"))
       .select(array_join(col("reps"), " "))
       .as[String].head()
     assert(got === "<aa><aa> <aaa>")
@@ -53,7 +63,7 @@ class BpeSpec extends AnyFunSuite {
     val base = docs.select(Bpe.wordArray(col("text")).as("__ws"))
     val viaExpr = base
       .select(transform(col("__ws"),
-        w => Bpe.applyMerges(Bpe.charWrap(w), merges)).as("reps"))
+        w => applyMerges(Bpe.charWrap(w), merges)).as("reps"))
       .select(array_join(col("reps"), " ")).as[String].collect().toSeq
     val viaFn = Bpe.withMergedReps(base, "__ws", merges, "reps")
       .select(array_join(col("reps"), " ")).as[String].collect().toSeq
@@ -62,7 +72,7 @@ class BpeSpec extends AnyFunSuite {
     val f = Bpe.applyMergesFn(merges)
     assert(f(Bpe.charWrapStr("aaaa")) ===
       Seq("aaaa").toDF("w")
-        .select(Bpe.applyMerges(Bpe.charWrap(col("w")), merges))
+        .select(applyMerges(Bpe.charWrap(col("w")), merges))
         .as[String].head())
   }
 
@@ -232,7 +242,7 @@ class BpeSpec extends AnyFunSuite {
     assert(merges === Seq(("l", "o"), ("lo", "w"), ("low", "e")))
     val bpeCount = aggregate(
       transform(Bpe.wordArray(col("text")),
-        w => size(Bpe.symbols(Bpe.applyMerges(Bpe.charWrap(w), merges)))),
+        w => size(Bpe.symbols(applyMerges(Bpe.charWrap(w), merges)))),
       lit(0), (a, n) => a + n)
     val got = graft.ops.Sampling.tokenBudget(docs, "source", "doc_id",
         bpeCount, budgets = Map.empty, defaultBudget = 8L)
@@ -253,7 +263,7 @@ class BpeSpec extends AnyFunSuite {
         aggregate(transform(col("words"), w => length(w)), lit(0),
           (a, n) => a + n).as("chars"),
         aggregate(transform(col("words"),
-            w => size(Bpe.symbols(Bpe.applyMerges(Bpe.charWrap(w), merges)))),
+            w => size(Bpe.symbols(applyMerges(Bpe.charWrap(w), merges)))),
           lit(0), (a, n) => a + n).as("bpe"))
       .collect()
     counts.foreach { r =>

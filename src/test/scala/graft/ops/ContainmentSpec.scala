@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -11,6 +12,18 @@ import graft.TestSpark
 class ContainmentSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** [[Dedup.containmentPairsCollapsed]] with its membership and
+    * representative tables built inline — the stateless spelling of
+    * what the registry persists and hands to the two-frame form. */
+  private def containmentPairsCollapsedFromHashes(hs: DataFrame, idCol: String,
+      thresholdPct: Int, hotShingleCap: Int = Dedup.DefaultHotShingleCap): DataFrame = {
+    val members = Dedup.shingleSetMembers(hs, idCol)
+    val reps = hs.join(
+      members.filter(col("__gid") === col(idCol)).select(idCol),
+      Seq(idCol), "left_semi")
+    Dedup.containmentPairsCollapsed(members, reps, idCol, thresholdPct, hotShingleCap)
+  }
 
   /** Docs engineered for asymmetry: 2 is a strict sub-document of 1
     * (full containment, low Jaccard), 3 shares half of 2, 4 is
@@ -53,7 +66,7 @@ class ContainmentSpec extends AnyFunSuite {
   }
 
   private def runCollapsed(thresholdPct: Int, cap: Int): Set[(Long, Long, Long, Long, Long)] =
-    Dedup.containmentPairsCollapsedFromHashes(hashFrame, "doc_id", thresholdPct, cap)
+    containmentPairsCollapsedFromHashes(hashFrame, "doc_id", thresholdPct, cap)
       .select("d1", "d2", "inter_cnt", "n1", "n2")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
@@ -72,7 +85,7 @@ class ContainmentSpec extends AnyFunSuite {
     // where a subtle bug would hide.
     val full = Dedup.containmentPairsFromHashes(hashFrame, "doc_id", 80)
       .collect().map(_.toSeq).toSet
-    val coll = Dedup.containmentPairsCollapsedFromHashes(hashFrame, "doc_id", 80)
+    val coll = containmentPairsCollapsedFromHashes(hashFrame, "doc_id", 80)
       .collect().map(_.toSeq).toSet
     assert(coll === full)
   }
@@ -99,7 +112,7 @@ class ContainmentSpec extends AnyFunSuite {
     for (t <- Seq(50, 80, 100)) {
       val self = Dedup.containmentPairsFromHashes(hf, "doc_id", t)
         .collect().map(_.toSeq).toSet
-      val coll = Dedup.containmentPairsCollapsedFromHashes(hf, "doc_id", t)
+      val coll = containmentPairsCollapsedFromHashes(hf, "doc_id", t)
         .collect().map(_.toSeq).toSet
       assert(coll === self, s"collapsed/self divergence at t=$t")
       assert(self.nonEmpty, s"degenerate fixture at t=$t — nothing gated")

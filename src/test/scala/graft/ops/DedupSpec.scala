@@ -169,8 +169,9 @@ class DedupSpec extends AnyFunSuite {
       (102L, "web", "the quick brown fox jumps over the lazy dog and runs away quickly"),
       (103L, "books", "the quick brown fox jumps over the lazy dog and runs away fast"))
     val docs = (boiler ++ nearDup).toDF("doc_id", "source", "text")
-    def run(cap: Int) = Dedup.ngramJaccardPairs(
-        docs, "doc_id", "text", "source", threshold = 0.4, hotShingleCap = cap)
+    val hs = Dedup.shingleFrame(docs, "doc_id", "text", Seq("source"))
+    def run(cap: Int) = Dedup.ngramJaccardPairsFromHashes(
+        hs, "doc_id", "source", threshold = 0.4, hotShingleCap = cap)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val capped = run(6)
     assert(capped === run(Int.MaxValue))
@@ -253,13 +254,15 @@ class DedupSpec extends AnyFunSuite {
       (2L, "completely unrelated words about engines"),
       (3L, "a b x y z c")).toDF("doc_id", "text")
     val evalDocs = Seq((100L, "the quick brown fox jumps high x y z")).toDF("doc_id", "text")
-    val got = Dedup.contaminationStats(corpus, evalDocs, "doc_id", "text")
+    val corpusRows = corpus.select(col("doc_id"),
+      explode(Dedup.shingleHashes(Dedup.shingles(Dedup.tokens(col("text"))))).as("__h"))
+    val got = Dedup.contaminationStatsFromHashes(corpusRows, evalDocs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getInt(3)))).toMap
     assert(got(1L) === ((3L, 3L, 1)))  // all shingles shared → contaminated
     assert(got(2L)._2 === 0L)
     assert(got(2L)._3 === 0)
     assert(got(3L) === ((4L, 1L, 1)))  // 25% ≥ 10% threshold
-    val strict = Dedup.contaminationStats(corpus, evalDocs, "doc_id", "text",
+    val strict = Dedup.contaminationStatsFromHashes(corpusRows, evalDocs, "doc_id", "text",
       thresholdPercent = 40)
       .collect().map(r => r.getLong(0) -> r.getInt(3)).toMap
     assert(strict(3L) === 0)
@@ -302,7 +305,7 @@ class DedupSpec extends AnyFunSuite {
     assert(fromStore === Set((101L, 1L)))
   }
 
-  test("buildSignatureIndex round-trip is value-identical to the inline pipeline") {
+  test("persisted signature frame round-trip is value-identical to the inline pipeline") {
     // The query family reads the PERSISTED index instead of executor
     // cache() — valid only if parquet round-trips every signature and
     // shingle-hash value exactly. Compare full rows (id, __hs,
@@ -314,9 +317,10 @@ class DedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val store = new graft.io.TableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_sig_idx").toString)
-    val persisted = Dedup.buildSignatureIndex(store, docs, "doc_id", "text")
     val inline = Dedup.signaturesFromHashes(
       Dedup.shingleFrame(docs, "doc_id", "text"))
+    store.overwrite("minhash_sigs", inline)
+    val persisted = store.read("minhash_sigs")
     def key(df: org.apache.spark.sql.DataFrame) = df.collect().map { r =>
       (r.getLong(0), r.getSeq[Long](r.fieldIndex("__hs")).toSeq,
         (0 until Dedup.NumHashes).map(i => r.getAs[Long](s"mh$i")))
@@ -331,7 +335,7 @@ class DedupSpec extends AnyFunSuite {
     assert(viaIndex.exists(p => p._1 === 1L && p._2 === 2L))
   }
 
-  test("buildShingleIndex round-trip feeds ngramJaccardPairsFromHashes identically") {
+  test("persisted shingle frame round-trip feeds ngramJaccardPairsFromHashes alike") {
     val docs = Seq(
       (1L, "web", "the quick brown fox jumps over the lazy dog and runs away fast"),
       (2L, "web", "the quick brown fox jumps over the lazy dog and runs away quickly"),
@@ -339,8 +343,8 @@ class DedupSpec extends AnyFunSuite {
       .toDF("doc_id", "source", "text")
     val store = new graft.io.TableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_shingle_idx").toString)
-    val persisted = Dedup.buildShingleIndex(store, docs, "doc_id", "text",
-      extraCols = Seq("source"))
+    store.overwrite("doc_shingles", Dedup.shingleFrame(docs, "doc_id", "text", Seq("source")))
+    val persisted = store.read("doc_shingles")
     def pairs(hs: org.apache.spark.sql.DataFrame) =
       Dedup.ngramJaccardPairsFromHashes(hs, "doc_id", "source", threshold = 0.4)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
@@ -476,7 +480,10 @@ class DedupSpec extends AnyFunSuite {
       (4L, "q r"),              // < 3 tokens → no shingles
       (5L, "")                  // empty
     ).toDF("doc_id", "text")
-    val got = Dedup.shingleNovelty(docs, "doc_id", "text")
+    val got = Dedup.shingleNoveltyFromHashes(docs.select(col("doc_id")),
+        docs.select(col("doc_id"),
+          Dedup.shingleHashes(Dedup.shingles(Dedup.tokens(col("text")))).as("__hs")),
+        "doc_id")
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     assert(got(1L) === ((3L, 3L, 1000000L)))

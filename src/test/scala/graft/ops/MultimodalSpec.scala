@@ -14,16 +14,13 @@ class MultimodalSpec extends AnyFunSuite {
       MediaRow(id, "image/fake", s.getBytes("UTF-8"), s.length.toLong)
     }
 
-  test("FakeCodec: deterministic, normalized to [0,1]; poolModulo fixes the dim") {
+  test("FakeCodec: deterministic, normalized to [0,1], one value per byte") {
     val c = new FakeCodec
     val a = c.decode("some media bytes here".getBytes)
     val b = c.decode("some media bytes here".getBytes)
     assert(a.toSeq === b.toSeq)
     assert(a.length === 21) // raw signal: one intensity per byte
     assert(a.forall(v => v >= 0f && v <= 1f))
-    val pooled = Multimodal.poolModulo(a, 8)
-    assert(pooled.length === 8)
-    assert(Multimodal.poolModulo(Array.emptyFloatArray, 8).toSeq === Seq.fill(8)(0f))
   }
 
   /** Serialize known PCM samples into real WAV container bytes — an
@@ -870,62 +867,49 @@ class MultimodalSpec extends AnyFunSuite {
     }
   }
 
-  test("extractFeatures runs real JPEG bytes through the partition-batched path") {
+  test("extractPooledInts runs real JPEG bytes through the partition-batched path") {
     val jpg = jpegBytes(8, 8, (_, _) => (200, 200, 200))
     val ds = (1L to 3L).map(i => MediaRow(i, "image/jpeg", jpg, 0L)).toDS()
-    val out = Multimodal.extractFeatures(ds, dim = 2,
-      mkCodec = () => new Multimodal.JpegCodec).collect().sortBy(_.doc_id)
-    assert(out.length === 3)
-    assert(out.forall(_.codec === "jpeg-gray"))
-    val want = 200 * 1000 / 255000f
-    assert(out.forall(_.embedding.forall(v => math.abs(v - want) <= 2f / 255)))
+    val out = Multimodal.extractPooledInts(ds, dim = 2,
+      mkCodec = () => new Multimodal.JpegCodec).collect()
+    assert(out.map(_.doc_id).toSet === Set(1L, 2L, 3L) && out.length === 6)
+    assert(out.forall(r => r.codec === "jpeg-gray" && r.pcnt === 32L))
+    // Each re-quantized pixel is within 2 of the flat 200 gray.
+    assert(out.forall(r => math.abs(r.psum - 200L * 32) <= 2L * 32))
   }
 
-  test("extractFeatures runs real PNG bytes through the partition-batched path") {
+  test("extractPooledInts runs real PNG bytes through the partition-batched path") {
     val rows = Seq(Seq(0, 128, 255), Seq(10, 20, 30))
     val png = pngBytes(3, 2, colorType = 0, pixels = rows, rowFilters = Seq(0, 2))
     val ds = (1L to 3L).map(i => MediaRow(i, "image/png", png, 0L)).toDS()
-    val out = Multimodal.extractFeatures(ds, dim = 2,
-      mkCodec = () => new Multimodal.PngCodec).collect().sortBy(_.doc_id)
-    assert(out.length === 3)
-    assert(out.forall(_.codec === "png-gray"))
-    val expected = Multimodal.poolModulo(rows.flatten.map(_ / 255f).toArray, 2).toSeq
-    assert(out.forall(_.embedding.toSeq === expected))
+    val out = Multimodal.extractPooledInts(ds, dim = 2,
+      mkCodec = () => new Multimodal.PngCodec).collect()
+    assert(out.length === 6 && out.forall(_.codec === "png-gray"))
+    // Row-major pixels 0,128,255,10,20,30: bucket 0 holds 0+255+20.
+    assert(out.forall(r => (r.bucket, r.psum, r.pcnt) ===
+      (if (r.bucket == 0) (0, 275L, 3L) else (1, 168L, 3L))))
   }
 
-  test("extractFeatures: schema, values, and per-row metadata") {
-    val ds = media((1L, "hello world media blob"), (2L, "x")).toDS()
-    val out = Multimodal.extractFeatures(ds, dim = 4).collect().sortBy(_.doc_id)
-    assert(out.map(_.doc_id).toSeq === Seq(1L, 2L))
-    assert(out.head.n_bytes === 22L)
-    assert(out.head.codec === "fake-codec")
-    assert(out.head.embedding.toSeq === Multimodal.poolModulo(
-      new FakeCodec().decode("hello world media blob".getBytes), 4).toSeq)
-  }
-
-  test("extractFeatures runs REAL media bytes through the partition-batched path") {
+  test("extractPooledInts runs REAL audio bytes through the partition-batched path") {
     val samples = Array[Short](1000, -1000, 2000, -2000, 3000, -3000)
     val wav = wavBytes(samples)
     val rows = (1L to 4L).map(i => MediaRow(i, "audio/wav", wav, 100L))
-    val out = Multimodal.extractFeatures(rows.toDS(), dim = 3,
-      mkCodec = () => new WavPcmCodec).collect().sortBy(_.doc_id)
-    assert(out.length === 4)
-    assert(out.forall(_.codec === "wav-pcm"))
-    assert(out.forall(_.n_bytes === wav.length.toLong))
-    val expected = Multimodal.poolModulo(samples.map(_ / 32768f), 3).toSeq
-    assert(out.forall(_.embedding.toSeq === expected))
+    val out = Multimodal.extractPooledInts(rows.toDS(), dim = 3,
+      mkCodec = () => new WavPcmCodec, quantScale = 32768).collect()
+    assert(out.length === 12)
+    assert(out.forall(r => r.codec === "wav-pcm" && r.n_bytes === wav.length.toLong))
+    // 16-bit PCM re-quantizes exactly: bucket j sums samples i ≡ j mod 3.
+    val expected = Map(0 -> -1000L, 1 -> 2000L, 2 -> -1000L)
+    assert(out.forall(r => r.psum === expected(r.bucket) && r.pcnt === 2L))
   }
 
-  test("extractFeatures initializes the codec once per partition, not per row") {
-    // 8 rows in 2 partitions; count inits via an accumulator inside the
-    // partition function (the per-partition shape is the contract).
+  test("extractPooledInts initializes the codec once per partition, not per row") {
+    // 8 rows in 2 partitions; the codec counts its inits in an
+    // accumulator (the per-partition shape is the contract).
     val acc = spark.sparkContext.longAccumulator("codecInits")
     val ds = media((1L to 8L).map(i => (i, s"blob $i")): _*).toDS().repartition(2)
-    ds.mapPartitions { rows =>
-      val codec = new FakeCodec().init()
-      acc.add(codec.initCount)
-      rows.map(m => codec.decode(m.content).length)
-    }.collect()
+    Multimodal.extractPooledInts(ds, dim = 4, mkCodec = () => new CountingCodec(acc))
+      .collect()
     assert(acc.value === 2L)
   }
 
@@ -945,13 +929,14 @@ class MultimodalSpec extends AnyFunSuite {
     // 33%10+1=4 → "defg"
     assert(new String(out2(1).getAs[Array[Byte]](3)) === "defg")
   }
+}
 
-  test("resizeMeta: downscale preserves aspect, never upscales") {
-    val df = Seq((1L, 4000, 3000), (2L, 640, 480)).toDF("doc_id", "width", "height")
-    val out = Multimodal.resizeMeta(df, maxW = 1024, maxH = 1024)
-      .orderBy("doc_id")
-      .select("out_width", "out_height", "resize_applied").collect()
-    assert((out(0).getInt(0), out(0).getInt(1), out(0).getBoolean(2)) === ((1024, 768, true)))
-    assert((out(1).getInt(0), out(1).getInt(1), out(1).getBoolean(2)) === ((640, 480, false)))
-  }
+/** [[Multimodal.FakeCodec]] that counts its `init()` calls in an
+  * accumulator, so inits on executors add up where the test reads them. */
+private final class CountingCodec(inits: org.apache.spark.util.LongAccumulator)
+    extends Multimodal.MediaCodec {
+  private val inner = new FakeCodec
+  def name: String = inner.name
+  def init(): CountingCodec = { inits.add(1); inner.init(); this }
+  def decode(content: Array[Byte]): Array[Float] = inner.decode(content)
 }

@@ -238,6 +238,39 @@ class PipelineSpec extends AnyFunSuite {
     assert(Incremental.readWatermark(store, "stg", "terminals") === mar1)
   }
 
+  test("a malformed transaction date fails the stage naming the file; others commit") {
+    val src = Files.createTempDirectory("graft_pipe_garbage")
+    val store = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh_garbage").toString)
+    val txHeader = "transaction_id;transaction_date;amount;card_num;oper_type;oper_result;terminal"
+    day1(src)
+    Pipeline.run(spark, store, src.toString, reportDt)
+    val facts = store.read("fact_transactions").collect().toSet
+    val d1 = ts("2024-01-01 00:00:00")
+    assert(Incremental.readWatermark(store, "stg", "transactions") === d1)
+    // Day 2: one non-blank date that is not a timestamp.
+    write(src, "transactions_02012024.txt", txHeader,
+      "4;2024-01-02 10:00:00;7,00;C1;PAYMENT;SUCCESS;T1",
+      "5;garbage;8,00;C1;PAYMENT;SUCCESS;T1")
+    write(src, "terminals_02012024.txt",
+      "terminal_id;terminal_type;terminal_city", "T1;ATM;Kazan")
+    val err = intercept[IllegalStateException](
+      Pipeline.run(spark, store, src.toString, reportDt))
+    assert(err.getMessage.contains("transactions_02012024.txt"), err.getMessage)
+    assert(err.getMessage.contains("transactions stage"), err.getMessage)
+    assert(store.read("fact_transactions").collect().toSet === facts)
+    assert(Incremental.readWatermark(store, "stg", "transactions") === d1)
+    // The sibling stage committed its day-2 file.
+    assert(Incremental.readWatermark(store, "stg", "terminals") === ts("2024-01-02 00:00:00"))
+
+    // Fixed by hand, the file loads on the next run.
+    write(src, "transactions_02012024.txt", txHeader,
+      "4;2024-01-02 10:00:00;7,00;C1;PAYMENT;SUCCESS;T1",
+      "5;2024-01-02 11:00:00;8,00;C1;PAYMENT;SUCCESS;T1")
+    Pipeline.run(spark, store, src.toString, reportDt)
+    assert(store.read("fact_transactions").count() === facts.size + 2)
+    assert(Incremental.readWatermark(store, "stg", "transactions") === ts("2024-01-02 00:00:00"))
+  }
+
   test("a header-only file leaves its table and watermark; all-null dates advance to the file date") {
     val src = Files.createTempDirectory("graft_pipe_empty")
     val store = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh_empty").toString)

@@ -51,44 +51,6 @@ class RangeJoinPropertySpec extends AnyFunSuite {
     assert(result.passed, result.status.toString)
   }
 
-  test("stats-derived auto width: same pair set, replication bounded by overlap factor") {
-    val prop = Prop.forAll(genPoints, genIntervals) { (ps, ivs) =>
-      val store = new graft.io.TableStore(spark,
-        java.nio.file.Files.createTempDirectory("graft_autow").toString)
-      store.commitVersionedWithStats("iv",
-        ivs.toDF("iid", "s", "e"), Seq("s", "e"))
-      val intervals = store.readVersioned("iv")
-      val w = Temporal.autoBucketWidth(store, "iv", "s", "e")
-      val got = Temporal.rangeJoin(ps.toDF("pid", "p"), intervals,
-          point = col("p"), start = col("s"), end = col("e"), bucketWidth = w)
-        .select("pid", "iid").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      val want = for {
-        (pid, p) <- ps
-        (iid, s, e) <- ivs
-        if p >= s && p < e
-      } yield (pid, iid)
-      // Replication bound: the valid intervals explode into
-      // Σ(buckets covered) rows; the stats-derived (ceiling) width
-      // must keep the average within overlap·(n/n_valid) + 2 — the
-      // documented bound. The n/n_valid factor is the invalid-row
-      // dilution: footer stats count every row (inverted intervals
-      // included), so they widen the bucket but never explode.
-      val valid = ivs.filter { case (_, s, e) => e > s }
-      val replOk = valid.isEmpty || {
-        val exploded = valid.map { case (_, s, e) =>
-          Math.floorDiv(e - 1, w) - Math.floorDiv(s, w) + 1 }.sum.toDouble
-        val extent = (ivs.map(_._3).max - ivs.map(_._2).min).toDouble
-        val overlap = valid.map { case (_, s, e) => e - s }.sum / math.max(extent, 1.0)
-        exploded / valid.size <= overlap * ivs.size / valid.size + 2.0
-      }
-      (Prop(got.sorted == want.sorted) :| s"autoWidth=$w pair-set mismatch") &&
-        (Prop(replOk) :| s"autoWidth=$w replication above the documented bound")
-    }
-    val result = SCTest.check(
-      SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
-    assert(result.passed, result.status.toString)
-  }
-
   test("bucket-ownership interval overlap equals the naive cross-filter for random inputs") {
     val prop = Prop.forAll(genIntervals, genIntervals, genWidth) { (as, bs, w) =>
       val a = as.toDF("aid", "as", "ae")

@@ -63,7 +63,8 @@ class SimilarityIndexSpec extends AnyFunSuite {
       (1 to 64).map(j => ((seed * 31 + j * 7) % 13 - 6).toFloat).toArray
     val v = vec(1)
     val df = Seq((1L, v), (2L, v), (3L, v.map(-_))).toDF("vec_id", "embedding")
-    val got = Similarity.rpCandidates(df, "vec_id", "embedding", dim = 64)
+    val got = Similarity.rpCandidatesFromSigs(
+        Similarity.rpSignatures(df, "vec_id", "embedding", dim = 64), "vec_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.contains((1L, 2L)))
     assert(!got.contains((1L, 3L)) && !got.contains((2L, 3L)))

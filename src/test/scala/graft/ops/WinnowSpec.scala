@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -12,6 +13,13 @@ import graft.TestSpark
 class WinnowSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** The inline oracle: [[Dedup.winnowSelect]] fused with the hash
+    * pipeline. SMALL inputs only — the inlining hazard documented on
+    * `winnowSelect` makes it O(L²) in md5 evaluations per document,
+    * which is why the corpus flow is [[Dedup.buildWinnowIndex]]. */
+  private def winnowedFingerprints(ws: Column, window: Int, shingleN: Int = 3): Column =
+    Dedup.winnowSelect(Dedup.positionalShingleHashes(ws, shingleN), window)
 
   private val W = 8 // q146's window
   private val N = 3 // shingle width
@@ -34,7 +42,7 @@ class WinnowSpec extends AnyFunSuite {
 
   private def winnowViaSpark(text: String, w: Int): Seq[Long] =
     Seq(text).toDF("t")
-      .select(Dedup.winnowedFingerprints(Dedup.tokens(col("t")), w).as("f"))
+      .select(winnowedFingerprints(Dedup.tokens(col("t")), w).as("f"))
       .collect().head.getSeq[Long](0).toSeq
 
   test("winnowSelect equals a naive per-doc window-min fold") {
@@ -85,7 +93,7 @@ class WinnowSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       val expected = docs
         .select(col("doc_id"),
-          explode(Dedup.winnowedFingerprints(Dedup.tokens(col("text")), W)).as("fp"))
+          explode(winnowedFingerprints(Dedup.tokens(col("text")), W)).as("fp"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === expected)
       assert(!got.exists(_._1 == 3L))

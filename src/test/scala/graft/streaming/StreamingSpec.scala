@@ -2,11 +2,12 @@ package graft.streaming
 
 import java.nio.file.{Files, Path}
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.io.Sources
-import graft.streaming.Streaming.KeyUpdate
 
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -17,31 +18,6 @@ class StreamingSpec extends AnyFunSuite {
   private def writeTx(dir: Path, name: String, rows: String*): Unit =
     Files.writeString(dir.resolve(name),
       ("transaction_id;amount" +: rows).mkString("\n") + "\n"): Unit
-
-  test("AvailableNow file ingest is incremental and exactly-once across restarts") {
-    val src = Files.createTempDirectory("graft_stream_src")
-    val sink = Files.createTempDirectory("graft_stream_sink").resolve("facts")
-    val ckpt = Files.createTempDirectory("graft_stream_ckpt")
-    writeTx(src, "transactions_01012024.txt", "1;10", "2;20")
-
-    def drain(): Unit = {
-      val q = Streaming.ingest(
-        Streaming.fileSource(spark, src.toString,
-          Sources.stringSchema("transaction_id", "amount")),
-        sink.toString, ckpt.toString)
-      q.awaitTermination(60000); ()
-    }
-
-    drain()
-    assert(spark.read.parquet(sink.toString).count() === 2)
-    // Restart with one NEW file: the checkpoint replaces the hand-kept
-    // watermark — only the new file's rows land, nothing re-ingested.
-    writeTx(src, "transactions_02012024.txt", "3;30")
-    drain()
-    val got = spark.read.parquet(sink.toString)
-      .select("transaction_id").as[String].collect().sorted
-    assert(got.toSeq === Seq("1", "2", "3"))
-  }
 
   test("idempotent report sink: a retried batch overwrites, never double-appends") {
     val out = Files.createTempDirectory("graft_rep_unit").resolve("rep").toString
@@ -61,10 +37,15 @@ class StreamingSpec extends AnyFunSuite {
     writeTx(src, "transactions_01012024.txt", "1;10", "2;20")
 
     def drain(): Unit = {
-      val q = Streaming.reportSink(
-        Streaming.fileSource(spark, src.toString,
-          Sources.stringSchema("transaction_id", "amount")),
-        out.toString, ckpt.toString)
+      val q = spark.readStream.option("sep", ";").option("header", "true")
+        .schema(Sources.stringSchema("transaction_id", "amount"))
+        .csv(src.toString)
+        .writeStream
+        .foreachBatch((batch: DataFrame, batchId: Long) =>
+          Streaming.writeBatchIdempotent(batch, batchId, out.toString))
+        .option("checkpointLocation", ckpt.toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
       try q.awaitTermination(60000) finally q.stop()
       // Deregistration from the checkpoint-path registry is async to
       // termination; a restart that wins the race trips the
@@ -159,24 +140,6 @@ class StreamingSpec extends AnyFunSuite {
       (ts("2024-01-01 10:10:00"), "click") -> ((2L, 12.0))))
   }
 
-  test("dedupStream drops same-key duplicates across micro-batches") {
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[(String, Timestamp, String)]
-    val df = ms.toDF().toDF("txn_id", "ts", "payload")
-    val q = Streaming.dedupStream(df, "ts", Seq("txn_id"), "10 minutes")
-      .writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    ms.addData(("t1", ts("2024-01-01 10:00:00"), "a"),
-               ("t2", ts("2024-01-01 10:00:30"), "b"))
-    q.processAllAvailable()
-    ms.addData(("t1", ts("2024-01-01 10:01:00"), "a-replay"), // dup key
-               ("t3", ts("2024-01-01 10:02:00"), "c"))
-    q.processAllAvailable()
-    val ids = spark.table("dedup_out").select("txn_id").as[String].collect().sorted
-    q.stop()
-    assert(ids.toSeq === Seq("t1", "t2", "t3"))
-  }
-
   test("sessionCounts: session windows close on the gap") {
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[(Timestamp, String, Double)]
@@ -210,7 +173,9 @@ class StreamingSpec extends AnyFunSuite {
     val corpusSigs = graft.ops.Dedup.minhashSignatures(corpus, "doc_id", "text")
     val ms = MemoryStream[(Long, String)]
     val stream = ms.toDF().toDF("doc_id", "text")
-    val q = Streaming.neardupCandidates(stream, corpusSigs, "doc_id", "text")
+    // Per-band hits, no `distinct`: stateless, so the join streams.
+    val q = graft.ops.Dedup.lshCandidateHits(
+        graft.ops.Dedup.minhashSignatures(stream, "doc_id", "text"), corpusSigs, "doc_id")
       .writeStream.format("memory").queryName("neardup_cand")
       .outputMode("append").start()
     // Exact duplicate of corpus doc 1: identical shingle set →
@@ -271,40 +236,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.keySet === Set(100L, 101L, 102L))
   }
 
-  test("intervalJoin: stream-stream attribution matches the batch join") {
-    implicit val ctx = spark.sqlContext
-    val clicks = MemoryStream[(String, Timestamp)]
-    val buys = MemoryStream[(String, Timestamp)]
-    val q = Streaming.intervalJoin(
-        clicks.toDF().toDF("c_user", "c_ts"), "c_user", "c_ts",
-        buys.toDF().toDF("b_user", "b_ts"), "b_user", "b_ts",
-        maxDelaySec = 3600, delay = "1 hour")
-      .writeStream.format("memory").queryName("attrib")
-      .outputMode("append").start()
-    clicks.addData(
-      ("u1", ts("2024-01-01 10:00:00")),
-      ("u2", ts("2024-01-01 10:05:00")),
-      ("u3", ts("2024-01-01 10:10:00")))
-    buys.addData(
-      ("u1", ts("2024-01-01 10:30:00")), // within the hour → attributed
-      ("u2", ts("2024-01-01 12:00:00")), // 1h55m later → outside
-      ("u3", ts("2024-01-01 10:05:00"))) // BEFORE the click → outside
-    q.processAllAvailable()
-    // Advance both watermarks so all eligible pairs emit.
-    clicks.addData(("zz", ts("2024-01-01 23:00:00")))
-    buys.addData(("zz", ts("2024-01-01 23:30:00")))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("attrib")
-      .collect().map(r => (r.getString(0), r.getTimestamp(1),
-        r.getTimestamp(3))).toSet
-    // Batch truth over the same rows and the same time predicate.
-    val batch = Set(
-      ("u1", ts("2024-01-01 10:00:00"), ts("2024-01-01 10:30:00")),
-      ("zz", ts("2024-01-01 23:00:00"), ts("2024-01-01 23:30:00")))
-    assert(streamed === batch)
-  }
-
   test("maintainClusters: streamed labels match from-scratch CC; replay is content-idempotent") {
     implicit val ctx = spark.sqlContext
     import graft.ops.Dedup
@@ -357,101 +288,5 @@ class StreamingSpec extends AnyFunSuite {
     drain()
     assert(store.liveGeneration("labels").get > genBefore)
     assert(labelRows() === streamed)
-  }
-
-  test("stateless contamination flags agree with the batch join formulation, streaming") {
-    implicit val ctx = spark.sqlContext
-    val evalDocs = Seq((100L, "the quick brown fox jumps high x y z"))
-      .toDF("doc_id", "text")
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps"),
-      (2L, "completely unrelated words about engines"),
-      (3L, "a b x y z c"))
-    // Eval hash set extracted once (the materialized decontamination
-    // artifact), then applied as pure expressions to a STREAM.
-    import org.apache.spark.sql.functions.{col, explode}
-    val evalHashes = evalDocs
-      .select(explode(graft.ops.Dedup.shingleHashes(
-        graft.ops.Dedup.shingles(graft.ops.Dedup.tokens(col("text"))))).as("h"))
-      .distinct().collect().map(_.getLong(0))
-    val ms = MemoryStream[(Long, String)]
-    val q = graft.ops.Dedup.contaminationFlags(
-        ms.toDF().toDF("doc_id", "text"), evalHashes, "doc_id", "text")
-      .writeStream.format("memory").queryName("contam_stream")
-      .outputMode("append").start()
-    ms.addData(corpus.take(2): _*)
-    q.processAllAvailable()
-    ms.addData(corpus.drop(2): _*)
-    q.processAllAvailable()
-    val streamed = spark.table("contam_stream")
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getInt(3))))
-      .toMap
-    q.stop()
-    val batch = graft.ops.Dedup.contaminationStats(
-        corpus.toDF("doc_id", "text"), evalDocs, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getInt(3))))
-      .toMap
-    assert(streamed === batch)
-    assert(streamed(1L) === ((3L, 3L, 1)))
-  }
-
-  test("streaming change events fold into the same history the batch builder derives") {
-    // The two CDC faces must agree: changeEvents (streaming, stateful)
-    // emits one event per transition; fromChangeLog (batch, windowed)
-    // collapses the raw log directly. Versions built from either must
-    // be identical.
-    implicit val ctx = spark.sqlContext
-    val raw = Seq(
-      KeyUpdate("k1", "a", ts("2024-01-01 00:00:00")),
-      KeyUpdate("k1", "a", ts("2024-01-02 00:00:00")),
-      KeyUpdate("k1", "b", ts("2024-01-03 00:00:00")),
-      KeyUpdate("k2", "x", ts("2024-01-01 12:00:00")),
-      KeyUpdate("k2", "y", ts("2024-01-04 00:00:00")))
-    val ms = MemoryStream[KeyUpdate]
-    val q = Streaming.changeEvents(ms.toDS())
-      .writeStream.format("memory").queryName("cdc_consistency")
-      .outputMode("append").start()
-    ms.addData(raw.take(2): _*)
-    q.processAllAvailable()
-    ms.addData(raw.drop(2): _*)
-    q.processAllAvailable()
-    q.stop()
-    import org.apache.spark.sql.functions.col
-    val fromStream = graft.ops.Scd2.fromChangeLog(
-      spark.table("cdc_consistency")
-        .selectExpr("k", "curr_v AS v", "ts", "monotonically_increasing_id() AS seq"),
-      Seq("k"), Seq("v"), "ts", col("seq"))
-      .collect().map(r => (r.getString(0), r.getString(1),
-        r.getTimestamp(2), r.getTimestamp(3))).toSet
-    val fromBatch = graft.ops.Scd2.fromChangeLog(
-      spark.createDataFrame(raw).withColumn("seq",
-        org.apache.spark.sql.functions.monotonically_increasing_id()),
-      Seq("k"), Seq("v"), "ts", col("seq"))
-      .collect().map(r => (r.getString(0), r.getString(1),
-        r.getTimestamp(2), r.getTimestamp(3))).toSet
-    assert(fromStream === fromBatch)
-    assert(fromBatch.count(_._4.toString.startsWith("9999")) === 2) // one open per key
-  }
-
-  test("changeEvents: per-key version tracking persists state across batches") {
-    implicit val ctx = spark.sqlContext
-    val ms = MemoryStream[KeyUpdate]
-    val q = Streaming.changeEvents(ms.toDS())
-      .writeStream.format("memory").queryName("chg_out")
-      .outputMode("append").start()
-    ms.addData(KeyUpdate("k1", "a", ts("2024-01-01 00:00:00")),
-               KeyUpdate("k2", "x", ts("2024-01-01 00:00:00")))
-    q.processAllAvailable()
-    // k1 unchanged (no event), then changed; k2 silent; k3 appears.
-    ms.addData(KeyUpdate("k1", "a", ts("2024-01-02 00:00:00")),
-               KeyUpdate("k1", "b", ts("2024-01-03 00:00:00")),
-               KeyUpdate("k3", "z", ts("2024-01-02 00:00:00")))
-    q.processAllAvailable()
-    val events = spark.table("chg_out")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-    q.stop()
-    assert(events === Set(
-      ("k1", null, "a"), ("k2", null, "x"),
-      ("k1", "a", "b"), ("k3", null, "z")))
   }
 }
