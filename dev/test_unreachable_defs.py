@@ -1,4 +1,4 @@
-"""Unit tests for dev/unreachable_defs.py on a tiny fixture tree.
+"""Unit tests for dev/unreachable_defs.py (both passes) on tiny fixture trees.
 
 Run: python3 -m unittest discover -s dev -p 'test_unreachable*'
 """
@@ -119,6 +119,116 @@ class UnreachableDefsTest(unittest.TestCase):
         self.assertEqual(run("".join(f"{n}  fixture\n" for n in every)), 1)
         self.assertEqual(run("".join(f"{n}  LibSpec: fixture\n" for n in every)
                              + "Lib.counted  LibSpec: reached\n"), 1)
+
+
+PARAM_MAIN = '''package fx
+
+object Bench {
+  def main(args: Array[String]): Unit = {
+    Ops.scan(args(0))
+    Ops.scan(args(0), 8)
+    Ops.join(args(0), how = "left")
+    Ops.join(args(0), "left")
+    Ops.wrap(args(0))
+    Ops.tuned(args(0), 5)
+    Ops.tuned(args(0), k = 6)
+    Ops.specOnly(args(0))
+    Ops.local(args(0), args.length)
+    val c = Conf("u")
+    println(Ops.use(c.copy(size = 4)))
+    Ops.retry() { args.length }
+  }
+}
+'''
+
+PARAM_OPS = '''package fx
+
+object Ops {
+  def scan(p: String, width: Int = 8): Int = width
+  def join(p: String, how: String = "left"): String = how
+  def wrap(p: String, depth: Int = 3): Int = deep(p, depth)
+  def deep(p: String, level: Int = 1): Int = level
+  def tuned(p: String, k: Int = 1): Int = k
+  def specOnly(p: String, cap: Int = 10): Int = cap
+  def local(p: String, n: Int = 0): Int = n
+  def use(c: Conf): Int = c.size + c.pool
+  def retry(times: Int = 3)(body: => Int = 0): Int = times * body
+}
+
+final case class Conf(url: String, size: Int = 2, pool: Int = 1)
+'''
+
+PARAM_SPEC = '''package fx
+
+class OpsSpec {
+  Ops.specOnly("x", 2)
+  Ops.scan("x", width = 99)
+}
+'''
+
+
+class ParamScanTest(unittest.TestCase):
+
+    def setUp(self):
+        self.tmp = tempfile.TemporaryDirectory()
+        self.root = self.tmp.name
+        write(self.root, "src/main/scala/fx/Bench.scala", PARAM_MAIN)
+        write(self.root, "src/main/scala/fx/Ops.scala", PARAM_OPS)
+        write(self.root, "src/test/scala/fx/OpsSpec.scala", PARAM_SPEC)
+
+    def tearDown(self):
+        self.tmp.cleanup()
+
+    def single(self):
+        _, single = unreachable_defs.param_scan(self.root)
+        return {p.label: next(iter(p.values)) for p in single}
+
+    def test_named_and_positional_arguments_are_one_value(self):
+        single = self.single()
+        self.assertEqual(single["Ops.scan(width)"], "8")
+        self.assertEqual(single["Ops.join(how)"], '"left"')
+        self.assertNotIn("Ops.tuned(k)", single)
+
+    def test_forwarded_parameter_takes_the_callers_values(self):
+        single = self.single()
+        self.assertEqual(single["Ops.wrap(depth)"], "3")
+        self.assertEqual(single["Ops.deep(level)"], "3")
+
+    def test_a_value_passed_only_by_a_spec_does_not_count(self):
+        single = self.single()
+        self.assertEqual(single["Ops.specOnly(cap)"], "10")
+        self.assertEqual(single["Ops.scan(width)"], "8")
+
+    def test_a_local_is_a_value_of_its_own_call_site(self):
+        self.assertNotIn("Ops.local(n)", self.single())
+
+    def test_copy_sets_a_case_class_field(self):
+        single = self.single()
+        self.assertNotIn("Conf(size)", single)
+        self.assertEqual(single["Conf(pool)"], "1")
+
+    def test_a_by_name_body_is_not_a_knob(self):
+        single = self.single()
+        self.assertNotIn("Ops.retry(body)", single)
+        self.assertEqual(single["Ops.retry(times)"], "3")
+
+    def test_exit_status_follows_the_allowlist(self):
+        def run(allow):
+            write(self.root, "allow.txt", allow)
+            return subprocess.run(
+                [sys.executable, SCRIPT, "--params", "--repo", self.root,
+                 "--allowlist", os.path.join(self.root, "allow.txt")],
+                capture_output=True, text=True).returncode
+        every = "".join(f"{name}  OpsSpec: fixture\n" for name in self.single())
+        self.assertEqual(run(""), 1)
+        self.assertEqual(run(every), 0)
+        # A reason of another kind is fine; a missing kind, a spec that
+        # does not exist or a multi-valued parameter fails the run.
+        self.assertEqual(run(every.replace("OpsSpec:", "deployment:", 1)), 0)
+        self.assertEqual(run(every.replace("OpsSpec: ", "", 1)), 1)
+        self.assertEqual(run(every.replace("OpsSpec:", "NoSuchSpec:", 1)), 1)
+        self.assertEqual(run(every + "Ops.tuned(k)  safety: multi-valued\n"), 1)
+        self.assertEqual(run(every + "Ops.gone(x)  safety: gone\n"), 1)
 
 
 if __name__ == "__main__":

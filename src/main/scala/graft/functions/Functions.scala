@@ -28,8 +28,8 @@ object Functions {
     * One `translate` pass ('.' deleted, ',' → '.') — character-wise
     * identical to the reference's two global replaces, without the two
     * regex engines per row the naive spelling costs on the fact scan. */
-  def parseEuroDecimal(c: Column, precision: Int = 15, scale: Int = 2): Column =
-    translate(c, ",.", ".").cast(DecimalType(precision, scale))
+  def parseEuroDecimal(c: Column): Column =
+    translate(c, ",.", ".").cast(DecimalType(15, 2))
 
   /** Render a decimal as a European-format string (inverse of
     * [[parseEuroDecimal]], used to build test fixtures). */

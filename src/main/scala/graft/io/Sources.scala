@@ -89,12 +89,16 @@ object Sources {
   /** Semicolon-delimited CSV with header and explicit schema — the
     * reference's `transactions_DDMMYYYY.txt` shape (`transaction.py:57`,
     * `pd.read_csv(..., sep=';')`). Never `inferSchema`: staging is
-    * deliberately stringly-typed; promotion applies casts. */
-  def csv(spark: SparkSession, path: String, schema: StructType,
-          sep: String = ";"): DataFrame =
+    * deliberately stringly-typed; promotion applies casts. The header
+    * is checked against the schema's names (case-insensitive), so a
+    * file whose columns come in another order fails the read instead
+    * of loading its values under the wrong names: the schema alone is
+    * applied by position. */
+  def csv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read
-      .option("sep", sep)
+      .option("sep", ";")
       .option("header", "true")
+      .option("enforceSchema", "false")
       .schema(schema)
       .csv(path)
 
@@ -215,15 +219,23 @@ object Sources {
   // ── Excel source (reference `terminals.py:54`, `black_list.py:57`) ──
 
   /** Excel scan of a real `.xlsx` workbook through the built-in
-    * zero-dependency parser ([[XlsxLite]]): header row skipped, cells
-    * applied to `schema` positionally and cast per field (the same
-    * contract as [[csv]] staging; never `inferSchema`). A path that is
-    * not a workbook fails naming it. */
+    * zero-dependency parser ([[XlsxLite]]): the header row must name
+    * the schema's fields in order (case-insensitive, as [[csv]]
+    * checks), then cells apply to `schema` positionally and cast per
+    * field (the same contract as [[csv]] staging; never
+    * `inferSchema`). A path that is not a workbook, or a header that
+    * does not match, fails naming the file. */
   def excel(spark: SparkSession, path: String, sheet: String,
             schema: StructType): DataFrame = {
     require(isZip(path), s"excel: $path is not an .xlsx workbook (missing, or not a ZIP archive)")
     val raw = XlsxLite.read(path, sheet)
     require(raw.nonEmpty, s"excel: sheet '$sheet' of $path is empty (no header row)")
+    // Trailing empty header cells are formatting, not columns.
+    val header = raw.head.reverse.dropWhile(c => c == null || c.trim.isEmpty).reverse.toSeq
+    require(header.map(h => Option(h).map(_.trim.toLowerCase).orNull) ==
+        schema.fieldNames.toSeq.map(_.toLowerCase),
+      s"excel: header of $path (sheet '$sheet') is [${header.mkString(", ")}], " +
+        s"expected [${schema.fieldNames.mkString(", ")}]")
     val rows: java.util.List[org.apache.spark.sql.Row] = new java.util.ArrayList
     raw.drop(1).foreach { cells => // drop the header row, pad/truncate to schema
       rows.add(org.apache.spark.sql.Row.fromSeq(

@@ -275,21 +275,25 @@ final class TableStore(spark: SparkSession, val root: String) {
     spark.read.parquet(new Path(path(name), s"g$gen").toString)
   }
 
+  /** Committed generations [[vacuumVersioned]] keeps: the live one and
+    * the one before it, for a reader that resolved it just before a
+    * commit. */
+  val KeepGenerations = 2
+
   /** Drop generation directories (and their manifest records) older
-    * than the newest `keepGenerations` committed ones, plus orphaned
+    * than the newest [[KeepGenerations]] committed ones, plus orphaned
     * never-committed directories below the live generation. Run with
     * no writer in flight, and lag retention behind the longest-running
     * reader (a reader resolves its generation once, then lists files
     * from an immutable directory — the same contract as Delta VACUUM). */
-  def vacuumVersioned(name: String, keepGenerations: Int = 2): Unit = {
-    require(keepGenerations >= 1, "vacuumVersioned: must keep >= 1 generation")
+  def vacuumVersioned(name: String): Unit = {
     val committed = committedGens(name)
-    val keep = committed.takeRight(keepGenerations).toSet
+    val keep = committed.takeRight(KeepGenerations).toSet
     val live = committed.lastOption.getOrElse(Long.MinValue)
     genDirs(name)
       .filter(g => !keep.contains(g) && g < live)
       .foreach(g => fs.delete(new Path(path(name), s"g$g"), true))
-    committed.dropRight(keepGenerations)
+    committed.dropRight(KeepGenerations)
       .foreach(g => fs.delete(new Path(manifestDir(name), f"$g%020d"), true))
   }
 

@@ -48,17 +48,25 @@ object Dedup {
     * through their other, discriminating bands. */
   val DefaultMaxBandFreq: Option[Int] = Some(1000)
 
+  /** Shingle width of every near-dup family ([[shingles]],
+    * [[positionalShingleHashes]]): word 3-grams. */
+  val ShingleN = 3
+
+  /** Hamming radius of the SimHash/pHash pair joins
+    * ([[simhashPairs]], [[simhashPairsAgainst]]). */
+  val MaxHamming = 3
+
   /** Whitespace tokens of a document. */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** Distinct word n-gram shingles of a token array. Empty for
-    * documents shorter than n tokens (guarded: Spark's `sequence`
-    * would otherwise generate a DESCENDING range for size < n). */
-  def shingles(ws: Column, n: Int = 3): Column =
-    when(size(ws) >= n,
+  /** Distinct word [[ShingleN]]-gram shingles of a token array. Empty
+    * for documents shorter than [[ShingleN]] tokens (guarded: Spark's
+    * `sequence` would otherwise generate a DESCENDING range). */
+  def shingles(ws: Column): Column =
+    when(size(ws) >= ShingleN,
       array_distinct(transform(
-        sequence(lit(0), size(ws) - n),
-        i => concat_ws(" ", (1 to n).map(k => element_at(ws, i + k)): _*))))
+        sequence(lit(0), size(ws) - ShingleN),
+        i => concat_ws(" ", (1 to ShingleN).map(k => element_at(ws, i + k)): _*))))
       .otherwise(array().cast("array<string>"))
 
   /** Portable 64-bit hash of every shingle. */
@@ -68,20 +76,20 @@ object Dedup {
   /** POSITIONAL shingle hashes — the ordered sequence (no distinct),
     * as winnowing requires: selection picks window MINIMA over the
     * positional stream, so de-duplicating first would change which
-    * windows exist. Empty below `n` tokens like [[shingles]]. */
-  def positionalShingleHashes(ws: Column, n: Int = 3): Column =
-    when(size(ws) >= n,
+    * windows exist. Empty below [[ShingleN]] tokens like [[shingles]]. */
+  def positionalShingleHashes(ws: Column): Column =
+    when(size(ws) >= ShingleN,
       transform(
-        sequence(lit(0), size(ws) - n),
+        sequence(lit(0), size(ws) - ShingleN),
         i => portableHash64(
-          concat_ws(" ", (1 to n).map(k => element_at(ws, i + k)): _*))))
+          concat_ws(" ", (1 to ShingleN).map(k => element_at(ws, i + k)): _*))))
       .otherwise(array().cast("array<bigint>"))
 
   /** Winnowing selection (Schleimer/Wilkerson/Aiken's MOSS scheme,
     * public) over an ALREADY-MATERIALIZED positional hash array:
     * slide a `w`-window over the stream and keep each window's
     * MINIMUM — the guarantee is that any shared run of
-    * ≥ w+shingleN−1 tokens between two documents yields at least one
+    * ≥ w+[[ShingleN]]−1 tokens between two documents yields at least one
     * shared selected hash, while the expected index density drops to
     * ~2/(w+1) of the full shingle set. THE index-size dial for
     * sub-document dedup at 100 TB: same detection guarantee for long
@@ -119,12 +127,11 @@ object Dedup {
     * Returns the persisted frame. */
   def buildWinnowIndex(store: graft.io.TableStore, docs: DataFrame,
                        idCol: String, textCol: String, window: Int,
-                       table: String = "winnow_prints",
-                       shingleN: Int = 3): DataFrame = {
+                       table: String = "winnow_prints"): DataFrame = {
     val phsTable = table + "_phs"
     store.overwrite(phsTable,
       docs.select(col(idCol),
-          positionalShingleHashes(tokens(col(textCol)), shingleN).as("__phs"))
+          positionalShingleHashes(tokens(col(textCol))).as("__phs"))
         .filter(size(col("__phs")) > 0))
     store.overwrite(table,
       store.read(phsTable)
@@ -141,21 +148,20 @@ object Dedup {
     array_min(transform(hs, h => minhashFn(h, i)))
 
   /** (doc id, text) → one row per doc with minhash signature columns
-    * mh0..mh{n-1}. Documents with fewer than `shingleN` tokens drop
+    * mh0..mh{n-1}. Documents with fewer than [[ShingleN]] tokens drop
     * out (no shingles → no signature). */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int = 3): DataFrame = {
+  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val withHs = docs
       .withColumn("__ws", tokens(col(textCol)))
-      .filter(size(col("__ws")) >= shingleN)
-      .withColumn("__hs", shingleHashes(shingles(col("__ws"), shingleN)))
+      .filter(size(col("__ws")) >= ShingleN)
+      .withColumn("__hs", shingleHashes(shingles(col("__ws"))))
     (0 until NumHashes)
       .foldLeft(withHs) { (df, i) => df.withColumn(s"mh$i", minhashSig(col("__hs"), i)) }
       .drop("__ws")
   }
 
   /** Shingle-hash frame of a corpus: one row per document (shorter
-    * than `shingleN` tokens → dropped) with its distinct shingle-hash
+    * than [[ShingleN]] tokens → dropped) with its distinct shingle-hash
     * array as `__hs`, plus `extraCols` carried through. This is the
     * OUTPUT OF THE DOMINANT CORPUS SCAN — every near-dup family
     * (MinHash bands, SimHash votes, inverted-index Jaccard,
@@ -163,12 +169,12 @@ object Dedup {
     * the registry persists it (`Indexes.shingles`) instead of
     * recomputing the md5 pipeline per consumer. */
   def shingleFrame(docs: DataFrame, idCol: String, textCol: String,
-                   extraCols: Seq[String] = Nil, shingleN: Int = 3): DataFrame =
+                   extraCols: Seq[String] = Nil): DataFrame =
     docs
       .select((col(idCol) +: extraCols.map(col)) :+ tokens(col(textCol)).as("__ws"): _*)
-      .filter(size(col("__ws")) >= shingleN)
+      .filter(size(col("__ws")) >= ShingleN)
       .select((col(idCol) +: extraCols.map(col)) :+
-        shingleHashes(shingles(col("__ws"), shingleN)).as("__hs"): _*)
+        shingleHashes(shingles(col("__ws"))).as("__hs"): _*)
 
   /** MinHash signature columns mh0..mh{n-1} appended to a
     * [[shingleFrame]]-shaped frame (anything carrying `__hs`) — pure
@@ -259,9 +265,8 @@ object Dedup {
     * The signature frame is referenced three times (candidates + both
     * set lookups) — hand it the PERSISTED index so those are parquet
     * reads, not three md5-pipeline scans. */
-  def scoredCandidatePairs(sigs: DataFrame, idCol: String,
-                           maxBandFreq: Option[Int] = DefaultMaxBandFreq): DataFrame = {
-    val withSets = lshCandidates(sigs, idCol, maxBandFreq)
+  def scoredCandidatePairs(sigs: DataFrame, idCol: String): DataFrame = {
+    val withSets = lshCandidates(sigs, idCol)
       .join(sigs.select(col(idCol).as("d1"), col("__hs").as("hs1")), "d1")
       .join(sigs.select(col(idCol).as("d2"), col("__hs").as("hs2")), "d2")
     val (inter, uni) = jaccardParts(col("hs1"), col("hs2"))
@@ -465,10 +470,14 @@ object Dedup {
     within.unionByName(cross)
   }
 
+  /** Share of a corpus doc's shingles, in percent, that it must share
+    * with the eval suite to be flagged contaminated. */
+  val ContaminationPercent = 10
+
   /** Benchmark-contamination stats: for every corpus document, how
     * many of its distinct word n-gram shingles also appear anywhere
     * in `evalDocs` (the held-out benchmark/eval suite), plus a
-    * contamination flag at `thresholdPercent` shared shingles. The
+    * contamination flag at [[ContaminationPercent]] shared shingles. The
     * decontamination step of a training-data pipeline — a corpus doc
     * overlapping an eval document n-gram-wise leaks the benchmark
     * into training.
@@ -483,13 +492,9 @@ object Dedup {
     * counts (partial aggs apply). */
   def contaminationStatsFromHashes(corpusShingleRows: DataFrame,
                                    evalDocs: DataFrame,
-                                   idCol: String, textCol: String,
-                                   shingleN: Int = 3,
-                                   thresholdPercent: Int = 10): DataFrame = {
-    require(thresholdPercent >= 0 && thresholdPercent <= 100,
-      s"contaminationStatsFromHashes: thresholdPercent out of range: $thresholdPercent")
+                                   idCol: String, textCol: String): DataFrame = {
     val evalHashes = evalDocs
-      .select(explode(shingleHashes(shingles(tokens(col(textCol)), shingleN))).as("__h"))
+      .select(explode(shingleHashes(shingles(tokens(col(textCol))))).as("__h"))
       .distinct()
     // ONE corpus pass: mark each shingle row's eval membership with a
     // broadcast left join, then count total and shared in the same
@@ -502,7 +507,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_shingles"),
         coalesce(sum("__hit"), lit(0L)).as("n_shared"))
       .withColumn("contaminated",
-        when(col("n_shared") * 100 >= col("n_shingles") * thresholdPercent, lit(1))
+        when(col("n_shared") * 100 >= col("n_shingles") * ContaminationPercent, lit(1))
           .otherwise(lit(0)))
   }
 
@@ -694,7 +699,7 @@ object Dedup {
     * @return the updated (`id`, `component`) map
     */
   def mergeComponents(labels: DataFrame, newEdges: DataFrame,
-                      maxIter: Int = 25, reliable: Boolean = false): DataFrame = {
+                      reliable: Boolean = false): DataFrame = {
     val ends = newEdges.select(col("d1").as("id"))
       .unionByName(newEdges.select(col("d2").as("id"))).distinct()
     // Components with at least one endpoint in the batch. Tiny by
@@ -713,7 +718,7 @@ object Dedup {
       .select(col("id").as("d1"), col("component").as("d2"))
     val sub = connectedComponents(
       newEdges.select(col("d1"), col("d2")).unionByName(starEdges),
-      maxIter, reliable)
+      reliable = reliable)
     labels.join(broadcast(affected), Seq("component"), "left_anti")
       .select(col("id"), col("component"))
       .unionByName(sub.select(col("id"), col("component")))
@@ -743,7 +748,7 @@ object Dedup {
     // The cap is keyed on the CORPUS index (that's where a degenerate
     // bucket accumulates over batches); the batch side probes pruned.
     lshCandidateHitsAgainstBands(batchSigs, idCol,
-      corpusBandRows(corpusSigs, idCol, maxBandFreq))
+      cappedBandRows(corpusSigs, idCol, "d2", maxBandFreq))
 
   /** Corpus-side CAPPED band rows (`d2`, `__band_d2`, `__bsig_d2`),
     * prepared once for REPEATED probes: a multi-trigger consumer
@@ -753,9 +758,8 @@ object Dedup {
     * that corpus-wide pass per trigger. Compute this once, `persist`
     * it for the stream's lifetime, and hand it to
     * [[lshCandidateHitsAgainstBands]]. */
-  def corpusBandRows(corpusSigs: DataFrame, idCol: String,
-                     maxBandFreq: Option[Int] = DefaultMaxBandFreq): DataFrame =
-    cappedBandRows(corpusSigs, idCol, "d2", maxBandFreq)
+  def corpusBandRows(corpusSigs: DataFrame, idCol: String): DataFrame =
+    cappedBandRows(corpusSigs, idCol, "d2", DefaultMaxBandFreq)
 
   /** [[lshCandidateHits]] against PREPARED corpus band rows (a
     * [[corpusBandRows]] frame, typically persisted by the caller):
@@ -843,10 +847,10 @@ object Dedup {
   private final case class ComboBands(combos: Seq[Seq[Int]], offsets: Seq[Int],
                                       widths: Seq[Int])
 
-  private def comboBands(fpBits: Int, maxHamming: Int): ComboBands = {
-    val b = maxHamming + 3
+  private def comboBands(fpBits: Int): ComboBands = {
+    val b = MaxHamming + 3
     require(fpBits <= 64 && fpBits >= b,
-      s"fpBits must be in [$b, 64] for radius $maxHamming: $fpBits")
+      s"fpBits must be in [$b, 64] for radius $MaxHamming: $fpBits")
     val baseW = fpBits / b
     val rem = fpBits % b
     val widths = (0 until b).map(k => baseW + (if (k < rem) 1 else 0))
@@ -910,9 +914,9 @@ object Dedup {
     * so the all-pairs oracles stay bit-exact (DedupSpec pins that
     * the default prunes nothing there). */
   def simhashPairs(fps: DataFrame, idCol: String, fpCol: String,
-                   maxHamming: Int = 3, fpBits: Int = 32,
+                   fpBits: Int = 32,
                    maxBandFreq: Option[Int] = DefaultMaxBandFreq): DataFrame = {
-    val cb = comboBands(fpBits, maxHamming)
+    val cb = comboBands(fpBits)
     val rows = comboRows(fps, cb, idCol, fpCol, "d1", "fp1", "__band", "__bv")
     // Pruning one side suffices for the self join: a pair needs its
     // bucket on both sides (same discipline as [[lshCandidates]]).
@@ -923,7 +927,7 @@ object Dedup {
       .select(col("d1"), col("d2"), col("fp1"), col("fp2"))
       .distinct()
       .withColumn("hamming", hamming(col("fp1"), col("fp2")).cast("int"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= MaxHamming)
   }
 
   /** Batch × corpus banded Hamming pairs: [[simhashPairs]]'s
@@ -935,12 +939,13 @@ object Dedup {
     * SimHash/phash family. Hot combo buckets are capped on the
     * CORPUS side (a pair needs its bucket on both sides, and the
     * corpus is where degenerate occupancy accumulates). Returns
-    * (batch id as d1, corpus id as d2, fingerprints, hamming). */
+    * (batch id as d1, corpus id as d2, fingerprints, hamming). The
+    * fingerprints are 64-bit, as the image and audio pair flows
+    * produce. */
   def simhashPairsAgainst(batchFps: DataFrame, corpusFps: DataFrame,
                           idCol: String, fpCol: String,
-                          maxHamming: Int = 3, fpBits: Int = 32,
                           maxBandFreq: Option[Int] = DefaultMaxBandFreq): DataFrame = {
-    val cb = comboBands(fpBits, maxHamming)
+    val cb = comboBands(64)
     val corpus = cappedComboRows(
       comboRows(corpusFps, cb, idCol, fpCol, "d2", "fp2", "__rband", "__rbv"),
       "__rband", "__rbv", maxBandFreq)
@@ -950,7 +955,7 @@ object Dedup {
       .select(col("d1"), col("d2"), col("fp1"), col("fp2"))
       .distinct()
       .withColumn("hamming", hamming(col("fp1"), col("fp2")).cast("int"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= MaxHamming)
   }
 
   /** Per-document shingle NOVELTY — the fraction of a document's

@@ -48,6 +48,34 @@ object Graph {
   /** Unrolled-plan depth guard — see the class doc. */
   val MaxIters = 16
 
+  /** Damping factor as a percent (85 = the classic 0.85). */
+  val DampingPct = 85
+
+  /** CONTRACT CHECK: `universe` (column `v`) must be a superset of
+    * every edge endpoint. A violation would otherwise be silently
+    * wrong, not loudly: a source u outside the universe contributes
+    * nothing (the rank join filters it), a destination v outside loses
+    * its mass in the left join — while the edge's weight STILL
+    * inflates u's out-edge denominator, deflating its real neighbors'
+    * ranks. The check is embedded IN the lazy plan (raise_error on the
+    * first violating edge at execution time — no driver action at
+    * construction): two equi joins against the |V|-row universe whose
+    * exchanges canonicalize with the iteration joins, so the marginal
+    * cost is one pass over the edges. */
+  private def checkedEdges(op: String, edges: DataFrame, universe: DataFrame): DataFrame =
+    edges
+      .join(universe.select(col("v").as("u"), lit(1L).as("__su")),
+        Seq("u"), "left")
+      .join(universe.select(col("v"), lit(1L).as("__sv")),
+        Seq("v"), "left")
+      .select(col("u"), col("v"),
+        when(col("__su").isNull || col("__sv").isNull,
+          raise_error(concat(
+            lit(s"$op: edge endpoint outside node universe: ("),
+            col("u").cast("string"), lit(" -> "),
+            col("v").cast("string"), lit(")"))).cast("bigint"))
+          .otherwise(col("w")).as("w"))
+
   /** Damped, weighted PageRank.
     *
     * @param edges  (u, v, w) directed weighted edges, `w` positive
@@ -56,58 +84,31 @@ object Graph {
     *               nodes with no edges, which hold the teleport floor).
     * @param nodeCol node id column name in `nodes`.
     * @param iters  power-iteration count (unrolled by oracles).
-    * @param dampingPct damping factor as a percent (85 = classic 0.85).
     * @return (v, rank) — `nodeCol`'s values under the name `v`, rank in
     *         units of 1/[[Scale]].
     */
   def pageRank(edges: DataFrame, nodes: DataFrame, nodeCol: String,
-               iters: Int, dampingPct: Int = 85,
-               validateEdges: Boolean = true): DataFrame = {
+               iters: Int, validateEdges: Boolean = true): DataFrame = {
     require(iters >= 1 && iters <= MaxIters,
       s"pageRank: iters out of range: $iters")
-    require(dampingPct >= 0 && dampingPct <= 100,
-      s"pageRank: dampingPct out of range: $dampingPct")
     val universe = nodes.select(col(nodeCol).as("v")).distinct()
-    // CONTRACT CHECK (`validateEdges`): `nodes` must be a superset of
-    // every edge endpoint. A violation would otherwise be silently
-    // wrong, not loudly: a source u outside the universe contributes
-    // nothing (the rank join filters it), a destination v outside
-    // loses its mass in the left join — while the edge's weight STILL
-    // inflates u's out-edge denominator, deflating its real
-    // neighbors' ranks. The check is embedded IN the lazy plan
-    // (raise_error on the first violating edge at execution time —
-    // no driver action at construction): two equi joins against the
-    // |V|-row universe whose exchanges canonicalize with the
-    // iteration joins, so the marginal cost is one pass over the
-    // edges. Callers on a measured hot path with an upstream
-    // guarantee may disable it.
-    val checkedEdges =
-      if (!validateEdges) edges
-      else edges
-        .join(universe.select(col("v").as("u"), lit(1L).as("__su")),
-          Seq("u"), "left")
-        .join(universe.select(col("v"), lit(1L).as("__sv")),
-          Seq("v"), "left")
-        .select(col("u"), col("v"),
-          when(col("__su").isNull || col("__sv").isNull,
-            raise_error(concat(
-              lit("pageRank: edge endpoint outside node universe: ("),
-              col("u").cast("string"), lit(" -> "),
-              col("v").cast("string"), lit(")"))).cast("bigint"))
-            .otherwise(col("w")).as("w"))
+    // Callers on a measured hot path with an upstream guarantee may
+    // skip the `checkedEdges` contract check.
+    val checked =
+      if (!validateEdges) edges else checkedEdges("pageRank", edges, universe)
     // |V| rides every rank row as a broadcast 1-row frame — the
     // teleport and seed terms are exact integer expressions over it,
     // mirrored by the oracle's scalar subqueries.
     val nn = universe.agg(count(lit(1)).as("__n"))
     val base = universe.crossJoin(broadcast(nn))
     val seed = expr(s"$Scale div __n")
-    val teleport = expr(s"((100 - $dampingPct) * ($Scale div __n)) div 100")
+    val teleport = expr(s"((100 - $DampingPct) * ($Scale div __n)) div 100")
     // Per-edge ppm transition weights; the subtree recurs once per
     // iteration and ReuseExchange evaluates its shuffles once.
-    val outW = checkedEdges.groupBy(col("u")).agg(sum(col("w")).as("__tw"))
-    val e2 = checkedEdges.join(outW, "u")
+    val outW = checked.groupBy(col("u")).agg(sum(col("w")).as("__tw"))
+    val e2 = checked.join(outW, "u")
       .select(col("u"), col("v"), expr(s"(w * $PpmScale) div __tw").as("p"))
-    val contribExpr = expr(s"($dampingPct * r * p) div ${100L * PpmScale}")
+    val contribExpr = expr(s"($DampingPct * r * p) div ${100L * PpmScale}")
     var rank = base.select(col("v"), seed.as("r"))
     for (_ <- 1 to iters) {
       val contrib = e2.join(rank.withColumnRenamed("v", "u"), "u")
@@ -138,12 +139,9 @@ object Graph {
     *              seed would silently leak teleport mass). */
   def personalizedPageRank(edges: DataFrame, nodes: DataFrame,
                            nodeCol: String, seeds: DataFrame,
-                           iters: Int, dampingPct: Int = 85,
-                           validateEdges: Boolean = true): DataFrame = {
+                           iters: Int): DataFrame = {
     require(iters >= 1 && iters <= MaxIters,
       s"personalizedPageRank: iters out of range: $iters")
-    require(dampingPct >= 0 && dampingPct <= 100,
-      s"personalizedPageRank: dampingPct out of range: $dampingPct")
     val universe = nodes.select(col(nodeCol).as("v")).distinct()
     val seedSet = seeds.select(col(nodeCol).as("v")).distinct()
     val checkedSeeds = seedSet
@@ -152,21 +150,7 @@ object Graph {
           raise_error(concat(lit("personalizedPageRank: seed outside " +
             "node universe: "), col("v").cast("string"))).cast("string"))
         .otherwise(col("v")).as("v"))
-    val checkedEdges =
-      if (!validateEdges) edges
-      else edges
-        .join(universe.select(col("v").as("u"), lit(1L).as("__su")),
-          Seq("u"), "left")
-        .join(universe.select(col("v"), lit(1L).as("__sv")),
-          Seq("v"), "left")
-        .select(col("u"), col("v"),
-          when(col("__su").isNull || col("__sv").isNull,
-            raise_error(concat(
-              lit("personalizedPageRank: edge endpoint outside node " +
-                "universe: ("),
-              col("u").cast("string"), lit(" -> "),
-              col("v").cast("string"), lit(")"))).cast("bigint"))
-            .otherwise(col("w")).as("w"))
+    val checked = checkedEdges("personalizedPageRank", edges, universe)
     val ns = checkedSeeds.agg(count(lit(1)).as("__ns"))
     // Seed membership rides the rank frame as a 0/1 column; the
     // teleport expression gates on it, so the recurrence stays one
@@ -178,11 +162,11 @@ object Graph {
       .crossJoin(broadcast(ns))
     val seedMass = expr(s"__seed * ($Scale div __ns)")
     val teleport =
-      expr(s"__seed * (((100 - $dampingPct) * ($Scale div __ns)) div 100)")
-    val outW = checkedEdges.groupBy(col("u")).agg(sum(col("w")).as("__tw"))
-    val e2 = checkedEdges.join(outW, "u")
+      expr(s"__seed * (((100 - $DampingPct) * ($Scale div __ns)) div 100)")
+    val outW = checked.groupBy(col("u")).agg(sum(col("w")).as("__tw"))
+    val e2 = checked.join(outW, "u")
       .select(col("u"), col("v"), expr(s"(w * $PpmScale) div __tw").as("p"))
-    val contribExpr = expr(s"($dampingPct * r * p) div ${100L * PpmScale}")
+    val contribExpr = expr(s"($DampingPct * r * p) div ${100L * PpmScale}")
     var rank = base.select(col("v"), col("__seed"), col("__ns"), seedMass.as("r"))
     for (_ <- 1 to iters) {
       val contrib = e2.join(rank.select(col("v").as("u"), col("r")), "u")

@@ -51,11 +51,10 @@ object Incremental {
     rows.filter(r => matches(r, schemaName, tableName) && !r.isNullAt(2))
       .map(_.getTimestamp(2)).maxOption
 
-  /** Read the watermark for (schemaName, tableName), or `default` when
-    * the target has never been loaded. */
-  def readWatermark(store: TableStore, schemaName: String, tableName: String,
-                    default: Timestamp = DefaultWatermark): Timestamp =
-    lock.synchronized(stored(rows(store), schemaName, tableName).getOrElse(default))
+  /** Read the watermark for (schemaName, tableName), or
+    * [[DefaultWatermark]] when the target has never been loaded. */
+  def readWatermark(store: TableStore, schemaName: String, tableName: String): Timestamp =
+    lock.synchronized(stored(rows(store), schemaName, tableName).getOrElse(DefaultWatermark))
 
   /** Advance the watermark: upsert (schemaName, tableName) → newMax and
     * commit the table. Reference semantics = INSERT-if-absent (P11

@@ -45,14 +45,14 @@ object LmScore {
   /** Per-document conditional bigram NLL, float and integer-skeleton
     * legs in one pass.
     *
-    * @param bf per-doc bigram frequencies (docCol, bgCol, tfCol) —
+    * @param bf per-doc bigram frequencies (doc_id, bg, tf) —
     *           [[graft.queries.Indexes.bigramFrequencies]]'s shape;
-    *           `bgCol` is the two tokens joined by one space.
-    * @return (docCol, n_bigrams, nll_bits double, skel_bits bigint) —
+    *           `bg` is the two tokens joined by one space.
+    * @return (doc_id, n_bigrams, nll_bits double, skel_bits bigint) —
     *         one row per doc PRESENT in `bf` (bigram-less docs are the
     *         caller's left join, as in q111). */
-  def bigramNll(bf: DataFrame, docCol: String = "doc_id",
-                bgCol: String = "bg", tfCol: String = "tf"): DataFrame = {
+  def bigramNll(bf: DataFrame): DataFrame = {
+    val (docCol, bgCol, tfCol) = ("doc_id", "bg", "tf")
     val cnt = bf.groupBy(bgCol).agg(sum(col(tfCol)).as("__c"))
     val pfx = cnt
       .groupBy(split(col(bgCol), " ").getItem(0).as("__w1"))

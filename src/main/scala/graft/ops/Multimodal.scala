@@ -686,6 +686,12 @@ object Multimodal {
     bos.toByteArray
   }
 
+  /** Sample rate the WAV encoders write into the fmt chunk: 8 kHz. */
+  val SampleRate = 8000
+
+  /** Block size of [[encodeAdpcmImaWav]]'s ADPCM blocks, in bytes. */
+  val AdpcmBlockAlign = 256
+
   /** Real 16-bit PCM WAV ENCODER (the inverse of [[WavPcmCodec]]'s
     * 16-bit mono subset): RIFF/WAVE container, PCM fmt chunk, signed
     * little-endian samples. 16-bit normalization is `s / 32768f` —
@@ -694,7 +700,7 @@ object Multimodal {
     * round-trip contract as [[encodeBmp24Gray]]/[[encodePngGray]],
     * extending the oracle-gated media chain to the AUDIO codec
     * (q104). */
-  def encodeWavPcm16(samples: Array[Short], sampleRate: Int = 8000): Array[Byte] = {
+  def encodeWavPcm16(samples: Array[Short]): Array[Byte] = {
     val dataLen = samples.length * 2
     val out = new Array[Byte](44 + dataLen)
     val buf = java.nio.ByteBuffer.wrap(out)
@@ -704,8 +710,8 @@ object Multimodal {
       .put("fmt ".getBytes("US-ASCII")).putInt(16)
       .putShort(1)                       // PCM
       .putShort(1)                       // mono
-      .putInt(sampleRate)
-      .putInt(sampleRate * 2)            // byte rate
+      .putInt(SampleRate)
+      .putInt(SampleRate * 2)            // byte rate
       .putShort(2)                       // block align
       .putShort(16)                      // bits per sample
       .put("data".getBytes("US-ASCII")).putInt(dataLen): Unit
@@ -715,7 +721,7 @@ object Multimodal {
   }
 
   /** Real IMA ADPCM ENCODER (the lossy inverse of [[AdpcmImaCodec]]):
-    * mono 4-bit codes in `blockAlign`-byte blocks inside a RIFF/WAVE
+    * mono 4-bit codes in [[AdpcmBlockAlign]]-byte blocks inside a RIFF/WAVE
     * container with format tag 0x11, a spec-compliant 20-byte fmt
     * chunk (cbSize=2 + samplesPerBlock) and the `fact` sample count
     * the decoder truncates by. The encoder runs the DECODER'S
@@ -723,10 +729,8 @@ object Multimodal {
     * approximation against the step table), so encode→decode error
     * is exactly the quantizer's — the property the drift spec and
     * the q147 tolerance gate measure. ~4:1 vs PCM16. */
-  def encodeAdpcmImaWav(samples: Array[Short], sampleRate: Int = 8000,
-                        blockAlign: Int = 256): Array[Byte] = {
-    require(blockAlign > 4 && blockAlign % 4 == 0,
-      s"encodeAdpcmImaWav: blockAlign=$blockAlign")
+  def encodeAdpcmImaWav(samples: Array[Short]): Array[Byte] = {
+    val blockAlign = AdpcmBlockAlign
     val samplesPerBlock = (blockAlign - 4) * 2 + 1
     val nBlocks = math.max(1,
       (samples.length + samplesPerBlock - 1) / samplesPerBlock)
@@ -739,8 +743,8 @@ object Multimodal {
       .put("fmt ".getBytes("US-ASCII")).putInt(20)
       .putShort(0x11)                    // IMA ADPCM
       .putShort(1)                       // mono
-      .putInt(sampleRate)
-      .putInt(sampleRate * blockAlign / samplesPerBlock) // byte rate
+      .putInt(SampleRate)
+      .putInt(SampleRate * blockAlign / samplesPerBlock) // byte rate
       .putShort(blockAlign.toShort)
       .putShort(4)                       // bits per code
       .putShort(2)                       // cbSize
@@ -1036,7 +1040,7 @@ object Multimodal {
     * scale = max|X[k]| — so encode→decode error is exactly the
     * quantizer's, the property the drift spec and the q160 tolerance
     * gate measure (the [[encodeAdpcmImaWav]] contract). */
-  def encodeMdctWav(samples: Array[Short], sampleRate: Int = 8000): Array[Byte] = {
+  def encodeMdctWav(samples: Array[Short]): Array[Byte] = {
     val x = new Array[Float](samples.length)
     var i = 0
     while (i < x.length) { x(i) = samples(i) / 32768f; i += 1 }
@@ -1050,8 +1054,8 @@ object Multimodal {
       .put("fmt ".getBytes("US-ASCII")).putInt(20)
       .putShort(MdctFormatTag.toShort)
       .putShort(1)                          // mono
-      .putInt(sampleRate)
-      .putInt(sampleRate * MdctFrameBytes / MdctM) // byte rate
+      .putInt(SampleRate)
+      .putInt(SampleRate * MdctFrameBytes / MdctM) // byte rate
       .putShort(MdctFrameBytes.toShort)     // blockAlign = one frame
       .putShort(4)                          // bits per coefficient
       .putShort(2)                          // cbSize
@@ -1357,34 +1361,38 @@ object Multimodal {
       .toDF("doc_id", "phash")
   }
 
+  /** Samples per energy window of [[audioFingerprint64]]. */
+  val AfpWindow = 2
+
+  /** [[audioFingerprint64]]'s re-quantization scale: 16-bit PCM. */
+  val AfpQuantScale = 32768
+
   /** 64-bit audio energy-contour fingerprint: the audio analogue of
     * [[dhash64]], in the spirit of the Haitsma–Kalker energy-
     * difference fingerprint but time-domain and integer-exact so an
     * ANSI-SQL oracle reproduces it bit-for-bit. Samples re-quantize
     * to exact ints (`round(f·scale)` — lossless for PCM sources); the
-    * first `65·windowSize` samples (the fingerprint CLIP — the audio
+    * first `65·`[[AfpWindow]] samples (the fingerprint CLIP — the audio
     * analogue of dHash's fixed 18×16 thumbnail; missing samples count
     * as silence) split into 65 fixed windows whose energy is the SUM
     * of absolute sample values, and bit k records whether window k's
     * energy exceeds window k+1's (strict >). Energy direction
     * survives volume scaling and small local edits — the property
     * near-dup needs — and the fingerprint feeds the SAME banded
-    * Hamming machinery as the image family. The default 2-sample
-    * window is deliberately small: like dHash's 4-byte pooled cells,
+    * Hamming machinery as the image family. The 2-sample window is
+    * deliberately small: like dHash's 4-byte pooled cells,
     * small windows keep adjacent energies high-variance, which is
     * what separates true near-dups from the background (measured at
     * sf0.01: radius 3 recovers 25 of the 27 planted pairs with ZERO
     * background collisions; 8-sample windows collapse to near-ties
     * and admit hundreds). Empty signal → 0. */
-  def audioFingerprint64(samples: Array[Float], quantScale: Int = 32768,
-                         windowSize: Int = 2): Long = {
-    require(windowSize >= 1, s"audioFingerprint64: windowSize=$windowSize")
+  def audioFingerprint64(samples: Array[Float]): Long = {
     val energy = new Array[Long](65)
-    val n = math.min(samples.length, 65 * windowSize)
+    val n = math.min(samples.length, 65 * AfpWindow)
     var i = 0
     while (i < n) {
-      energy(i / windowSize) +=
-        math.abs(math.round(samples(i) * quantScale).toLong)
+      energy(i / AfpWindow) +=
+        math.abs(math.round(samples(i) * AfpQuantScale).toLong)
       i += 1
     }
     var fp = 0L
@@ -1404,15 +1412,14 @@ object Multimodal {
     * amortizes per partition, the shuffle carries 16 bytes per clip,
     * candidate generation downstream is a combo-banded hash join. */
   def audioFingerprints(media: DataFrame,
-                        mkCodec: () => MediaCodec = () => new WavPcmCodec,
-                        quantScale: Int = 32768): DataFrame = {
+                        mkCodec: () => MediaCodec = () => new WavPcmCodec): DataFrame = {
     import media.sparkSession.implicits._
     media.select(col("doc_id").cast("long"), col("content"))
       .as[(Long, Array[Byte])]
       .mapPartitions { rows =>
         val codec = mkCodec().init()
         rows.map { case (id, bytes) =>
-          (id, audioFingerprint64(codec.decode(bytes), quantScale))
+          (id, audioFingerprint64(codec.decode(bytes)))
         }
       }
       .toDF("doc_id", "afp")
@@ -1461,16 +1468,19 @@ object Multimodal {
     }
   }
 
+  /** Bytes in one [[sampleFrames]] frame payload. */
+  val FrameBytes = 16
+
   /** Frame sampling: one row per `everyMs` tick of `duration_ms`, the
-    * frame payload a deterministic byte slice of the blob (stub for a
+    * frame payload a deterministic [[FrameBytes]]-byte slice of the blob (stub for a
     * real frame grab at that timestamp). Pure Catalyst — `sequence`
     * generates tick arrays, `explode` fans them out, binary
     * `substring` slices; no UDF, no driver loop. */
-  def sampleFrames(media: DataFrame, everyMs: Long, frameBytes: Int = 16): DataFrame =
+  def sampleFrames(media: DataFrame, everyMs: Long): DataFrame =
     media
       .withColumn("frame_ms",
         explode(sequence(lit(0L), col("duration_ms"), lit(everyMs))))
       .withColumn("frame",
-        expr(s"substring(content, CAST(frame_ms % greatest(octet_length(content), 1) AS INT) + 1, $frameBytes)"))
+        expr(s"substring(content, CAST(frame_ms % greatest(octet_length(content), 1) AS INT) + 1, $FrameBytes)"))
       .select(col("doc_id"), col("media_type"), col("frame_ms"), col("frame"))
 }

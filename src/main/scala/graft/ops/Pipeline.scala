@@ -416,19 +416,18 @@ object Pipeline {
     * after the fault is fixed converges. The report is not appended
     * after a failure: the first failure in stage order is rethrown
     * once every stage has finished, the others attached as
-    * suppressed. */
+    * suppressed. The JDBC dimensions mark deletes at `reportDt`, the
+    * run's pinned stand-in for the reference's `now()`. */
   def run(spark: SparkSession, store: TableStore, srcDir: String,
           reportDt: Timestamp, archive: Boolean = false,
-          dimDb: Option[Sources.JdbcSpec] = None,
-          dimRunTs: Option[Timestamp] = None): Unit = {
+          dimDb: Option[Sources.JdbcSpec] = None): Unit = {
     val fileStages: Seq[(String, () => Unit)] = Seq(
       "transactions" -> (() => runTransactions(spark, store, srcDir, archive)),
       "blacklist" -> (() => runBlacklist(spark, store, srcDir, archive)),
       "terminals" -> (() => runTerminals(spark, store, srcDir, archive)))
     val dimStages = dimDb.toSeq.flatMap { db =>
-      val ts = dimRunTs.getOrElse(reportDt)
       Seq(cardsDim(db), accountsDim(db), clientsDim(db))
-        .map(d => d.wmKey -> (() => runJdbcDim(spark, store, d, ts)))
+        .map(d => d.wmKey -> (() => runJdbcDim(spark, store, d, reportDt)))
     }
     concurrently(fileStages ++ dimStages).foreach(e => throw e)
     runReport(spark, store, reportDt)

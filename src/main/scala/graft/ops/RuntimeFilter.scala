@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * Shape at 100 TB: the key-side sketch builds DISTRIBUTED
   * (`bloom_filter_agg` partials merge like any aggregate — registered
   * by [[graft.GraftExtensions]] from Spark's own runtime-filter
-  * machinery); only the finished sketch (bounded by `numBits`, ~128 KiB
-  * at the default) lands on the driver and re-enters the plan as a
+  * machinery); only the finished sketch (bounded by [[BloomBits]],
+  * 128 KiB) lands on the driver and re-enters the plan as a
   * BINARY LITERAL — the [[Similarity.MaxCentroids]] collect
   * discipline: bounded by construction, never data-proportional. The
   * fact side then drops non-matching rows INSIDE its scan stage
@@ -26,25 +26,20 @@ import org.apache.spark.sql.functions._
   */
 object RuntimeFilter {
 
-  /** Caps mirroring Spark's own runtime-filter creation limits (a
-    * sketch is a plan literal; an unbounded one is a driver OOM). */
-  val MaxBloomBits: Long = 1L << 26
-  val MaxBloomItems: Long = 4000000L
+  /** Sketch size: expected items and bits, inside Spark's own
+    * runtime-filter creation limits (2^26 bits, 4M items — a sketch is
+    * a plan literal; an unbounded one is a driver OOM). */
+  val BloomItems: Long = 100000L
+  val BloomBits: Long = 1L << 20
 
   /** Build the key-side sketch: distributed aggregate, bounded
     * driver-side result. Returns null when `keys` is empty (no rows →
     * the aggregate yields no sketch). */
-  def buildBloom(keys: DataFrame, key: Column,
-                 estItems: Long = 1000000L, numBits: Long = 1L << 20): Array[Byte] = {
-    require(estItems >= 1 && estItems <= MaxBloomItems,
-      s"buildBloom: estItems out of (0, $MaxBloomItems]: $estItems")
-    require(numBits >= 1 && numBits <= MaxBloomBits,
-      s"buildBloom: numBits out of (0, $MaxBloomBits]: $numBits")
+  def buildBloom(keys: DataFrame, key: Column): Array[Byte] =
     keys
       .agg(call_function("bloom_filter_agg", xxhash64(key),
-        lit(estItems), lit(numBits)).as("bf"))
+        lit(BloomItems), lit(BloomBits)).as("bf"))
       .collect()(0).getAs[Array[Byte]](0)
-  }
 
   /** Probe-side prune: keep rows the sketch MIGHT contain (all true
     * matches plus false positives — callers needing exact semantics
@@ -58,9 +53,8 @@ object RuntimeFilter {
     * whose `keyCol` appears in `keys`, with the fact side pruned
     * before the join's shuffle/broadcast. Row-identical to
     * `fact.join(keys, Seq(keyCol), "left_semi")` by construction. */
-  def bloomSemiJoin(fact: DataFrame, keys: DataFrame, keyCol: String,
-                    estItems: Long = 1000000L, numBits: Long = 1L << 20): DataFrame = {
-    val bloom = buildBloom(keys.select(col(keyCol)), col(keyCol), estItems, numBits)
+  def bloomSemiJoin(fact: DataFrame, keys: DataFrame, keyCol: String): DataFrame = {
+    val bloom = buildBloom(keys.select(col(keyCol)), col(keyCol))
     if (bloom == null) fact.filter(lit(false)) // empty key set → empty semi join
     else bloomPrune(fact, col(keyCol), bloom)
       .join(keys.select(col(keyCol)), Seq(keyCol), "left_semi")

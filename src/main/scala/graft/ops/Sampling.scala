@@ -204,6 +204,9 @@ object Sampling {
         .otherwise(array().cast("array<bigint>"))))
   }
 
+  /** Hash shards of [[ppsSample]]'s prefix-sum windows. */
+  val PpsShards = 32
+
   /** Probability-proportional-to-size (PPS) systematic sampling by
     * token mass: lay documents head-to-tail in deterministic hash
     * order and pick every document whose token interval contains a
@@ -220,21 +223,20 @@ object Sampling {
     * (Spark `div` truncates toward zero while other engines floor,
     * so negatives never reach a division).
     *
-    * Scale shape: `shards` hash shards, each with an independent
+    * Scale shape: [[PpsShards]] hash shards, each with an independent
     * prefix-sum window — the [[tokenBudget]] sharding discipline
     * built in rather than left to the caller. Selection is exact per
     * shard (every shard's token stream is sampled at the same rate),
-    * and no shard ever holds more than ~1/shards of the corpus in
-    * one sort partition. */
+    * and no shard ever holds more than ~1/[[PpsShards]] of the corpus
+    * in one sort partition. */
   def ppsSample(df: DataFrame, idCol: String, tokCol: Column,
-                step: Long, shards: Int = 32): DataFrame = {
+                step: Long): DataFrame = {
     require(step > 0, s"ppsSample: step=$step")
-    require(shards > 0, s"ppsSample: shards=$shards")
     val w = Window.partitionBy(col("shard"))
       .orderBy(sampleKey(col(idCol)), col(idCol))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     df.withColumn("n_tok", tokCol.cast("bigint"))
-      .withColumn("shard", pmod(sampleKey(col(idCol)), lit(shards.toLong)))
+      .withColumn("shard", pmod(sampleKey(col(idCol)), lit(PpsShards.toLong)))
       .withColumn("cum_tok", sum(col("n_tok")).over(w))
       .withColumn("n_hits",
         expr(s"greatest(cum_tok - 1, 0) div $step") -

@@ -207,9 +207,7 @@ object Scd2 {
                        batch: DataFrame, keys: Seq[String], tracked: Seq[String],
                        batchTs: Column, nBuckets: Int,
                        deleteKeys: Option[DataFrame] = None,
-                       deleteTs: Option[Column] = None,
-                       passthrough: Seq[String] = Nil,
-                       newTs: Option[Column] = None): Seq[Int] = {
+                       deleteTs: Option[Column] = None): Seq[Int] = {
     require(nBuckets > 0 && nBuckets <= (1 << 20),
       s"mergePartitioned: nBuckets must be in [1, 2^20], got $nBuckets")
     val kb = bucketCol(keys, nBuckets)
@@ -222,7 +220,7 @@ object Scd2 {
         .withColumn("effective_to", lit(null).cast("timestamp"))
         .withColumn("deleted_flg", lit(null).cast("string"))
       val boot = merge(emptyDim, batch, keys, tracked, batchTs,
-        deleteKeys, deleteTs, passthrough, newTs)
+        deleteKeys, deleteTs)
       store.overwritePartitioned(table, boot.withColumn(BucketColName, kb),
         Seq(BucketColName))
       return batch.select(kb.as("__b")).distinct()
@@ -267,7 +265,7 @@ object Scd2 {
       // identical, and the bucketed layout (partition pruning for the
       // NEXT, normal-sized merge) is preserved.
       val merged = merge(dim.drop(BucketColName), batch, keys, tracked,
-        batchTs, deleteKeys, deleteTs, passthrough, newTs)
+        batchTs, deleteKeys, deleteTs)
       store.swapSnapshotPartitioned(table,
         merged.withColumn(BucketColName, kb), Seq(BucketColName))
       // The whole directory was physically rewritten — the telemetry
@@ -282,7 +280,7 @@ object Scd2 {
     val batchScoped = batch.filter(kb.isin(affected: _*))
     val dkScoped = deleteKeys.map(_.filter(kb.isin(affected: _*)))
     val merged = merge(dimScoped, batchScoped, keys, tracked, batchTs,
-      dkScoped, deleteTs, passthrough, newTs)
+      dkScoped, deleteTs)
     // Every affected bucket emits rows (history is carried through and
     // a dirty/deleted key always produces at least one output row), so
     // the scratch write contains exactly the leaves to promote.

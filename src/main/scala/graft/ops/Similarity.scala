@@ -30,6 +30,11 @@ import graft.functions.VectorExpressions.{dotF, normF}
   */
 object Similarity {
 
+  // The columns every vector frame here carries: the id and the
+  // embedding of the harness `embeddings` table.
+  private val idCol = "vec_id"
+  private val vecCol = "embedding"
+
   /** Cosine similarity rounded to 6 decimals (hash-stable output and
     * deterministic ordering key). Rounds via
     * [[graft.functions.Functions.roundFrac]] — the EXACT float ops
@@ -51,8 +56,7 @@ object Similarity {
   /** Exact top-k: broadcast `queries` (a bounded query batch by
     * contract) against the corpus; rank per query by rounded cosine
     * desc, id asc. Excludes self-matches. */
-  def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"),
       normF(col(vecCol)).as("qnorm"))
     val scored = corpus
@@ -65,6 +69,9 @@ object Similarity {
       .filter(col("rnk") <= k)
       .select(col("qid"), col(idCol), col("rnk"), col("cos_r"))
   }
+
+  /** MMR's relevance weight λ, in percent. */
+  val MmrLambdaPct = 70
 
   /** Maximal Marginal Relevance selection: pick `k` results that are
     * RELEVANT to the query but DIVERSE among themselves — the
@@ -89,8 +96,7 @@ object Similarity {
     *     never exceed λ·rel_c + (1−λ); at most k−1 candidates are
     *     ever removed, so the k-th-largest rel is always present
     *     among remaining. Hence rel_c < relK − 2(1−λ)/λ ⇒ c can win
-    *     NO round — dropped once, before the checkpoint (skipped at
-    *     λ = 0 where relevance is score-irrelevant; a 1e-9 slack
+    *     NO round — dropped once, before the checkpoint (a 1e-9 slack
     *     keeps float-boundary candidates, conservatively exact).
     *   - BOUNDED LINEAGE: `ms` still updates incrementally
     *     (ms' = greatest(ms, cos(cand, pick)) — one map pass per
@@ -104,20 +110,18 @@ object Similarity {
     * any IEEE engine, so an oracle replays the greedy chain exactly;
     * ties break by id.
     *
+    * λ is fixed at 0.7 ([[MmrLambdaPct]]), the mix q140 declares.
+    *
     * Returns the k picks as a driver-built frame:
-    * (sel_rank, `idCol`, rel_r, score_r). */
-  def mmrSelect(corpus: DataFrame, queryId: Long, k: Int,
-                lambdaPct: Int = 70, idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame = {
+    * (sel_rank, vec_id, rel_r, score_r). */
+  def mmrSelect(corpus: DataFrame, queryId: Long, k: Int): DataFrame = {
     require(k >= 1 && k <= 64, s"mmrSelect: k out of range: $k")
-    require(lambdaPct >= 0 && lambdaPct <= 100,
-      s"mmrSelect: lambdaPct out of range: $lambdaPct")
     // Both weights are derived by the SAME division an oracle's SQL
     // literal parse performs (70/100 -> the double nearest 0.7) —
     // `1.0 - lambda` would differ from the literal 0.3 by one ulp and
     // flip near-tie argmaxes.
-    val lam = lambdaPct / 100.0
-    val pen = (100 - lambdaPct) / 100.0
+    val lam = MmrLambdaPct / 100.0
+    val pen = (100 - MmrLambdaPct) / 100.0
     val spark = corpus.sparkSession
     val q = corpus.filter(col(idCol) === queryId)
       .select(col(vecCol).as("qvec"), normF(col(vecCol)).as("qnorm"))
@@ -132,18 +136,15 @@ object Similarity {
     // driver rows); null-rel candidates are kept — they can never win
     // (NULLS LAST under the desc argmax) but dropping them would
     // change nothing and keeping them costs nothing.
+    val topK = cand.filter(col("rel").isNotNull)
+      .orderBy(col("rel").desc, col(idCol)).limit(k)
+      .select(col("rel")).collect()
     val pruned =
-      if (lam == 0.0) cand
+      if (topK.isEmpty) cand
       else {
-        val topK = cand.filter(col("rel").isNotNull)
-          .orderBy(col("rel").desc, col(idCol)).limit(k)
-          .select(col("rel")).collect()
-        if (topK.isEmpty) cand
-        else {
-          val relK = topK.last.getDouble(0)
-          val floor = relK - 2.0 * pen / lam - 1e-9
-          cand.filter(col("rel").isNull || col("rel") >= lit(floor))
-        }
+        val relK = topK.last.getDouble(0)
+        val floor = relK - 2.0 * pen / lam - 1e-9
+        cand.filter(col("rel").isNull || col("rel") >= lit(floor))
       }
     val picks = scala.collection.mutable.ArrayBuffer[(Long, Long, Double, Double)]()
     var remaining = pruned.localCheckpoint(true)
@@ -202,8 +203,7 @@ object Similarity {
     * float→double square-sum, so assignment agrees bit-for-bit with
     * the window formulation. A vector whose cosine is null against
     * every centroid (mismatched length) gets no cell. */
-  def assignCells(corpus: DataFrame, centroids: DataFrame,
-                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def assignCells(corpus: DataFrame, centroids: DataFrame): DataFrame = {
     val cidType = centroids.select(col(idCol)).schema.head.dataType
     // cid-ascending order makes "first strict max" the documented
     // tie-break (ORDER BY cos DESC, cid ASC). limit(Max+1) bounds the
@@ -246,7 +246,6 @@ object Similarity {
     * scored-candidate cost, still never touching the rest of the
     * corpus. */
   def ivfKnnIndexed(cells: DataFrame, centroids: DataFrame, queries: DataFrame, k: Int,
-                    idCol: String = "vec_id", vecCol: String = "embedding",
                     nProbe: Int = 1): DataFrame = {
     require(nProbe >= 1, s"ivfKnn: nProbe must be ≥ 1, got $nProbe")
     // Rename every query-side column: the probe frame derives from
@@ -278,11 +277,10 @@ object Similarity {
     * against one corpus should use [[assignCells]] +
     * [[ivfKnnIndexed]] and own the materialization. */
   def ivfKnn(corpus: DataFrame, centroids: DataFrame, queries: DataFrame, k: Int,
-             idCol: String = "vec_id", vecCol: String = "embedding",
              nProbe: Int = 1): DataFrame = {
     require(nProbe >= 1, s"ivfKnn: nProbe must be ≥ 1, got $nProbe")
-    val cells = assignCells(corpus, centroids, idCol, vecCol).cache()
-    ivfKnnIndexed(cells, centroids, queries, k, idCol, vecCol, nProbe)
+    val cells = assignCells(corpus, centroids).cache()
+    ivfKnnIndexed(cells, centroids, queries, k, nProbe)
   }
 
   /** Deterministic "random" hyperplane weights for plane `p` over
@@ -326,17 +324,20 @@ object Similarity {
     }.reduce(_ + _)
   }
 
-  /** One row per vector with its `nBands` random-hyperplane band
-    * signatures as columns `b0..b{nBands-1}` (band `b` = planes
+  /** Random-hyperplane bands per signature. */
+  val RpBands = 2
+
+  /** One row per vector with its [[RpBands]] random-hyperplane band
+    * signatures as columns `b0, b1` (band `b` = planes
     * `[b·nPlanes, (b+1)·nPlanes)`). The signature pipeline is the
-    * dominant per-vector cost (nBands·nPlanes dot products), so —
+    * dominant per-vector cost (RpBands·nPlanes dot products), so —
     * exactly like [[graft.ops.Dedup.minhashSignatures]] — callers
     * cache/materialize this frame and feed it to
     * [[rpCandidatesFromSigs]], rather than recomputing it on both
     * sides of the candidate self join. */
   def rpSignatures(vectors: DataFrame, idCol: String, vecCol: String,
-                   dim: Int, nPlanes: Int = 8, nBands: Int = 2): DataFrame =
-    vectors.select(col(idCol) +: (0 until nBands).map(b =>
+                   dim: Int, nPlanes: Int = 8): DataFrame =
+    vectors.select(col(idCol) +: (0 until RpBands).map(b =>
       rpBand(col(vecCol), b * nPlanes, nPlanes, dim).as(s"b$b")): _*)
 
   /** Random-hyperplane LSH candidate pairs from precomputed
@@ -346,10 +347,9 @@ object Similarity {
     * (band, sig) row per band, ONE self equi join yields all
     * candidates — never all-pairs. Returns distinct (v1, v2) with
     * v1 < v2; callers verify candidates with exact cosine. */
-  def rpCandidatesFromSigs(sigs: DataFrame, idCol: String,
-                           nBands: Int = 2): DataFrame = {
+  def rpCandidatesFromSigs(sigs: DataFrame, idCol: String): DataFrame = {
     val rows = sigs.select(col(idCol),
-      posexplode(array((0 until nBands).map(b => col(s"b$b")): _*))
+      posexplode(array((0 until RpBands).map(b => col(s"b$b")): _*))
         .as(Seq("__band", "__bsig")))
     val a = rows.select(col(idCol).as("v1"), col("__band").as("__band_a"),
       col("__bsig").as("__bsig_a"))
@@ -429,7 +429,7 @@ object Similarity {
     * near-centroid duplicates).
     *
     * Deterministic BY CONSTRUCTION, not by luck: init is the `k`
-    * smallest-`idCol` vectors (no RNG — same discipline as every
+    * smallest-`vec_id` vectors (no RNG — same discipline as every
     * sampler in this engine), and all math is scaled-integer
     * ([[scaledVec]]), so the fitted codebook is a pure function of
     * the data. `iters` counts ASSIGNMENT passes: `iters = 2` is
@@ -440,20 +440,18 @@ object Similarity {
     * rows regardless of corpus size), then a bounded driver collect
     * of the k×dim centroid sums — the [[MaxCentroids]] discipline.
     * Empty cells keep their previous centroid. Returns the final
-    * assignment (`idCol`, `cid` BIGINT, `dist` BIGINT — exact scaled
+    * assignment (`vec_id`, `cid` BIGINT, `dist` BIGINT — exact scaled
     * squared distance); [[kmeansCentroids]] returns the codebook
     * itself. */
-  def kmeansFit(corpus: DataFrame, k: Int, iters: Int,
-                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    kmeansAssign(corpus, kmeansCentroids(corpus, k, iters, idCol, vecCol),
+  def kmeansFit(corpus: DataFrame, k: Int, iters: Int): DataFrame =
+    kmeansAssign(corpus, kmeansCentroids(corpus, k, iters),
       idCol, vecCol)
       .select(col(idCol), col("cid"), col("dist"))
 
   /** The trained scaled-integer codebook (cid = index, ascending).
     * Runs `iters - 1` update rounds; [[kmeansFit]] adds the final
     * assignment pass over the result. */
-  def kmeansCentroids(corpus: DataFrame, k: Int, iters: Int,
-                      idCol: String = "vec_id", vecCol: String = "embedding"): Seq[Array[Long]] =
+  def kmeansCentroids(corpus: DataFrame, k: Int, iters: Int): Seq[Array[Long]] =
     kmeansCentroidsScaled(
       corpus.select(col(idCol), scaledVec(col(vecCol)).as("__sv")), k, iters, idCol)
 
@@ -567,11 +565,10 @@ object Similarity {
     * otherwise re-evaluate the coarse fold once per fine centroid,
     * re-creating exactly the flat O(k·dim) cost this exists to avoid.
     *
-    * Returns (`idCol`, cid, dist): cid = coarseCid·kFine + fineCid
+    * Returns (`vec_id`, cid, dist): cid = coarseCid·kFine + fineCid
     * (BIGINT, < kCoarse·kFine), dist = exact scaled squared distance
     * to the fine residual centroid. */
-  def kmeansFitResidual(corpus: DataFrame, kCoarse: Int, kFine: Int, iters: Int,
-                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+  def kmeansFitResidual(corpus: DataFrame, kCoarse: Int, kFine: Int, iters: Int): DataFrame = {
     require(kCoarse >= 1 && kFine >= 1 && kCoarse.toLong * kFine <= MaxCentroids.toLong * MaxCentroids,
       s"kmeansFitResidual: cell space $kCoarse×$kFine out of range")
     val sv = corpus.select(col(idCol), scaledVec(col(vecCol)).as("__sv"))
@@ -605,15 +602,14 @@ object Similarity {
     * shape (shuffle-free assignment scan + one k×subdim partial-agg
     * shuffle per iteration, bounded driver collect). */
   def pqTrainCodebooks(corpus: DataFrame, dim: Int, m: Int, kPerSub: Int,
-                       iters: Int, idCol: String = "vec_id",
-                       vecCol: String = "embedding"): Seq[Seq[Array[Long]]] = {
+                       iters: Int): Seq[Seq[Array[Long]]] = {
     require(m >= 1 && dim % m == 0,
       s"pqTrainCodebooks: m=$m must divide dim=$dim")
     val sub = dim / m
     (0 until m).map { j =>
       kmeansCentroids(
         corpus.select(col(idCol), slice(col(vecCol), j * sub + 1, sub).as(vecCol)),
-        kPerSub, iters, idCol, vecCol)
+        kPerSub, iters)
     }
   }
 
@@ -624,9 +620,8 @@ object Similarity {
     * argmin folds over its literal codebook inside the scan stage; the
     * sliced subvectors are materialized as columns FIRST (the fold's
     * lambda captures them — the [[TextAnalysis.spanGrams]] contract).
-    * Output: `idCol`, `codes` (array of `m` codebook indices). */
-  def pqEncode(corpus: DataFrame, codebooks: Seq[Seq[Array[Long]]],
-               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    * Output: `vec_id`, `codes` (array of `m` codebook indices). */
+  def pqEncode(corpus: DataFrame, codebooks: Seq[Seq[Array[Long]]]): DataFrame = {
     val m = codebooks.length
     require(m >= 1, "pqEncode: empty codebook list")
     val sub = codebooks.head.head.length
@@ -657,8 +652,7 @@ object Similarity {
     * survivors by ADC); here the full-scan form keeps the oracle
     * exact. */
   def pqTopK(codes: DataFrame, codebooks: Seq[Seq[Array[Long]]],
-             queries: DataFrame, k: Int, idCol: String = "vec_id",
-             vecCol: String = "embedding"): DataFrame = {
+             queries: DataFrame, k: Int): DataFrame = {
     val m = codebooks.length
     require(m >= 1, "pqTopK: empty codebook list")
     val sub = codebooks.head.head.length
@@ -696,8 +690,7 @@ object Similarity {
     * `codes` = (idCol, codes) from [[pqEncode]]; `queries` supplies
     * full vectors (ADC is asymmetric: queries stay unquantized). */
   def ivfPqTopK(cells: DataFrame, codes: DataFrame,
-                codebooks: Seq[Seq[Array[Long]]], queries: DataFrame, k: Int,
-                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                codebooks: Seq[Seq[Array[Long]]], queries: DataFrame, k: Int): DataFrame = {
     val m = codebooks.length
     require(m >= 1, "ivfPqTopK: empty codebook list")
     val sub = codebooks.head.head.length

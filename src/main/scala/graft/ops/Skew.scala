@@ -56,37 +56,30 @@ object Skew {
     * 1-row-per-key origin/frequency table): blanket salting replicates
     * the WHOLE dim `salts`× (measured 3× slower than a plain join on
     * the q130 shape), while hot keys are the handful of boilerplate
-    * values that actually straggle. A sampled 1-in-`detectOneIn`
+    * values that actually straggle. A sampled 1-in-16
     * detection pass (the [[boundedBucketSelfJoin]] discipline — counts
     * scale back up, borderline misses degrade gracefully to ≈ 2·cap
     * rows on one task) finds fact keys over `hotCap`; those keys salt
     * `salts` ways and their dim rows replicate to match, every other
     * key joins singly. The result set provably equals the plain join:
     * salting is pure routing (hot rows meet at (key, hash-salt), cold
-    * rows at (key, 0)), so oracles are unaffected.
+    * rows at (key, 0)), so oracles are unaffected. An inner join.
     *
     * The hot-key set broadcasts: it is bounded by |fact|/`hotCap`
     * in principle and by the corpus's boilerplate vocabulary in
     * practice — the same boundedness argument as
     * [[boundedBucketSelfJoin]]'s hot-bucket broadcast. */
   def saltedJoinHot(fact: DataFrame, dim: DataFrame, key: String,
-                    saltBy: Column, salts: Int, hotCap: Int,
-                    detectOneIn: Int = 16,
-                    joinType: String = "inner"): DataFrame = {
-    requireSaltableJoinType("saltedJoinHot", joinType)
+                    saltBy: Column, salts: Int, hotCap: Int): DataFrame = {
     require(salts > 1, s"saltedJoinHot: salts must be > 1, got $salts")
     require(hotCap > 0, s"saltedJoinHot: hotCap must be positive, got $hotCap")
-    require(detectOneIn >= 1,
-      s"saltedJoinHot: detectOneIn must be >= 1, got $detectOneIn")
-    val detected =
-      if (detectOneIn == 1) fact
-      else fact.filter(
-        pmod(xxhash64(col(key), saltBy), lit(detectOneIn)) === 0)
-    val hot = detected.groupBy(col(key))
+    val detectOneIn = 16
+    val hot = fact.filter(pmod(xxhash64(col(key), saltBy), lit(detectOneIn)) === 0)
+      .groupBy(col(key))
       .agg((count(lit(1)) * detectOneIn).as("__kn"))
       .filter(col("__kn") > hotCap)
       .select(col(key), lit(true).as("__hot"))
-    saltedJoinGivenHot(fact, dim, key, saltBy, salts, hot, joinType)
+    saltedJoinGivenHot(fact, dim, key, saltBy, salts, hot, "inner")
   }
 
   /** [[saltedJoinHot]] with the hot-key set SUPPLIED by the caller —
@@ -179,11 +172,11 @@ object Skew {
     * (bucket, id) — independent of the sub-group hash over id alone —
     * and is exact (`detectOneIn = 1`) by default.
     *
-    * Right-side columns come back renamed with `rightSuffix`; helper
+    * Right-side columns come back renamed with the suffix `_2`; helper
     * columns are dropped. */
   def boundedBucketSelfJoin(df: DataFrame, bucketCol: String, idCol: String,
-                            cap: Int, rightSuffix: String = "_2",
-                            detectOneIn: Int = 1): DataFrame = {
+                            cap: Int, detectOneIn: Int = 1): DataFrame = {
+    val rightSuffix = "_2"
     require(cap > 0, s"boundedBucketSelfJoin: cap must be positive, got $cap")
     require(detectOneIn >= 1,
       s"boundedBucketSelfJoin: detectOneIn must be >= 1, got $detectOneIn")

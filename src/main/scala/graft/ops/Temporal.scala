@@ -11,11 +11,10 @@ import org.apache.spark.sql.functions._
   * `trans_date > effective_from AND trans_date < effective_to AND
   * deleted_flg = 'N'`. Spark-first mapping: keep the equi key so the
   * join hashes; the range terms become join residuals evaluated inside
-  * the hash join — never a cartesian. No broadcast hint by default: a
-  * hint overrides AQE's size check, and an SCD2 dimension grows with
-  * the data — at 100 TB a forced broadcast OOMs. AQE converts to
-  * broadcast at runtime when the dim really is small; callers may force
-  * it only for provably bounded frames.
+  * the hash join — never a cartesian. No broadcast hint: a hint
+  * overrides AQE's size check, and an SCD2 dimension grows with the
+  * data — at 100 TB a forced broadcast OOMs. AQE converts to broadcast
+  * at runtime when the dim really is small.
   */
 object Temporal {
 
@@ -109,32 +108,25 @@ object Temporal {
     * left+right on the key, no pair multiplication, no range probe.
     *
     * Output: every `left` row plus `asof_ts` / `asof_id` of the
-    * matched right row (null when no right row precedes). `tolerance`
-    * (same unit as the timestamps' ordering type, applied as
-    * `leftTs - asof_ts <= tolerance` on epoch seconds) nulls out
-    * stale matches. */
+    * matched right row (null when no right row precedes). A match of
+    * any age counts: there is no staleness bound. */
   def asofBackward(left: DataFrame, right: DataFrame, key: String,
-                   leftTs: String, rightTs: String, rightId: String,
-                   toleranceSec: Option[Long] = None): DataFrame =
-    asofUnionWindow(left, right, key, leftTs, rightTs, rightId,
-      toleranceSec, forward = false)
+                   leftTs: String, rightTs: String, rightId: String): DataFrame =
+    asofUnionWindow(left, right, key, leftTs, rightTs, rightId, forward = false)
 
   /** Forward as-of join: for every LEFT row, the EARLIEST right row
     * of the same key with `rightTs >= leftTs` — next-touch
     * attribution, time-to-next-event features. Same union+window
     * shape as [[asofBackward]] with the traversal reversed (ties
     * still inclusive; equal-ts right rows resolve to the SMALLEST id
-    * — the mirror of backward's largest-id rule). `toleranceSec`
-    * bounds `asof_ts - leftTs`. */
+    * — the mirror of backward's largest-id rule); a match of any
+    * distance ahead counts. */
   def asofForward(left: DataFrame, right: DataFrame, key: String,
-                  leftTs: String, rightTs: String, rightId: String,
-                  toleranceSec: Option[Long] = None): DataFrame =
-    asofUnionWindow(left, right, key, leftTs, rightTs, rightId,
-      toleranceSec, forward = true)
+                  leftTs: String, rightTs: String, rightId: String): DataFrame =
+    asofUnionWindow(left, right, key, leftTs, rightTs, rightId, forward = true)
 
   private def asofUnionWindow(left: DataFrame, right: DataFrame, key: String,
                               leftTs: String, rightTs: String, rightId: String,
-                              toleranceSec: Option[Long],
                               forward: Boolean): DataFrame = {
     val l = left.withColumn("__is_left", lit(1))
       .withColumn("__ts", col(leftTs))
@@ -170,40 +162,21 @@ object Temporal {
         last(when(col("__is_left") === 0,
           struct(col("__rts"), col("__rid"))), ignoreNulls = true).over(w))
       .filter(col("__is_left") === 1)
-    val withAsof = matched
+    matched
       .withColumn("asof_ts", col("__asof.__rts"))
       .withColumn("asof_id", col("__asof.__rid"))
-    val bounded = toleranceSec match {
-      case Some(tol) =>
-        val gap =
-          if (forward) unix_timestamp(col("asof_ts")) - unix_timestamp(col(leftTs))
-          else unix_timestamp(col(leftTs)) - unix_timestamp(col("asof_ts"))
-        val fresh = gap <= tol
-        withAsof
-          .withColumn("asof_id", when(fresh, col("asof_id")))
-          .withColumn("asof_ts", when(fresh, col("asof_ts")))
-      case None => withAsof
-    }
-    bounded.select(left.columns.map(col) :+ col("asof_ts") :+ col("asof_id"): _*)
+      .select(left.columns.map(col) :+ col("asof_ts") :+ col("asof_id"): _*)
   }
 
-  /** As-of join a fact to an SCD2 dimension. Strictness of the range
-    * bounds is parameterized; reference parity = both strict
-    * (`report.py:40-41`). */
+  /** As-of join a fact to an SCD2 dimension with the reference's
+    * strict bounds, `effective_from < factTs < effective_to`, over live
+    * versions only (`deleted_flg = 'N'`, `report.py:40-41`), as a left
+    * join: a fact with no valid version keeps its row. */
   def asOfJoin(fact: DataFrame, dim: DataFrame,
-               factKey: Column, dimKey: Column, factTs: Column,
-               from: Column = null, to: Column = null,
-               liveOnly: Boolean = true,
-               strictFrom: Boolean = true, strictTo: Boolean = true,
-               joinType: String = "left",
-               broadcastDim: Boolean = false): DataFrame = {
-    val f = Option(from).getOrElse(dim("effective_from"))
-    val t = Option(to).getOrElse(dim("effective_to"))
-    val lower = if (strictFrom) factTs > f else factTs >= f
-    val upper = if (strictTo) factTs < t else factTs <= t
-    val live = if (liveOnly) dim("deleted_flg") === "N" else lit(true)
-    val cond = factKey === dimKey && lower && upper && live
-    val dimSide = if (broadcastDim) broadcast(dim) else dim
-    fact.join(dimSide, cond, joinType)
+               factKey: Column, dimKey: Column, factTs: Column): DataFrame = {
+    val cond = factKey === dimKey &&
+      factTs > dim("effective_from") && factTs < dim("effective_to") &&
+      dim("deleted_flg") === "N"
+    fact.join(dim, cond, "left")
   }
 }

@@ -303,7 +303,7 @@ object CurationQueries {
     * skew guard of the whole winnow family. */
   private def winnowKept(s: org.apache.spark.sql.SparkSession,
                          d: String): org.apache.spark.sql.DataFrame = {
-    val wf = Indexes.winnowedPrints(s, d, window = 8)
+    val wf = Indexes.winnowedPrints(s, d)
       .select(col("doc_id"), col("__fp").as("__h"))
     val hot = wf.groupBy("__h").agg(count(lit(1)).as("__c"))
       .filter(col("__c") > 50).select("__h")
@@ -641,7 +641,7 @@ object CurationQueries {
         // expansion is shared verbatim with q145's drop leg, so the
         // pair table is a registry index ([[Indexes.containmentPairs]]
         // — IndexesSpec pins it against the inline two-frame call).
-        Indexes.containmentPairs(s, d, thresholdPct = 80)
+        Indexes.containmentPairs(s, d)
     },
 
     // Dataset card: the per-(source, language) statistics sheet every
@@ -1085,7 +1085,7 @@ object CurationQueries {
          |  AND d.doc_id NOT IN (SELECT doc_id FROM drops)""".stripMargin) {
       (s, d) =>
         val buck = ccnetBuckets(s, d).filter(col("bucket") =!= "tail")
-        val cont = Indexes.containmentPairs(s, d, thresholdPct = 80)
+        val cont = Indexes.containmentPairs(s, d)
         // Every emitted pair yields EXACTLY ONE drop ((c1,¬c2) → d1,
         // otherwise d2 — mutual containment keeps the smaller id), so
         // the drop set is one projection, not a two-filter union that

@@ -250,8 +250,7 @@ object ExtensionQueries {
           .filter(col("c_acctbal") >= 9000)
           .select(col("c_custkey").as("user_id"))
         graft.ops.RuntimeFilter.bloomSemiJoin(
-            table(s, d, "events"), keys, "user_id",
-            estItems = 100000L, numBits = 1L << 20)
+            table(s, d, "events"), keys, "user_id")
           .select("event_id", "user_id", "event_type")
     },
 

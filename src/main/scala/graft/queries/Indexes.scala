@@ -305,7 +305,13 @@ object Indexes {
         Seq("doc_id"), "left_semi")
     }
 
-  /** The collapsed containment PAIR table at threshold `t`% —
+  /** Containment threshold, in percent, of [[containmentPairs]]. */
+  val ContainmentPct = 80
+
+  /** Winnowing window of [[winnowedPrints]]. */
+  val WinnowWindow = 8
+
+  /** The collapsed containment PAIR table at [[ContainmentPct]]% —
     * (d1, d2, inter_cnt, n1, n2, c1_ppm, c2_ppm, d1_in_d2, d2_in_d1),
     * [[graft.ops.Dedup.containmentPairsCollapsed]] over
     * [[containmentGroups]]/[[containmentReps]], landed as a table.
@@ -313,36 +319,32 @@ object Indexes {
     * member expansion subtree was recomputed verbatim by TWO
     * consumers (q134's pair report and q145's sub-document drop leg
     * — r16 measured 2.0 s of q134's 2.0 s and ~1 s of q145 at
-    * sf0.1); both now read parquet. Threshold-keyed name: a cached
-    * build is never served to a caller who asked for a different
-    * threshold (a different threshold changes the pair set).
+    * sf0.1); both now read parquet. The name carries the threshold
+    * (`containment_pairs_t80`), which is part of the pair set.
     * Contents are bit-identical to the inline pipeline by
     * construction: same persisted group/rep tables, same capped self
     * joins, exact integer set measures (IndexesSpec pins the landed
     * rows against the inline two-frame call on the fixture). */
-  def containmentPairs(spark: SparkSession, sfDir: String,
-                       thresholdPct: Int = 80): DataFrame =
-    index(spark, sfDir, s"containment_pairs_t$thresholdPct") {
+  def containmentPairs(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, s"containment_pairs_t$ContainmentPct") {
       Dedup.containmentPairsCollapsed(containmentGroups(spark, sfDir),
-        containmentReps(spark, sfDir), "doc_id", thresholdPct)
+        containmentReps(spark, sfDir), "doc_id", ContainmentPct)
     }
 
   /** The winnowed-fingerprint index: one (doc_id, `__fp`) row per
-    * selected print per document, at window `w` (name is
-    * parameter-keyed — a cached build is never served to a caller
-    * who asked for a different window). Built two-phase
+    * selected print per document, at window [[WinnowWindow]] (the
+    * name, `winnow_prints_w8`, carries it). Built two-phase
     * ([[Dedup.buildWinnowIndex]]): positional hash arrays land as a
     * scratch table first so the window-min selection slices stored
     * arrays instead of re-evaluating the md5 lineage per position —
     * the r10 q146 DNF recipe, fixed. Every downstream reference
     * (df counts, pair joins) is a parquet read of ~2/(w+1) of the
     * shingle volume. */
-  def winnowedPrints(spark: SparkSession, sfDir: String,
-                     window: Int = 8): DataFrame = lock.synchronized {
-    val name = s"winnow_prints_w$window"
+  def winnowedPrints(spark: SparkSession, sfDir: String): DataFrame = lock.synchronized {
+    val name = s"winnow_prints_w$WinnowWindow"
     cached(spark, store(spark, sfDir), name) { bst =>
       Dedup.buildWinnowIndex(bst, corpusDocs(spark, sfDir),
-        "doc_id", "text", window, table = name): Unit
+        "doc_id", "text", WinnowWindow, table = name): Unit
     }
   }
 
@@ -390,8 +392,7 @@ object Indexes {
     * them, and per-pair set copies would dominate the table). */
   def minhashPairScores(spark: SparkSession, sfDir: String): DataFrame =
     index(spark, sfDir, "minhash_pair_scores") {
-      Dedup.scoredCandidatePairs(signatures(spark, sfDir), "doc_id",
-          Dedup.DefaultMaxBandFreq)
+      Dedup.scoredCandidatePairs(signatures(spark, sfDir), "doc_id")
         .select(col("d1"), col("d2"), col("__inter"), col("__union"))
     }
 
@@ -943,41 +944,35 @@ object Indexes {
     }
 
   /** Verified image near-dup PAIRS (d1, d2, fp1, fp2, hamming) at
-    * `maxHamming` — the [[neardupEdges]] discipline for the image
+    * [[Dedup.MaxHamming]] — the [[neardupEdges]] discipline for the image
     * modality: the banded-Hamming self join over [[imagePhash]] runs
     * once per corpus generation and its FIVE consumers (q97's pair
     * report, q116's cross-modal gate, q163's temporal verify, q127's
     * image edge set, the [[imagePhashLabels]] CC build) read parquet
     * instead of re-pairing the corpus (r16 measured: the two media
-    * pair joins were 24.5 s of q127's 32.6 s sf10). Radius is part of
-    * the table identity. */
-  def imagePhashPairs(spark: SparkSession, sfDir: String,
-                      maxHamming: Int = 3): DataFrame =
-    index(spark, sfDir, s"image_phash_pairs_h$maxHamming") {
-      Dedup.simhashPairs(imagePhash(spark, sfDir),
-        "doc_id", "phash", maxHamming = maxHamming, fpBits = 64)
+    * pair joins were 24.5 s of q127's 32.6 s sf10). The name carries
+    * the radius. */
+  def imagePhashPairs(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, s"image_phash_pairs_h${Dedup.MaxHamming}") {
+      Dedup.simhashPairs(imagePhash(spark, sfDir), "doc_id", "phash", fpBits = 64)
     }
 
-  /** Verified audio near-dup PAIRS at `maxHamming` — the audio twin
-    * of [[imagePhashPairs]] (consumers: q110, q127). */
-  def audioFpPairs(spark: SparkSession, sfDir: String,
-                   maxHamming: Int = 3): DataFrame =
-    index(spark, sfDir, s"audio_fp_pairs_h$maxHamming") {
-      Dedup.simhashPairs(audioFingerprint(spark, sfDir),
-        "doc_id", "afp", maxHamming = maxHamming, fpBits = 64)
+  /** Verified audio near-dup PAIRS at [[Dedup.MaxHamming]] — the
+    * audio twin of [[imagePhashPairs]] (consumers: q110, q127). */
+  def audioFpPairs(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, s"audio_fp_pairs_h${Dedup.MaxHamming}") {
+      Dedup.simhashPairs(audioFingerprint(spark, sfDir), "doc_id", "afp", fpBits = 64)
     }
 
   /** Resolved image near-dup cluster labels (id, component) —
-    * connected components over the banded-Hamming phash pairs at
-    * `maxHamming`, landed as a table: the media-dedup twin of
-    * [[neardupLabels]] (q57 reads persisted text labels; q100 reads
-    * these — CC runs once per corpus, and the radius is part of the
-    * table identity). */
-  def imagePhashLabels(spark: SparkSession, sfDir: String,
-                       maxHamming: Int): DataFrame =
-    index(spark, sfDir, s"image_phash_labels_h$maxHamming") {
+    * connected components over [[imagePhashPairs]], landed as a
+    * table: the media-dedup twin of [[neardupLabels]] (q57 reads
+    * persisted text labels; q100 reads these — CC runs once per
+    * corpus; the name carries the radius). */
+  def imagePhashLabels(spark: SparkSession, sfDir: String): DataFrame =
+    index(spark, sfDir, s"image_phash_labels_h${Dedup.MaxHamming}") {
       Dedup.connectedComponents(
-        imagePhashPairs(spark, sfDir, maxHamming).select("d1", "d2"))
+        imagePhashPairs(spark, sfDir).select("d1", "d2"))
     }
 
   /** Random-hyperplane band signatures (vec_id, b0, b1) over the

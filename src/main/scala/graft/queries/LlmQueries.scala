@@ -785,7 +785,7 @@ object LlmQueries {
          |FROM cand WHERE bit_count(xor(fp1, fp2)) <= 3""".stripMargin) {
       (s, d) =>
         val fps = Indexes.simhashFingerprints(s, d, bits = 60)
-        Dedup.simhashPairs(fps, "doc_id", "simhash", maxHamming = 3, fpBits = 60)
+        Dedup.simhashPairs(fps, "doc_id", "simhash", fpBits = 60)
           .select("d1", "d2", "fp1", "fp2", "hamming")
     },
 
@@ -2394,7 +2394,7 @@ object LlmQueries {
       (s, d) =>
         graft.ops.Sampling.ppsSample(
           table(s, d, "documents").select("doc_id", "text"),
-          "doc_id", size(Dedup.tokens(col("text"))), step = 500L, shards = 32)
+          "doc_id", size(Dedup.tokens(col("text"))), step = 500L)
           .select("doc_id", "n_tok", "shard", "cum_tok", "n_hits")
     },
 

@@ -146,7 +146,7 @@ object MultimodalQueries {
     Q("q102_image_phash_png", PhashPairOracle) {
       (s, d) =>
         graft.ops.Dedup.simhashPairs(Indexes.imagePhashPng(s, d),
-            "doc_id", "phash", maxHamming = 3, fpBits = 64)
+            "doc_id", "phash", fpBits = 64)
           .select("d1", "d2", "fp1", "fp2", "hamming")
     },
 
@@ -162,7 +162,7 @@ object MultimodalQueries {
     Q("q107_image_phash_gif", PhashPairOracle) {
       (s, d) =>
         graft.ops.Dedup.simhashPairs(Indexes.imagePhashGif(s, d),
-            "doc_id", "phash", maxHamming = 3, fpBits = 64)
+            "doc_id", "phash", fpBits = 64)
           .select("d1", "d2", "fp1", "fp2", "hamming")
     },
 
@@ -190,7 +190,7 @@ object MultimodalQueries {
         graft.ops.Dedup.simhashPairsAgainst(
             phash.filter(col("doc_id") >= cutoff),
             phash.filter(col("doc_id") < cutoff),
-            "doc_id", "phash", maxHamming = 3, fpBits = 64)
+            "doc_id", "phash")
           .select("d1", "d2", "fp1", "fp2", "hamming")
     },
 
@@ -269,7 +269,7 @@ object MultimodalQueries {
         |FROM comp c""".stripMargin) {
       (s, d) =>
         val w = org.apache.spark.sql.expressions.Window.partitionBy(col("component"))
-        Indexes.imagePhashLabels(s, d, maxHamming = 3)
+        Indexes.imagePhashLabels(s, d)
           .select(col("component"), col("id").as("doc_id"))
           .withColumn("cluster_size", count(lit(1)).over(w))
     },
@@ -362,7 +362,7 @@ object MultimodalQueries {
         graft.ops.Dedup.simhashPairsAgainst(
             afp.filter(col("doc_id") >= cutoff),
             afp.filter(col("doc_id") < cutoff),
-            "doc_id", "afp", maxHamming = 3, fpBits = 64)
+            "doc_id", "afp")
           .select("d1", "d2", "fp1", "fp2", "hamming")
     },
 

@@ -336,7 +336,7 @@ object ParityQueries {
         val changes = store.tableChanges("cust_v", g1, g2, Seq("k"))
         // generations accumulate across bench passes in the per-process
         // scratch root: keep only the two this invocation compares
-        store.vacuumVersioned("cust_v", keepGenerations = 2)
+        store.vacuumVersioned("cust_v")
         changes
     },
 

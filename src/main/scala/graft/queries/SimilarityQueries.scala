@@ -861,7 +861,7 @@ object SimilarityQueries {
     }) {
       (s, d) =>
         Similarity.mmrSelect(table(s, d, "embeddings"), queryId = 0L,
-          k = MmrK, lambdaPct = 70)
+          k = MmrK)
     }
   )
 }

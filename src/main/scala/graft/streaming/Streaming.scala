@@ -49,12 +49,11 @@ object Streaming {
     * map-side with zero stream-side shuffle; Spark re-plans the
     * static side per trigger, so a dim refreshed between triggers
     * (e.g. an SCD2 current-version view) is picked up without
-    * restarting the stream. LEFT join by default: an unmatched fact
-    * must surface as nulls, not vanish. */
+    * restarting the stream. A LEFT join: an unmatched fact must
+    * surface as nulls, not vanish. */
   def enrich(stream: DataFrame, dim: DataFrame,
-             joinExpr: org.apache.spark.sql.Column,
-             joinType: String = "left"): DataFrame =
-    stream.join(broadcast(dim), joinExpr, joinType)
+             joinExpr: org.apache.spark.sql.Column): DataFrame =
+    stream.join(broadcast(dim), joinExpr, "left")
 
   /** Session windows: per-key activity bursts separated by `gap` of
     * quiet become one window (the streaming counterpart of
@@ -111,9 +110,7 @@ object Streaming {
   def maintainClusters(docs: DataFrame, store: graft.io.TableStore,
                        labelsTable: String, corpusSigs: DataFrame,
                        idCol: String, textCol: String, threshold: Double,
-                       checkpoint: String,
-                       maxBandFreq: Option[Int] =
-                         graft.ops.Dedup.DefaultMaxBandFreq): StreamingQuery = {
+                       checkpoint: String): StreamingQuery = {
     import graft.ops.Dedup
     // Corpus-side probe table prepared ONCE for the stream: the band
     // explode + hot-band cap aggregate over the full index is
@@ -122,7 +119,7 @@ object Streaming {
     // lifetime and released when the query terminates (listener
     // below); the verify side reads `__hs` from the caller's
     // (already-persisted) signature frame as before.
-    val corpusBands = Dedup.corpusBandRows(corpusSigs, idCol, maxBandFreq)
+    val corpusBands = Dedup.corpusBandRows(corpusSigs, idCol)
       .persist()
     val corpusHs = corpusSigs.select(col(idCol).as("d2"), col("__hs").as("hs2"))
     val query = docs.writeStream
@@ -160,7 +157,7 @@ object Streaming {
           .join(hs1, "d1").join(corpusHs, "d2")
           .filter(jaccardOk)
           .select("d1", "d2")
-        val selfEdges = Dedup.lshCandidates(batchSigs, idCol, maxBandFreq)
+        val selfEdges = Dedup.lshCandidates(batchSigs, idCol)
           .join(hs1, "d1")
           .join(batchSigs.select(col(idCol).as("d2"), col("__hs").as("hs2")), "d2")
           .filter(jaccardOk)

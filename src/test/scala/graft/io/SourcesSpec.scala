@@ -164,6 +164,23 @@ class SourcesSpec extends AnyFunSuite {
     assert(XlsxLite.read(plain.toString, "s")(1).toSeq === Seq("44197"))
   }
 
+  test("excel fails naming the file when the header does not match the schema") {
+    val dir = Files.createTempDirectory("graft_xlsx_header")
+    val path = dir.resolve("passport_blacklist_01012021.xlsx")
+    // Columns swapped: read by position, passports would land as dates.
+    XlsxFixture.writeSheet(path, "blacklist",
+      Seq(Seq("passport", "date"), Seq("P3", "2021-01-01")))
+    val ex = intercept[IllegalArgumentException] {
+      Sources.excel(spark, path.toString, "blacklist", Sources.stringSchema("date", "passport"))
+    }
+    assert(ex.getMessage.contains(path.toString) && ex.getMessage.contains("header"), ex.getMessage)
+    // The same names in another case are the same header, as in csv.
+    XlsxFixture.writeSheet(path, "blacklist",
+      Seq(Seq("DATE", "Passport"), Seq("2021-01-01", "P3")))
+    val df = Sources.excel(spark, path.toString, "blacklist", Sources.stringSchema("date", "passport"))
+    assert(df.collect().map(r => (r.getString(0), r.getString(1))).toSeq === Seq(("2021-01-01", "P3")))
+  }
+
   test("excel fails clearly on a path that is not a workbook") {
     val dir = Files.createTempDirectory("graft_xlsx_none")
     val placeholder = Files.createFile(dir.resolve("passport_blacklist_01012021.xlsx"))

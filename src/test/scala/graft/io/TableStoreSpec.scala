@@ -258,7 +258,7 @@ class TableStoreSpec extends AnyFunSuite {
     val fs = new org.apache.hadoop.fs.Path(store.path("dim"))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(store.path("dim") + "/_manifest/" + "0" * 19 + "3"), false)
-    store.vacuumVersioned("dim", keepGenerations = 2)
+    store.vacuumVersioned("dim")
     val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(store.path("dim")))
       .map(_.getPath.getName).filter(_.startsWith("g")).sorted.toSeq
     // Kept: g2 and g4 (the two newest COMMITTED); g3's record was

@@ -248,7 +248,7 @@ class DedupSpec extends AnyFunSuite {
   test("contaminationStats counts eval-shingle overlap and flags at the threshold") {
     // Doc 1 fully contains the eval text; doc 2 shares nothing; doc 3
     // shares exactly one 3-gram ("x y z") of its four shingles (25% —
-    // over a 10% threshold, under a 40% one).
+    // over the 10% threshold).
     val corpus = Seq(
       (1L, "the quick brown fox jumps"),
       (2L, "completely unrelated words about engines"),
@@ -262,11 +262,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got(2L)._2 === 0L)
     assert(got(2L)._3 === 0)
     assert(got(3L) === ((4L, 1L, 1)))  // 25% ≥ 10% threshold
-    val strict = Dedup.contaminationStatsFromHashes(corpusRows, evalDocs, "doc_id", "text",
-      thresholdPercent = 40)
-      .collect().map(r => r.getLong(0) -> r.getInt(3)).toMap
-    assert(strict(3L) === 0)
-    assert(strict(1L) === 1)
   }
 
   test("connectedComponents: reliable checkpoint mode resolves identically") {
@@ -408,7 +403,7 @@ class DedupSpec extends AnyFunSuite {
     val f1 = 0x0FEDCBA987654321L & ((1L << 60) - 1)
     val fps = Seq((1L, f1), (2L, f1 ^ 0x3L), (3L, ~f1 & ((1L << 60) - 1)))
       .toDF("doc_id", "simhash")
-    val got = Dedup.simhashPairs(fps, "doc_id", "simhash", maxHamming = 3, fpBits = 60)
+    val got = Dedup.simhashPairs(fps, "doc_id", "simhash", fpBits = 60)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(4))).toSet
     assert(got === Set((1L, 2L, 2)))
   }
@@ -424,11 +419,11 @@ class DedupSpec extends AnyFunSuite {
     assert(got === Set((1L, 2L, 2)))
   }
 
-  test("simhashPairs combo banding is EXACT vs brute force, 64-bit, radius 0-5") {
+  test("simhashPairs combo banding is EXACT vs brute force, 64-bit, at MaxHamming") {
     // The combinatorial pigeonhole (r+3 bands, join on 3-band combos)
-    // must have 100 % recall at radius r for ANY fingerprint set — the
-    // all-pairs oracles of the phash family depend on it. Adversarial
-    // mix: random longs (full 64-bit range incl. negative), plus
+    // must have 100 % recall at radius r = MaxHamming for ANY
+    // fingerprint set — the all-pairs oracles of the phash family
+    // depend on it. Adversarial mix: random longs (full 64-bit range incl. negative), plus
     // planted near-pairs at every distance 0..6 off shared bases.
     val rnd = new scala.util.Random(42)
     val base = Seq.fill(40)(rnd.nextLong())
@@ -437,16 +432,14 @@ class DedupSpec extends AnyFunSuite {
     }
     val all = (base ++ planted).distinct.zipWithIndex.map { case (fp, i) => (i.toLong, fp) }
     val fps = all.toDF("doc_id", "fp")
-    for (r <- Seq(0, 1, 3, 5)) {
-      val brute = (for {
-        (i1, f1) <- all; (i2, f2) <- all
-        if i1 < i2 && java.lang.Long.bitCount(f1 ^ f2) <= r
-      } yield (i1, i2)).toSet
-      val got = Dedup.simhashPairs(fps, "doc_id", "fp", maxHamming = r, fpBits = 64,
-          maxBandFreq = None)
-        .collect().map(row => (row.getLong(0), row.getLong(1))).toSet
-      assert(got === brute, s"radius $r: banded join lost/invented pairs")
-    }
+    val r = Dedup.MaxHamming
+    val brute = (for {
+      (i1, f1) <- all; (i2, f2) <- all
+      if i1 < i2 && java.lang.Long.bitCount(f1 ^ f2) <= r
+    } yield (i1, i2)).toSet
+    val got = Dedup.simhashPairs(fps, "doc_id", "fp", fpBits = 64, maxBandFreq = None)
+      .collect().map(row => (row.getLong(0), row.getLong(1))).toSet
+    assert(got === brute, s"radius $r: banded join lost/invented pairs")
   }
 
   test("simhashPairs/simhashPairsAgainst: default band cap prunes nothing at harness scale") {
@@ -459,14 +452,14 @@ class DedupSpec extends AnyFunSuite {
     val all = Seq.tabulate(200)(i => (i.toLong, rnd.nextLong() >>> 4))
     val fps = all.toDF("doc_id", "fp")
     def pairsOf(cap: Option[Int]) =
-      Dedup.simhashPairs(fps, "doc_id", "fp", maxHamming = 3, fpBits = 60,
+      Dedup.simhashPairs(fps, "doc_id", "fp", fpBits = 60,
           maxBandFreq = cap)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairsOf(Dedup.DefaultMaxBandFreq) === pairsOf(None))
     val (batch, corpus) = all.partition(_._1 >= 150L)
     def againstOf(cap: Option[Int]) =
       Dedup.simhashPairsAgainst(batch.toDF("doc_id", "fp"), corpus.toDF("doc_id", "fp"),
-          "doc_id", "fp", maxHamming = 3, fpBits = 60, maxBandFreq = cap)
+          "doc_id", "fp", maxBandFreq = cap)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(againstOf(Dedup.DefaultMaxBandFreq) === againstOf(None))
   }

@@ -19,7 +19,8 @@ class GraphSpec extends AnyFunSuite {
     (30L, 40L, 5L), (20L, 2L, 7L), (10L, 2L, 1L))
   private val nodeIds = Seq(10L, 20L, 30L, 40L, 2L, 99L)
 
-  private def reference(iters: Int, dampingPct: Int): Map[Long, Long] = {
+  private def reference(iters: Int): Map[Long, Long] = {
+    val dampingPct = Graph.DampingPct
     val n = nodeIds.size
     val r0 = Graph.Scale / n
     val teleport = ((100L - dampingPct) * r0) / 100L
@@ -35,19 +36,14 @@ class GraphSpec extends AnyFunSuite {
     rank
   }
 
-  private def run(iters: Int, dampingPct: Int): Map[Long, Long] =
-    Graph.pageRank(edges.toDF("u", "v", "w"), nodeIds.toDF("id"), "id",
-        iters, dampingPct)
+  private def run(iters: Int): Map[Long, Long] =
+    Graph.pageRank(edges.toDF("u", "v", "w"), nodeIds.toDF("id"), "id", iters)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("distributed iterations equal the sequential integer fold exactly") {
     for (iters <- Seq(1, 3, 6)) {
-      assert(run(iters, 85) === reference(iters, 85), s"iters=$iters")
+      assert(run(iters) === reference(iters), s"iters=$iters")
     }
-  }
-
-  test("alternative damping replays exactly too") {
-    assert(run(4, 50) === reference(4, 50))
   }
 
   test("an edge endpoint outside the node universe fails loudly, not silently") {
@@ -70,8 +66,8 @@ class GraphSpec extends AnyFunSuite {
       nodeIds.toDF("id"), "id", 2, validateEdges = false).collect(): Unit
   }
 
-  private def referenceSeeded(seeds: Set[Long], iters: Int,
-                              dampingPct: Int): Map[Long, Long] = {
+  private def referenceSeeded(seeds: Set[Long], iters: Int): Map[Long, Long] = {
+    val dampingPct = Graph.DampingPct
     val ns = seeds.size
     val s0 = Graph.Scale / ns
     val tp = ((100L - dampingPct) * s0) / 100L
@@ -94,7 +90,7 @@ class GraphSpec extends AnyFunSuite {
     val got = Graph.personalizedPageRank(edges.toDF("u", "v", "w"),
         nodeIds.toDF("id"), "id", Seq(10L, 20L).toDF("id"), iters = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === referenceSeeded(seeds, 4, 85))
+    assert(got === referenceSeeded(seeds, 4))
     assert(got(99L) === 0L, "isolated node must be unreachable from seeds")
   }
 
@@ -111,7 +107,7 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("isolated and dangling nodes keep the teleport floor; mass is conserved within floor loss") {
-    val r = run(6, 85)
+    val r = run(6)
     val teleport = (15L * (Graph.Scale / 6)) / 100L
     assert(r(99L) === teleport) // isolated: no in-edges, teleport only
     assert(r.values.forall(_ >= teleport))

@@ -30,9 +30,11 @@ class MmrSpec extends AnyFunSuite {
     round6(dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b))))
   }
 
-  private def naive(k: Int, lambdaPct: Int): Seq[(Long, Long)] = {
+  private val lam = Similarity.MmrLambdaPct / 100.0
+  private val pen = (100 - Similarity.MmrLambdaPct) / 100.0
+
+  private def naive(k: Int, vecs: Seq[(Long, Seq[Float])] = vecs): Seq[(Long, Long)] = {
     val q = vecs.find(_._1 == 0L).get._2
-    val lam = lambdaPct / 100.0; val pen = (100 - lambdaPct) / 100.0
     var rem = vecs.filter(_._1 != 0L).map { case (id, v) => (id, v, cos(q, v)) }
     var ms = Map.empty[Long, Double]
     (1 to k).map { i =>
@@ -48,12 +50,12 @@ class MmrSpec extends AnyFunSuite {
     }
   }
 
-  private def run(k: Int, lambdaPct: Int): Seq[(Long, Long)] =
-    Similarity.mmrSelect(vecs.toDF("vec_id", "embedding"), 0L, k, lambdaPct)
+  private def run(k: Int, vecs: Seq[(Long, Seq[Float])] = vecs): Seq[(Long, Long)] =
+    Similarity.mmrSelect(vecs.toDF("vec_id", "embedding"), 0L, k)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
 
   test("distributed greedy equals the sequential reference pick-for-pick") {
-    for (lp <- Seq(70, 50)) assert(run(5, lp) === naive(5, lp), s"lambdaPct=$lp")
+    assert(run(5) === naive(5))
   }
 
   test("relevance prune + checkpointed rounds preserve picks on a random corpus") {
@@ -65,38 +67,25 @@ class MmrSpec extends AnyFunSuite {
     val many: Seq[(Long, Seq[Float])] = (0L until 120L).map { i =>
       i -> Seq.fill(8)(rnd.nextFloat() * 2f - 1f)
     }
-    def naiveMany(k: Int, lambdaPct: Int): Seq[(Long, Long)] = {
-      val q = many.find(_._1 == 0L).get._2
-      val lam = lambdaPct / 100.0; val pen = (100 - lambdaPct) / 100.0
-      var rem = many.filter(_._1 != 0L).map { case (id, v) => (id, v, cos(q, v)) }
-      var ms = Map.empty[Long, Double]
-      (1 to k).map { i =>
-        val pick =
-          if (i == 1) rem.minBy { case (id, _, rel) => (-rel, id) }
-          else rem.minBy { case (id, _, rel) => (-(lam * rel - pen * ms(id)), id) }
-        rem = rem.filterNot(_._1 == pick._1)
-        ms = rem.map { case (id, v, _) =>
-          val s = cos(v, pick._2)
-          id -> (if (i == 1) s else math.max(ms(id), s))
-        }.toMap
-        (i.toLong, pick._1)
-      }
-    }
-    def runMany(k: Int, lambdaPct: Int): Seq[(Long, Long)] =
-      Similarity.mmrSelect(many.toDF("vec_id", "embedding"), 0L, k, lambdaPct)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sortBy(_._1)
-    for (lp <- Seq(100, 70, 30, 0))
-      assert(runMany(12, lp) === naiveMany(12, lp), s"lambdaPct=$lp")
+    assert(run(12, many) === naive(12, many))
   }
 
   test("diversity: the near-copy of the top hit is deferred") {
-    // At a diversity-heavy mix (λ = 0.3) the near-copy's ~0.999
-    // similarity to the first pick must fall BEHIND every genuinely
-    // diverse vector — under pure top-k it would be second (rel
-    // ordering 2, 1, 3, 4, 5).
-    val order = run(5, 30).map(_._2)
-    assert(order.head === 2L)
-    assert(order.last === 1L, s"expected the near-copy deferred to last, got $order")
-    assert(order.indexOf(1L) > order.indexOf(3L))
+    // Query e1. 1 is the top hit, 2 its near-copy (second by
+    // relevance), 3 a mirror of 1 across e1 (third by relevance). At
+    // λ = 0.7 the near-copy's ~0.9997 similarity to the first pick
+    // must put it BEHIND the mirror — under pure top-k it would be
+    // second (rel ordering 1, 2, 3).
+    val mirrored: Seq[(Long, Seq[Float])] = Seq(
+      0L -> Seq(1f, 0f, 0f, 0f),
+      1L -> Seq(0.9f, 0.43f, 0f, 0f),
+      2L -> Seq(0.89f, 0.45f, 0f, 0f),
+      3L -> Seq(0.88f, -0.47f, 0f, 0f),
+      4L -> Seq(0f, 0f, 1f, 0f))
+    val order = run(4, mirrored).map(_._2)
+    assert(order === naive(4, mirrored).map(_._2))
+    assert(order.head === 1L)
+    assert(order.indexOf(2L) > order.indexOf(3L),
+      s"expected the near-copy deferred behind the mirror, got $order")
   }
 }

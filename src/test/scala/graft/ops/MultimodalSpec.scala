@@ -395,8 +395,7 @@ class MultimodalSpec extends AnyFunSuite {
       .map { case (id, g) => (id, Multimodal.encodeBmp24Gray(g, 18, 16)) }
       .toDF("doc_id", "content")
     val fps = Multimodal.imageDhash(media, 18, 16)
-    val pairs = graft.ops.Dedup.simhashPairs(fps, "doc_id", "phash",
-        maxHamming = 3, fpBits = 64)
+    val pairs = graft.ops.Dedup.simhashPairs(fps, "doc_id", "phash", fpBits = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)), "exact duplicate must pair")
     assert(pairs.contains((1L, 3L)) && pairs.contains((2L, 3L)),
@@ -914,20 +913,22 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("sampleFrames: one row per tick, frames are bounded byte slices") {
-    val df = Seq((1L, "video/fake", "abcdefghij".getBytes, 250L))
+    val blob = "abcdefghijklmnopqrst" // 20 bytes
+    val df = Seq((1L, "video/fake", blob.getBytes, 250L))
       .toDF("doc_id", "media_type", "content", "duration_ms")
-    val out = Multimodal.sampleFrames(df, everyMs = 100L, frameBytes = 4)
+    val out = Multimodal.sampleFrames(df, everyMs = 100L)
       .orderBy("frame_ms").collect()
     assert(out.map(_.getLong(2)).toSeq === Seq(0L, 100L, 200L))
-    // tick 0 → offset 0%10+1=1 → "abcd"; tick 100 → 100%10+1=1 → "abcd";
-    // tick 200 → 200%10+1=1 → "abcd" (slices wrap deterministically)
-    assert(out.forall(r => new String(r.getAs[Array[Byte]](3)) === "abcd"))
+    // tick 0 → offset 0%20+1=1; tick 100 → 100%20+1=1; tick 200 →
+    // 200%20+1=1 (slices wrap deterministically), FrameBytes = 16 long.
+    assert(Multimodal.FrameBytes === 16)
+    assert(out.forall(r => new String(r.getAs[Array[Byte]](3)) === "abcdefghijklmnop"))
     val out2 = Multimodal.sampleFrames(
-      Seq((2L, "video/fake", "abcdefghij".getBytes, 130L))
+      Seq((2L, "video/fake", blob.getBytes, 130L))
         .toDF("doc_id", "media_type", "content", "duration_ms"),
-      everyMs = 33L, frameBytes = 4).orderBy("frame_ms").collect()
-    // 33%10+1=4 → "defg"
-    assert(new String(out2(1).getAs[Array[Byte]](3)) === "defg")
+      everyMs = 33L).orderBy("frame_ms").collect()
+    // 33%20+1=14 → bytes 14..20: the slice stops at the blob's end
+    assert(new String(out2(1).getAs[Array[Byte]](3)) === "nopqrst")
   }
 }
 

@@ -117,10 +117,9 @@ class PipelineSpec extends AnyFunSuite {
     "UPDATE cards SET account = 'ACC1B', update_dt = TIMESTAMP('2024-01-02 09:00:00') WHERE card_num = 'C1'",
     "INSERT INTO accounts VALUES ('ACC1B',DATE('2024-12-31'),'CL1',TIMESTAMP('2024-01-02 09:00:00'),NULL)")
 
-  private def runAll(store: TableStore, src: Path, dimTs: Timestamp,
-                     db: String = mainDb): Unit =
-    Pipeline.run(spark, store, src.toString, reportDt,
-      dimDb = Some(dimDb(db)), dimRunTs = Some(dimTs))
+  /** One nightly run; the JDBC dimensions mark deletes at `reportDt`. */
+  private def runAll(store: TableStore, src: Path, db: String = mainDb): Unit =
+    Pipeline.run(spark, store, src.toString, reportDt, dimDb = Some(dimDb(db)))
 
   private def count(store: TableStore, t: String): Long =
     if (store.exists(t)) store.read(t).count() else 0L
@@ -135,7 +134,7 @@ class PipelineSpec extends AnyFunSuite {
     day1(src)
     seedDims()
     try {
-      runAll(store, src, dimTs = ts("2024-01-01 12:00:00"))
+      runAll(store, src)
       assert(count(store, "fact_transactions") === 7)
       assert(count(store, "fact_blacklist") === 1)
       assert(count(store, "dim_terminals_hist") === 2)
@@ -152,7 +151,7 @@ class PipelineSpec extends AnyFunSuite {
       // Run 2, same inputs: watermark gates skip every file AND the
       // JDBC extracts (no source changes); facts and dims unchanged;
       // the report appends the same rows again (reference parity).
-      runAll(store, src, dimTs = ts("2024-01-01 13:00:00"))
+      runAll(store, src)
       assert(store.read("fact_transactions").collect().toSet === factsAfter1)
       assert(store.read("dim_terminals_hist").collect().toSet === dimAfter1)
       assert(store.read("dim_cards_hist").collect().toSet === cardsAfter1)
@@ -165,7 +164,7 @@ class PipelineSpec extends AnyFunSuite {
       // out (the reference joins every history version — q17, E2E).
       day2(src)
       sql(mainDb, day2Db: _*)
-      runAll(store, src, dimTs = ts("2024-01-02 12:00:00"))
+      runAll(store, src)
       assert(count(store, "fact_transactions") === 9)
 
       val dim = store.read("dim_terminals_hist").collect().map(r =>
@@ -271,6 +270,31 @@ class PipelineSpec extends AnyFunSuite {
     assert(Incremental.readWatermark(store, "stg", "transactions") === ts("2024-01-02 00:00:00"))
   }
 
+  test("a transactions header with columns out of order fails the stage naming the file; others commit") {
+    val src = Files.createTempDirectory("graft_pipe_header")
+    val store = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh_header").toString)
+    day1(src)
+    Pipeline.run(spark, store, src.toString, reportDt)
+    val facts = store.read("fact_transactions").collect().toSet
+    val d1 = ts("2024-01-01 00:00:00")
+    // Day 2: card_num and terminal swapped in the header and the rows.
+    // Read by position the file would load C1 as a terminal and T1 as
+    // a card, and feed the fraud rules wrong keys.
+    write(src, "transactions_02012024.txt",
+      "transaction_id;transaction_date;amount;terminal;oper_type;oper_result;card_num",
+      "4;2024-01-02 10:00:00;7,00;T1;PAYMENT;SUCCESS;C1")
+    write(src, "terminals_02012024.txt",
+      "terminal_id;terminal_type;terminal_city", "T1;ATM;Kazan")
+    val err = intercept[IllegalStateException](
+      Pipeline.run(spark, store, src.toString, reportDt))
+    assert(err.getMessage.contains("transactions_02012024.txt"), err.getMessage)
+    assert(err.getMessage.contains("transactions stage"), err.getMessage)
+    assert(store.read("fact_transactions").collect().toSet === facts)
+    assert(Incremental.readWatermark(store, "stg", "transactions") === d1)
+    // The sibling stage committed its day-2 file.
+    assert(Incremental.readWatermark(store, "stg", "terminals") === ts("2024-01-02 00:00:00"))
+  }
+
   test("a header-only file leaves its table and watermark; all-null dates advance to the file date") {
     val src = Files.createTempDirectory("graft_pipe_empty")
     val store = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh_empty").toString)
@@ -348,30 +372,30 @@ class PipelineSpec extends AnyFunSuite {
       }.toMap
 
   /** The two-day fixture in a fresh source directory, warehouse and
-    * source DB; `day` runs one day (warehouse, files, DB, delete clock). */
+    * source DB; `day` runs one day (warehouse, files, DB). */
   private def replay(tag: String)
-                    (day: (TableStore, Path, Sources.JdbcSpec, Timestamp) => Unit): TableStore = {
+                    (day: (TableStore, Path, Sources.JdbcSpec) => Unit): TableStore = {
     val db = s"graftpipe_$tag"
     val src = Files.createTempDirectory(s"graft_pipe_src_$tag")
     val store = new TableStore(spark, Files.createTempDirectory(s"graft_pipe_wh_$tag").toString)
     seedDims(db)
     try {
       day1(src)
-      day(store, src, dimDb(db), ts("2024-01-01 12:00:00"))
+      day(store, src, dimDb(db))
       day2(src)
       sql(db, day2Db: _*)
-      day(store, src, dimDb(db), ts("2024-01-02 12:00:00"))
+      day(store, src, dimDb(db))
     } finally dropDims(db)
     store
   }
 
   test("concurrent load stages leave every table as the stages run one by one") {
-    val sequential = tables(replay("seq") { (store, src, db, dimTs) =>
+    val sequential = tables(replay("seq") { (store, src, db) =>
       Pipeline.runTransactions(spark, store, src.toString)
       Pipeline.runBlacklist(spark, store, src.toString)
       Pipeline.runTerminals(spark, store, src.toString)
       Seq(Pipeline.cardsDim(db), Pipeline.accountsDim(db), Pipeline.clientsDim(db))
-        .foreach(Pipeline.runJdbcDim(spark, store, _, dimTs))
+        .foreach(Pipeline.runJdbcDim(spark, store, _, reportDt))
       Pipeline.runReport(spark, store, reportDt)
     })
     assert(sequential.keySet.contains("meta_date") && sequential.keySet.contains("rep_fraud"))
@@ -379,9 +403,8 @@ class PipelineSpec extends AnyFunSuite {
     // Fresh warehouses, so a lost watermark update or a torn read of
     // the shared meta table would show up as a differing table.
     (1 to 5).foreach { i =>
-      val concurrent = tables(replay(s"conc$i") { (store, src, db, dimTs) =>
-        Pipeline.run(spark, store, src.toString, reportDt,
-          dimDb = Some(db), dimRunTs = Some(dimTs))
+      val concurrent = tables(replay(s"conc$i") { (store, src, db) =>
+        Pipeline.run(spark, store, src.toString, reportDt, dimDb = Some(db))
       })
       assert(concurrent.keySet === sequential.keySet, s"run $i")
       sequential.keys.foreach(t => assert(concurrent(t) === sequential(t), s"run $i, table $t"))
@@ -395,7 +418,7 @@ class PipelineSpec extends AnyFunSuite {
     seedDims(db)
     try {
       day1(src)
-      runAll(store, src, ts("2024-01-01 12:00:00"), db)
+      runAll(store, src, db)
       // Day 2 changes every source, so each stage stages, merges or
       // appends, and commits its watermark.
       day2(src)
@@ -430,11 +453,10 @@ class PipelineSpec extends AnyFunSuite {
     val src = Files.createTempDirectory("graft_pipe_src_fault")
     val faulted = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh_fault").toString)
     val clean = new TableStore(spark, Files.createTempDirectory("graft_pipe_wh_clean").toString)
-    val dimTs = ts("2024-01-01 12:00:00")
     day1(src)
     seedDims(db, tables = Seq("cards", "accounts")) // the clients extract fails
     try {
-      val err = intercept[Throwable](runAll(faulted, src, dimTs, db))
+      val err = intercept[Throwable](runAll(faulted, src, db))
       val chain = Iterator.iterate(err)(_.getCause).takeWhile(_ != null).toSeq
       assert(chain.exists(e => String.valueOf(e.getMessage).contains("CLIENTS")), err)
       assert(!faulted.exists("rep_fraud"))
@@ -455,8 +477,8 @@ class PipelineSpec extends AnyFunSuite {
       // run's. Staging is truncate-reload per run (the rerun reloads
       // the already-loaded dims' empty extracts), so it is left out.
       seedDims(db, tables = Seq("clients"))
-      runAll(faulted, src, dimTs, db)
-      runAll(clean, src, dimTs, db)
+      runAll(faulted, src, db)
+      runAll(clean, src, db)
       def warehouse(store: TableStore) = tables(store).filter(!_._1.startsWith("stg_"))
       assert(warehouse(faulted) === warehouse(clean))
       assert(warehouse(clean).keySet.contains("rep_fraud"))

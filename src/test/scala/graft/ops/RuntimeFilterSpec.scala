@@ -51,13 +51,4 @@ class RuntimeFilterSpec extends AnyFunSuite {
     assert(joinLine >= 0 && pruneLine > joinLine,
       "prune should be a child (printed below) of the join")
   }
-
-  test("sketch size limits are enforced") {
-    intercept[IllegalArgumentException] {
-      RuntimeFilter.buildBloom(keys, col("k"), numBits = RuntimeFilter.MaxBloomBits + 1)
-    }
-    intercept[IllegalArgumentException] {
-      RuntimeFilter.buildBloom(keys, col("k"), estItems = 0)
-    }
-  }
 }

@@ -144,10 +144,10 @@ class SamplingPropertySpec extends AnyFunSuite {
   test("ppsSample equals the naive interval walk; hit mass is tight") {
     check(Prop.forAll(genCorpus, Gen.choose(1L, 500L)) { (rows, step) =>
       val df = rows.toDF("doc_id", "lang", "w")
-      val got = Sampling.ppsSample(df, "doc_id", col("w"), step, shards = 4)
+      val got = Sampling.ppsSample(df, "doc_id", col("w"), step)
         .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_hits")).toMap
       val naive = rows.map(r => (r._1, key(r._1), r._3))
-        .groupBy(_._2 % 4).flatMap { case (_, rs) =>
+        .groupBy(_._2 % Sampling.PpsShards).flatMap { case (_, rs) =>
           var cum = 0L
           rs.sortBy(r => (r._2, r._1)).flatMap { case (id, _, w) =>
             val prev = cum; cum += w
@@ -157,7 +157,7 @@ class SamplingPropertySpec extends AnyFunSuite {
         }
       val tot = rows.map(_._3).sum
       got == naive.toMap &&
-        math.abs(got.values.sum - tot / step) <= 4 // ≤ 1 residue per shard
+        math.abs(got.values.sum - tot / step) <= Sampling.PpsShards // ≤ 1 residue per shard
     })
   }
 

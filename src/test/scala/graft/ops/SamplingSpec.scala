@@ -165,7 +165,7 @@ class SamplingSpec extends AnyFunSuite {
 
   test("ppsSample: selection equals the naive per-shard token-interval walk") {
     val sized = docs.withColumn("n", (col("doc_id") % 13).cast("bigint")) // incl. zeros
-    val got = Sampling.ppsSample(sized, "doc_id", col("n"), step = 97L, shards = 8)
+    val got = Sampling.ppsSample(sized, "doc_id", col("n"), step = 97L)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("n_hits")).toMap
     // Naive recomputation: md5-hash order within hash shards.
     def key(i: Long) = {
@@ -175,7 +175,7 @@ class SamplingSpec extends AnyFunSuite {
       h % 1000000L
     }
     val naive = (1L to 4000L).map(i => (i, key(i), i % 13))
-      .groupBy(_._2 % 8).flatMap { case (_, rows) =>
+      .groupBy(_._2 % Sampling.PpsShards).flatMap { case (_, rows) =>
         var cum = 0L
         rows.sortBy(r => (r._2, r._1)).flatMap { case (id, _, n) =>
           val prev = cum; cum += n
@@ -187,7 +187,7 @@ class SamplingSpec extends AnyFunSuite {
     // Zero-token docs are never picked; total hits ≈ total tokens / step.
     assert(got.keys.forall(_ % 13 != 0))
     val totTok = (1L to 4000L).map(_ % 13).sum
-    assert(math.abs(got.values.sum - totTok / 97) <= 8) // ≤1 boundary doc per shard
+    assert(math.abs(got.values.sum - totTok / 97) <= Sampling.PpsShards) // ≤1 boundary doc per shard
   }
 
   test("rankNormalize: two-phase ranks equal the naive per-stratum sort exactly") {

@@ -113,19 +113,17 @@ class SkewSpec extends AnyFunSuite {
     val (f, d) = hotFixture
     val plain = f.join(d, Seq("k"), "inner")
       .select("id", "k", "v", "label").collect().toSet
-    for (detectOneIn <- Seq(1, 4)) {
-      val salted = Skew.saltedJoinHot(f, d, "k", col("id"), salts = 8,
-          hotCap = 50, detectOneIn = detectOneIn)
-        .select("id", "k", "v", "label").collect().toSet
-      assert(salted === plain, s"detectOneIn=$detectOneIn")
-    }
+    val salted = Skew.saltedJoinHot(f, d, "k", col("id"), salts = 8, hotCap = 50)
+      .select("id", "k", "v", "label").collect().toSet
+    assert(salted === plain)
   }
 
-  test("saltedJoinHot: left join keeps unmatched fact rows exactly once") {
+  test("saltedJoinGivenHot: left join keeps unmatched fact rows exactly once") {
     val (f, d) = hotFixture
     val extra = f.union(Seq((999L, "nomatch", 0L)).toDF("id", "k", "v"))
-    val out = Skew.saltedJoinHot(extra, d, "k", col("id"), salts = 8,
-      hotCap = 50, detectOneIn = 1, joinType = "left")
+    val hot = Seq("boiler").toDF("k")
+    val out = Skew.saltedJoinGivenHot(extra, d, "k", col("id"), salts = 8,
+        hotKeys = hot, joinType = "left")
       .select("id", "k", "v", "label").collect()
     assert(out.count(_.getLong(0) == 999L) === 1)
     assert(out.length === extra.count().toInt)
@@ -142,8 +140,7 @@ class SkewSpec extends AnyFunSuite {
     val spread = salted.filter(col("k") === "boiler")
       .select("__salt").distinct().count()
     assert(spread > 4, s"hot key spread across only $spread salts")
-    val joined = Skew.saltedJoinHot(f, d, "k", col("id"), salts = 8,
-      hotCap = 50, detectOneIn = 1)
+    val joined = Skew.saltedJoinHot(f, d, "k", col("id"), salts = 8, hotCap = 50)
     assert(joined.count() === f.join(d, Seq("k"), "inner").count())
   }
 }

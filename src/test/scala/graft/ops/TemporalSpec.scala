@@ -16,13 +16,10 @@ class TemporalSpec extends AnyFunSuite {
     ("T2", "dead", ts("2024-01-01 00:00:00"), ts("9999-12-31 00:00:00"), "Y"))
     .toDF("terminal_id", "v", "effective_from", "effective_to", "deleted_flg")
 
-  private def lookup(factTs: String, strictFrom: Boolean = true,
-                     strictTo: Boolean = true, liveOnly: Boolean = true,
-                     key: String = "T1"): Seq[String] = {
+  private def lookup(factTs: String, key: String = "T1"): Seq[String] = {
     val fact = Seq((key, ts(factTs))).toDF("terminal", "trans_date")
     Temporal.asOfJoin(fact, dim, fact("terminal"), dim("terminal_id"),
-        fact("trans_date"), strictFrom = strictFrom, strictTo = strictTo,
-        liveOnly = liveOnly)
+        fact("trans_date"))
       .select("v").collect().toSeq.map(r => Option(r.getString(0)).orNull)
   }
 
@@ -34,14 +31,9 @@ class TemporalSpec extends AnyFunSuite {
     assert(lookup("2024-01-15 00:00:01") === Seq("v2"))
   }
 
-  test("inclusive bounds: boundary resolves to both adjacent versions") {
-    assert(lookup("2024-01-15 00:00:00", strictFrom = false, strictTo = false)
-      .toSet === Set("v1", "v2"))
-  }
-
   test("liveOnly excludes 'Y' versions; left join preserves the fact row") {
+    // T2's only version is deleted: the fact row survives unmatched.
     assert(lookup("2024-01-10 00:00:00", key = "T2") === Seq(null))
-    assert(lookup("2024-01-10 00:00:00", key = "T2", liveOnly = false) === Seq("dead"))
   }
 
   // --- rangeJoin: the bucketed pure-range (no equi key) join ---
@@ -140,9 +132,9 @@ class TemporalSpec extends AnyFunSuite {
     (5L, "u2", ts("2024-01-09 00:00:00")))
     .toDF("rid", "k", "rts")
 
-  private def abRun(tol: Option[Long] = None) =
+  private def abRun() =
     Temporal.asofBackward(abLeft, abRight, key = "k",
-        leftTs = "lts", rightTs = "rts", rightId = "rid", toleranceSec = tol)
+        leftTs = "lts", rightTs = "rts", rightId = "rid")
       .collect().map(r => r.getLong(0) ->
         (Option(r.getTimestamp(3)).map(_.toString).orNull,
           if (r.isNullAt(4)) -1L else r.getLong(4))).toMap
@@ -155,14 +147,6 @@ class TemporalSpec extends AnyFunSuite {
     assert(got(103L) === ((null, -1L))) // key absent from right side
   }
 
-  test("asofBackward tolerance nulls out stale matches") {
-    // 101's match is 5 days old; a 1-day tolerance drops it, while
-    // 100's same-instant match survives.
-    val got = abRun(tol = Some(86400L))
-    assert(got(100L) === (("2024-01-10 00:00:00.0", 3L)))
-    assert(got(101L) === ((null, -1L)))
-  }
-
   test("asofForward: earliest right at-or-after, inclusive ties, min-id tie-break") {
     val got = Temporal.asofForward(abLeft, abRight, key = "k",
         leftTs = "lts", rightTs = "rts", rightId = "rid")
@@ -173,17 +157,6 @@ class TemporalSpec extends AnyFunSuite {
     assert(got(101L) === ((null, -1L))) // nothing at-or-after 01-20
     assert(got(102L) === (("2024-01-09 00:00:00.0", 5L)))
     assert(got(103L) === ((null, -1L)))
-  }
-
-  test("asofForward tolerance drops far-future matches") {
-    // 102's next view is 4 days ahead; a 1-day tolerance nulls it.
-    val got = Temporal.asofForward(abLeft, abRight, key = "k",
-        leftTs = "lts", rightTs = "rts", rightId = "rid",
-        toleranceSec = Some(86400L))
-      .collect().map(r => r.getLong(0) ->
-        Option(r.getTimestamp(3)).map(_.toString).orNull).toMap
-    assert(got(100L) === "2024-01-10 00:00:00.0")
-    assert(got(102L) === null)
   }
 
   test("asofBackward plans one window over the union — no join anywhere") {

@@ -18,11 +18,11 @@ class WinnowSpec extends AnyFunSuite {
     * pipeline. SMALL inputs only — the inlining hazard documented on
     * `winnowSelect` makes it O(L²) in md5 evaluations per document,
     * which is why the corpus flow is [[Dedup.buildWinnowIndex]]. */
-  private def winnowedFingerprints(ws: Column, window: Int, shingleN: Int = 3): Column =
-    Dedup.winnowSelect(Dedup.positionalShingleHashes(ws, shingleN), window)
+  private def winnowedFingerprints(ws: Column, window: Int): Column =
+    Dedup.winnowSelect(Dedup.positionalShingleHashes(ws), window)
 
   private val W = 8 // q146's window
-  private val N = 3 // shingle width
+  private val N = Dedup.ShingleN
 
   /** Positional shingle hashes of one doc, computed by the SAME
     * engine expression the operator uses (the hash function itself

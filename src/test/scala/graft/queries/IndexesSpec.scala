@@ -37,7 +37,7 @@ class IndexesSpec extends AnyFunSuite {
   test("neardup edges and labels match the inline signature pipeline") {
     val inlineEdges = Dedup.scoredCandidatePairs(
         Dedup.minhashSignatures(docs.select("doc_id", "text"), "doc_id", "text"),
-        "doc_id", Dedup.DefaultMaxBandFreq)
+        "doc_id")
       .filter(col("__inter").cast("double") / col("__union") >= thr)
       .select("d1", "d2")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -56,7 +56,7 @@ class IndexesSpec extends AnyFunSuite {
   test("minhash pair scores match the inline scored candidate pairs") {
     val inline = Dedup.scoredCandidatePairs(
         Dedup.minhashSignatures(docs.select("doc_id", "text"), "doc_id", "text"),
-        "doc_id", Dedup.DefaultMaxBandFreq)
+        "doc_id")
       .select("d1", "d2", "__inter", "__union")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet
@@ -76,7 +76,7 @@ class IndexesSpec extends AnyFunSuite {
         Indexes.containmentGroups(spark, sf),
         Indexes.containmentReps(spark, sf), "doc_id", thresholdPct = 80)
       .collect().map(_.toSeq).toSet
-    val fromIndex = Indexes.containmentPairs(spark, sf, thresholdPct = 80)
+    val fromIndex = Indexes.containmentPairs(spark, sf)
       .collect().map(_.toSeq).toSet
     assert(fromIndex === inline)
     assert(fromIndex.nonEmpty, "fixture corpus must contain containment pairs")
@@ -285,7 +285,7 @@ class IndexesSpec extends AnyFunSuite {
       shingles(s, sf); sourceShingles(s, sf); bpeWords(s, sf)
       bpeVocab(s, sf, BpeQueries.MonitorMerges); bpeMerges(s, sf, BpeQueries.NMerges)
       containmentGroups(s, sf); containmentReps(s, sf)
-      containmentPairs(s, sf, thresholdPct = 80); winnowedPrints(s, sf, window = 8)
+      containmentPairs(s, sf); winnowedPrints(s, sf)
       signatures(s, sf); minhashPairScores(s, sf)
       simhashFingerprints(s, sf, bits = 32); simhashFingerprints(s, sf, bits = 60)
       neardupEdges(s, sf, thr); neardupLabels(s, sf, thr)
@@ -299,7 +299,7 @@ class IndexesSpec extends AnyFunSuite {
       audioFingerprint(s, sf); audioFingerprintAdpcm(s, sf); audioFingerprintMdct(s, sf)
       videoPhashMjpeg(s, sf); videoSeqPhashMjpeg(s, sf)
       domainRanks(s, sf); trustedRanks(s, sf)
-      imagePhashPairs(s, sf); audioFpPairs(s, sf); imagePhashLabels(s, sf, maxHamming = 3)
+      imagePhashPairs(s, sf); audioFpPairs(s, sf); imagePhashLabels(s, sf)
     }
     /** Published tables (directories holding `_SUCCESS`), keyed by
       * their path below the registry root. */
