@@ -101,6 +101,32 @@ object Bench {
     // let the bench proceed and the JVM exit.
     val queryTimeoutSec: Long =
       sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "120").toLong
+    // CODEGEN CENSUS: whole-stage codegen fallbacks per query, counted
+    // from the engine's "Whole-stage codegen disabled" warning over the
+    // warmup and every timed pass. A fallback re-runs the failed compile
+    // and then the stage interpreted on EVERY execution (Spark caches no
+    // failed compile), a cost the per-query time shows only as "slow";
+    // the census names the query. Queries run one at a time, so the
+    // query current when the warning is logged is the one it belongs to.
+    val currentQuery = new java.util.concurrent.atomic.AtomicReference("")
+    val codegenFallbacks = scala.collection.concurrent.TrieMap[String, Long]()
+    locally {
+      import org.apache.logging.log4j.LogManager
+      import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+      import org.apache.logging.log4j.core.appender.AbstractAppender
+      import org.apache.logging.log4j.core.config.Property
+      val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      val app = new AbstractAppender("bench-codegen", null, null, true,
+          Property.EMPTY_ARRAY) {
+        override def append(e: LogEvent): Unit =
+          if (e.getMessage.getFormattedMessage.contains("Whole-stage codegen disabled"))
+            codegenFallbacks.updateWith(currentQuery.get)(c => Some(c.getOrElse(0L) + 1)): Unit
+      }
+      app.start()
+      ctx.getConfiguration.getRootLogger.addAppender(app, null, null)
+      ctx.updateLoggers()
+    }
+
     val watchdog = java.util.concurrent.Executors.newCachedThreadPool(
       (r: Runnable) => { val t = new Thread(r, "bench-watchdog"); t.setDaemon(true); t })
     val clearCacheNanos = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -108,6 +134,7 @@ object Bench {
     def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
             timeoutSec: Long = queryTimeoutSec): Unit = {
       val group = s"bench-$name"
+      currentQuery.set(name)
       val task = watchdog.submit(new java.util.concurrent.Callable[Unit] {
         def call(): Unit = {
           // Job group is a thread-local: set it on the thread that
@@ -280,7 +307,9 @@ object Bench {
     // nulled-full-run case.
     val mem = peakHeap.map { case (k, v) => jstr(k) + ":" + v }
       .mkString("{", ",", "}")
-    println(f"""{"metric":"total","value":$total,"unit":"sec","wall_sec":$wallSec%.3f,"run_quality":$quality%.3f,"calib_sec":$calibSec%.3f,"clearcache_sec":$ccSec%.3f,"extra_passes":${extraPassCount.get()},"extra_pass_sec":$exSec%.3f,"subset":${only.isDefined},"n_errors":${errors.size},"heap_max_bytes":${Runtime.getRuntime.maxMemory},"peak_heap_bytes":$mem,"queries":$qs,"errors":$errJson,"sf":${jstr(sfDir)}}""")
+    val fallbacks = queries.map { case (k, _) =>
+      jstr(k) + ":" + codegenFallbacks.getOrElse(k, 0L) }.mkString("{", ",", "}")
+    println(f"""{"metric":"total","value":$total,"unit":"sec","wall_sec":$wallSec%.3f,"run_quality":$quality%.3f,"calib_sec":$calibSec%.3f,"clearcache_sec":$ccSec%.3f,"extra_passes":${extraPassCount.get()},"extra_pass_sec":$exSec%.3f,"subset":${only.isDefined},"n_errors":${errors.size},"heap_max_bytes":${Runtime.getRuntime.maxMemory},"peak_heap_bytes":$mem,"codegen_fallbacks":$fallbacks,"queries":$qs,"errors":$errJson,"sf":${jstr(sfDir)}}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -91,20 +91,26 @@ object Sketches {
     * 718274·2^33 = 6,169,926,679,134,208 < 2^63. */
   val HllNum: Long = AlphaPpm * (HllBuckets.toLong * HllBuckets) * (1L << HllShift)
 
-  /** ±1 sign of word `w` under estimator `i`: bit 0 of the seeded
-    * portable hash. Oracle: `1 - 2*(h64('ams' || i || '|' || w) % 2)`. */
-  def amsSign(w: org.apache.spark.sql.Column, i: Int): org.apache.spark.sql.Column =
-    lit(1L) - lit(2L) * pmod(portableHash64(concat(lit(s"ams$i|"), w)), lit(2L))
+  /** ±1 sign of word `w` under estimator column `i`: bit 0 of the
+    * seeded portable hash of `ams<i>|<w>`. Oracle: `1 - 2*(h64('ams' ||
+    * i || '|' || w) % 2)`. */
+  def amsSign(w: Column, i: Column): Column =
+    lit(1L) - lit(2L) *
+      pmod(portableHash64(concat(lit("ams"), i.cast("string"), lit("|"), w)), lit(2L))
 
   /** The [[AmsEstimators]] sketch sums over a term-count table
-    * `(w, n)`: one posexplode pass → (i, z = Σ n·s_i(w)). Partial
-    * aggregation makes this map-side at scale. */
+    * `(w, n)` → (i, z = Σ n·s_i(w)). Each row fans out to the
+    * estimator ids as a column (`explode(sequence(...))`), so the sign
+    * is ONE generated expression: one literal-keyed sign per estimator
+    * would grow the fused stage past the JVM's 64 KB method limit and
+    * run it interpreted. Partial aggregation makes this map-side at
+    * scale. */
   def amsSketch(types: DataFrame): DataFrame =
     types
-      .select(col("n"),
-        posexplode(array((0 until AmsEstimators).map(amsSign(col("w"), _)): _*)))
-      .toDF("n", "i", "s")
-      .groupBy("i").agg(sum(col("n") * col("s")).cast("bigint").as("z"))
+      .select(col("w"), col("n"),
+        explode(sequence(lit(0), lit(AmsEstimators - 1))).as("i"))
+      .groupBy("i")
+      .agg(sum(col("n") * amsSign(col("w"), col("i"))).cast("bigint").as("z"))
 
   /** Median-of-means F2 estimate over the sketch sums (one row,
     * `f2_est`): group mean = Σz² div [[AmsGroupSize]] (exact BIGINT

@@ -81,7 +81,10 @@ object SketchQueries {
     // exact moment and the signed per-mille error. Every value is
     // exact BIGINT arithmetic over the portable hash, so the oracle
     // pins the estimator bit-for-bit — a wrong sign, a wrong group
-    // boundary, or a drifting hash all hash-mismatch the row. Sketch
+    // boundary, or a drifting hash all hash-mismatch the row. The
+    // engine side mirrors the oracle's cross product: the estimator id
+    // is a column (`explode(sequence(0, 251))`), so the sign is one
+    // expression and the stage stays in whole-stage codegen. Sketch
     // state is 252 longs, mergeable by addition: at 1000 executors
     // the pass is map-side partials shipping kilobytes.
     Q("q212_ams_f2_moment",

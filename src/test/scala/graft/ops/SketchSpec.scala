@@ -1,5 +1,8 @@
 package graft.ops
 
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
@@ -13,6 +16,8 @@ import graft.TestSpark
 class SketchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  private object Plans extends AdaptiveSparkPlanHelper
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -50,6 +55,27 @@ class SketchSpec extends AnyFunSuite {
     val plan = Sketches.amsSketch(types.toDF("w", "n"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("partial_sum"), plan.take(2000))
+  }
+
+  test("amsSketch compiles inside whole-stage codegen (no 64 KB method)") {
+    // Parquet-backed: over a LocalRelation the optimizer folds the
+    // sketch eagerly and no generated stage is left to check. Each
+    // fused stage is compiled the way WholeStageCodegenExec does; a
+    // failed compile or a method past the huge-method limit means the
+    // stage runs interpreted.
+    val dir = java.nio.file.Files.createTempDirectory("ams_codegen").toString
+    types.toDF("w", "n").write.parquet(s"$dir/types")
+    val df = Sketches.amsSketch(spark.read.parquet(s"$dir/types"))
+    assert(df.collect().length === Sketches.AmsEstimators)
+    val stages = Plans.collect(df.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec => w }
+    assert(stages.nonEmpty)
+    val limit = spark.sessionState.conf.hugeMethodLimit
+    stages.foreach { w =>
+      val (_, stats) = CodeGenerator.compile(w.doCodeGen()._2)
+      assert(stats.maxMethodCodeSize <= limit,
+        s"stage ${w.codegenStageId}: ${stats.maxMethodCodeSize} B > $limit B")
+    }
   }
 
   test("amsF2Estimate is the median of the group means of z²") {
