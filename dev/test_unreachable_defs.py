@@ -51,6 +51,21 @@ object Verify {
 }
 '''
 
+SEEDS = '''package fx
+
+object Seeds {
+  def seed: Int = 1
+  def grow(n: Int): Int = n + 1
+}
+
+object Explain {
+  def main(args: Array[String]): Unit = {
+    val seed = args.length
+    println(Seeds.grow(seed))
+  }
+}
+'''
+
 
 def write(root, rel, text):
     path = os.path.join(root, rel)
@@ -103,6 +118,12 @@ class UnreachableDefsTest(unittest.TestCase):
         dead = self.dead_names()
         self.assertIn("Store.unused", dead)
         self.assertNotIn("Store.used", dead)
+
+    def test_a_local_val_hides_a_member_of_its_name(self):
+        write(self.root, "src/main/scala/fx/Seeds.scala", SEEDS)
+        dead = self.dead_names()
+        self.assertIn("Seeds.seed", dead)
+        self.assertNotIn("Seeds.grow", dead)
 
     def test_exit_status_follows_the_allowlist(self):
         def run(allow):

@@ -191,6 +191,7 @@ class Node:
         self.modifiers = modifiers
         self.children = []
         self.refs = []                  # (qualifier or None, name, offset)
+        self.locals = set()             # names this node binds itself
         self.extends = False
         self.start = self.end = 0
 
@@ -294,8 +295,15 @@ def _line_index(src):
 
 
 def _collect_refs(text, toks, nodes):
-    """Give each identifier to the innermost node whose span holds it."""
+    """Give each identifier to the innermost node whose span holds it.
+
+    A name the node binds locally (see `_local_binding`) shadows every
+    other definition of it there: its bare uses are not refs.
+    """
     ordered = sorted(nodes, key=lambda n: (n.start, -n.end))
+    in_tuple_params = {m.start(1) + g.start() for m in LAMBDA_TUPLE.finditer(text)
+                       for g in IDENT.finditer(m.group(1))}
+    owned = []
     for k, (t, pos) in enumerate(toks):
         if not IDENT.fullmatch(t) or t in DEF_KEYWORDS or t in MODIFIERS:
             continue
@@ -308,7 +316,34 @@ def _collect_refs(text, toks, nodes):
         if owner is None:
             continue
         qual = toks[k - 2][0] if k >= 2 and toks[k - 1][0] == "." else None
-        owner.refs.append((qual, t, pos))
+        owned.append((owner, qual, t, pos))
+        if _local_binding(text, toks, k, in_tuple_params):
+            owner.locals.add(t)
+    for owner, qual, t, pos in owned:
+        if qual is not None or t not in owner.locals:
+            owner.refs.append((qual, t, pos))
+
+
+# `(a, b) =>`: a lambda's or a pattern's untyped parameters.
+LAMBDA_TUPLE = re.compile(r"\(\s*([a-z_]\w*(?:\s*,\s*[a-z_]\w*)*)\s*\)\s*=>")
+LAMBDA_ARROW = re.compile(r"\s*=>")
+# `name:` declares a parameter; `xs: _*`, `x :: xs` and `xs :+ x` use one.
+BINDING_COLON = re.compile(r"\s*:(?![:=+\\])(?!\s*_\s*\*)")
+
+
+def _local_binding(text, toks, k, in_tuple_params):
+    """Whether toks[k] binds its name: `val`/`var`/`def NAME`, a lambda
+    or pattern parameter (`x =>`, `(a, b) =>`) or a `name:` parameter.
+    Parameters start lower-case: a capitalized name in a pattern is a
+    stable identifier, not a binding."""
+    t, pos = toks[k]
+    if k and toks[k - 1][0] in ("val", "var", "def"):
+        return True
+    if not t[0].islower():
+        return False
+    end = pos + len(t)
+    return (pos in in_tuple_params or LAMBDA_ARROW.match(text, end) is not None
+            or BINDING_COLON.match(text, end) is not None)
 
 
 def _strip_imports(src):

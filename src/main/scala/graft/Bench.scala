@@ -32,26 +32,7 @@ object Bench {
       require(unknown.isEmpty, s"SPARK_GRAFT_ONLY names unknown queries: " +
         s"${unknown.toSeq.sorted.mkString(", ")}")
     }
-    // SPARK_GRAFT_ORDER=reverse|shuffled:<seed> — dev aid for bisecting
-    // suite-ORDER effects (JVM heap/codegen-cache state accumulating
-    // across the run) from suite-STATE effects (registry growth,
-    // scratch accumulation): a position-dependent cost moves with the
-    // query's position; a state-dependent one doesn't. The driver never
-    // sets it; default is the stable name order.
-    val ordered = {
-      val base = SparkEntry.queries.toSeq.sortBy(_._1)
-      sys.env.get("SPARK_GRAFT_ORDER") match {
-        case None => base
-        case Some("reverse") => base.reverse
-        case Some(s) if s.startsWith("shuffled:") =>
-          new scala.util.Random(s.stripPrefix("shuffled:").toLong)
-            .shuffle(base)
-        case Some(other) =>
-          throw new IllegalArgumentException(
-            s"SPARK_GRAFT_ORDER: unknown mode '$other'")
-      }
-    }
-    val queries = ordered
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
 

@@ -11,8 +11,9 @@ import graft.ops.Pipeline
   * Usage: PipelineMain <srcDir> <warehouseDir> [reportDtIso] [--archive]
   *
   * `--archive` moves each processed source file to
-  * `<srcDir>/archive/<name>.backup`. Any other `--` flag, or a fourth
-  * positional argument, fails with the usage line before a session
+  * `<srcDir>/archive/<name>.backup`. Any other `--` flag, a fourth
+  * positional argument, or a `reportDtIso` that is not a real
+  * `yyyy-MM-dd` date fails with the usage line before a session
   * starts. `SPARK_GRAFT_MASTER` overrides the `local[SPARK_GRAFT_CPUS]`
   * master.
   */
@@ -24,8 +25,13 @@ object PipelineMain {
     val (flags, positional) = args.partition(_.startsWith("--"))
     require(positional.length >= 2 && positional.length <= 3 &&
       flags.forall(_ == "--archive"), Usage)
-    val reportDt = positional.lift(2).map(s => Timestamp.valueOf(s + " 00:00:00"))
-      .getOrElse(new Timestamp(System.currentTimeMillis()))
+    // ISO_LOCAL_DATE resolves strictly: 2024-02-30 fails, never rolls over.
+    val reportDt = positional.lift(2).map { s =>
+      try Timestamp.valueOf(java.time.LocalDate.parse(s).atStartOfDay)
+      catch { case e: java.time.format.DateTimeParseException =>
+        throw new IllegalArgumentException(s"$Usage: reportDtIso '$s' is not a valid date", e)
+      }
+    }.getOrElse(new Timestamp(System.currentTimeMillis()))
     (positional(0), positional(1), reportDt, flags.nonEmpty)
   }
 

@@ -18,8 +18,8 @@ object SparkEntry {
     * NTZ normalization casts through the session zone), µs parquet
     * timestamps (INT96, the default, overflows int64 nanos for the
     * SCD2 sentinel 9999-12-31 on ns-based readers such as pyarrow),
-    * the harness `events` NANOS timestamps read as long, no UI, and
-    * partition discovery on the driver. Callers add their extras and call `getOrCreate`. */
+    * the harness `events` NANOS timestamps read as long, and no UI.
+    * Callers add their extras and call `getOrCreate`. */
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -29,12 +29,6 @@ object SparkEntry {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      // Partition discovery always lists on the driver. Above this many
-      // leaf directories Spark lists with a job of one task per leaf,
-      // which on a local session runs on the same cores and disk as the
-      // driver, so it only adds per-task overhead: a 4,096-bucket SCD2
-      // table took 25 s to list that way and about 1 s on the driver.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", Int.MaxValue.toString)
 
   private def registry: Seq[Q] =
     ParityQueries.all ++ graft.queries.ExtensionQueries.all ++

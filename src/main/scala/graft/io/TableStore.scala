@@ -27,6 +27,10 @@ import org.apache.spark.sql.types.StructType
   * atomically-published pointer file, the minimal Delta-shaped
   * commit).
   *
+  * Every table is one flat directory of parquet files: no writer
+  * here partitions by column, and [[read]] takes a table's schema
+  * from a file at the top of its directory.
+  *
   * Scale notes: append-mode parquet adds files without rewriting
   * existing data (bounded work per batch regardless of table size);
   * a snapshot swap rewrites only the dimension, never the facts.
@@ -45,9 +49,9 @@ final class TableStore(spark: SparkSession, val root: String) {
     * (`org.apache.spark.sql.parquet.row.metadata`, which Spark's own
     * non-merging inference reads), handed to `spark.read.schema`. So a
     * read launches no Spark job, where `spark.read.parquet` runs one to
-    * infer the schema; partition columns are still discovered from the
-    * `k=v` directories, with the same types. A table whose directory
-    * holds no data file fails naming the table. */
+    * infer the schema. A table whose directory holds no data file at
+    * its top level (a `k=v` partitioned layout among them) fails
+    * naming the table. */
   def read(name: String): DataFrame = {
     val live = livePath(name)
     spark.read.schema(footerSchema(name, live)).parquet(live.toString)
@@ -68,21 +72,16 @@ final class TableStore(spark: SparkSession, val root: String) {
     finally reader.close()
   }
 
-  /** The first data file under `dir`, depth first in name order. Like
-    * Spark's file listing, it skips `.`- and `_`-prefixed names, except
-    * `_k=v` partition directories. */
+  /** The first data file directly in `dir`, in name order. Like
+    * Spark's file listing, it skips `.`- and `_`-prefixed names. */
   private def firstDataFile(dir: Path): Option[Path] =
     if (!fs.exists(dir)) None
-    else {
-      val (dirs, files) = fs.listStatus(dir).toSeq
-        .filter { st =>
-          val n = st.getPath.getName
-          !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))
-        }
-        .sortBy(_.getPath.getName).partition(_.isDirectory)
-      files.headOption.map(_.getPath)
-        .orElse(dirs.iterator.flatMap(d => firstDataFile(d.getPath)).nextOption())
-    }
+    else fs.listStatus(dir).toSeq
+      .filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith(".") && !n.startsWith("_")
+      }
+      .map(_.getPath).sortBy(_.getName).headOption
 
   /** A frame over driver-side rows — for tables small enough to be
     * computed on the driver and written whole. */
@@ -119,69 +118,22 @@ final class TableStore(spark: SparkSession, val root: String) {
   def delete(name: String): Unit =
     fs.delete(new Path(path(name)), true): Unit
 
-  /** Hive-style partitioned overwrite: readers filtering on the
-    * partition columns scan only matching directories (partition
-    * pruning — at 100 TB, the difference between touching one day and
-    * touching the table). Partition by low-cardinality, always-filtered
-    * columns (load date, source); never by a high-cardinality key. */
-  def overwritePartitioned(name: String, df: DataFrame,
-                           partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path(name))
-
-  /** Partition-scoped snapshot swap: replace ONLY the `partitionCol=v`
-    * leaves that `df` actually contains, leaving every other leaf's
-    * files untouched on disk — not rewritten, not re-committed,
-    * byte-identical. This is the production middle ground between
-    * [[swapSnapshot]] (full-table rewrite per batch — correct but at
-    * 100 TB the whole job cost) and a mutable table format's
-    * `MERGE INTO`: when the table is partitioned by a key-hash bucket
-    * ([[graft.ops.Scd2.mergePartitioned]]), a daily batch touching 1%
-    * of keys rewrites ~1% of the table.
-    *
-    * `df` may read the table it replaces: it is fully materialized to
-    * a scratch sibling first, then each leaf is promoted with the same
-    * atomic rename dance as [[swapSnapshot]]. Retired leaves are
-    * dot-prefixed mid-swap so concurrent readers never see both
-    * generations. */
-  def swapPartitions(name: String, df: DataFrame, partitionCol: String): Unit = {
-    val live = new Path(path(name))
-    val scratch = new Path(path(name + ".__ptmp"))
-    df.write.mode("overwrite").partitionBy(partitionCol).parquet(scratch.toString)
-    val leaves = fs.listStatus(scratch).toSeq.filter(st =>
-      st.isDirectory && st.getPath.getName.startsWith(partitionCol + "="))
-    if (!fs.exists(live)) fs.mkdirs(live)
-    leaves.foreach { st =>
-      val target = new Path(live, st.getPath.getName)
-      val old = new Path(live, s".__old_${st.getPath.getName}")
-      swapDirs(target, st.getPath, old)
-    }
-    fs.delete(scratch, true): Unit
-  }
-
   /** K4: replace a dimension snapshot that `df` may itself read.
-    * Materializes to `<name>.__tmp`, then renames old → `.__old`,
-    * tmp → live, and drops the old generation. */
+    * Materializes to `<name>.__tmp`, then renames live → `.__old`,
+    * tmp → live, and drops the old generation. Renames are atomic per
+    * directory on HDFS-like filesystems. */
   def swapSnapshot(name: String, df: DataFrame): Unit = {
     val live = new Path(path(name))
     val tmp = new Path(path(name + ".__tmp"))
     val old = new Path(path(name + ".__old"))
     df.write.mode("overwrite").parquet(tmp.toString)
-    swapDirs(live, tmp, old)
-  }
-
-  /** [[swapSnapshot]] for a Hive-partitioned layout: the scratch
-    * generation is written `partitionBy(partitionCols)` and the WHOLE
-    * directory is swapped in one rename — the full-rewrite sibling of
-    * [[swapPartitions]] for batches that touch most partitions anyway
-    * (per-leaf renames and partition-pruned scans only pay off when
-    * most leaves survive untouched). */
-  def swapSnapshotPartitioned(name: String, df: DataFrame,
-                              partitionCols: Seq[String]): Unit = {
-    val live = new Path(path(name))
-    val tmp = new Path(path(name + ".__tmp"))
-    val old = new Path(path(name + ".__old"))
-    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp.toString)
-    swapDirs(live, tmp, old)
+    restoreRetired(live, old)
+    if (fs.exists(old)) fs.delete(old, true)
+    if (fs.exists(live) && !fs.rename(live, old))
+      throw new java.io.IOException(s"swapSnapshot: cannot retire $live")
+    if (!fs.rename(tmp, live))
+      throw new java.io.IOException(s"swapSnapshot: cannot promote $tmp")
+    fs.delete(old, true): Unit
   }
 
   // ------------------------------------------------------------------
@@ -330,19 +282,6 @@ final class TableStore(spark: SparkSession, val root: String) {
       .filter(col("change_type").isNotNull)
       .select(keyCols.map(c =>
         coalesce(col(s"l_$c"), col(s"r_$c")).as(c)) :+ col("change_type"): _*)
-  }
-
-  /** The rename dance shared by snapshot and per-partition swaps:
-    * retire live → `old`, promote `tmp` → live, drop `old`. Renames
-    * are atomic per directory on HDFS-like filesystems. */
-  private def swapDirs(live: Path, tmp: Path, old: Path): Unit = {
-    restoreRetired(live, old)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(live) && !fs.rename(live, old))
-      throw new java.io.IOException(s"swapDirs: cannot retire $live")
-    if (!fs.rename(tmp, live))
-      throw new java.io.IOException(s"swapDirs: cannot promote $tmp")
-    fs.delete(old, true): Unit
   }
 
   /** A swap that died after retiring live → `old` but before promoting

@@ -71,11 +71,6 @@ object Incremental {
       Row(schemaName, tableName, kept))
   }
 
-  /** Seed the meta table (reference `main.ddl:139-145`), replacing
-    * whatever it held. */
-  def seed(store: TableStore, rows: Seq[(String, String, Timestamp)]): Unit =
-    lock.synchronized(write(store, rows.map { case (s, t, ts) => Row(s, t, ts) }))
-
   private def write(store: TableStore, rows: Seq[Row]): Unit =
     store.swapSnapshot(MetaTable,
       store.localFrame(rows, metaSchema).coalesce(1))

@@ -151,144 +151,6 @@ object Scd2 {
     history.select(dimCols.map(col): _*).unionByName(merged)
   }
 
-  /** Hive partition column name used by [[mergePartitioned]]. */
-  val BucketColName = "kb"
-
-  /** Deterministic key-hash bucket id: the partition key for
-    * partition-scoped dimension rewrites. Every version of a natural
-    * key lands in the same bucket forever (the hash has no salt and no
-    * date component), so a merge only ever needs to rewrite the
-    * buckets its batch touches. */
-  def bucketCol(keys: Seq[String], nBuckets: Int): Column =
-    pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
-
-  /** K4 at production scale: partition-scoped SCD2 rewrite.
-    *
-    * [[merge]] + `TableStore.swapSnapshot` is correct but rewrites the
-    * WHOLE dimension per batch — at 100 TB that rewrite dominates the
-    * job (SURVEY.md §4.3 flags it; a table format's `MERGE INTO` is
-    * the usual answer). This is the plain-parquet middle ground: the
-    * dimension lives Hive-partitioned by [[bucketCol]] (`kb=0..n-1`),
-    * a cheap key-only pre-pass finds the buckets that actually contain
-    * new / changed / reappearing / deleted keys, the merge runs over
-    * ONLY those buckets (partition-pruned scan), and
-    * `TableStore.swapPartitions` promotes only those leaves. A daily
-    * batch touching 1% of keys rewrites ~1% of the table; untouched
-    * leaves stay byte-identical on disk (TableStoreSpec pins this).
-    *
-    * The pre-pass is two key-column-pruned scans, never a collect of
-    * data rows: the only driver-side materialization is the DISTINCT
-    * bucket-id list, bounded by `nBuckets` (same discipline as the
-    * `MaxCentroids`-guarded codebook reads in [[Similarity]]).
-    *
-    * Scoping is sound because fate is per-key and [[bucketCol]] is a
-    * pure function of the key: a key's entire history lives in its
-    * bucket, batch rows outside affected buckets are exactly the
-    * clean-unchanged ones (by construction of the dirty pre-pass), and
-    * delete membership for keys inside affected buckets only depends
-    * on snapshot rows in those same buckets.
-    *
-    * Sizing `nBuckets` — practical range 2^10 to 2^14. The affected
-    * bucket list becomes an `isin` partition-pruning literal, bounded
-    * by the >50%-dirty fallback at nBuckets/2 entries, so the
-    * optimizer chews at most ~8k list elements at 2^14; below 2^10 a
-    * 1% daily batch dirties most buckets anyway (with B buckets and k
-    * dirty keys, expected dirty buckets ≈ B·(1−e^(−k/B)) — you want
-    * k ≪ B) and the scoped rewrite approaches the full swap. Above
-    * 2^14 the leaf directories outnumber what a 1%-batch prune saves
-    * and small-file pressure dominates. Scd2PartitionedSpec exercises
-    * the 2^12 point with a 1% batch.
-    *
-    * @return the rewritten bucket ids (telemetry; empty = no-op merge;
-    *         ALL bucket ids when the majority-dirty fallback rewrites
-    *         the whole directory)
-    */
-  def mergePartitioned(store: graft.io.TableStore, table: String,
-                       batch: DataFrame, keys: Seq[String], tracked: Seq[String],
-                       batchTs: Column, nBuckets: Int,
-                       deleteKeys: Option[DataFrame] = None,
-                       deleteTs: Option[Column] = None): Seq[Int] = {
-    require(nBuckets > 0 && nBuckets <= (1 << 20),
-      s"mergePartitioned: nBuckets must be in [1, 2^20], got $nBuckets")
-    val kb = bucketCol(keys, nBuckets)
-
-    if (!store.exists(table)) {
-      // Bootstrap: first batch writes the whole (small) initial
-      // dimension, laid out in its permanent bucket partitioning.
-      val emptyDim = batch.select((keys ++ tracked).map(col): _*).limit(0)
-        .withColumn("effective_from", lit(null).cast("timestamp"))
-        .withColumn("effective_to", lit(null).cast("timestamp"))
-        .withColumn("deleted_flg", lit(null).cast("string"))
-      val boot = merge(emptyDim, batch, keys, tracked, batchTs,
-        deleteKeys, deleteTs)
-      store.overwritePartitioned(table, boot.withColumn(BucketColName, kb),
-        Seq(BucketColName))
-      return batch.select(kb.as("__b")).distinct()
-        .collect().map(_.getInt(0)).sorted.toSeq
-    }
-
-    val dim = store.read(table)
-    val cur = dim.filter(col("effective_to") === InfinityTs)
-    // Dirty pre-pass: a batch key needs a rewrite unless it matches a
-    // live 'N' current version with ALL tracked attributes null-safe
-    // equal — everything else (new key, changed value, 'Y' marker to
-    // resurrect) changes its bucket's contents.
-    val curMatch = cur.select(
-      (keys ++ tracked).map(c => col(c).as(s"__m_$c"))
-        :+ col("deleted_flg").as("__m_flg"): _*)
-    val cleanCond = (keys.map(c => col(c) === col(s"__m_$c")) ++
-      tracked.map(c => col(c) <=> col(s"__m_$c")))
-      .foldLeft(col("__m_flg") === "N")(_ && _)
-    val dirtyKeys = batch.select((keys ++ tracked).map(col): _*)
-      .join(curMatch, cleanCond, "left_anti")
-      .select(keys.map(col): _*)
-    // Deleted keys: live 'N' current, absent from the full-key
-    // snapshot, not in the batch (batch membership wins — merge()
-    // applies the same rule).
-    val deletedKeys = deleteKeys match {
-      case Some(dk) =>
-        cur.filter(col("deleted_flg") === "N").select(keys.map(col): _*)
-          .join(dk.select(keys.map(col): _*).distinct(), keys, "left_anti")
-          .join(batch.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      case None => dirtyKeys.limit(0)
-    }
-    val affected = dirtyKeys.union(deletedKeys)
-      .select(kb.as("__b")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq // bounded by nBuckets
-    if (affected.isEmpty) return Nil
-
-    if (affected.size * 2 > nBuckets) {
-      // Majority of buckets dirty (bootstrap-like reload, schema-wide
-      // backfill): the scoped path would rename nearly every leaf and
-      // carry an affected-list literal the optimizer has to chew —
-      // the full-snapshot rewrite is cheaper and semantically
-      // identical, and the bucketed layout (partition pruning for the
-      // NEXT, normal-sized merge) is preserved.
-      val merged = merge(dim.drop(BucketColName), batch, keys, tracked,
-        batchTs, deleteKeys, deleteTs)
-      store.swapSnapshotPartitioned(table,
-        merged.withColumn(BucketColName, kb), Seq(BucketColName))
-      // The whole directory was physically rewritten — the telemetry
-      // must say so, not understate it as the dirty subset.
-      return 0 until nBuckets
-    }
-
-    // Every frame scoped to the affected buckets: the dim scan is
-    // partition-pruned; batch rows outside are provably clean.
-    val dimScoped = dim.filter(col(BucketColName).isin(affected: _*))
-      .drop(BucketColName)
-    val batchScoped = batch.filter(kb.isin(affected: _*))
-    val dkScoped = deleteKeys.map(_.filter(kb.isin(affected: _*)))
-    val merged = merge(dimScoped, batchScoped, keys, tracked, batchTs,
-      dkScoped, deleteTs)
-    // Every affected bucket emits rows (history is carried through and
-    // a dirty/deleted key always produces at least one output row), so
-    // the scratch write contains exactly the leaves to promote.
-    store.swapPartitions(table, merged.withColumn(BucketColName, kb),
-      BucketColName)
-    affected
-  }
-
   /** Build a full SCD2 history from a change log (CDC ingestion — the
     * inverse of [[merge]]): per key, consecutive
     * rows with identical tracked values collapse into one version;

@@ -18,7 +18,7 @@ object ParityQueries {
   private val REPORT = "TIMESTAMP '2024-02-01 00:00:00'"
 
   /** Per-process scratch roots for queries that exercise a physical
-    * store (q29's bucketed dimension, q71's report sink): created once,
+    * store (q71's report sink, q77's versioned table): created once,
     * OVERWRITTEN by each invocation, deleted on JVM exit — a
     * per-invocation `createTempDirectory` would leak one table copy
     * per bench warmup/pass/retry. */
@@ -36,9 +36,9 @@ object ParityQueries {
       dir.toString
     })
 
-  /** q07/q29 shared oracle: the full SCD2 merge snapshot in ANSI SQL
-    * (cards.py:86-176 semantics) — both the one-shot merge and the
-    * partition-scoped bucketed merge must hash-match it exactly. */
+  /** q07's oracle: the full SCD2 merge snapshot in ANSI SQL
+    * (cards.py:86-176 semantics), which `Scd2.merge` must hash-match
+    * exactly. */
   private lazy val scd2MergeOracleSql: String =
     s"""WITH base AS (${Fixtures.custBaseSql}),
        |dim AS (${Fixtures.scd2DimSql.replace("\n", " ")}),
@@ -271,36 +271,6 @@ object ParityQueries {
           batchTs = batchTs,
           deleteKeys = Some(Fixtures.scd2Batch(s, d).select("k")),
           deleteTs = Some(batchTs))
-    },
-
-    // K4 production variant — the PARTITION-SCOPED bucketed merge
-    // (Scd2.mergePartitioned + TableStore.swapPartitions): the same
-    // batch merged through a kb-bucket-partitioned store, rewriting
-    // only the buckets holding changed/new/deleted keys. Shares q07's
-    // oracle verbatim — the scoped rewrite must change NOTHING
-    // semantically, and the hash compare pins it. (Physical
-    // untouched-leaf byte-identity is pinned by Scd2PartitionedSpec.)
-    //
-    // Bench note: this query times THREE physical table writes by
-    // design — the store IS the operator under test — so it reads as
-    // sink I/O, not plan cost, in bench totals. The store root is
-    // per-process (each invocation overwrites the same directory);
-    // per-invocation temp dirs would accumulate dimension copies
-    // across bench warmup + interleaved passes.
-    Q("q29_scd2_bucketed", scd2MergeOracleSql) {
-      (s, d) =>
-        val batchTs = to_timestamp(lit("2024-02-01 00:00:00"))
-        val store = new graft.io.TableStore(s, scratchRoot("graft_q29"))
-        val dim = Fixtures.scd2Dim(s, d)
-        store.overwritePartitioned("dim",
-          dim.withColumn(Scd2.BucketColName, Scd2.bucketCol(Seq("k"), 8)),
-          Seq(Scd2.BucketColName))
-        Scd2.mergePartitioned(store, "dim", Fixtures.scd2Batch(s, d),
-          Seq("k"), Seq("seg", "bal_cents"), batchTs, nBuckets = 8,
-          deleteKeys = Some(Fixtures.scd2Batch(s, d).select("k")),
-          deleteTs = Some(batchTs))
-        store.read("dim").drop(Scd2.BucketColName)
-          .select("k", "seg", "bal_cents", "effective_from", "effective_to", "deleted_flg")
     },
 
     // Generation-diff CDC feed over the versioned (manifest-committed)

@@ -46,13 +46,6 @@ class TableStoreSpec extends AnyFunSuite {
     assertReadsLikeSpark(store, "flat")
 
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    graft.ops.Scd2.mergePartitioned(store, "kb_dim",
-      Seq(("k1", "a"), ("k2", "b"), ("k3", "c")).toDF("k", "a"), Seq("k"), Seq("a"),
-      lit(t0), nBuckets = 4)
-    assert(Files.list(Paths.get(store.path("kb_dim"))).anyMatch(
-      _.getFileName.toString.startsWith(graft.ops.Scd2.BucketColName + "=")))
-    assertReadsLikeSpark(store, "kb_dim")
-
     store.overwrite("empty", Seq.empty[(Int, String)].toDF("id", "v"))
     assertReadsLikeSpark(store, "empty")
 
@@ -81,6 +74,10 @@ class TableStoreSpec extends AnyFunSuite {
     store.overwrite("hollow/.__tmp", Seq(1).toDF("id"))
     val ex = intercept[IllegalStateException](store.read("hollow"))
     assert(ex.getMessage.contains("'hollow'"))
+    // A `k=v` partitioned layout is not a table: its files are one level down.
+    store.overwrite("parted/k=1", Seq(1).toDF("id"))
+    val parted = intercept[IllegalStateException](store.read("parted"))
+    assert(parted.getMessage.contains("'parted'"))
   }
 
   test("swapSnapshot replaces a table that the new snapshot reads") {
@@ -115,46 +112,6 @@ class TableStoreSpec extends AnyFunSuite {
     store.swapSnapshot("dim", Seq((4, "d")).toDF("id", "v"))
     assert(ids(store.read("dim")) === Seq(4))
     Seq("dim.__old", "dim.__tmp").foreach(d => assert(!Files.exists(Paths.get(store.path(d)))))
-  }
-
-  test("swapPartitions replaces only the leaves present in the new frame") {
-    val store = newStore()
-    store.overwritePartitioned("dim",
-      Seq((0, 1, "a"), (0, 2, "b"), (1, 3, "c"), (2, 4, "d"))
-        .toDF("kb", "id", "v"), Seq("kb"))
-    // Fingerprint every data file under the untouched leaves.
-    def leafFiles(kb: Int): Map[String, Vector[Byte]] = {
-      val dir = java.nio.file.Paths.get(store.path("dim"), s"kb=$kb")
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(dir).iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => p.getFileName.toString ->
-          java.nio.file.Files.readAllBytes(p).toVector)
-        .toMap
-    }
-    val (before1, before2) = (leafFiles(1), leafFiles(2))
-    // Rewrite bucket 0 only; the frame reads the table it replaces.
-    val rewrite = store.read("dim").filter(col("kb") === 0)
-      .withColumn("v", upper(col("v")))
-    store.swapPartitions("dim", rewrite, "kb")
-    assert(store.read("dim").select("id", "v").collect()
-      .map(r => (r.getInt(0), r.getString(1))).toSet
-      === Set((1, "A"), (2, "B"), (3, "c"), (4, "d")))
-    // Untouched leaves are byte-identical — same files, same bytes.
-    assert(leafFiles(1) === before1 && leafFiles(2) === before2)
-    assert(!store.exists("dim.__ptmp"))
-  }
-
-  test("partitioned write prunes partitions under a partition-column filter") {
-    val store = newStore()
-    val df = Seq(("2024-01-01", 1), ("2024-01-01", 2), ("2024-01-02", 3))
-      .toDF("load_date", "n")
-    store.overwritePartitioned("facts", df, Seq("load_date"))
-    val q = store.read("facts").filter(col("load_date") === "2024-01-01")
-    assert(q.count() === 2)
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(load_date"),
-      s"no partition pruning in:\n${plan.take(1200)}")
   }
 
   test("commitVersioned / readVersioned: manifest-committed generations") {

@@ -12,7 +12,8 @@ class IncrementalSpec extends AnyFunSuite {
   private def ts(s: String) = Timestamp.valueOf(s)
   private def meta(rows: (String, String, Timestamp)*): TableStore = {
     val store = new TableStore(spark, Files.createTempDirectory("graft_meta").toString)
-    Incremental.seed(store, rows)
+    store.swapSnapshot(Incremental.MetaTable, store.localFrame(
+      rows.map { case (s, t, w) => org.apache.spark.sql.Row(s, t, w) }, Incremental.metaSchema))
     store
   }
 

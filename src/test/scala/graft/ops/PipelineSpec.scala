@@ -342,9 +342,13 @@ class PipelineSpec extends AnyFunSuite {
 
   test("PipelineMain rejects an unknown flag with its usage line") {
     Seq(Array("src", "wh", "--bucket-dims=4"), Array("src", "wh", "--archve"),
-        Array("src", "wh", "2024-01-01", "extra"), Array("src")).foreach { args =>
+        Array("src", "wh", "2024-01-01", "extra"), Array("src"),
+        Array("src", "wh", "2024-02-30"), Array("src", "wh", "2024-13-01")).foreach { args =>
       val ex = intercept[IllegalArgumentException](graft.PipelineMain.parseArgs(args))
       assert(ex.getMessage.contains("usage: PipelineMain"), args.mkString(" "))
+      // A bad report date is named in the error.
+      if (args.length == 3 && !args(2).startsWith("--"))
+        assert(ex.getMessage.contains(s"'${args(2)}'"), args(2))
     }
     val (srcDir, whDir, reportDt, archive) =
       graft.PipelineMain.parseArgs(Array("src", "wh", "2024-01-01", "--archive"))

@@ -6,46 +6,18 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.io.{Sources, TableStore}
 
-/** The materialized-ANN-index flow at production shape: build the IVF
-  * cell assignment ONCE, persist it partitioned by cell id, and serve
-  * probes that read only the probed cell's directory (partition
-  * pruning) — per-query work scales with cell size, not corpus size. */
+/** The materialized-ANN-index flow: build the IVF cell assignment
+  * ONCE, persist it, and serve probes from the persisted table. */
 class SimilarityIndexSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  test("persisted cell index serves partition-pruned probes") {
-    val e = Sources.table(spark, "/root/testdata/sf0.001", "embeddings")
-    val store = new TableStore(spark, Files.createTempDirectory("graft_ann").toString)
-
-    val cells = Similarity.assignCells(e, e.filter(col("vec_id") % 37 === 1))
-    store.overwritePartitioned("ann_cells", cells, Seq("cid"))
-
-    val index = store.read("ann_cells")
-    // Hive partition discovery re-infers the partition column's type
-    // (bigint cid comes back as int) — read it generically.
-    val probeCid = index.select("cid").limit(1).collect().head.get(0).toString.toLong
-    val probe = index.filter(col("cid") === probeCid)
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(cid"),
-      s"probe not partition-pruned:\n${plan.take(1200)}")
-    assert(probe.count() > 0)
-
-    // Probing every cell reconstructs exactly the corpus (assignment
-    // is a partition of the vectors).
-    assert(index.count() === e.count())
-    assert(index.select("vec_id").distinct().count() === e.count())
-  }
 
   test("ivfKnnIndexed over the persisted index equals one-shot ivfKnn") {
     val e = Sources.table(spark, "/root/testdata/sf0.001", "embeddings")
     val centroids = e.filter(col("vec_id") % 37 === 1)
     val queries = e.filter(col("vec_id") % 53 === 2)
     val store = new TableStore(spark, Files.createTempDirectory("graft_ann2").toString)
-    store.overwritePartitioned("ann_cells",
-      Similarity.assignCells(e, centroids), Seq("cid"))
-    // The partition column comes back from Hive discovery as int —
-    // restore the bigint the join keys expect.
-    val index = store.read("ann_cells").withColumn("cid", col("cid").cast("bigint"))
+    store.overwrite("ann_cells", Similarity.assignCells(e, centroids))
+    val index = store.read("ann_cells")
 
     def key(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
